@@ -17,7 +17,7 @@ compute the identical answer with no SinglePartition exchange:
 2. a PER-SHARD window (PARTITION BY shard id) computes the local rank /
    running sum — parallel across shards, bounded memory per reducer;
 3. per-shard totals (<= num_shards rows, a model-sized driver fetch of
-   the same class as ivf_train's centroid collect) become broadcast
+   the same class as lloyd_int's centroid collect) become broadcast
    prefix OFFSETS added to every local value.
 
 Rank/row_number needs the offset to be the COUNT of earlier shards'

@@ -673,9 +673,9 @@ QUERIES: dict[str, Q] = {
     # on the exact-integer coarse quantizer, so training, list
     # assignment, and probe selection are all int64 arithmetic the
     # DuckDB oracle replays verbatim (it extends the k-means trainer CTE
-    # chain with probe + exact cosine scoring). The float cosine-routed
-    # topk_ivf remains for the pruned on-disk index paths; recall vs
-    # brute force stays pinned in tests.
+    # chain with probe + exact cosine scoring). The on-disk index
+    # (write_ivf_partitioned / topk_ivf_pruned) stores the same model and
+    # returns the same rows; recall vs brute force stays pinned in tests.
     # Threshold (range) similarity search: everything with cosine >=
     # 0.12 against the query (the fixture embeddings are near-random,
     # so absolute cosines are small; the boundary sits mid-distribution) inside the LSH probe set — the radius-query
@@ -704,8 +704,8 @@ QUERIES: dict[str, Q] = {
     # Oracle-checked since round 7: the entry runs pq_topk_exact — four
     # per-subspace exact-integer Lloyd codebooks, integer-L2 codes, and
     # an integer ADC table sum — so the DuckDB oracle replays codebooks,
-    # codes, shortlist, and re-rank bit-for-bit. The float pq_train/
-    # pq_topk_rerank path remains for the on-disk codes-table format;
+    # codes, shortlist, and re-rank bit-for-bit. The on-disk codes table
+    # (write_pq_index / pq_topk_pruned) stores the same integer codes;
     # determinism, code-roundtrip, and recall stay asserted in tests.
     "sim_pq_topk": df_q(
         lambda spark, sf: similarity.pq_topk_exact(

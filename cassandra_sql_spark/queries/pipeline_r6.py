@@ -19,9 +19,10 @@ Scale notes (100 TB):
 - gap fill: the spine is a constant-size calendar (explode(sequence)),
   the join is broadcast (spine side is tiny), the fill is two window
   passes over |spine| rows.
-- kmeans: reuses the IVF trainer — per-iteration shuffle is k*d rows
-  (centroid, dim) regardless of corpus size; assignment is a map-side
-  broadcast expression.
+- kmeans: the exact-integer Lloyd (similarity.lloyd_int, also the IVF
+  coarse quantizer) — per-iteration shuffle is k*d rows (centroid, dim)
+  regardless of corpus size; assignment is a map-side expression over
+  plan-literal centroids.
 """
 
 from __future__ import annotations
@@ -29,12 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cassandra_sql_spark.io import load
-from cassandra_sql_spark.pipeline.similarity import (
-    ivf_assign_col,
-    ivf_train,
-    kmeans_exact,
-    nonzero,
-)
+from cassandra_sql_spark.pipeline.similarity import kmeans_exact
 from cassandra_sql_spark.queries.base import Q, df_q, sql_q
 
 # TF-IDF: score = tf * ln(N/df), quantized to 9dp via the scaled-integer
@@ -230,9 +226,9 @@ def _kmeans(spark, sf):
     in EXACT int64 arithmetic (quantized coordinates, integer squared
     distances, rational-rounded centroid updates) — so the iterative
     training IS SQL-expressible and the entry carries a full DuckDB
-    value-hash oracle (unrolled 3-iteration CTE chain below). The float
-    trainer (ivf_train) remains the IVF path; the exact-int variant is
-    additionally pinned against a pure-Python fold replica in
+    value-hash oracle (unrolled 3-iteration CTE chain below). The same
+    trainer (lloyd_int) is the IVF / IVF-PQ coarse quantizer; the entry
+    is additionally pinned against a pure-Python fold replica in
     tests/test_pipeline.py::test_kmeans_entry_matches_python_fold_replica.
     """
     return kmeans_exact(

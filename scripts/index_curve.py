@@ -10,11 +10,13 @@ Measures, at three corpus decades (sf0.1 / sf1 / sf10):
    cost, which must track BATCH size, not corpus size (the corpus text
    is never re-read; only its bands/shingle parquet streams through a
    broadcast join).
-3. IVF index BUILD (`write_ivf_partitioned`, 8 centroids) and PROBE
-   (`topk_ivf_pruned`, nprobe=2): the probe must read only the probed
-   partitions — the script ASSERTS the pruned-file fraction from the
-   executed scan's RUNTIME numFiles metric rather than trusting the
-   plan text (inputFiles() reports the pre-pruning relation).
+3. IVF index BUILD (`write_ivf_partitioned`: the exact-integer
+   `lloyd_int` coarse quantizer, 8 centroids, the same model
+   `sim_ivf_topk` trains inline) and PROBE (`topk_ivf_pruned`,
+   nprobe=2): the probe must read only the probed partitions — the
+   script ASSERTS the pruned-file fraction from the executed scan's
+   RUNTIME numFiles metric rather than trusting the plan text
+   (inputFiles() reports the pre-pruning relation).
 
 Prints one JSON line per size; paste the table into SCALE.md.
 
@@ -127,13 +129,13 @@ def main() -> int:
             "matched the index"
         )
 
-        # IVF build + pruned probe
+        # IVF build (integer model, topk_ivf_exact's defaults) + probe
         emb = load(spark, sf, "embeddings")
         n_vecs = emb.count()
         ivf_path = os.path.join(work, "ivf")
         t0 = time.time()
         cents = similarity.write_ivf_partitioned(
-            emb, ivf_path, n_centroids=8, iters=2
+            emb, ivf_path, n_centroids=8
         )
         t_ivf_build = time.time() - t0
         qv = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]

@@ -110,5 +110,9 @@ def test_rows_only_ann_paths_survive_degenerate_input(spark, adv_emb_dir):
         [(1, [1.0] * 64, 0), (2, [0.5] * 64, 0)],
         "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
     )
-    cents = similarity.ivf_train(tiny, n_centroids=8)
+    quant = similarity.quantized_vectors(tiny, unit=True)
+    cents = similarity.lloyd_int(quant, 8, 3)
     assert 1 <= len(cents) <= 2
+    assert len(similarity.pq_books_int(quant, 4, 16, 2)[0]) <= 2
+    out = similarity.topk_ivfpq_exact(tiny, query_id=1, k=5)
+    assert [r.vec_id for r in out.collect()] == [2]

@@ -335,7 +335,7 @@ def test_ivf_topk_recall(spark, sf_dir):
     ]
     approx = [
         r.vec_id
-        for r in similarity.topk_ivf(
+        for r in similarity.topk_ivf_exact(
             emb, query_id=0, k=10, n_centroids=8, nprobe=4
         ).collect()
     ]
@@ -344,29 +344,36 @@ def test_ivf_topk_recall(spark, sf_dir):
     assert len(approx) == 10
 
 
-def test_ivf_train_deterministic_and_unit_norm(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    c1 = similarity.ivf_train(emb, n_centroids=4, iters=1)
-    c2 = similarity.ivf_train(emb, n_centroids=4, iters=1)
-    assert c1 == c2
+def test_ivf_train_deterministic_and_inside_unit_ball(spark, sf_dir):
+    """The IVF coarse quantizer (lloyd_int over unit-quantized vectors)
+    is deterministic, and every centroid — a rounded mean of points on
+    the scale-radius sphere — lies inside that sphere up to rounding
+    (at most 0.5 per coordinate, once for the input, once for the
+    mean)."""
+    quant = similarity.quantized_vectors(
+        load(spark, sf_dir, "embeddings"), unit=True
+    )
+    c1 = similarity.lloyd_int(quant, 4, 1)
+    c2 = similarity.lloyd_int(quant, 4, 1)
+    assert c1 == c2 and len(c1) == 4
     for c in c1:
-        assert abs(sum(x * x for x in c) - 1.0) < 1e-9
+        norm = sum(x * x for x in c) ** 0.5
+        assert 0 < norm <= 1_000_000 + len(c) ** 0.5, norm
 
 
 def test_ivf_assignment_covers_all_rows(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    cents = similarity.ivf_train(emb, n_centroids=8, iters=1)
     from pyspark.sql import functions as F
 
+    emb = load(spark, sf_dir, "embeddings")
+    quant = similarity.quantized_vectors(emb, unit=True)
+    cents = similarity.lloyd_int(quant, 8, 1)
     counts = (
-        emb.select(
-            similarity.ivf_assign_col(F.col("embedding"), cents).alias("cid")
-        )
+        quant.select(F.expr(similarity.int_assign_sql(cents)).alias("cid"))
         .groupBy("cid")
         .count()
         .collect()
     )
-    assert sum(r["count"] for r in counts) == emb.count()
+    assert sum(r["count"] for r in counts) == similarity.nonzero(emb).count()
     assert all(0 <= r.cid < 8 for r in counts)
 
 
@@ -780,82 +787,81 @@ def pq_emb(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
-def pq_books(pq_emb):
-    return similarity.pq_train(pq_emb, m=4, k_codes=16, iters=2)
+def pq_quant(pq_emb):
+    return similarity.quantized_vectors(pq_emb, unit=True)
+
+
+@pytest.fixture(scope="module")
+def pq_books(pq_quant):
+    return similarity.pq_books_int(pq_quant, m=4, k_codes=16, iters=2)
+
+
+def _codes(df, books):
+    from pyspark.sql import functions as F
+
+    return df.select(
+        "vec_id", F.expr(similarity.pq_codes_sql(books)).alias("_codes")
+    )
 
 
 @pytest.mark.slow
-def test_pq_train_shape_and_determinism(pq_emb, pq_books):
+def test_pq_train_shape_and_determinism(pq_quant, pq_books):
     assert len(pq_books) == 4
     assert all(len(b) == 16 for b in pq_books)
     assert all(len(c) == 16 for b in pq_books for c in b)  # 64/4 subdim
-    again = similarity.pq_train(pq_emb, m=4, k_codes=16, iters=2)
+    again = similarity.pq_books_int(pq_quant, m=4, k_codes=16, iters=2)
     assert again == pq_books
 
 
-def test_pq_encode_is_map_only(pq_emb, pq_books):
-    enc = similarity.pq_encode(pq_emb, pq_books)
+def test_pq_encode_is_map_only(pq_quant, pq_books):
+    enc = _codes(pq_quant, pq_books)
     plan = enc._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     row = enc.orderBy("vec_id").first()
-    assert len(row["codes"]) == 4
-    assert all(0 <= c < 16 for c in row["codes"])
+    assert len(row["_codes"]) == 4
+    assert all(0 <= c < 16 for c in row["_codes"])
 
 
 def test_pq_codeword_vectors_encode_to_themselves(spark, pq_books):
-    # vectors that ARE concatenations of codewords: code roundtrip is
-    # exact and the ADC distance to themselves is 0
+    # quantized rows that ARE concatenations of codewords: the code
+    # roundtrip is exact and the ADC distance to themselves is 0
     from pyspark.sql import functions as F
 
-    vecs = [
-        (100 + c, [x for j in range(4) for x in pq_books[j][c]])
+    vecs = {
+        100 + c: [x for j in range(4) for x in pq_books[j][c]]
         for c in range(16)
-    ]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs],
-        "vec_id bigint, embedding array<float>",
-    )
-    enc = {
-        r["vec_id"]: r["codes"]
-        for r in similarity.pq_encode(df, pq_books).collect()
     }
-    # float32 storage rounds the codewords; re-quantization must still
-    # pick the original codeword (it is by construction the nearest)
-    for c in range(16):
-        assert enc[100 + c] == [c, c, c, c]
-
-
-def test_pq_adc_missing_query_is_empty(pq_emb, pq_books):
-    out = similarity.pq_topk_adc(
-        pq_emb, query_id=10**9, codebooks=pq_books
+    df = spark.createDataFrame(
+        list(vecs.items()), "vec_id bigint, _xq array<bigint>"
     )
+    enc = _codes(df, pq_books)
+    got = {r["vec_id"]: r["_codes"] for r in enc.collect()}
+    for c in range(16):
+        assert got[100 + c] == [c, c, c, c]
+    adc = F.expr(similarity._adc_sql(pq_books, vecs[103]))
+    assert enc.filter("vec_id = 103").select(adc).first()[0] == 0
+
+
+def test_pq_adc_missing_query_is_empty(pq_emb):
+    out = similarity.pq_topk_exact(pq_emb, query_id=10**9)
     assert out.count() == 0
-    assert out.columns == ["vec_id", "approx_dist"]
+    assert out.columns == ["vec_id", "score"]
 
 
 @pytest.mark.slow
-def test_pq_rerank_recall_vs_exact(pq_emb, pq_books):
+def test_pq_rerank_recall_vs_exact(pq_emb):
     # worst case for PQ (isotropic random vectors): a 20% ADC shortlist
-    # must still recover >= half of the true top-10 (measured ~0.74)
-    rows = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in pq_emb.collect()
-    }
+    # must still recover >= half of the true cosine top-10
     hits = total = 0
     for qid in (0, 42, 333):
-        qv = rows[qid]
         exact = {
-            i
-            for _, i in sorted(
-                (sum((a - b) ** 2 for a, b in zip(qv, v)), i)
-                for i, v in rows.items()
-                if i != qid
-            )[:10]
+            r["vec_id"]
+            for r in similarity.topk_bruteforce(pq_emb, qid, k=10).collect()
         }
         approx = {
             r["vec_id"]
-            for r in similarity.pq_topk_rerank(
-                pq_emb, qid, k=10, shortlist=100, codebooks=pq_books
+            for r in similarity.pq_topk_exact(
+                pq_emb, qid, k=10, shortlist=100
             ).collect()
         }
         assert len(approx) == 10
@@ -864,33 +870,29 @@ def test_pq_rerank_recall_vs_exact(pq_emb, pq_books):
     assert hits / total >= 0.5, hits / total
 
 
-def test_pq_rerank_distances_are_exact_for_returned_ids(pq_emb, pq_books):
-    rows = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in pq_emb.collect()
+def test_pq_rerank_distances_are_exact_for_returned_ids(pq_emb):
+    brute = {
+        r["vec_id"]: r["score"]
+        for r in similarity.topk_bruteforce(pq_emb, 0, k=10**6).collect()
     }
-    qv = rows[0]
-    out = similarity.pq_topk_rerank(
-        pq_emb, 0, k=5, shortlist=50, codebooks=pq_books
-    ).collect()
+    out = similarity.pq_topk_exact(pq_emb, 0, k=5, shortlist=50).collect()
+    assert len(out) == 5
     for r in out:
-        true = sum((a - b) ** 2 for a, b in zip(qv, rows[r["vec_id"]]))
-        assert abs(r["dist"] - true) < 1e-4
+        assert r["score"] == brute[r["vec_id"]]
 
 
-@pytest.mark.slow
 def test_pq_index_probe_matches_inline_and_prunes_columns(
     spark, pq_emb, pq_books, tmp_path
 ):
     path = str(tmp_path / "pqidx")
     books = similarity.write_pq_index(pq_emb, path, m=4, k_codes=16)
     assert books == pq_books  # deterministic retrain
-    rows = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in pq_emb.collect()
-    }
+    qv = [float(x) for x in pq_emb.filter("vec_id = 0").first()["embedding"]]
+    # the query row is in the index: its codes are its own nearest
+    # codewords, so it takes the first shortlist slot (and ranks first,
+    # cosine 1) — ask for one more of each than the inline path
     out = similarity.pq_topk_pruned(
-        spark, path, books, rows[0], k=10, shortlist=50
+        spark, path, books, qv, k=11, shortlist=51
     )
     # stage-1 ADC scan must be column-pruned to (id, codes): the vector
     # column never leaves disk for the full scan (the 100 TB contract)
@@ -901,18 +903,16 @@ def test_pq_index_probe_matches_inline_and_prunes_columns(
     assert any(
         "_codes" in ln and "embedding" not in ln for ln in scans
     ), plan
-    got = out.collect()
-    # same codebooks + same shortlist -> same ranking as the inline
-    # two-stage probe. The index probe keeps the query vector in the
-    # table (consumes one shortlist slot, ranks first at dist 0), the
-    # inline path filters it out — so compare the top-9 after dropping it
-    # from both.
-    inline = similarity.pq_topk_rerank(
-        pq_emb, 0, k=10, shortlist=50, codebooks=books
-    ).collect()
-    inline_ids = [r["vec_id"] for r in inline if r["vec_id"] != 0][:9]
-    got_ids = [r["vec_id"] for r in got if r["vec_id"] != 0][:9]
-    assert got_ids == inline_ids
+    got = [(r["vec_id"], r["score"]) for r in out.collect()]
+    # same codebooks + same parameters -> the inline, oracle-checked rows
+    inline = [
+        (r["vec_id"], r["score"])
+        for r in similarity.pq_topk_exact(
+            pq_emb, 0, k=10, shortlist=50, m=4, k_codes=16
+        ).collect()
+    ]
+    assert len(inline) == 10
+    assert got == [(0, 1.0)] + inline
 
 
 @pytest.mark.slow

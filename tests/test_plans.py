@@ -280,9 +280,9 @@ def test_lsh_index_probe_partition_prunes(spark, sf_dir, tmp_path):
 
 
 def test_ivf_index_probe_partition_prunes(spark, sf_dir, tmp_path):
-    """IVF analog of the LSH index test: probe reads only the nprobe
-    nearest centroid partitions, and equals the inline (unmaterialized)
-    IVF probe with the same deterministic model."""
+    """IVF analog of the LSH index test: the probe of the integer index
+    reads only the nprobe nearest centroid partitions, and equals the
+    inline, oracle-checked IVF probe with the same deterministic model."""
     from cassandra_sql_spark.io import load
     from cassandra_sql_spark.pipeline import similarity
 
@@ -292,27 +292,24 @@ def test_ivf_index_probe_partition_prunes(spark, sf_dir, tmp_path):
 
     qvec = [float(x) for x in emb.filter("vec_id = 0").collect()[0][1]]
     probe = similarity.topk_ivf_pruned(
-        spark, path, centroids, qvec, k=10, nprobe=4
+        spark, path, centroids, qvec, k=11, nprobe=4
     )
     plan = probe._sc._jvm.PythonSQLUtils.explainString(
         probe._jdf.queryExecution(), "formatted"
     )
     assert "PartitionFilters" in plan and "_cid" in plan
-    # same model + same params as the inline probe -> identical answer,
-    # except the query row itself which the inline path excludes
-    inline = {
+    # same model + same params as the inline probe -> identical rows,
+    # after the query row itself, which the inline path excludes and
+    # the index probe ranks first (cosine 1)
+    inline = [
         (r.vec_id, r.score)
-        for r in similarity.topk_ivf(
+        for r in similarity.topk_ivf_exact(
             emb, query_id=0, k=10, n_centroids=8, nprobe=4
         ).collect()
-    }
-    pruned = {
-        (r.vec_id, r.score)
-        for r in probe.collect()
-        if r.vec_id != 0  # query row occupies one slot in the pruned top-k
-    }
-    assert len(pruned) == 9
-    assert pruned <= inline  # identical ids AND scores for the overlap
+    ]
+    pruned = [(r.vec_id, r.score) for r in probe.collect()]
+    assert len(inline) == 10
+    assert pruned == [(0, 1.0)] + inline
 
 
 def test_chunk_and_frame_sample_have_no_shuffle(spark, sf_dir):

@@ -119,8 +119,8 @@ def test_gaps_islands_runs_fit_observed_activity(spark, sf_dir):
 
 @pytest.mark.slow
 def test_ivf_exact_recall_and_score_exactness(spark, sf_dir):
-    """The exact-int IVF entry keeps the float path's recall floor
-    (probing half the lists recovers most of the true top-k) and every
+    """The exact-int IVF entry keeps its recall floor (probing half the
+    lists recovers most of the true top-k) and every
     returned score equals the brute-force score for that vector (the
     re-score stage is exact, only the candidate set is approximate)."""
     brute = {
