@@ -138,12 +138,14 @@ class Catalog:
         }
         self.save()
 
-    def nextval(self, name: str) -> int:
+    def nextval(self, name: str, count: int = 1) -> int:
+        """Reserve ``count`` values with one save; returns the first."""
         with self._lock:
             seq = self.sequences[name]
-            seq["current"] += seq["increment"]
+            first = seq["current"] + seq["increment"]
+            seq["current"] += count * seq["increment"]
         self.save()
-        return self.sequences[name]["current"]
+        return first
 
     def currval(self, name: str) -> int:
         return self.sequences[name]["current"]

@@ -17,9 +17,12 @@ new version is committed). On a Delta/Iceberg deployment this class
 delegates to the table format; semantics are identical.
 
 Constraint enforcement (reference kv/KvQueryExecutor.java:4276-4472):
-NOT NULL, ENUM domains, UNIQUE/PK, and FK existence are validated with
-set-based anti-join/aggregate checks over the incoming batch — no
-row-at-a-time loops.
+every validated write (INSERT, upsert, UPDATE, MERGE, COPY FROM) goes
+through ``_commit``: the batch is written once as the staged version
+``v<k+1>``, one aggregate over the staged files counts CHECK, NOT NULL,
+ENUM and UNIQUE/PK violations, one anti-join per FK checks existence, and
+only then is the pointer flipped. Nothing is cached; a violation deletes
+the staged directory.
 """
 
 from __future__ import annotations
@@ -127,7 +130,8 @@ class Engine:
             self._register_view(view)
         for fname, fmeta in self.catalog.functions.items():
             self._register_function(fname, fmeta)
-        self._register_pg_catalog()
+        # the pg_catalog views are built on first read (see ``sql``)
+        self._pg_stale = True
 
     # ------------------------------------------------------------------ util
 
@@ -209,13 +213,15 @@ class Engine:
         The reference materializes pg_namespace/pg_class/pg_attribute/
         pg_type/pg_index/pg_proc/pg_database as real KV tables so psql/JDBC
         introspection works (kv/PgCatalogManager.java:23-36). Here they are
-        zero-cost temp views regenerated on DDL; hidden system columns are
+        temp views rebuilt before the first statement that names a
+        ``pg_*`` relation after a DDL; hidden system columns are
         excluded, matching what the reference's catalog exposes. Relation
         OIDs are assigned from 16384 (the PG user-object floor) in sorted
         registration order so `\\d`-style joins across
         pg_class/pg_attribute/pg_type/pg_index work.
         """
         spark = self.spark
+        self._pg_stale = False
         tables = sorted(self.catalog.tables.values(), key=lambda t: t.name)
         views = sorted(self.catalog.views.values(), key=lambda v: v.name)
         oid = 16384
@@ -455,89 +461,122 @@ class Engine:
             return self.spark.read.schema(meta.spark_ddl()).parquet(meta.path)
         return self.spark.createDataFrame([], meta.spark_ddl())
 
-    def _rewrite(self, meta: TableMeta, df: DataFrame) -> None:
-        """Write a new table version, flip the pointer, drop the old one."""
-        base = os.path.dirname(meta.path) if re.search(
-            r"/v\d+$", meta.path
-        ) else meta.path
+    @staticmethod
+    def _next_version(meta: TableMeta) -> str:
+        """Directory of the version after ``meta.path``: ``v<k+1>`` beside
+        a versioned path, ``v1`` inside an unversioned one."""
         m = re.search(r"/v(\d+)$", meta.path)
-        ver = int(m.group(1)) + 1 if m else 1
-        new_path = os.path.join(base, f"v{ver}")
+        if not m:
+            return os.path.join(meta.path, "v1")
+        return os.path.join(
+            os.path.dirname(meta.path), f"v{int(m.group(1)) + 1}"
+        )
+
+    def _write_version(self, meta: TableMeta, df: DataFrame) -> str:
+        """Write ``df`` as the next version's directory; the catalog still
+        points at the current one."""
+        path = self._next_version(meta)
         writer = df.write.mode("overwrite")
         if meta.partition_by:
             # hive-style dirs: SELECTs with a partition-column predicate
             # prune whole directories before any task launches
             writer = writer.partitionBy(*meta.partition_by)
-        writer.parquet(new_path)
-        meta.path = new_path
+        writer.parquet(path)
+        return path
+
+    def _publish(self, meta: TableMeta, path: str) -> None:
+        """Flip the catalog pointer to a written version. Older vN dirs
+        are RETAINED: immutable snapshots that serve `SELECT ... VERSION
+        AS OF n` (Delta/Iceberg time-travel analog; the reference keeps
+        old MVCC versions the same way until VacuumJob). `VACUUM <table>`
+        reclaims them."""
+        meta.path = path
         self.catalog.save()
-        # Older vN dirs are RETAINED: immutable snapshots that serve
-        # `SELECT ... VERSION AS OF n` (Delta/Iceberg time-travel analog;
-        # the reference keeps old MVCC versions the same way until
-        # VacuumJob). `VACUUM <table>` reclaims them.
         self._register(meta)
 
-    def _append(self, meta: TableMeta, df: DataFrame) -> None:
-        """Append as a new version: hardlink the current version's files
-        into v(N+1) (no data copy — the Delta-log analog of 'new snapshot
-        = old files + appended files'), then append the batch there.
-        Old versions stay immutable for `VERSION AS OF` until VACUUM."""
-        if not re.search(r"/v\d+$", meta.path):
-            meta.path = os.path.join(meta.path, "v1")
-            self.catalog.save()
-        m = re.search(r"/v(\d+)$", meta.path)
-        new_path = os.path.join(
-            os.path.dirname(meta.path), f"v{int(m.group(1)) + 1}"
-        )
-        os.makedirs(new_path, exist_ok=True)
-        if os.path.isdir(meta.path):
-            # recursive walk: partitioned tables keep their data under
-            # hive-style key=value subdirectories
-            for root, _dirs, files in os.walk(meta.path):
-                rel = os.path.relpath(root, meta.path)
-                for f in files:
-                    if not f.endswith(".parquet"):
-                        continue
-                    dst_dir = (
-                        new_path
-                        if rel == "."
-                        else os.path.join(new_path, rel)
-                    )
-                    os.makedirs(dst_dir, exist_ok=True)
-                    src = os.path.join(root, f)
-                    dst = os.path.join(dst_dir, f)
-                    try:
-                        os.link(src, dst)
-                    except OSError:
-                        shutil.copy2(src, dst)
-        writer = df.write.mode("append")
-        if meta.partition_by:
-            writer = writer.partitionBy(*meta.partition_by)
-        writer.parquet(new_path)
-        meta.path = new_path
-        self.catalog.save()
-        self._register(meta)
+    def _rewrite(self, meta: TableMeta, df: DataFrame) -> None:
+        """Write a new table version and flip the pointer, unchecked: for
+        statements that cannot break a constraint (TRUNCATE, DELETE,
+        OPTIMIZE, ALTER). Validated writes go through ``_commit``."""
+        self._publish(meta, self._write_version(meta, df))
+
+    def _commit(
+        self, meta: TableMeta, batch: DataFrame, append: bool
+    ) -> tuple[int, DataFrame]:
+        """The validated write of every DML statement.
+
+        ``batch`` is computed exactly once, by its write into the staged
+        version ``v<k+1>`` — for an append the new rows only, otherwise
+        the whole new table. One aggregate over the staged files (for an
+        append, tagged-unioned with the current version's key columns)
+        then counts the rows and every violation, and one anti-join per
+        FK checks references. If all are clean, an append hard-links the
+        current version's files in (no data copy — the Delta-log analog
+        of 'new snapshot = old files + appended files') and the pointer
+        flips. On a violation or any exception the staged directory is
+        deleted, so table, catalog and disk are left as they were.
+
+        Returns the row count and the written rows: a read of the staged
+        directory whose file listing is taken before the old files are
+        linked in, so it holds exactly the published batch."""
+        # listed before the write: an unversioned path gets v1 inside it
+        existing = self._read(meta) if append and meta.unique else None
+        staged = self._next_version(meta)
+        try:
+            self._write_version(meta, batch)
+            written = self.spark.read.schema(meta.spark_ddl()).parquet(staged)
+            n, error = self._violations(meta, written, existing)
+            error = error or self._fk_violation(meta, written)
+            if error:
+                raise EngineError(error)
+            if append and os.path.isdir(meta.path):
+                self._link_files(meta.path, staged)
+        except BaseException:
+            shutil.rmtree(staged, ignore_errors=True)
+            raise
+        self._publish(meta, staged)
+        return n, written
+
+    @staticmethod
+    def _link_files(src: str, dst: str) -> None:
+        """Hard-link every parquet file of version ``src`` into ``dst``.
+        The walk is recursive: partitioned tables keep their data under
+        hive-style key=value subdirectories."""
+        for root, dirs, files in os.walk(src):
+            # an unversioned table path holds its first version inside
+            dirs[:] = [d for d in dirs if os.path.join(root, d) != dst]
+            rel = os.path.relpath(root, src)
+            dst_dir = dst if rel == "." else os.path.join(dst, rel)
+            for f in files:
+                if not f.endswith(".parquet"):
+                    continue
+                os.makedirs(dst_dir, exist_ok=True)
+                try:
+                    os.link(os.path.join(root, f), os.path.join(dst_dir, f))
+                except OSError:
+                    shutil.copy2(os.path.join(root, f), dst_dir)
 
     # ------------------------------------------------------------- dispatch
 
+    # statements that can change what the pg_catalog views show
+    _CATALOG_DDL = re.compile(
+        r"\s*(CREATE|DROP|ALTER|TRUNCATE|REFRESH|ANALYZE)\b", re.IGNORECASE
+    )
+    _PG_RELATION = re.compile(r"\bpg_\w+", re.IGNORECASE)
+
     def sql(self, text: str) -> DataFrame:
-        """Execute one or more statements; returns the last result."""
+        """Execute one or more statements; returns the last result.
+
+        DDL only marks the ~17 pg_catalog views stale; they are rebuilt
+        once, before the first statement whose text names a ``pg_*``
+        relation, so a script that never reads them never builds them."""
         result = self._status("ok", 0)
-        ddl_seen = False
         for stmt in split_statements(text):
-            if ddl_seen and re.match(r"\s*(SELECT|WITH)\b", stmt, re.I):
-                # a later SELECT in the batch may read pg_catalog
+            if self._pg_stale and self._PG_RELATION.search(stmt):
                 self._register_pg_catalog()
-                ddl_seen = False
+            if self._CATALOG_DDL.match(stmt):
+                self._pg_stale = True
             result = self._one(stmt)
-            ddl_seen = ddl_seen or bool(re.match(
-                r"\s*(CREATE|DROP|ALTER|TRUNCATE|REFRESH)\b", stmt, re.I
-            ))
-        if ddl_seen:
-            # regenerate the ~17 pg_catalog views ONCE per batch, not per
-            # DDL statement (a N-statement restore script was O(N) full
-            # regenerations of all relation/attribute/constraint rows)
-            self._register_pg_catalog()
         return result
 
     def _one(self, stmt: str) -> DataFrame:
@@ -1103,7 +1142,6 @@ class Engine:
             self.catalog.save()
             self.spark.catalog.dropTempView(old)
             self._register(meta)
-            self._register_pg_catalog()
             return self._status(f"rename {old} -> {new}")
         if au.startswith("RENAME"):
             rm_ = re.match(
@@ -1159,7 +1197,6 @@ class Engine:
                     if fk[1] == meta.name:
                         fk[2] = [new_c if k == old_c else k for k in fk[2]]
             self._rewrite(meta, df)
-            self._register_pg_catalog()
             return self._status(f"rename column {old_c} -> {new_c}")
         if au.startswith("ADD COLUMN") or (
             au.startswith("ADD") and not au.startswith(
@@ -1210,10 +1247,11 @@ class Engine:
             # pg validates existing rows when the constraint is added
             probe = TableMeta(name=meta.name, columns=meta.columns,
                               checks=[expr], path=meta.path)
-            self._validate(probe, self._read(meta), against_existing=False)
+            _, error = self._violations(probe, self._read(meta), None)
+            if error:
+                raise EngineError(error)
             meta.checks.append(expr)
             self.catalog.save()
-            self._register_pg_catalog()
             return self._status("alter add check")
         if "FOREIGN KEY" in au:
             fk = re.search(
@@ -1526,14 +1564,17 @@ class Engine:
             )
         src = src.toDF(*cols)
         # fill identity columns not provided (reference SERIAL semantics,
-        # kv/KvQueryExecutor.java:1563-1813 auto-increment)
+        # kv/KvQueryExecutor.java:1563-1813 auto-increment): the batch's
+        # values are reserved with one sequence save
+        n_src = None
         for c in meta.columns:
             if c.name not in cols:
                 if c.identity:
-                    rows = src.count()
-                    seq = f"{meta.name}_{c.name}_seq"
-                    vals = [self.catalog.nextval(seq) for _ in range(rows)]
-                    base = vals[0] if vals else 1
+                    if n_src is None:
+                        n_src = src.count()
+                    base = self.catalog.nextval(
+                        f"{meta.name}_{c.name}_seq", n_src
+                    ) if n_src else 1
                     w = F.row_number().over(
                         Window.orderBy(F.monotonically_increasing_id())
                     )
@@ -1565,11 +1606,9 @@ class Engine:
         )
         if conflict is not None:
             return self._insert_on_conflict(meta, src, conflict, returning)
-        self._validate(meta, src.cache())
-        n = src.count()
-        self._append(meta, src)
+        n, written = self._commit(meta, src, append=True)
         if returning is not None:
-            return self._returning(src, meta, returning)
+            return self._returning(written, meta, returning)
         return self._status(f"insert {meta.name}", n)
 
     def _returning(self, df, meta: TableMeta, returning: str):
@@ -1624,11 +1663,9 @@ class Engine:
                 .drop("__rn")
                 .join(existing.select(*key), key, "left_anti")
             )
-            self._validate(meta, fresh.cache())
-            n = fresh.count()
-            self._append(meta, fresh)
+            n, written = self._commit(meta, fresh, append=True)
             if returning is not None:
-                return self._returning(fresh, meta, returning)
+                return self._returning(written, meta, returning)
             return self._status(f"insert {meta.name} (conflicts skipped)", n)
         if returning is not None:
             raise EngineError(
@@ -1670,69 +1707,114 @@ class Engine:
             f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
         )
 
-    def _validate(
-        self,
-        meta: TableMeta,
-        batch: DataFrame,
-        against_existing: bool = True,
-    ) -> None:
-        """Constraint checks, set-based. ``against_existing=False`` is the
-        full-table-rewrite mode (UPDATE): the batch IS the new table, so
-        uniqueness is checked within the batch only — joining against the
-        old version would clash every unchanged row with itself."""
-        for e in meta.checks:
+    @staticmethod
+    def _all_set(cols: list[str]) -> F.Column:
+        """True when every column is non-null: NULL keys are distinct
+        under UNIQUE and satisfy an FK (pg MATCH SIMPLE)."""
+        out = F.lit(True)
+        for c in cols:
+            out = out & F.col(c).isNotNull()
+        return out
+
+    def _row_checks(self, meta: TableMeta) -> list[tuple]:
+        """``(kind, label, error, bad-row predicate)`` for every CHECK,
+        then every NOT NULL and enum column in column order — the order
+        DML raises them in. Shared by the DML commit and VERIFY
+        CONSTRAINTS."""
+        out = [
             # pg semantics: CHECK passes on TRUE or NULL, fails on FALSE
-            bad = batch.filter(
-                ~F.coalesce(F.expr(preprocess(e)), F.lit(True))
-            )
-            if bad.limit(1).count():
-                raise EngineError(f"CHECK violated: {meta.name}: {e}")
+            ("check", e, f"CHECK violated: {meta.name}: {e}",
+             ~F.coalesce(F.expr(preprocess(e)), F.lit(True)))
+            for e in meta.checks
+        ]
         for c in meta.columns:
+            col = F.col(c.name)
             if not c.nullable or c.name in meta.primary_key:
-                if batch.filter(F.col(c.name).isNull()).limit(1).count():
-                    raise EngineError(f"NOT NULL violated: {meta.name}.{c.name}")
+                out.append(("not_null", c.name,
+                            f"NOT NULL violated: {meta.name}.{c.name}",
+                            col.isNull()))
             if c.enum_type:
                 domain = self.catalog.enums[c.enum_type]
-                bad = batch.filter(
-                    ~F.col(c.name).isin(*domain) & F.col(c.name).isNotNull()
-                )
-                if bad.limit(1).count():
-                    v = bad.select(c.name).first()[0]
-                    raise EngineError(
-                        f"invalid {c.enum_type} value for {c.name}: {v!r}"
-                    )
-        existing = self._read(meta) if against_existing else None
-        for ucols in meta.unique:
-            dup = (
-                batch.groupBy(*ucols).count().filter(F.col("count") > 1)
+                out.append(("enum", c.name,
+                            f"invalid {c.enum_type} value for {c.name}",
+                            ~col.isin(*domain) & col.isNotNull()))
+        return out
+
+    def _violations(
+        self, meta: TableMeta, rows: DataFrame, existing: DataFrame | None
+    ) -> tuple[int, str | None]:
+        """Row count of ``rows`` and its first violated constraint, from
+        one aggregate: a count per row check, and per UNIQUE set the
+        non-null key rows against the distinct keys (NULL keys are
+        distinct, as in pg). With ``existing``, its key columns join
+        ``rows`` in a union tagged ``__new``, and a UNIQUE set clashes
+        with the existing rows when the distinct keys of both sides
+        exceed the distinct keys of the union."""
+        checks = self._row_checks(meta)
+        new = F.col("__new")
+        src = rows.withColumn("__new", F.lit(True))
+        if existing is not None:
+            keys = {k.lower(): k for u in meta.unique for k in u}
+            src = src.unionByName(
+                existing.select(*keys.values(), F.lit(False).alias("__new")),
+                allowMissingColumns=True,
             )
-            if dup.limit(1).count():
-                raise EngineError(
-                    f"UNIQUE violated within batch: {meta.name}({','.join(ucols)})"
+        aggs = [F.count_if(new).alias("n")]
+        for i, (kind, label, _, bad) in enumerate(checks):
+            aggs.append(F.count_if(new & bad).alias(f"c{i}"))
+            if kind == "enum":  # the first bad value goes in the message
+                aggs.append(F.min(F.when(new & bad, F.col(label))).alias(f"v{i}"))
+        for i, ucols in enumerate(meta.unique):
+            head, tail = F.col(ucols[0]), ucols[1:]
+            aggs += [
+                F.count_if(new & self._all_set(ucols)).alias(f"u{i}"),
+                F.count_distinct(F.when(new, head), *tail).alias(f"d{i}"),
+            ]
+            if existing is not None:
+                aggs += [
+                    F.count_distinct(F.when(~new, head), *tail).alias(f"o{i}"),
+                    F.count_distinct(head, *tail).alias(f"a{i}"),
+                ]
+        r = src.agg(*aggs).first()
+        for i, (kind, _, error, _) in enumerate(checks):
+            if r[f"c{i}"]:
+                return r["n"], (
+                    f"{error}: {r[f'v{i}']!r}" if kind == "enum" else error
                 )
-            if existing is None:
-                continue
-            clash = batch.join(existing.select(*ucols), ucols, "left_semi")
-            if clash.limit(1).count():
-                raise EngineError(
-                    f"UNIQUE violated: {meta.name}({','.join(ucols)})"
-                )
+        for i, ucols in enumerate(meta.unique):
+            target = f"{meta.name}({','.join(ucols)})"
+            if r[f"u{i}"] != r[f"d{i}"]:
+                return r["n"], f"UNIQUE violated within batch: {target}"
+            if existing is not None and (
+                r[f"d{i}"] + r[f"o{i}"] != r[f"a{i}"]
+            ):
+                return r["n"], f"UNIQUE violated: {target}"
+        return r["n"], None
+
+    def _fk_violation(self, meta: TableMeta, rows: DataFrame) -> str | None:
+        """The first FK of ``rows`` with an orphan, one anti-join each."""
         for fcols, ref, rcols in meta.foreign_keys:
             if ref not in self.catalog.tables:
                 continue
-            refdf = self._read(self.catalog.tables[ref]).select(
-                *[F.col(rc).alias(fc) for fc, rc in zip(fcols, rcols)]
-            )
-            orphan = (
-                batch.select(*fcols)
-                .na.drop()
-                .join(refdf, fcols, "left_anti")
-            )
-            if orphan.limit(1).count():
-                raise EngineError(
+            if self._orphans(rows, fcols, ref, rcols).limit(1).count():
+                return (
                     f"FK violated: {meta.name}({','.join(fcols)}) -> "
                     f"{ref}({','.join(rcols)})"
                 )
+        return None
+
+    def _orphans(
+        self, rows: DataFrame, fcols: list[str], ref: str, rcols: list[str]
+    ) -> DataFrame:
+        """The FK columns of ``rows`` that match no row of ``ref``. MATCH
+        SIMPLE (pg default): a row with ANY null FK column satisfies the
+        constraint. Shared by the DML commit and VERIFY CONSTRAINTS."""
+        refdf = self._read(self.catalog.tables[ref]).select(
+            *[F.col(rc).alias(fc) for fc, rc in zip(fcols, rcols)]
+        )
+        return rows.filter(self._all_set(fcols)).select(*fcols).join(
+            refdf, fcols, "left_anti"
+        )
 
     @staticmethod
     def _toplevel_keyword(s: str, word: str) -> int:
@@ -1819,7 +1901,6 @@ class Engine:
         # the predicate (pg `WHERE EXISTS (SELECT 1 FROM o WHERE o.id =
         # t.id)`) resolve the outer reference
         df = self._read(meta).alias(meta.name)
-        n = df.filter(cond).count()
         out = df.withColumns(
             {
                 c: F.when(cond, F.expr(e)).otherwise(F.col(c)).cast(
@@ -1835,9 +1916,7 @@ class Engine:
         }
         if gen:
             out = out.withColumns(gen)
-        if meta.checks or meta.unique or meta.foreign_keys:
-            self._validate(meta, out.cache(), against_existing=False)
-        self._rewrite(meta, out)
+        self._commit(meta, out, append=False)
         if returning is not None:
             # the updated rows with their NEW values (pg RETURNING reads
             # the post-update tuple): apply the SETs unconditionally to
@@ -1851,7 +1930,8 @@ class Engine:
             if gen:
                 ret = ret.withColumns(gen)
             return self._returning(ret, meta, returning)
-        return self._status(f"update {meta.name}", n)
+        # the old version's files stay on disk: count its matched rows
+        return self._status(f"update {meta.name}", df.filter(cond).count())
 
     def _update_from(
         self,
@@ -1899,17 +1979,17 @@ class Engine:
             f"SELECT {tname}.__tid AS __tid, {new_cols} "
             f"FROM __upd_target AS {tname}, {preprocess(from_sql)} "
             f"WHERE {cond}"
-        ).cache()
-        ambiguous = (
-            matched.groupBy("__tid").count().filter(F.col("count") > 1)
         )
-        if ambiguous.limit(1).count():
+        # one aggregate: the matches, and whether any target row has two
+        stats = matched.agg(
+            F.count(F.lit(1)).alias("n"), F.count_distinct("__tid").alias("t")
+        ).first()
+        if stats["n"] != stats["t"]:
             raise EngineError(
                 "UPDATE ... FROM matches a target row more than once; "
                 "make the join condition unique (pg leaves this "
                 "unspecified — this engine refuses the nondeterminism)"
             )
-        n = matched.count()
         hit = matched.withColumn("__hit", F.lit(True))
         joined = t.join(hit, "__tid", "left")
         out = joined.withColumns(
@@ -1933,9 +2013,7 @@ class Engine:
         out = out.drop(
             "__tid", "__hit", *[f"__new_{c}" for c in sets]
         )
-        if meta.checks or meta.unique or meta.foreign_keys:
-            self._validate(meta, out.cache(), against_existing=False)
-        ret = None
+        self._commit(meta, out, append=False)
         if returning is not None:
             updated = joined.filter(
                 F.coalesce(F.col("__hit"), F.lit(False))
@@ -1948,18 +2026,13 @@ class Engine:
             )
             if gen:
                 updated = updated.withColumns(gen)
-            ret = self._returning(
-                updated.drop(
-                    "__tid", "__hit", *[f"__new_{c}" for c in sets]
-                ).localCheckpoint(eager=True),
+            # lazy over the pinned target and the old version's files
+            return self._returning(
+                updated.drop("__tid", "__hit", *[f"__new_{c}" for c in sets]),
                 meta,
                 returning,
             )
-        self._rewrite(meta, out)
-        matched.unpersist()
-        if ret is not None:
-            return ret
-        return self._status(f"update {meta.name}", n)
+        return self._status(f"update {meta.name}", stats["n"])
 
     def _delete(self, s: str) -> DataFrame:
         masked, lits = _mask_literals(s)
@@ -2034,20 +2107,15 @@ class Engine:
             f"SELECT DISTINCT {tname}.__tid AS __tid "
             f"FROM __del_target AS {tname}, {preprocess(from_sql)} "
             f"WHERE {cond}"
-        ).cache()
+        )
         n = matched.count()
-        keep = t.join(matched, "__tid", "anti").drop("__tid")
-        ret = None
+        self._rewrite(meta, t.join(matched, "__tid", "anti").drop("__tid"))
         if returning is not None:
-            ret = self._returning(
+            return self._returning(
                 t.join(matched, "__tid", "semi").drop("__tid"),
                 meta,
                 returning,
             )
-        self._rewrite(meta, keep)
-        matched.unpersist()
-        if ret is not None:
-            return ret
         return self._status(f"delete {meta.name}", n)
 
     _WHEN_RE = re.compile(
@@ -2072,7 +2140,9 @@ class Engine:
         of each side, one join shuffle — no per-row driver logic; at
         100 TB the join is the same shuffle any equi-join costs, and the
         rewrite materializes one new table version (lakehouse
-        copy-on-write semantics).
+        copy-on-write semantics), committed through ``_commit`` like an
+        UPDATE: every constraint, UNIQUE and FK included, is checked on
+        the merged table before the pointer flips.
         """
         # All clause splitting runs on a literal-MASKED copy: a string
         # literal containing '(' / ')' would corrupt the USING-subquery
@@ -2130,16 +2200,6 @@ class Engine:
         tid = F.col(f"{t_alias}.__tid")
         sid = F.col(f"{s_alias}.__sid")
         matched = tid.isNotNull() & sid.isNotNull()
-        dup = (
-            j.filter(matched)
-            .groupBy(tid)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-        )
-        if dup.limit(1).count():
-            raise EngineError(
-                "MERGE: a target row matches multiple source rows"
-            )
 
         def _guard(cond_sql: str) -> F.Column:
             # cond_sql arrives MASKED (from the WHEN split)
@@ -2237,81 +2297,46 @@ class Engine:
                     ins_cols.add(c)
                 ins_applied = ins_applied | cnd
 
-        target_rows = j.filter(tid.isNotNull()).select(
-            *[
+        # one pass over the join: Delta's ambiguity rule (a target row
+        # matched twice) and both halves of the affected-row count
+        stats = j.agg(
+            F.count_if(matched).alias("pairs"),
+            F.count_distinct(F.when(matched, tid)).alias("targets"),
+            F.count_if(tid.isNotNull() & applied).alias("hit"),
+            F.count_if(tid.isNull() & ins_applied).alias("ins"),
+        ).first()
+        if stats["pairs"] != stats["targets"]:
+            raise EngineError(
+                "MERGE: a target row matches multiple source rows"
+            )
+        target_rows = (
+            j.filter(tid.isNotNull() & keep)
+            .select(*[
                 vals[c].cast(meta.column(c).spark_type).alias(c)
                 for c in tcols
-            ],
-            keep.alias("__keep"),
-            applied.alias("__hit"),
+            ])
         )
-        inserts = (
-            j.filter(tid.isNull())
-            .select(
-                *[
-                    ins_vals[c].cast(meta.column(c).spark_type).alias(c)
-                    for c in tcols
-                ],
-                ins_applied.alias("__hit"),
-            )
-            .filter("__hit")
-            .drop("__hit")
-        )
+        inserts = j.filter(tid.isNull() & ins_applied).select(*[
+            ins_vals[c].cast(meta.column(c).spark_type).alias(c)
+            for c in tcols
+        ])
         # identity columns omitted from every INSERT list draw from their
-        # sequence (same SERIAL semantics as _insert)
+        # sequence (same SERIAL semantics as _insert, one save)
         for c in meta.columns:
-            if c.identity and c.name not in ins_cols:
-                n_ins = inserts.count()
-                if n_ins:
-                    seq = f"{meta.name}_{c.name}_seq"
-                    base_v = self.catalog.nextval(seq)
-                    for _ in range(n_ins - 1):
-                        self.catalog.nextval(seq)
-                    w = F.row_number().over(
-                        Window.orderBy(F.monotonically_increasing_id())
-                    )
-                    inserts = inserts.withColumn(
-                        c.name, (w + base_v - 1).cast(c.spark_type)
-                    )
-
-        target_rows = target_rows.cache()
-        n = (
-            target_rows.filter("__hit").count()
-            + inserts.count()
-        )
-        final = (
-            target_rows.filter("__keep")
-            .drop("__keep", "__hit")
-            .unionByName(inserts)
-        )
-        # NOT NULL + enum domains + CHECK constraints re-checked on the
-        # merged result (UNIQUE/FK are insert-batch checks in _validate; a
-        # merge rewrites the table, so the batch-vs-existing split doesn't
-        # apply)
-        for e in meta.checks:
-            # pg semantics: CHECK passes on TRUE or NULL, fails on FALSE
-            bad = final.filter(
-                ~F.coalesce(F.expr(preprocess(e)), F.lit(True))
-            )
-            if bad.limit(1).count():
-                raise EngineError(f"CHECK violated: {meta.name}: {e}")
-        for c in meta.columns:
-            if not c.nullable or c.name in meta.primary_key:
-                if final.filter(F.col(c.name).isNull()).limit(1).count():
-                    raise EngineError(
-                        f"NOT NULL violated: {meta.name}.{c.name}"
-                    )
-            if c.enum_type:
-                domain = self.catalog.enums[c.enum_type]
-                bad = final.filter(
-                    ~F.col(c.name).isin(*domain) & F.col(c.name).isNotNull()
+            if c.identity and c.name not in ins_cols and stats["ins"]:
+                base_v = self.catalog.nextval(
+                    f"{meta.name}_{c.name}_seq", stats["ins"]
                 )
-                if bad.limit(1).count():
-                    raise EngineError(
-                        f"invalid {c.enum_type} value for {c.name}"
-                    )
-        self._rewrite(meta, final)
-        return self._status(f"merge {meta.name}", n)
+                w = F.row_number().over(
+                    Window.orderBy(F.monotonically_increasing_id())
+                )
+                inserts = inserts.withColumn(
+                    c.name, (w + base_v - 1).cast(c.spark_type)
+                )
+        # the merged result is the new table: every constraint is checked
+        # on it, UNIQUE within the table, as for UPDATE
+        self._commit(meta, target_rows.unionByName(inserts), append=False)
+        return self._status(f"merge {meta.name}", stats["hit"] + stats["ins"])
 
     def _optimize(self, s: str) -> DataFrame:
         """``OPTIMIZE <table> [ZORDER BY (c1, c2, ...)]`` — lakehouse
@@ -2363,9 +2388,11 @@ class Engine:
         raised): one row per constraint with its violation count. The
         reference runs this asynchronously
         (kv/jobs/ConstraintViolationCheckerJob.java, 431 LoC of
-        row-at-a-time probing); here each constraint is one aggregate or
-        anti-join over the table — at 100 TB, a handful of scans with
-        partial aggregation, no per-row driver logic.
+        row-at-a-time probing); here the NOT NULL, enum and CHECK counts
+        share one aggregate (the DML commit's row checks) and each key
+        set and FK is one aggregate or anti-join over the table — at
+        100 TB, a handful of scans with partial aggregation, no per-row
+        driver logic.
 
         Violations can exist despite write-time validation after e.g. an
         ALTER ADD FK on legacy data, a COPY FROM of unvalidated files, or
@@ -2382,25 +2409,25 @@ class Engine:
         report: list[tuple[str, str, str, int]] = []
         for name in names:
             meta = self._table(name)
-            df = self._read(meta).cache()
-            for c in meta.columns:
-                if not c.nullable or c.name in meta.primary_key:
-                    n = df.filter(F.col(c.name).isNull()).count()
-                    if n:
-                        report.append((name, "not_null", c.name, n))
-                if c.enum_type:
-                    domain = self.catalog.enums[c.enum_type]
-                    n = df.filter(
-                        ~F.col(c.name).isin(*domain)
-                        & F.col(c.name).isNotNull()
-                    ).count()
-                    if n:
-                        report.append((name, "enum", c.name, n))
+            df = self._read(meta)
+            # NOT NULL, enum and CHECK counts: the DML row checks, one agg
+            checks = self._row_checks(meta)
+            counts = df.agg(
+                *[F.count_if(bad) for *_, bad in checks]
+            ).first() if checks else []
+            found = [
+                (name, kind, label, n)
+                for (kind, label, _, _), n in zip(checks, counts)
+                if n
+            ]
+            report += [r for r in found if r[1] != "check"]
             keysets = [list(meta.primary_key)] if meta.primary_key else []
             keysets += [u for u in meta.unique if u != list(meta.primary_key)]
             for keys in keysets:
+                # rows in duplicate groups; NULL keys are distinct
                 dup = (
-                    df.groupBy(*keys)
+                    df.filter(self._all_set(keys))
+                    .groupBy(*keys)
                     .count()
                     .filter(F.col("count") > 1)
                     .agg(F.coalesce(F.sum("count"), F.lit(0)))
@@ -2419,23 +2446,7 @@ class Engine:
                         (name, "foreign_key", f"-> {ref_table} (missing)", -1)
                     )
                     continue
-                parent = self._read(self._table(ref_table)).select(
-                    *[
-                        F.col(rc).alias(cc)
-                        for cc, rc in zip(cols, ref_cols)
-                    ]
-                )
-                # MATCH SIMPLE (pg default, mirrored by _validate's
-                # na.drop): a row with ANY null fk column satisfies the
-                # constraint — audit only rows where ALL are non-null
-                all_set = F.lit(True)
-                for c in cols:
-                    all_set = all_set & F.col(c).isNotNull()
-                orphans = (
-                    df.filter(all_set)
-                    .join(parent, cols, "left_anti")
-                    .count()
-                )
+                orphans = self._orphans(df, cols, ref_table, ref_cols).count()
                 if orphans:
                     report.append(
                         (
@@ -2445,13 +2456,7 @@ class Engine:
                             orphans,
                         )
                     )
-            for e in meta.checks:
-                n = df.filter(
-                    ~F.coalesce(F.expr(preprocess(e)), F.lit(True))
-                ).count()
-                if n:
-                    report.append((name, "check", e, n))
-            df.unpersist()
+            report += [r for r in found if r[1] == "check"]
         return self.spark.createDataFrame(
             report,
             "table_name string, constraint_type string, "
@@ -2505,9 +2510,7 @@ class Engine:
                 df = self.spark.read.csv(
                     path, schema=meta.spark_ddl(), header=header
                 )
-            self._validate(meta, df.cache())
-            n = df.count()
-            self._append(meta, df)
+            n, _ = self._commit(meta, df, append=True)
             return self._status(f"copy {meta.name} from {path}", n)
         df = self._read(meta)
         self._write_copy(df, path, opts)
@@ -2605,7 +2608,6 @@ class Engine:
                 },
             }
         self.catalog.save()
-        self._register_pg_catalog()
         return self._status(f"analyzed {len(metas)} tables", len(metas))
 
     def _vacuum(self, s: str) -> DataFrame:
