@@ -12,9 +12,11 @@ Storage: managed tables are versioned parquet directories
 (``tables/<name>/v<k>``). UPDATE/DELETE/TRUNCATE write ``v<k+1>`` then
 flip the catalog pointer — the same O(1) lazy-drop/truncate trick the
 reference plays with truncateTimestamp (kv/TableMetadata.java:119-141),
-minus the background vacuum (old versions are removed eagerly once the
-new version is committed). On a Delta/Iceberg deployment this class
-delegates to the table format; semantics are identical.
+minus the background vacuum: old versions are retained as immutable
+snapshots for ``VERSION AS OF`` until ``VACUUM`` removes them. CREATE
+TABLE makes ``v1`` as an empty directory, so it runs no Spark job. On a
+Delta/Iceberg deployment this class delegates to the table format;
+semantics are identical.
 
 Constraint enforcement (reference kv/KvQueryExecutor.java:4276-4472):
 every validated write (INSERT, upsert, UPDATE, MERGE, COPY FROM) goes
@@ -569,14 +571,22 @@ class Engine:
 
         DDL only marks the ~17 pg_catalog views stale; they are rebuilt
         once, before the first statement whose text names a ``pg_*``
-        relation, so a script that never reads them never builds them."""
+        relation, so a script that never reads them never builds them.
+
+        An exception keeps its type and message and gets a note naming
+        the failing statement's 1-based position and its first 200
+        characters."""
         result = self._status("ok", 0)
-        for stmt in split_statements(text):
+        for i, stmt in enumerate(split_statements(text), 1):
             if self._pg_stale and self._PG_RELATION.search(stmt):
                 self._register_pg_catalog()
             if self._CATALOG_DDL.match(stmt):
                 self._pg_stale = True
-            result = self._one(stmt)
+            try:
+                result = self._one(stmt)
+            except Exception as e:
+                e.add_note(f"in statement {i}: {stmt.strip()[:200]}")
+                raise
         return result
 
     def _one(self, stmt: str) -> DataFrame:
@@ -1079,9 +1089,11 @@ class Engine:
         meta.partition_by = partition_by
         meta.path = os.path.join(self.catalog.table_path(name), "v1")
         self.catalog.add_table(meta)
-        self.spark.createDataFrame([], meta.spark_ddl()).write.mode(
-            "overwrite"
-        ).parquet(meta.path)
+        # v1 is an empty directory, not an empty parquet write: no Spark
+        # job, and readers take the schema from the catalog. Files a lost
+        # catalog left under the same name must not become rows.
+        shutil.rmtree(meta.path, ignore_errors=True)
+        os.makedirs(meta.path)
         self._register(meta)
         return self._status(f"create table {name}")
 
@@ -2548,7 +2560,10 @@ class Engine:
                     "(vacuumed or never written)"
                 )
             alias = f"{name}__asof_v{ver}"
-            self.spark.read.parquet(vpath).createOrReplaceTempView(alias)
+            reader = self.spark.read
+            if not os.listdir(vpath):  # v1 of a table created empty
+                reader = reader.schema(meta.spark_ddl())
+            reader.parquet(vpath).createOrReplaceTempView(alias)
             return f"FROM {alias}"
 
         rewritten = re.sub(

@@ -38,6 +38,25 @@ def test_multi_statement_script(eng):
     assert rows(out) == [(1,)]
 
 
+def test_error_names_the_failing_statement(eng):
+    script = (
+        "CREATE TABLE t (id INT PRIMARY KEY);\n"
+        "INSERT INTO t VALUES (1), (1);\n"
+        "SELECT * FROM t"
+    )
+    with pytest.raises(EngineError, match="UNIQUE violated") as err:
+        eng.sql(script)
+    assert err.value.__notes__ == [
+        "in statement 2: INSERT INTO t VALUES (1), (1)"
+    ]
+    assert rows(eng.sql("SELECT * FROM t")) == []
+    # Spark's own errors get the note too, with the text cut at 200 chars
+    long = "SELECT nosuch FROM t WHERE " + " OR ".join(["id = 1"] * 40)
+    with pytest.raises(Exception, match="nosuch") as err:
+        eng.sql(long)
+    assert err.value.__notes__ == [f"in statement 1: {long[:200]}"]
+
+
 def test_serial_identity(eng):
     # reference SERIAL auto-increment (kv/SchemaManager.java:736)
     eng.sql("CREATE TABLE s (id SERIAL PRIMARY KEY, v TEXT)")

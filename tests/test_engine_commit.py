@@ -217,3 +217,28 @@ def test_pg_catalog_built_on_first_read(eng):
     assert rows(out) == [("p1",), ("p2",)]
     eng.sql("SELECT count(*) FROM pg_attribute")
     assert built == [1]
+
+
+def test_create_table_runs_no_spark_job(eng, spark):
+    sc = spark.sparkContext
+    group = f"create-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "create table")
+    try:
+        eng.sql(
+            "CREATE TABLE c (id INT PRIMARY KEY, name TEXT NOT NULL, "
+            "region TEXT) PARTITION BY LIST (region)"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    out = eng.sql("SELECT * FROM c")
+    assert out.columns == ["id", "name", "region"]
+    assert rows(out) == []
+    # the first write publishes v2; v1 stays the empty snapshot
+    eng.sql("INSERT INTO c VALUES (1, 'a', 'eu')")
+    assert eng.catalog.tables["c"].path.endswith("/v2")
+    assert rows(eng.sql("SELECT * FROM c VERSION AS OF 1")) == []
+    assert rows(eng.sql("SELECT id FROM c VERSION AS OF 2")) == [(1,)]
+    eng.sql("VACUUM c")
+    with pytest.raises(ValueError, match="does not exist"):
+        eng.sql("SELECT * FROM c VERSION AS OF 1")
