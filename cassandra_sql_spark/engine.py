@@ -34,7 +34,7 @@ import re
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -881,8 +881,12 @@ class Engine:
             ).cast("bigint"),
         )
         meta.path = os.path.join(self.catalog.table_path(name), "v1")
-        out.write.mode("overwrite").parquet(meta.path)
-        n = self.spark.read.parquet(meta.path).count()
+        # count the rows on the write itself: re-reading v1 runs more jobs
+        written = Observation()
+        out.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(meta.path)
+        n = written.get["n"]
         self.catalog.add_table(meta)
         self.catalog.create_sequence(f"{name}_rowid_seq", start=n + 1)
         self._register(meta)

@@ -2,10 +2,13 @@
 
 Design: media payloads are opaque ``binary`` columns plus a typed metadata
 struct. All Spark-side plumbing — schema, Arrow batch shape, partitioning,
-mapInPandas signatures — is real and tested; the actual codec step is
-STUBBED (no image/audio libraries in this environment) behind
-``decode_stub``: a deterministic fake that derives "features" from raw
-bytes, or ``NotImplementedError`` in strict mode.
+mapInPandas signatures — is real and tested. Generic payloads go through
+``decode_stub`` (a deterministic fake that derives "features" from raw
+bytes, or ``NotImplementedError`` in strict mode); BMP, WAV, PNG, JPEG
+(baseline gray and 4:2:0 color, progressive, restart intervals) and GIF
+(single and animated) are real pure-Python codecs in the same slot.
+Every fixture generator shares one mapInPandas scaffold (``_synth``) and
+every decode-feature kernel another (``_features``).
 
 At 100 TB: payloads dominate row size, so feature extraction uses
 mapInPandas (Arrow batches, one Python worker per input partition, no
@@ -73,6 +76,48 @@ FEATURE_SCHEMA = StructType(
         StructField("features", ArrayType(DoubleType())),
     ]
 )
+
+_PAYLOAD_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
+
+
+def _synth(df: DataFrame, id_col: str, make) -> DataFrame:
+    """The fixture scaffold of every synth_*: one ``make(id)`` payload
+    per row, built in Arrow batches (mapInPandas, map-only)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf[id_col],
+                    "payload": [make(int(d)) for d in pdf[id_col]],
+                }
+            )
+
+    return df.select(id_col).mapInPandas(run, _PAYLOAD_SCHEMA)
+
+
+def _features(
+    df: DataFrame, id_col: str, payload_col: str, schema: StructType, row
+) -> DataFrame:
+    """The decode-feature scaffold: ``row(payload)`` returns the values
+    of ``schema``'s fields after doc_id, one call per row, in Arrow
+    batches (mapInPandas — the slot a PIL/ffmpeg decoder drops into)."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {k: [] for k in names}
+            for d, p in zip(pdf[id_col], pdf[payload_col]):
+                for k, v in zip(names, (int(d), *row(bytes(p)))):
+                    out[k].append(v)
+            yield pd.DataFrame(out)
+
+    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 def sample_frames(
@@ -147,28 +192,15 @@ def resize_media(
     the resized payload, not the bytes."""
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = pdf[payload_col].map(
-                lambda p: resize_stub(bytes(p), target_bytes)
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes_in": pdf[payload_col].map(len).astype("int64"),
-                    "n_bytes_out": resized.map(len).astype("int64"),
-                    "resized_md5": resized.map(
-                        lambda b: hashlib.md5(b).hexdigest()
-                    ),
-                }
-            )
+    def row(p: bytes):
+        resized = resize_stub(p, target_bytes)
+        return len(p), len(resized), hashlib.md5(resized).hexdigest()
 
     # empty media cannot be tiled to a target size — excluded, like the
     # frame sampler (a real codec would reject a zero-byte file too)
-    return (
-        df.filter(F.octet_length(F.col(payload_col)) > 0)
-        .select(id_col, payload_col)
-        .mapInPandas(run, RESIZE_SCHEMA)
+    return _features(
+        df.filter(F.octet_length(F.col(payload_col)) > 0),
+        id_col, payload_col, RESIZE_SCHEMA, row,
     )
 
 
@@ -264,31 +296,20 @@ def synth_bmp_payload(
     decoder that shortcuts any of those reads the wrong pixels."""
     import numpy as np
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    idx = np.arange(side * side, dtype=np.int64).reshape(side, side)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(side * side, dtype=np.int64).reshape(side, side)
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                img = np.stack(
-                    [
-                        (d * 31 + idx) % 256,
-                        (d * 17 + 2 * idx) % 251,
-                        (d * 7 + 3 * idx) % 253,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                payloads.append(bmp_encode(img))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+    def make(d: int) -> bytes:
+        img = np.stack(
+            [
+                (d * 31 + idx) % 256,
+                (d * 17 + 2 * idx) % 251,
+                (d * 7 + 3 * idx) % 253,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        return bmp_encode(img)
 
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
 
 
 DECODE_REAL_SCHEMA = StructType(
@@ -316,33 +337,25 @@ def decode_resize_bmp(
     order, swaps channels, or mis-strides produces a different number
     (a plain global mean would hide all three). Every term is a quarter-
     integer: float64-exact, DuckDB-replayable."""
+
+    def row(p: bytes):
+        img = bmp_decode(p)
+        h, w, _ = img.shape
+        return (w, h, len(p), *_resized_wsums(img, out_side))
+
+    return _features(df, id_col, payload_col, DECODE_REAL_SCHEMA, row)
+
+
+def _resized_wsums(img, out_side: int) -> list[float]:
+    """Per-channel sum(mean_block_b * (b+1)) over the box-resized
+    (out_side x out_side) image, blocks b in raster order."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "n_bytes": [],
-                "wsum_r": [], "wsum_g": [], "wsum_b": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(p)
-                img = bmp_decode(p)
-                h, w, _ = img.shape
-                small = box_resize(img, out_side, out_side)
-                weights = np.arange(
-                    1, out_side * out_side + 1, dtype=np.float64
-                ).reshape(out_side, out_side)
-                out["doc_id"].append(int(d))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_bytes"].append(len(p))
-                for ci, col in enumerate(("wsum_r", "wsum_g", "wsum_b")):
-                    out[col].append(float((small[:, :, ci] * weights).sum()))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, DECODE_REAL_SCHEMA
-    )
+    small = box_resize(img, out_side, out_side)
+    weights = np.arange(
+        1, out_side * out_side + 1, dtype=np.float64
+    ).reshape(out_side, out_side)
+    return [float((small[:, :, ci] * weights).sum()) for ci in range(3)]
 
 
 # ---------------------------------------------------------------------------
@@ -421,31 +434,14 @@ def synth_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Spark side must genuinely parse the bytes (chunk walk + fmt read)."""
     import numpy as np
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    def make(d: int) -> bytes:
+        i = np.arange(64 + (d % 3) * 32, dtype=np.int64)
+        s = ((d * 37 + i * 13) % 4001) - 2000
+        return wav_encode(
+            s.astype(np.int16), 8000 + (d % 2) * 3050, junk=bool(d % 2)
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                n = 64 + (d % 3) * 32
-                i = np.arange(n, dtype=np.int64)
-                s = ((d * 37 + i * 13) % 4001) - 2000
-                payloads.append(
-                    wav_encode(
-                        s.astype(np.int16),
-                        8000 + (d % 2) * 3050,
-                        junk=bool(d % 2),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
 
 
 def synth_wav_square(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -455,27 +451,13 @@ def synth_wav_square(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     s_i = +-1500 by (i // h) % 2 — closed form a SQL oracle replays."""
     import numpy as np
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    i = np.arange(96, dtype=np.int64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i = np.arange(96, dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                h = 3 + d % 5
-                s = np.where((i // h) % 2 == 0, 1500, -1500)
-                payloads.append(
-                    wav_encode(s.astype(np.int16), 8000, junk=bool(d % 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+    def make(d: int) -> bytes:
+        s = np.where((i // (3 + d % 5)) % 2 == 0, 1500, -1500)
+        return wav_encode(s.astype(np.int16), 8000, junk=bool(d % 2))
 
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
 
 
 AUDIO_PITCH_SCHEMA = StructType(
@@ -505,30 +487,17 @@ def audio_pitch_wav(
     not the synth formula."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_PITCH_SCHEMA.fields}
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                _, s = wav_decode(bytes(p))
-                s64 = s.astype(np.int64)
-                n = len(s64)
-                best_lag, best_r = None, None
-                for lag in range(min_lag, max_lag + 1):
-                    if lag >= n:
-                        break
-                    r = int(np.dot(s64[:-lag], s64[lag:]))
-                    if best_r is None or r > best_r:
-                        best_lag, best_r = lag, r
-                out["doc_id"].append(int(d))
-                out["n_samples"].append(n)
-                out["best_lag"].append(best_lag)
-                out["r_best"].append(best_r)
-                out["r0"].append(int(np.dot(s64, s64)))
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        s64 = wav_decode(p)[1].astype(np.int64)
+        n = len(s64)
+        best_lag, best_r = None, None
+        for lag in range(min_lag, min(max_lag + 1, n)):
+            r = int(np.dot(s64[:-lag], s64[lag:]))
+            if best_r is None or r > best_r:
+                best_lag, best_r = lag, r
+        return n, best_lag, best_r, int(np.dot(s64, s64))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, AUDIO_PITCH_SCHEMA
-    )
+    return _features(df, id_col, payload_col, AUDIO_PITCH_SCHEMA, row)
 
 
 AUDIO_REAL_SCHEMA = StructType(
@@ -560,41 +529,25 @@ def audio_features_wav(
 
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_REAL_SCHEMA.fields}
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(p)
-                rate, s = wav_decode(p)
-                s64 = s.astype(np.int64)
-                n = len(s64)
-                out["doc_id"].append(int(d))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(n)
-                out["n_bytes"].append(len(p))
-                out["peak_abs"].append(
-                    int(np.abs(s64).max()) if n else 0
-                )
-                out["zero_crossings"].append(
-                    int(np.count_nonzero(s64[1:] * s64[:-1] < 0))
-                )
-                # window w = samples with (i*4)//n == w — the oracle's
-                # partition rule, exact for ANY n (the n//4 slicing it
-                # replaces silently dropped the last n%4 samples and
-                # agreed only because the synth formula keeps n % 4 == 0)
-                for w in range(4):
-                    lo = -(-w * n // 4)  # ceil(w*n/4)
-                    hi = -(-(w + 1) * n // 4)
-                    win = s64[lo:hi]
-                    sumsq = int((win * win).sum())
-                    out[f"rms_q{w + 1}"].append(
-                        math.sqrt(sumsq / len(win)) if len(win) else 0.0
-                    )
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        rate, s = wav_decode(p)
+        s64 = s.astype(np.int64)
+        n = len(s64)
+        rms = []
+        # window w = samples with (i*4)//n == w — the oracle's partition
+        # rule, exact for ANY n (the n//4 slicing it replaces silently
+        # dropped the last n%4 samples and agreed only because the synth
+        # formula keeps n % 4 == 0)
+        for w in range(4):
+            win = s64[-(-w * n // 4):-(-(w + 1) * n // 4)]  # ceil bounds
+            sumsq = int((win * win).sum())
+            rms.append(math.sqrt(sumsq / len(win)) if len(win) else 0.0)
+        return (
+            int(rate), n, len(p), int(np.abs(s64).max()) if n else 0,
+            int(np.count_nonzero(s64[1:] * s64[:-1] < 0)), *rms,
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, AUDIO_REAL_SCHEMA
-    )
+    return _features(df, id_col, payload_col, AUDIO_REAL_SCHEMA, row)
 
 
 HIST_SCHEMA = StructType(
@@ -618,23 +571,14 @@ def byte_histogram_csv(
     over nothing is the one case decode_stub fudges with max(n, 1))."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nb, csv = [], [], []
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                b = np.frombuffer(bytes(p), dtype=np.uint8)
-                counts = np.bincount(b % FEATURE_DIM, minlength=FEATURE_DIM)
-                ids.append(int(d))
-                nb.append(len(b))
-                csv.append(",".join(str(int(c)) for c in counts))
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_bytes": nb, "hist_csv": csv}
-            )
+    def row(p: bytes):
+        b = np.frombuffer(p, dtype=np.uint8)
+        counts = np.bincount(b % FEATURE_DIM, minlength=FEATURE_DIM)
+        return len(b), ",".join(str(int(c)) for c in counts)
 
-    return (
-        df.filter(F.octet_length(F.col(payload_col)) > 0)
-        .select(id_col, payload_col)
-        .mapInPandas(run, HIST_SCHEMA)
+    return _features(
+        df.filter(F.octet_length(F.col(payload_col)) > 0),
+        id_col, payload_col, HIST_SCHEMA, row,
     )
 
 
@@ -646,20 +590,10 @@ def extract_features(
     mapInPandas: per-partition iterator of pandas batches — the pattern a
     real decoder (PIL/ffmpeg) would drop into unchanged.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pdf[payload_col].map(len).astype("int64"),
-                    "features": pdf[payload_col].map(
-                        lambda p: decode_stub(bytes(p))
-                    ),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, FEATURE_SCHEMA)
+    return _features(
+        df, id_col, payload_col, FEATURE_SCHEMA,
+        lambda p: (len(p), decode_stub(p)),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -856,40 +790,25 @@ def synth_png_payload(
     ids % 3 == 0 — each a decoder shortcut the oracle then catches."""
     import numpy as np
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    idx = np.arange(side * side, dtype=np.int64).reshape(side, side)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(side * side, dtype=np.int64).reshape(side, side)
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                img = np.stack(
-                    [
-                        (d * 13 + 5 * idx) % 256,
-                        (d * 29 + 3 * idx) % 254,
-                        (d * 11 + 7 * idx) % 249,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                payloads.append(
-                    png_encode(
-                        img,
-                        row_filter=lambda y, d=d: (d + y) % 5,
-                        idat_split=1 + d % 2,
-                        text_chunk=(
-                            b"Source\x00synthetic" if d % 3 == 0 else None
-                        ),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+    def make(d: int) -> bytes:
+        img = np.stack(
+            [
+                (d * 13 + 5 * idx) % 256,
+                (d * 29 + 3 * idx) % 254,
+                (d * 11 + 7 * idx) % 249,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        return png_encode(
+            img,
+            row_filter=lambda y: (d + y) % 5,
+            idat_split=1 + d % 2,
+            text_chunk=b"Source\x00synthetic" if d % 3 == 0 else None,
+        )
 
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
 
 
 PNG_REAL_SCHEMA = StructType(
@@ -918,49 +837,36 @@ def decode_resize_png(
     (closed-form in the id: 3 + id%2 + [id%3==0], so a decoder that does
     not actually walk chunks cannot echo it). Quarter-integer arithmetic,
     float64-exact, DuckDB-replayable."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "n_chunks": [],
-                "wsum_r": [], "wsum_g": [], "wsum_b": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                img, n_chunks = png_decode(bytes(p))
-                h, w, _ = img.shape
-                small = box_resize(img, out_side, out_side)
-                weights = np.arange(
-                    1, out_side * out_side + 1, dtype=np.float64
-                ).reshape(out_side, out_side)
-                out["doc_id"].append(int(d))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_chunks"].append(n_chunks)
-                for ci, col in enumerate(("wsum_r", "wsum_g", "wsum_b")):
-                    out[col].append(float((small[:, :, ci] * weights).sum()))
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        img, n_chunks = png_decode(p)
+        h, w, _ = img.shape
+        return (w, h, n_chunks, *_resized_wsums(img, out_side))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, PNG_REAL_SCHEMA
-    )
+    return _features(df, id_col, payload_col, PNG_REAL_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
-# REAL codec #4: baseline JPEG, grayscale (ITU T.81 sequential DCT).
-# The first LOSSY transform codec behind the seam: a real bitstream
-# writer/reader (SOI/APP0/DQT/SOF0/DHT/SOS/EOI marker walk, Annex-K
-# quantization + Huffman tables, DC difference coding, 0xFF00 byte
-# stuffing, EOB run handling) around a real float64 DCT-II/IDCT pair.
-# Rounding is pinned to floor(x + 0.5) at both quantization and sample
-# reconstruction so decode is a deterministic function of the payload.
-# The oracle-checked fixtures use flat 8x8 blocks with EVEN levels:
-# for a flat block the DCT is DC-only and (with Annex-K q[0]=16) the
-# quantized DC is exactly (v-128)/2 — integral for even v — so the
-# lossy pipeline reproduces the source EXACTLY and DuckDB can replay
-# the decoded statistic closed-form. The AC/quality path (where loss is
-# real) is pinned in pytest by round-trip error bounds on random
-# images. JPEG color (YCbCr + subsampling) stays behind the stub seam.
+# REAL codec #4: the JPEG family (ITU T.81 DCT), starting with baseline
+# grayscale. The first LOSSY transform codec behind the seam: a real
+# bitstream writer/reader (SOI/APP0/DQT/SOF/DHT/DRI/SOS/EOI marker walk,
+# Annex-K quantization + Huffman tables, DC difference coding, 0xFF00
+# byte stuffing, EOB run handling) around a real float64 DCT-II/IDCT
+# pair. Rounding is pinned to floor(x + 0.5) at both quantization and
+# sample reconstruction so decode is a deterministic function of the
+# payload. All three public decoders (gray, color #6, progressive #7)
+# are thin wrappers over ONE decoder, _jpeg_decode: one marker walk and
+# one scan loop that runs T.81's progressive procedure for every scan
+# (a baseline scan is its Ss=0, Se=63, Ah=Al=0 case with EOB0 only), so
+# Huffman reading, restart handling and dequant+IDCT exist once. The
+# three encoders share the header writer _jpeg_file, and the two
+# baseline ones the scan writer _baseline_scan. The oracle-checked
+# fixtures use flat 8x8 blocks with EVEN levels: for a flat block the
+# DCT is DC-only and (with Annex-K q[0]=16) the quantized DC is exactly
+# (v-128)/2 — integral for even v — so the lossy pipeline reproduces
+# the source EXACTLY and DuckDB can replay the decoded statistic
+# closed-form. The AC/quality path (where loss is real) is pinned in
+# pytest by round-trip error bounds on random images.
 # ---------------------------------------------------------------------------
 
 # Annex K.1 luminance quantization table (zigzag-ordered at use site).
@@ -976,7 +882,7 @@ _JPEG_QTAB = [
 ]
 
 # Annex K.3 luminance DC Huffman spec: BITS (counts per code length
-# 1..16) and HUFFVAL.
+# 1..16) and HUFFVAL (the chroma DC table K.4 has the same HUFFVAL).
 _DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
 _DC_VALS = list(range(12))
 # Annex K.5 luminance AC Huffman spec.
@@ -998,6 +904,8 @@ _AC_VALS = [
     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
+# DHT segments of the luma tables: (class << 4 | id, BITS, HUFFVAL).
+_LUMA_DHT = [(0x00, _DC_BITS, _DC_VALS), (0x10, _AC_BITS, _AC_VALS)]
 
 _ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -1005,6 +913,9 @@ _ZIGZAG = [
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ]
+
+# Start-of-frame markers of the Huffman DCT processes (T.81 B.1.1.3).
+_SOF_MARKERS = (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7)
 
 
 def _huff_codes(bits, vals):
@@ -1131,6 +1042,124 @@ def _dct_mats():
     return m  # forward: M @ block @ M.T ; inverse: M.T @ coef @ M
 
 
+def _quantize_block(blk, q, m):
+    """float64 DCT + floor(x/q + 0.5) -> zigzag-ordered int64[64]."""
+    import numpy as np
+
+    coef = m @ (blk.astype(np.float64) - 128.0) @ m.T
+    zq = np.floor(coef / q + 0.5).astype(np.int64)
+    return zq.flatten()[_ZIGZAG]
+
+
+def _quant_blocks_gray(img, qscale: int = 1):
+    """Front half of both gray encoders: per-block (raster order)
+    zigzag quantized coefficients + the Annex-K table scaled by
+    qscale."""
+    import numpy as np
+
+    h, w = img.shape
+    if h % 8 or w % 8:
+        raise ValueError("jpeg encode requires 8-aligned dims")
+    q = np.array(_JPEG_QTAB, np.int64).reshape(8, 8) * int(qscale)
+    q = np.clip(q, 1, 255)
+    m = _dct_mats()
+    blocks = [
+        _quantize_block(img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8], q, m)
+        for by in range(h // 8)
+        for bx in range(w // 8)
+    ]
+    return blocks, q
+
+
+def _encode_qblock(bw, zz, prev_dc, dc_codes, ac_codes) -> int:
+    """Entropy-encode one zigzag-quantized baseline block; returns its
+    DC (the next block's predictor)."""
+    diff = int(zz[0]) - prev_dc
+    size, bits = _magnitude(diff)
+    c, ln = dc_codes[size]
+    bw.put(c, ln)
+    if size:
+        bw.put(bits, size)
+    run = 0
+    last_nz = max((i for i in range(1, 64) if zz[i] != 0), default=0)
+    for i in range(1, last_nz + 1):
+        v = int(zz[i])
+        if v == 0:
+            run += 1
+            if run == 16:
+                c, ln = ac_codes[0xF0]  # ZRL
+                bw.put(c, ln)
+                run = 0
+            continue
+        size, bits = _magnitude(v)
+        c, ln = ac_codes[(run << 4) | size]
+        bw.put(c, ln)
+        bw.put(bits, size)
+        run = 0
+    if last_nz < 63:
+        c, ln = ac_codes[0x00]  # EOB
+        bw.put(c, ln)
+    return int(zz[0])
+
+
+def _baseline_scan(mcus, codes, ri: int) -> bytes:
+    """Entropy-code one baseline scan. ``mcus`` lists each MCU's
+    (component index, zigzag block) pairs in coding order, ``codes``
+    each component's (DC, AC) code maps. Every ``ri`` MCUs: pad, RSTm
+    with m cycling 0..7 and every DC predictor reset (T.81 E.1.4)."""
+    bw = _BitWriter()
+    pred = [0] * len(codes)
+    for n, mcu in enumerate(mcus):
+        if ri and n and n % ri == 0:
+            bw.restart((n // ri - 1) % 8)
+            pred = [0] * len(codes)
+        for k, zz in mcu:
+            pred[k] = _encode_qblock(bw, zz, pred[k], *codes[k])
+    bw.flush()
+    return bytes(bw.buf)
+
+
+def _jpeg_file(
+    sof, h, w, comps, qtabs, dht, ri, scans, split_dqt=True
+) -> bytes:
+    """The header writer of all three encoders: SOI, APP0 (JFIF), DQT
+    (one segment per (id, 8x8 table) in ``qtabs``, or one segment for
+    all), the ``sof`` frame over ``comps`` [(id, sampling, quant id,
+    DC<<4|AC table selector)], one DHT segment per (class<<4|id, BITS,
+    HUFFVAL), DRI when ``ri``, then each ((Ss, Se, Ah, Al), entropy
+    data) scan behind its SOS (every scan covers all components), and
+    EOI."""
+    import struct
+
+    def seg(marker, body):
+        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+    dqt = [
+        bytes([tid]) + bytes(int(v) for v in q.flatten()[_ZIGZAG])
+        for tid, q in qtabs
+    ]
+    # APP0: JFIF 1.1, no density units, 1:1 density, no thumbnail
+    app0 = b"JFIF\x00" + bytes((1, 1, 0, 0, 1, 0, 1, 0, 0))
+    out = [b"\xff\xd8", seg(0xE0, app0)]
+    if split_dqt:
+        out += [seg(0xDB, t) for t in dqt]
+    else:
+        out.append(seg(0xDB, b"".join(dqt)))
+    out.append(seg(
+        sof,
+        struct.pack(">BHHB", 8, h, w, len(comps))
+        + b"".join(bytes(c[:3]) for c in comps),
+    ))
+    out += [seg(0xC4, bytes([tc]) + bytes(b) + bytes(v)) for tc, b, v in dht]
+    if ri:
+        out.append(seg(0xDD, struct.pack(">H", ri)))
+    sel = bytes([len(comps)]) + b"".join(bytes((c[0], c[3])) for c in comps)
+    for (ss, se, ah, al), data in scans:
+        out += [seg(0xDA, sel + bytes((ss, se, (ah << 4) | al))), data]
+    out.append(b"\xff\xd9")
+    return b"".join(out)
+
+
 def jpeg_encode_gray(img, qscale: int = 1, restart_interval: int = 0) -> bytes:
     """Encode an (h, w) uint8 grayscale array as baseline JPEG (SOF0,
     one component, Annex-K tables scaled by qscale). h and w must be
@@ -1142,205 +1171,364 @@ def jpeg_encode_gray(img, qscale: int = 1, restart_interval: int = 0) -> bytes:
     0..7 (T.81 E.1.4) — resetting the DC predictor, which is what
     makes restart markers RESYNC points: a decoder can re-enter the
     stream at any RST with no carried state (codec #9)."""
-    import struct
+    blocks, q = _quant_blocks_gray(img, qscale)
+    h, w = img.shape
+    ri = int(restart_interval)
+    luma = (_huff_codes(_DC_BITS, _DC_VALS), _huff_codes(_AC_BITS, _AC_VALS))
+    data = _baseline_scan([[(0, zz)] for zz in blocks], [luma], ri)
+    return _jpeg_file(
+        0xC0, h, w, [(1, 0x11, 0, 0x00)], [(0, q)], _LUMA_DHT, ri,
+        [((0, 63, 0, 0), data)],
+    )
 
+
+def _read_symbol(br, table):
+    """Read one Huffman-coded symbol: extend the code a bit at a time
+    until (length, code) names a symbol of ``table``."""
+    ln, code = 0, 0
+    for _ in range(16):
+        code = (code << 1) | br.bit()
+        ln += 1
+        sym = table.get((ln, code))
+        if sym is not None:
+            return sym
+    raise ValueError("invalid Huffman code")
+
+
+def _ac_first(br, table, zz, k, se, al, eobrun) -> int:
+    """AC first pass over zigzag band [k, se] of one block (T.81 G.1.2.2;
+    a baseline block is the band 1..63 at Al=0). ``eobrun`` blocks still
+    covered by an earlier EOBn are skipped. Returns the EOB run left for
+    the following blocks."""
+    if eobrun:
+        return eobrun - 1
+    while k <= se:
+        sym = _read_symbol(br, table)
+        r, s = sym >> 4, sym & 0x0F
+        if s == 0:
+            if r < 15:  # EOBr: this block and 2^r - 1 + bits more end
+                return (1 << r) - 1 + br.bits(r)
+            k += 16  # ZRL
+            continue
+        if s > 10:
+            raise ValueError("AC magnitude category out of range")
+        k += r
+        if k > se:
+            raise ValueError("AC run past band end")
+        zz[k] = _extend(br.bits(s), s) << al
+        k += 1
+    return 0
+
+
+def _ac_refine(br, table, zz, k, se, al, eobrun) -> int:
+    """AC refinement pass over band [k, se] of one block (T.81 G.1.2.3,
+    libjpeg decode_mcu_AC_refine): newly significant coefficients of
+    magnitude 1 << al, plus one correction bit for every already-nonzero
+    coefficient the span or the EOB run passes. Returns the EOB run
+    left for the following blocks."""
+    p1, m1 = 1 << al, -1 << al
+    if eobrun == 0:
+        while k <= se:
+            sym = _read_symbol(br, table)
+            r, s = sym >> 4, sym & 0x0F
+            val = 0
+            if s == 0:
+                if r < 15:
+                    eobrun = (1 << r) + br.bits(r)
+                    break
+                # r == 15: ZRL, span 16 zero-history coefficients
+            else:
+                if s != 1:
+                    raise ValueError("refine size must be 1")
+                val = p1 if br.bit() else m1
+            while k <= se:
+                if zz[k] != 0:
+                    if br.bit() and not (zz[k] & p1):
+                        zz[k] += p1 if zz[k] > 0 else m1
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if val and k <= se:
+                zz[k] = val
+            k += 1
+    if eobrun > 0:
+        while k <= se:
+            if zz[k] != 0 and br.bit() and not (zz[k] & p1):
+                zz[k] += p1 if zz[k] > 0 else m1
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+
+def _jpeg_scan(br, mcus, coef, tables, ss, se, ah, al, ri, baseline):
+    """Decode one scan's entropy data into ``coef`` (per component, per
+    block, zigzag lists): for each MCU of (component, block) pairs the
+    DC pass (Ss=0: first, or a refinement bit when Ah>0), then the AC
+    band through _ac_first/_ac_refine. Before every ``ri``-th MCU: RSTm
+    realign with the modulo-8 check, every DC predictor and the EOB run
+    reset. A baseline scan may only end blocks with EOB0."""
+    preds = [0] * len(tables)
+    eobrun = 0
+    lo = max(ss, 1)
+    for i, mcu in enumerate(mcus):
+        if ri and i and i % ri == 0:
+            got, want = br.sync_restart(), (i // ri - 1) % 8
+            if got != want:
+                raise ValueError(
+                    f"RST sequence broken: got {got}, want {want}"
+                )
+            preds = [0] * len(tables)
+            eobrun = 0
+        for k, b in mcu:
+            zz = coef[k][b]
+            dc, ac = tables[k]
+            if ss == 0:
+                if ah:
+                    if br.bit():
+                        zz[0] |= 1 << al
+                else:
+                    size = _read_symbol(br, dc)
+                    if size > 11:
+                        raise ValueError("DC magnitude category out of range")
+                    preds[k] += _extend(br.bits(size), size)
+                    zz[0] = preds[k] << al
+            if se:
+                if ah:
+                    eobrun = _ac_refine(br, ac, zz, lo, se, al, eobrun)
+                else:
+                    eobrun = _ac_first(br, ac, zz, lo, se, al, eobrun)
+                    if eobrun and baseline:
+                        raise ValueError("EOB run in a baseline scan")
+
+
+def _deq_idct(zz, q, m):
+    """Dequant + IDCT + level shift -> (8, 8) uint8."""
     import numpy as np
 
-    h, w = img.shape
-    if h % 8 or w % 8:
-        raise ValueError("jpeg_encode_gray requires 8-aligned dims")
-    ri = int(restart_interval)
-    q = np.array(_JPEG_QTAB, np.int64).reshape(8, 8) * int(qscale)
-    q = np.clip(q, 1, 255)
-    m = _dct_mats()
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _huff_codes(_AC_BITS, _AC_VALS)
-    bw = _BitWriter()
-    prev_dc = 0
-    n_done = 0
-    n_total = (h // 8) * (w // 8)
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            if ri and n_done and n_done % ri == 0:
-                bw.restart((n_done // ri - 1) % 8)
-                prev_dc = 0
-            blk = img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8].astype(
-                np.float64
-            ) - 128.0
-            coef = m @ blk @ m.T
-            # floor(x/q + 0.5) — the pinned rounding (spec says
-            # round-to-nearest without fixing ties)
-            zq = np.floor(coef / q + 0.5).astype(np.int64)
-            zz = zq.flatten()[_ZIGZAG]
-            diff = int(zz[0]) - prev_dc
-            prev_dc = int(zz[0])
-            size, bits = _magnitude(diff)
-            c, ln = dc_codes[size]
-            bw.put(c, ln)
-            if size:
-                bw.put(bits, size)
-            run = 0
-            last_nz = max(
-                (i for i in range(1, 64) if zz[i] != 0), default=0
-            )
-            for i in range(1, last_nz + 1):
-                v = int(zz[i])
-                if v == 0:
-                    run += 1
-                    if run == 16:
-                        c, ln = ac_codes[0xF0]  # ZRL
-                        bw.put(c, ln)
-                        run = 0
-                    continue
-                size, bits = _magnitude(v)
-                c, ln = ac_codes[(run << 4) | size]
-                bw.put(c, ln)
-                bw.put(bits, size)
-                run = 0
-            if last_nz < 63:
-                c, ln = ac_codes[0x00]  # EOB
-                bw.put(c, ln)
-            n_done += 1
-    assert n_done == n_total
-    bw.flush()
-
-    def seg(marker, payload):
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    qz = bytes(int(q.flatten()[_ZIGZAG][i]) for i in range(64))
-    out = b"\xff\xd8"  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + qz)  # DQT, table 0, 8-bit
-    out += seg(0xC0, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
-    out += seg(
-        0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS)
-    )  # DHT DC class 0 id 0
-    out += seg(0xC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
-    if ri:
-        out += seg(0xDD, struct.pack(">H", ri))  # DRI
-    out += seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")  # SOS
-    out += bytes(bw.buf)
-    out += b"\xff\xd9"  # EOI
-    return out
+    coef = np.zeros(64, np.int64)
+    coef[np.array(_ZIGZAG)] = zz
+    blk = m.T @ (coef.reshape(8, 8) * q).astype(np.float64) @ m
+    return np.clip(np.floor(blk + 128.0 + 0.5), 0, 255).astype(np.uint8)
 
 
-def jpeg_decode_gray(payload: bytes):
-    """Decode a baseline grayscale JPEG produced by ANY conforming
-    writer of this subset (one component, optional restart intervals,
-    8-bit) to ((h, w) uint8 array, n_blocks). Real marker walk +
-    Huffman decode + dequant + IDCT; DRI/RSTm honored (byte realign +
-    DC predictor reset + modulo-8 sequence check — codec #9);
-    ValueError on anything outside the subset (progressive,
-    multi-component, 12-bit) — the strict contract line."""
+def _jpeg_decode(payload: bytes, sof: int, ncomp: int):
+    """The one T.81 decoder behind jpeg_decode_gray, jpeg_decode_color
+    and jpeg_decode_gray_progressive. ``sof`` is the frame the caller
+    accepts (0xC0 baseline, 0xC2 progressive) and ``ncomp`` its
+    component count (1 gray, 3 for 4:2:0 color); any other frame raises
+    before a scan is read. One marker walk (multi-table DQT/DHT
+    segments, unknown segments skipped by length); each SOS runs
+    _jpeg_scan over single-component or interleaved MCUs, accumulating
+    the coefficient plane; dequant + IDCT run once at EOI. Returns
+    (per-component uint8 planes in frame order, n_scans). Truncation,
+    a missing EOI or scan, and anything outside the subset raise
+    ValueError — the strict contract line."""
     import struct
 
     import numpy as np
 
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (no SOI)")
-    pos = 2
-    qtab = None
-    h = w = None
-    huff = {}
-    data = None
-    ri = 0
-    while pos < len(payload):
+    n, pos = len(payload), 2
+    baseline = sof == 0xC0
+    qtabs, huff, ri = {}, {}, 0
+    comps = None  # [(id, quant id, block rows, block cols)], frame order
+    mcus = coef = None
+    n_scans = 0
+    while True:
+        if pos + 2 > n:
+            raise ValueError("JPEG truncated before EOI")
         if payload[pos] != 0xFF:
             raise ValueError("JPEG marker expected")
         marker = payload[pos + 1]
         if marker == 0xD9:  # EOI
             break
-        ln = struct.unpack_from(">H", payload, pos + 2)[0]
-        seg = payload[pos + 4:pos + 2 + ln]
-        if marker == 0xDB:
-            if seg[0] & 0xF0:
-                raise ValueError("16-bit quant tables unsupported")
-            zq = np.zeros(64, np.int64)
-            zq[np.array(_ZIGZAG)] = np.frombuffer(
-                seg[1:65], np.uint8
-            ).astype(np.int64)
-            qtab = zq.reshape(8, 8)
-        elif marker == 0xC0:
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", seg, 0)
-            if prec != 8 or ncomp != 1:
-                raise ValueError("only 8-bit single-component baseline")
-            if seg[7] != 0x11:  # seg: prec,h,h,w,w,ncomp,cid,sampling
-                raise ValueError("subsampling unsupported")
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
-            raise ValueError("non-baseline JPEG unsupported")
+        end = pos + 4
+        if end <= n:
+            end = pos + 2 + struct.unpack_from(">H", payload, pos + 2)[0]
+        if end < pos + 4 or end > n:
+            raise ValueError("truncated JPEG segment")
+        seg = payload[pos + 4:end]
+        pos = end
+        if marker == 0xDB:  # DQT: one or more tables
+            o = 0
+            while o < len(seg):
+                if seg[o] & 0xF0:
+                    raise ValueError("16-bit quant tables unsupported")
+                if o + 65 > len(seg):
+                    raise ValueError("truncated DQT segment")
+                zq = [0] * 64
+                for i, v in zip(_ZIGZAG, seg[o + 1:o + 65]):
+                    zq[i] = v
+                qtabs[seg[o]] = zq
+                o += 65
+        elif marker == 0xC4:  # DHT: one or more tables
+            o = 0
+            while o < len(seg):
+                bits = list(seg[o + 1:o + 17])
+                nv = sum(bits)
+                if o + 17 + nv > len(seg):
+                    raise ValueError("truncated DHT segment")
+                codes = _huff_codes(bits, seg[o + 17:o + 17 + nv])
+                huff[seg[o]] = {
+                    (ln, c): sym for sym, (c, ln) in codes.items()
+                }
+                o += 17 + nv
         elif marker == 0xDD:
-            ri = struct.unpack_from(">H", seg, 0)[0]
-        elif marker == 0xC4:
-            tc_th = seg[0]
-            bits = list(seg[1:17])
-            vals = list(seg[17:17 + sum(bits)])
-            codes = _huff_codes(bits, vals)
-            # invert: (length, code) -> symbol
-            huff[tc_th] = {
-                (lnn, c): sym for sym, (c, lnn) in codes.items()
-            }
+            if len(seg) != 2:
+                raise ValueError("malformed DRI segment")
+            ri = struct.unpack(">H", seg)[0]
+        elif marker in _SOF_MARKERS:
+            if marker != sof:
+                raise ValueError(
+                    "non-baseline JPEG unsupported" if baseline
+                    else "non-progressive JPEG: use the baseline decoder"
+                )
+            if comps is not None:
+                raise ValueError("second SOF segment")
+            if len(seg) < 6 or len(seg) != 6 + 3 * seg[5]:
+                raise ValueError("malformed SOF segment")
+            prec, h, w, nf = struct.unpack_from(">BHHB", seg)
+            if prec != 8 or nf != ncomp:
+                raise ValueError(
+                    f"only 8-bit {'single' if ncomp == 1 else ncomp}"
+                    "-component frames"
+                )
+            sampling = tuple(seg[7::3])
+            if sampling != ((0x11,) if ncomp == 1 else (0x22, 0x11, 0x11)):
+                raise ValueError(
+                    "subsampling unsupported" if ncomp == 1
+                    else "only 4:2:0 sampling supported"
+                )
+            side = 8 * (sampling[0] >> 4)  # MCU side in pixels
+            if h % side or w % side:
+                raise ValueError(
+                    f"non-{side}-aligned dims unsupported (no padding)"
+                )
+            # every block codes its DC in at least one bit, so a frame
+            # of more blocks than the payload has bits is corrupt (and
+            # would allocate its coefficient plane before failing)
+            if (h // 8) * (w // 8) > 8 * n:
+                raise ValueError("frame larger than the payload can code")
+            comps, mcus = [], [[] for _ in range((h // side) * (w // side))]
+            for k, s in enumerate(sampling):
+                hs, vs = s >> 4, s & 0x0F
+                nby, nbx = h // side * vs, w // side * hs
+                comps.append((seg[6 + 3 * k], seg[8 + 3 * k], nby, nbx))
+                for i, mcu in enumerate(mcus):
+                    my, mx = divmod(i, w // side)
+                    mcu += [
+                        (k, (my * vs + v) * nbx + mx * hs + u)
+                        for v in range(vs)
+                        for u in range(hs)
+                    ]
+            coef = [[[0] * 64 for _ in range(c[2] * c[3])] for c in comps]
         elif marker == 0xDA:
-            data = payload[pos + 2 + ln:payload.rindex(b"\xff\xd9")]
-            pos = len(payload)
-            break
-        pos += 2 + ln
-    if qtab is None or h is None or data is None or 0x00 not in huff \
-            or 0x10 not in huff:
-        raise ValueError("JPEG missing DQT/SOF0/DHT/SOS")
-    if h % 8 or w % 8:
-        raise ValueError("non-8-aligned dims unsupported (no padding)")
-
-    def read_symbol(br, table):
-        ln, code = 0, 0
-        for _ in range(16):
-            code = (code << 1) | br.bit()
-            ln += 1
-            if (ln, code) in table:
-                return table[(ln, code)]
-        raise ValueError("invalid Huffman code")
-
-    m = _dct_mats()
-    br = _BitReader(data)
-    out = np.zeros((h, w), np.uint8)
-    prev_dc = 0
-    n_blocks = 0
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            if ri and n_blocks and n_blocks % ri == 0:
-                got = br.sync_restart()
-                want = (n_blocks // ri - 1) % 8
-                if got != want:
-                    raise ValueError(
-                        f"RST sequence broken: got {got}, want {want}"
-                    )
-                prev_dc = 0
-            zz = np.zeros(64, np.int64)
-            size = read_symbol(br, huff[0x00])
-            diff = _extend(br.bits(size), size) if size else 0
-            prev_dc += diff
-            zz[0] = prev_dc
-            i = 1
-            while i < 64:
-                sym = read_symbol(br, huff[0x10])
-                if sym == 0x00:  # EOB
+            if comps is None:
+                raise ValueError("SOS before SOF")
+            ns = seg[0] if seg else 0
+            if len(seg) != 4 + 2 * ns:
+                raise ValueError("malformed SOS segment")
+            if ns != ncomp:
+                raise ValueError(
+                    "multi-component scans unsupported" if ncomp == 1
+                    else "interleaved 3-component scan required"
+                )
+            if list(seg[1:1 + 2 * ns:2]) != [c[0] for c in comps]:
+                raise ValueError("scan components do not match the frame")
+            ss, se, ah, al = seg[-3], seg[-2], seg[-1] >> 4, seg[-1] & 0x0F
+            if baseline and ((ss, se, ah, al) != (0, 63, 0, 0) or n_scans):
+                raise ValueError("baseline takes one Ss=0 Se=63 Ah=Al=0 scan")
+            if not baseline and (se > 63 or ss > se or (ss == 0 and se)):
+                raise ValueError("bad progressive spectral selection")
+            tables = []
+            for t in seg[2:2 + 2 * ns:2]:
+                dc, ac = huff.get(t >> 4), huff.get(0x10 | (t & 0x0F))
+                if ss == 0 and not ah and dc is None:
+                    raise ValueError("missing DC table")
+                if se and ac is None:
+                    raise ValueError("missing AC table")
+                tables.append((dc, ac))
+            # the entropy data runs to the next marker that is neither a
+            # stuffed 0x00 nor an RSTm (restart markers are inside it)
+            end = pos
+            while True:
+                end = payload.find(b"\xff", end)
+                if end < 0 or end + 1 >= n:
+                    raise ValueError("JPEG entropy stream unterminated")
+                if payload[end + 1] and not 0xD0 <= payload[end + 1] <= 0xD7:
                     break
-                if sym == 0xF0:  # ZRL
-                    i += 16
-                    continue
-                run, size = sym >> 4, sym & 0x0F
-                i += run
-                if i > 63:
-                    raise ValueError("AC run past block end")
-                zz[i] = _extend(br.bits(size), size)
-                i += 1
-            coef = np.zeros(64, np.int64)
-            coef[np.array(_ZIGZAG)] = zz
-            blk = m.T @ (coef.reshape(8, 8) * qtab).astype(np.float64) @ m
-            out[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = np.clip(
-                np.floor(blk + 128.0 + 0.5), 0, 255
-            ).astype(np.uint8)
-            n_blocks += 1
-    return out, n_blocks
+                end += 2
+            _jpeg_scan(
+                _BitReader(payload[pos:end]), mcus, coef, tables,
+                ss, se, ah, al, ri, baseline,
+            )
+            n_scans += 1
+            pos = end
+    if comps is None or not n_scans:
+        raise ValueError("JPEG missing SOF/SOS")
+    m = _dct_mats()
+    planes = []
+    for (_, qid, nby, nbx), blocks in zip(comps, coef):
+        if qid not in qtabs:
+            raise ValueError("JPEG missing DQT for component")
+        q = np.array(qtabs[qid], np.int64).reshape(8, 8)
+        plane = np.zeros((nby * 8, nbx * 8), np.uint8)
+        for i, zz in enumerate(blocks):
+            by, bx = divmod(i, nbx)
+            plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = _deq_idct(zz, q, m)
+        planes.append(plane)
+    return planes, n_scans
+
+
+def jpeg_decode_gray(payload: bytes):
+    """Decode a baseline grayscale JPEG produced by ANY conforming
+    writer of this subset (one component, optional restart intervals,
+    8-bit) to ((h, w) uint8 array, n_blocks) through _jpeg_decode;
+    ValueError on anything outside the subset (progressive,
+    multi-component, 12-bit) — the strict contract line."""
+    (y,), _ = _jpeg_decode(payload, 0xC0, 1)
+    return y, y.size // 64
+
+
+def _flat_gray(d: int, blocks: int):
+    """The gray JPEG fixture image: flat 8x8 blocks at the EVEN level
+    v(by, bx) = 2*((id*7 + by*3 + bx*5) % 100) + 40."""
+    import numpy as np
+
+    img = np.zeros((blocks * 8, blocks * 8), np.uint8)
+    for by in range(blocks):
+        for bx in range(blocks):
+            v = 2 * ((d * 7 + by * 3 + bx * 5) % 100) + 40
+            img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
+    return img
+
+
+def _splice_com(p: bytes, d: int) -> bytes:
+    """The JPEG fixtures' marker-walk trap: a COM segment right after
+    SOI on ids % 3 == 0."""
+    import struct
+
+    if d % 3:
+        return p
+    com = b"fixture comment"
+    return p[:2] + b"\xff\xfe" + struct.pack(">H", len(com) + 2) + com + p[2:]
+
+
+def _block_wsum(plane, side: int) -> float:
+    """Position-weighted sum of (side x side) block means, weight
+    by*B+bx+1 in raster order — block-order and DC-predictor errors
+    change it. Means of uint8 blocks are exact dyadic rationals, so the
+    sum is float64-exact and DuckDB-replayable."""
+    nby, nbx = plane.shape[0] // side, plane.shape[1] // side
+    acc = 0.0
+    for by in range(nby):
+        for bx in range(nbx):
+            blk = plane[by * side:(by + 1) * side, bx * side:(bx + 1) * side]
+            acc += (int(blk.sum()) / (side * side)) * (by * nbx + bx + 1)
+    return acc
 
 
 def synth_jpeg_payload(
@@ -1355,40 +1543,10 @@ def synth_jpeg_payload(
     unknown segments, not assume fixed offsets). Encoded with the real
     entropy coder: DC differences chain across blocks, so a decoder
     that loses the predictor corrupts every later block's value."""
-    import struct
-
-    import numpy as np
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
+    return _synth(
+        df, id_col,
+        lambda d: _splice_com(jpeg_encode_gray(_flat_gray(d, blocks)), d),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                img = np.zeros((blocks * 8, blocks * 8), np.uint8)
-                for by in range(blocks):
-                    for bx in range(blocks):
-                        v = 2 * ((d * 7 + by * 3 + bx * 5) % 100) + 40
-                        img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
-                p = jpeg_encode_gray(img)
-                if d % 3 == 0:
-                    com = b"fixture comment"
-                    seg = (
-                        b"\xff\xfe"
-                        + struct.pack(">H", len(com) + 2)
-                        + com
-                    )
-                    p = p[:2] + seg + p[2:]  # after SOI
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(run, schema)
 
 
 JPEG_REAL_SCHEMA = StructType(
@@ -1406,39 +1564,15 @@ def decode_features_jpeg(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """REAL JPEG decode in the mapInPandas slot: full marker walk +
-    Huffman decode + dequant + IDCT, then a position-weighted sum of
-    per-block means (weight by*B+bx+1) — weighted so block-order or
-    DC-predictor errors change the number. Block means of uint8 are
-    64ths (exact dyadic rationals), float64-exact, DuckDB-replayable."""
-    import numpy as np
+    Huffman decode + dequant + IDCT, then the position-weighted sum of
+    per-block means (_block_wsum)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "n_blocks": [], "wsum_gray": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                img, n_blocks = jpeg_decode_gray(bytes(p))
-                h, w = img.shape
-                bh, bw_ = h // 8, w // 8
-                acc = 0.0
-                for by in range(bh):
-                    for bx in range(bw_):
-                        blk = img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-                        acc += (int(blk.sum()) / 64.0) * (
-                            by * bw_ + bx + 1
-                        )
-                out["doc_id"].append(int(d))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_blocks"].append(n_blocks)
-                out["wsum_gray"].append(acc)
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        img, n_blocks = jpeg_decode_gray(p)
+        h, w = img.shape
+        return w, h, n_blocks, _block_wsum(img, 8)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, JPEG_REAL_SCHEMA
-    )
+    return _features(df, id_col, payload_col, JPEG_REAL_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -1454,7 +1588,8 @@ def decode_features_jpeg(
 # the decoder's code-width evolution (width-sync by construction: the
 # encoder's add-entry timing runs one step ahead of the decoder's, so
 # deriving widths from the encoder's own table state desyncs the END
-# code on exact power-of-two boundaries).
+# code on exact power-of-two boundaries). Both decoders (this one and
+# the animated #8) read the file through one container walk, _gif_walk.
 # ---------------------------------------------------------------------------
 
 
@@ -1517,6 +1652,37 @@ def _gif_pack_codes(codes: list[int], min_code: int) -> bytes:
     return bytes(out)
 
 
+def _gif_image(indices, min_code: int, max_sub_block: int) -> bytes:
+    """Image descriptor (full canvas, no local table) + LZW minimum
+    code size + the code stream cut into data sub-blocks + terminator."""
+    import struct
+
+    h, w = indices.shape
+    data = _gif_pack_codes(
+        _gif_lzw_codes(indices.reshape(-1), min_code), min_code
+    )
+    out = b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0) + bytes((min_code,))
+    for i in range(0, len(data), max_sub_block):
+        blk = data[i:i + max_sub_block]
+        out += bytes((len(blk),)) + blk
+    return out + b"\x00"
+
+
+def _gif_head(version: bytes, h: int, w: int, palette) -> tuple[bytes, int]:
+    """Header + logical screen descriptor (global color table present,
+    color resolution 8) + the table; returns it with the LZW minimum
+    code size for the palette size (a power of two >= 4)."""
+    import struct
+
+    n = len(palette)
+    assert n >= 4 and n & (n - 1) == 0
+    out = b"GIF" + version + struct.pack(
+        "<HHBBB", w, h, 0x80 | 0x70 | (n.bit_length() - 2), 0, 0
+    )
+    out += b"".join(bytes((int(r), int(g), int(b))) for r, g, b in palette)
+    return out, max(2, n.bit_length() - 1)
+
+
 def gif_encode(
     indices,
     palette,
@@ -1531,19 +1697,8 @@ def gif_encode(
     image — a decoder must walk extension sub-blocks to reach the
     descriptor. ``max_sub_block`` (<= 255) forces LZW data to split
     into short sub-blocks, breaking single-read shortcuts."""
-    import struct
-
     h, w = indices.shape
-    n = len(palette)
-    assert n >= 4 and n & (n - 1) == 0
-    min_code = max(2, n.bit_length() - 1)
-    out = bytearray(b"GIF" + version)
-    # logical screen descriptor: GCT present, color resolution 8
-    out += struct.pack(
-        "<HHBBB", w, h, 0x80 | 0x70 | (n.bit_length() - 2), 0, 0
-    )
-    for r, g, b in palette:
-        out += bytes((int(r), int(g), int(b)))
+    out, min_code = _gif_head(version, h, w, palette)
     if comment is not None:
         assert version == b"89a"
         out += b"\x21\xfe"
@@ -1551,73 +1706,150 @@ def gif_encode(
             blk = comment[i:i + 255]
             out += bytes((len(blk),)) + blk
         out += b"\x00"
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    out += bytes((min_code,))
-    data = _gif_pack_codes(
-        _gif_lzw_codes(indices.reshape(-1), min_code), min_code
-    )
-    for i in range(0, len(data), max_sub_block):
-        blk = data[i:i + max_sub_block]
-        out += bytes((len(blk),)) + blk
-    out += b"\x00\x3b"
-    return bytes(out)
+    return out + _gif_image(indices, min_code, max_sub_block) + b"\x3b"
 
 
-def gif_decode(payload: bytes):
-    """REAL GIF decode: header + LSD + GCT walk, extension skipping,
-    image descriptor, sub-block reassembly, and the full variable-width
-    LZW expansion (clear resets, KwKwK case, width bumps). Returns
-    (rgb uint8 (h, w, 3), n_colors, n_extensions). Rejects interlace,
-    local color tables, and multi-image GIFs honestly — the seam
-    contract, not a silent wrong answer."""
+def _gif_lzw_expand(data: bytes, min_code: int, n_pixels: int) -> bytes:
+    """The variable-width LZW expansion (clear resets, KwKwK, width
+    bumps at 2^n, 4096 cap). A stream that ends before its end code,
+    a code past the table, or a pixel count other than ``n_pixels``
+    raises ValueError."""
+    if not 2 <= min_code <= 8:
+        raise ValueError(f"bad LZW minimum code size {min_code}")
+    clear, end = 1 << min_code, (1 << min_code) + 1
+    width = min_code + 1
+    table = [bytes((i,)) for i in range(clear)] + [b"", b""]
+    next_code = end + 1
+    acc = n_bits = bytepos = 0
+    prev: int | None = None
+    pix = bytearray()
+    while True:
+        while n_bits < width:
+            try:
+                acc |= data[bytepos] << n_bits
+            except IndexError:
+                raise ValueError("LZW data ends before its end code") from None
+            bytepos += 1
+            n_bits += 8
+        code = acc & ((1 << width) - 1)
+        acc >>= width
+        n_bits -= width
+        if code == clear:
+            table = table[: end + 1]
+            next_code, width, prev = end + 1, min_code + 1, None
+            continue
+        if code == end:
+            break
+        if code < next_code:
+            entry = table[code]
+        elif code == next_code and prev is not None:
+            entry = table[prev] + table[prev][:1]
+        else:
+            raise ValueError("corrupt LZW stream")
+        if prev is not None and next_code < 4096:
+            table.append(table[prev] + entry[:1])
+            next_code += 1
+            if next_code == (1 << width) and width < 12:
+                width += 1
+        pix += entry
+        prev = code
+    if len(pix) != n_pixels:
+        raise ValueError(f"decoded {len(pix)} pixels, wanted {n_pixels}")
+    return bytes(pix)
+
+
+def _gif_walk(payload: bytes):
+    """The one GIF container walk: header, logical screen, global
+    color table, then every block up to the trailer. Returns
+    (n_colors, blocks) with blocks in file order: (label, [sub-block
+    bytes]) for an extension, (None, rgb uint8 (h, w, 3)) for an image.
+    Rejects honestly (ValueError) what the subset leaves out — local
+    color tables, interlace, partial-canvas images, transparency — and
+    truncation anywhere, including inside the LZW stream."""
     import struct
 
     import numpy as np
 
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
-    sw, sh, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
+    n = len(payload)
+    if n < 13:
+        raise ValueError("truncated GIF header")
+    sw, sh, packed = struct.unpack_from("<HHB", payload, 6)
     if not packed & 0x80:
         raise ValueError("no global color table")
     n_colors = 2 << (packed & 0x07)
-    pos = 13
-    palette = np.frombuffer(
-        payload[pos:pos + 3 * n_colors], np.uint8
-    ).reshape(n_colors, 3)
-    pos += 3 * n_colors
-    n_ext = 0
-    while True:
+    pos = 13 + 3 * n_colors
+    if pos > n:
+        raise ValueError("truncated GIF color table")
+    palette = np.frombuffer(payload, np.uint8, 3 * n_colors, 13).reshape(
+        n_colors, 3
+    )
+
+    def chain(pos):
+        subs = []
+        while pos < n and payload[pos]:
+            ln = payload[pos]
+            if pos + 1 + ln > n:
+                break
+            subs.append(payload[pos + 1:pos + 1 + ln])
+            pos += 1 + ln
+        if pos >= n or payload[pos]:
+            raise ValueError("truncated GIF sub-block chain")
+        return subs, pos + 1
+
+    blocks = []
+    while pos < n and payload[pos] != 0x3B:
         intro = payload[pos]
-        if intro == 0x21:  # extension: label + sub-block chain
-            n_ext += 1
-            pos += 2
-            while payload[pos]:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif intro == 0x2C:
-            break
+        if intro == 0x21 and pos + 2 <= n:
+            label = payload[pos + 1]
+            subs, pos = chain(pos + 2)
+            if label == 0xF9:  # Graphic Control Extension
+                if not subs or len(subs[0]) != 4:
+                    raise ValueError("malformed graphic control extension")
+                if subs[0][0] & 0x01:
+                    raise ValueError("transparency unsupported")
+            blocks.append((label, subs))
+        elif intro == 0x2C and pos + 11 <= n:
+            left, top, w, h, ipacked = struct.unpack_from(
+                "<HHHHB", payload, pos + 1
+            )
+            if ipacked & 0x80:
+                raise ValueError("local color table unsupported")
+            if ipacked & 0x40:
+                raise ValueError("interlaced GIF unsupported")
+            if (left, top, w, h) != (0, 0, sw, sh):
+                raise ValueError("partial-canvas frames unsupported")
+            min_code = payload[pos + 10]
+            subs, pos = chain(pos + 11)
+            idx = np.frombuffer(
+                _gif_lzw_expand(b"".join(subs), min_code, w * h), np.uint8
+            ).reshape(h, w)
+            if idx.size and int(idx.max()) >= n_colors:
+                raise ValueError("pixel index outside the color table")
+            blocks.append((None, palette[idx]))
+        elif intro in (0x21, 0x2C):
+            raise ValueError("truncated GIF block")
         else:
             raise ValueError(f"unexpected block 0x{intro:02x}")
-    left, top, w, h, ipacked = struct.unpack("<HHHHB", payload[pos + 1:pos + 10])
-    if ipacked & 0x80:
-        raise ValueError("local color table unsupported")
-    if ipacked & 0x40:
-        raise ValueError("interlaced GIF unsupported")
-    pos += 10
-    min_code = payload[pos]
-    pos += 1
-    data = bytearray()
-    while payload[pos]:
-        ln = payload[pos]
-        data += payload[pos + 1:pos + 1 + ln]
-        pos += 1 + ln
-    pos += 1
-    if payload[pos] != 0x3B:
-        raise ValueError("missing trailer (multi-image unsupported)")
+    if pos >= n:
+        raise ValueError("truncated GIF (no trailer)")
+    return n_colors, blocks
 
-    pix = _gif_lzw_expand(bytes(data), min_code, w * h)
-    idx = np.frombuffer(pix, np.uint8).reshape(h, w)
-    return palette[idx], n_colors, n_ext
+
+def gif_decode(payload: bytes):
+    """REAL GIF decode through _gif_walk (header + LSD + GCT walk,
+    extension skipping, image descriptor, sub-block reassembly, the full
+    variable-width LZW expansion). Returns (rgb uint8 (h, w, 3),
+    n_colors, n_extensions). Accepts exactly one image followed by the
+    trailer — multi-image GIFs belong to gif_decode_animated — and
+    rejects what _gif_walk rejects: the seam contract, not a silent
+    wrong answer."""
+    n_colors, blocks = _gif_walk(payload)
+    if [label for label, _ in blocks].count(None) != 1 \
+            or blocks[-1][0] is not None:
+        raise ValueError("missing trailer (multi-image unsupported)")
+    return blocks[-1][1], n_colors, len(blocks) - 1
 
 
 def synth_gif_payload(
@@ -1635,43 +1867,33 @@ def synth_gif_payload(
     at least two (trap pinned in tests)."""
     import numpy as np
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    i = np.arange(side * side, dtype=np.int64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i = np.arange(side * side, dtype=np.int64)
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                nc = 4 << (d % 3)
-                idx = ((d * 17 + 3 * i) % nc).astype(np.uint8)
-                c = np.arange(nc, dtype=np.int64)
-                palette = np.stack(
-                    [
-                        (d * 7 + 11 * c) % 256,
-                        (d * 19 + 5 * c) % 251,
-                        (d * 23 + 13 * c) % 247,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                is89 = d % 3 == 0
-                payloads.append(
-                    gif_encode(
-                        idx.reshape(side, side),
-                        palette,
-                        version=b"89a" if is89 else b"87a",
-                        comment=b"synthetic fixture" if is89 else None,
-                        max_sub_block=4 + (d % 5) * 2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+    def make(d: int) -> bytes:
+        nc = 4 << (d % 3)
+        is89 = d % 3 == 0
+        return gif_encode(
+            ((d * 17 + 3 * i) % nc).astype(np.uint8).reshape(side, side),
+            _gif_fixture_palette(d, nc),
+            version=b"89a" if is89 else b"87a",
+            comment=b"synthetic fixture" if is89 else None,
+            max_sub_block=4 + (d % 5) * 2,
+        )
 
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
+
+
+def _gif_fixture_palette(d: int, nc: int):
+    """Palette entry c = ((id*7+11c)%256, (id*19+5c)%251, (id*23+13c)%247)
+    — shared by the single-frame and animated GIF fixtures."""
+    import numpy as np
+
+    c = np.arange(nc, dtype=np.int64)
+    return np.stack(
+        [(d * 7 + 11 * c) % 256, (d * 19 + 5 * c) % 251,
+         (d * 23 + 13 * c) % 247],
+        axis=-1,
+    ).astype(np.uint8)
 
 
 GIF_REAL_SCHEMA = StructType(
@@ -1699,45 +1921,33 @@ def decode_features_gif(
     integers — the one codec statistic with no float boundary at all."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "n_colors": [],
-                "n_extensions": [], "wsum_r": [], "wsum_g": [], "wsum_b": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                rgb, nc, n_ext = gif_decode(bytes(p))
-                h, w, _ = rgb.shape
-                wt = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
-                out["doc_id"].append(int(d))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_colors"].append(nc)
-                out["n_extensions"].append(n_ext)
-                for ci, col in enumerate(("wsum_r", "wsum_g", "wsum_b")):
-                    out[col].append(
-                        int((rgb[:, :, ci].astype(np.int64) * wt).sum())
-                    )
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        rgb, nc, n_ext = gif_decode(p)
+        h, w, _ = rgb.shape
+        wt = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
+        return (w, h, nc, n_ext, *(
+            int((rgb[:, :, ci].astype(np.int64) * wt).sum())
+            for ci in range(3)
+        ))
 
-    return df.select(id_col, payload_col).mapInPandas(run, GIF_REAL_SCHEMA)
+    return _features(df, id_col, payload_col, GIF_REAL_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
 # REAL codec #6: color baseline JPEG (SOF0, 3 components, 4:2:0).
-# Extends the grayscale kernel (same DCT/Huffman machinery) with the
-# three pieces a color decoder actually needs: (1) the JFIF color
-# space, implemented as the libjpeg-style SCALED-INTEGER transform
-# (x*256-scaled coefficients, arithmetic >> 8 = floor-div) so every
-# step is exact integer arithmetic the SQL oracle replays verbatim;
-# (2) 2x2 chroma subsampling (box average, floor((sum+2)/4)) with
-# nearest-neighbor upsampling on decode; (3) interleaved MCU entropy
-# coding — per 16x16 MCU: Y00 Y01 Y10 Y11 Cb Cr, separate DC
-# predictors per component, luma tables 0 / chroma tables 1 (Annex-K
-# quant + Huffman). Progressive, restart intervals, 12-bit, and any
-# sampling other than 4:2:0 are rejected honestly (ValueError), the
-# same strict contract line as the grayscale kernel. The remaining
-# stubbed modality is video (container parsing); see decode_stub.
+# Same codec as the grayscale kernel (_jpeg_decode, _baseline_scan,
+# _jpeg_file) plus the three pieces a color JPEG actually needs: (1) the
+# JFIF color space, implemented as the libjpeg-style SCALED-INTEGER
+# transform (x*256-scaled coefficients, arithmetic >> 8 = floor-div) so
+# every step is exact integer arithmetic the SQL oracle replays
+# verbatim; (2) 2x2 chroma subsampling (box average, floor((sum+2)/4))
+# with nearest-neighbor upsampling on decode; (3) interleaved MCUs — per
+# 16x16 MCU: Y00 Y01 Y10 Y11 Cb Cr, separate DC predictors per
+# component, luma tables 0 / chroma tables 1 (Annex-K quant + Huffman).
+# Progressive color, 12-bit, and any sampling other than 4:2:0 are
+# rejected honestly (ValueError), the same strict contract line as the
+# grayscale kernel. The remaining stubbed modality is video (container
+# parsing); see decode_stub.
 # ---------------------------------------------------------------------------
 
 # Annex-K chroma quantization table (natural order) and Huffman tables.
@@ -1753,7 +1963,6 @@ _JPEG_QTAB_C = [
 ]
 
 _DC_BITS_C = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-_DC_VALS_C = list(range(12))
 
 _AC_BITS_C = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
 _AC_VALS_C = [
@@ -1814,46 +2023,6 @@ def ycbcr_to_rgb_int(y, cb, cr):
     return clip(r), clip(g), clip(b)
 
 
-def _quantize_block(blk, q, m):
-    """float64 DCT + floor(x/q + 0.5) -> zigzag-ordered int64[64]."""
-    import numpy as np
-
-    coef = m @ (blk.astype(np.float64) - 128.0) @ m.T
-    zq = np.floor(coef / q + 0.5).astype(np.int64)
-    return zq.flatten()[_ZIGZAG]
-
-
-def _encode_qblock(bw, zz, prev_dc, dc_codes, ac_codes) -> int:
-    """Entropy-encode one zigzag-quantized block; returns its DC (the
-    next block's predictor). Identical logic to the grayscale path."""
-    diff = int(zz[0]) - prev_dc
-    size, bits = _magnitude(diff)
-    c, ln = dc_codes[size]
-    bw.put(c, ln)
-    if size:
-        bw.put(bits, size)
-    run = 0
-    last_nz = max((i for i in range(1, 64) if zz[i] != 0), default=0)
-    for i in range(1, last_nz + 1):
-        v = int(zz[i])
-        if v == 0:
-            run += 1
-            if run == 16:
-                c, ln = ac_codes[0xF0]  # ZRL
-                bw.put(c, ln)
-                run = 0
-            continue
-        size, bits = _magnitude(v)
-        c, ln = ac_codes[(run << 4) | size]
-        bw.put(c, ln)
-        bw.put(bits, size)
-        run = 0
-    if last_nz < 63:
-        c, ln = ac_codes[0x00]  # EOB
-        bw.put(c, ln)
-    return int(zz[0])
-
-
 def jpeg_encode_color(
     img, split_dqt: bool = False, restart_interval: int = 0
 ) -> bytes:
@@ -1865,8 +2034,6 @@ def jpeg_encode_color(
     ``restart_interval`` > 0 writes DRI and emits RSTm every that many
     INTERLEAVED MCUs (all three components' predictors reset — T.81
     E.1.4; codec #9)."""
-    import struct
-
     import numpy as np
 
     h, w, nc = img.shape
@@ -1883,240 +2050,58 @@ def jpeg_encode_color(
     qy = np.clip(np.array(_JPEG_QTAB, np.int64).reshape(8, 8), 1, 255)
     qc = np.clip(np.array(_JPEG_QTAB_C, np.int64).reshape(8, 8), 1, 255)
     m = _dct_mats()
-    dc_y = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_y = _huff_codes(_AC_BITS, _AC_VALS)
-    dc_c = _huff_codes(_DC_BITS_C, _DC_VALS_C)
-    ac_c = _huff_codes(_AC_BITS_C, _AC_VALS_C)
-    ri = int(restart_interval)
-    bw = _BitWriter()
-    pred = {"y": 0, "cb": 0, "cr": 0}
-    n_done = 0
+    luma = (_huff_codes(_DC_BITS, _DC_VALS), _huff_codes(_AC_BITS, _AC_VALS))
+    chroma = (
+        _huff_codes(_DC_BITS_C, _DC_VALS),
+        _huff_codes(_AC_BITS_C, _AC_VALS_C),
+    )
+    mcus = []
     for my in range(h // 16):
         for mx in range(w // 16):
-            if ri and n_done and n_done % ri == 0:
-                bw.restart((n_done // ri - 1) % 8)
-                pred = {"y": 0, "cb": 0, "cr": 0}
-            n_done += 1
-            for sy in range(2):
-                for sx in range(2):
-                    r0, c0 = my * 16 + sy * 8, mx * 16 + sx * 8
-                    zz = _quantize_block(
+            mcus.append(
+                [
+                    (0, _quantize_block(
                         y[r0:r0 + 8, c0:c0 + 8], qy, m
-                    )
-                    pred["y"] = _encode_qblock(bw, zz, pred["y"], dc_y, ac_y)
-            for plane, key in ((cb_s, "cb"), (cr_s, "cr")):
-                r0, c0 = my * 8, mx * 8
-                zz = _quantize_block(plane[r0:r0 + 8, c0:c0 + 8], qc, m)
-                pred[key] = _encode_qblock(bw, zz, pred[key], dc_c, ac_c)
-    bw.flush()
-
-    def seg(marker, payload):
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    qyz = bytes(int(qy.flatten()[_ZIGZAG][i]) for i in range(64))
-    qcz = bytes(int(qc.flatten()[_ZIGZAG][i]) for i in range(64))
-    out = b"\xff\xd8"  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    if split_dqt:
-        out += seg(0xDB, b"\x00" + qyz) + seg(0xDB, b"\x01" + qcz)
-    else:
-        out += seg(0xDB, b"\x00" + qyz + b"\x01" + qcz)
-    out += seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + b"\x01\x22\x00" + b"\x02\x11\x01" + b"\x03\x11\x01",
+                    ))
+                    for r0 in (my * 16, my * 16 + 8)
+                    for c0 in (mx * 16, mx * 16 + 8)
+                ]
+                + [
+                    (k, _quantize_block(
+                        plane[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8], qc, m
+                    ))
+                    for k, plane in ((1, cb_s), (2, cr_s))
+                ]
+            )
+    ri = int(restart_interval)
+    data = _baseline_scan(mcus, [luma, chroma, chroma], ri)
+    return _jpeg_file(
+        0xC0, h, w,
+        [(1, 0x22, 0, 0x00), (2, 0x11, 1, 0x11), (3, 0x11, 1, 0x11)],
+        [(0, qy), (1, qc)],
+        _LUMA_DHT + [(0x01, _DC_BITS_C, _DC_VALS),
+                     (0x11, _AC_BITS_C, _AC_VALS_C)],
+        ri, [((0, 63, 0, 0), data)], split_dqt=split_dqt,
     )
-    out += seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += seg(0xC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
-    out += seg(0xC4, b"\x01" + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-    out += seg(0xC4, b"\x11" + bytes(_AC_BITS_C) + bytes(_AC_VALS_C))
-    if ri:
-        out += seg(0xDD, struct.pack(">H", ri))  # DRI
-    out += seg(0xDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-    out += bytes(bw.buf)
-    out += b"\xff\xd9"  # EOI
-    return out
-
-
-def _decode_qblock(br, dc_table, ac_table, prev_dc):
-    """Entropy-decode one block; returns (zigzag int64[64], new DC)."""
-    import numpy as np
-
-    def read_symbol(table):
-        ln, code = 0, 0
-        for _ in range(16):
-            code = (code << 1) | br.bit()
-            ln += 1
-            if (ln, code) in table:
-                return table[(ln, code)]
-        raise ValueError("invalid Huffman code")
-
-    zz = np.zeros(64, np.int64)
-    size = read_symbol(dc_table)
-    diff = _extend(br.bits(size), size) if size else 0
-    dc = prev_dc + diff
-    zz[0] = dc
-    i = 1
-    while i < 64:
-        sym = read_symbol(ac_table)
-        if sym == 0x00:  # EOB
-            break
-        if sym == 0xF0:  # ZRL
-            i += 16
-            continue
-        run, size = sym >> 4, sym & 0x0F
-        i += run
-        if i > 63:
-            raise ValueError("AC run past block end")
-        zz[i] = _extend(br.bits(size), size)
-        i += 1
-    return zz, dc
-
-
-def _deq_idct(zz, q, m):
-    """Dequant + IDCT + level shift -> (8, 8) uint8."""
-    import numpy as np
-
-    coef = np.zeros(64, np.int64)
-    coef[np.array(_ZIGZAG)] = zz
-    blk = m.T @ (coef.reshape(8, 8) * q).astype(np.float64) @ m
-    return np.clip(np.floor(blk + 128.0 + 0.5), 0, 255).astype(np.uint8)
 
 
 def jpeg_decode_color(payload: bytes):
     """Decode a baseline 4:2:0 color JPEG produced by ANY conforming
-    writer of this subset to ((h, w, 3) uint8 RGB, n_mcus). Real marker
-    walk (multi-table DQT/DHT segments, unknown-segment skipping) +
-    interleaved-MCU Huffman decode with per-component DC predictors +
-    dequant + IDCT + nearest-neighbor chroma upsample + scaled-integer
-    YCbCr->RGB. DRI/RSTm honored (byte realign + all three DC
-    predictors reset + modulo-8 sequence check — codec #9); ValueError
-    on anything outside the subset (progressive, 12-bit, non-4:2:0
-    sampling) — the strict contract line."""
-    import struct
-
+    writer of this subset to ((h, w, 3) uint8 RGB, n_mcus):
+    _jpeg_decode's interleaved-MCU path (per-component DC predictors,
+    DRI/RSTm — codec #9) + nearest-neighbor chroma upsample +
+    scaled-integer YCbCr->RGB. ValueError on anything outside the
+    subset (progressive, 12-bit, non-4:2:0 sampling) — the strict
+    contract line."""
     import numpy as np
 
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (no SOI)")
-    pos = 2
-    ri = 0
-    qtabs = {}
-    huff = {}
-    h = w = None
-    comp = None  # [(cid, sampling, qid), ...]
-    sos_map = None  # [(cid, dc_id, ac_id), ...]
-    data = None
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        ln = struct.unpack_from(">H", payload, pos + 2)[0]
-        seg = payload[pos + 4:pos + 2 + ln]
-        if marker == 0xDB:
-            # a DQT segment may carry several tables back-to-back
-            o = 0
-            while o < len(seg):
-                if seg[o] & 0xF0:
-                    raise ValueError("16-bit quant tables unsupported")
-                tid = seg[o] & 0x0F
-                zq = np.zeros(64, np.int64)
-                zq[np.array(_ZIGZAG)] = np.frombuffer(
-                    seg[o + 1:o + 65], np.uint8
-                ).astype(np.int64)
-                qtabs[tid] = zq.reshape(8, 8)
-                o += 65
-        elif marker == 0xC0:
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", seg, 0)
-            if prec != 8 or ncomp != 3:
-                raise ValueError("only 8-bit 3-component baseline")
-            comp = [
-                (seg[6 + 3 * i], seg[7 + 3 * i], seg[8 + 3 * i])
-                for i in range(3)
-            ]
-            if comp[0][1] != 0x22 or comp[1][1] != 0x11 \
-                    or comp[2][1] != 0x11:
-                raise ValueError("only 4:2:0 sampling supported")
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
-            raise ValueError("non-baseline JPEG unsupported")
-        elif marker == 0xDD:
-            ri = struct.unpack_from(">H", seg, 0)[0]
-        elif marker == 0xC4:
-            # a DHT segment may carry several tables back-to-back
-            o = 0
-            while o < len(seg):
-                tc_th = seg[o]
-                bits = list(seg[o + 1:o + 17])
-                nv = sum(bits)
-                vals = list(seg[o + 17:o + 17 + nv])
-                codes = _huff_codes(bits, vals)
-                huff[tc_th] = {
-                    (lnn, c): sym for sym, (c, lnn) in codes.items()
-                }
-                o += 17 + nv
-        elif marker == 0xDA:
-            ns = seg[0]
-            if ns != 3:
-                raise ValueError("interleaved 3-component scan required")
-            sos_map = [
-                (seg[1 + 2 * i], seg[2 + 2 * i] >> 4, seg[2 + 2 * i] & 0x0F)
-                for i in range(3)
-            ]
-            data = payload[pos + 2 + ln:payload.rindex(b"\xff\xd9")]
-            pos = len(payload)
-            break
-        pos += 2 + ln
-    if h is None or comp is None or sos_map is None or data is None:
-        raise ValueError("JPEG missing SOF0/SOS")
-    if h % 16 or w % 16:
-        raise ValueError("non-16-aligned dims unsupported (no padding)")
-    # resolve per-component tables
-    tbl = {}
-    for cid, dc_id, ac_id in sos_map:
-        qid = next(q for c, _, q in comp if c == cid)
-        if qid not in qtabs or dc_id not in {k >> 4 for k in huff} \
-                or (0x10 | ac_id) not in huff or dc_id not in huff:
-            raise ValueError("JPEG missing DQT/DHT for component")
-        tbl[cid] = (qtabs[qid], huff[dc_id], huff[0x10 | ac_id])
-    m = _dct_mats()
-    br = _BitReader(data)
-    yp = np.zeros((h, w), np.uint8)
-    cbp = np.zeros((h // 2, w // 2), np.uint8)
-    crp = np.zeros((h // 2, w // 2), np.uint8)
-    y_cid, cb_cid, cr_cid = (c for c, _, _ in sos_map)
-    pred = {cid: 0 for cid, _, _ in sos_map}
-    n_mcus = 0
-    for my in range(h // 16):
-        for mx in range(w // 16):
-            if ri and n_mcus and n_mcus % ri == 0:
-                got = br.sync_restart()
-                want = (n_mcus // ri - 1) % 8
-                if got != want:
-                    raise ValueError(
-                        f"RST sequence broken: got {got}, want {want}"
-                    )
-                pred = {cid: 0 for cid, _, _ in sos_map}
-            for sy in range(2):
-                for sx in range(2):
-                    q, dct, act = tbl[y_cid]
-                    zz, pred[y_cid] = _decode_qblock(
-                        br, dct, act, pred[y_cid]
-                    )
-                    r0, c0 = my * 16 + sy * 8, mx * 16 + sx * 8
-                    yp[r0:r0 + 8, c0:c0 + 8] = _deq_idct(zz, q, m)
-            for cid, plane in ((cb_cid, cbp), (cr_cid, crp)):
-                q, dct, act = tbl[cid]
-                zz, pred[cid] = _decode_qblock(br, dct, act, pred[cid])
-                plane[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = _deq_idct(
-                    zz, q, m
-                )
-            n_mcus += 1
-    cb_up = cbp.repeat(2, axis=0).repeat(2, axis=1)
-    cr_up = crp.repeat(2, axis=0).repeat(2, axis=1)
-    r, g, b = ycbcr_to_rgb_int(yp, cb_up, cr_up)
-    return np.stack([r, g, b], axis=2).astype(np.uint8), n_mcus
+    (y, cb, cr), _ = _jpeg_decode(payload, 0xC0, 3)
+    r, g, b = ycbcr_to_rgb_int(
+        y,
+        cb.repeat(2, axis=0).repeat(2, axis=1),
+        cr.repeat(2, axis=0).repeat(2, axis=1),
+    )
+    return np.stack([r, g, b], axis=2).astype(np.uint8), y.size // 256
 
 
 def synth_jpeg_color_payload(
@@ -2137,41 +2122,18 @@ def synth_jpeg_color_payload(
     carry real differences; DQT packing alternates one-segment /
     two-segment on id parity and a COM marker lands on ids % 3 == 0
     (decoders must walk, not assume offsets)."""
-    import struct
-
     import numpy as np
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    def make(d: int) -> bytes:
+        img = np.zeros((mcus * 16, mcus * 16, 3), np.uint8)
+        for mi in range(mcus):
+            for mj in range(mcus):
+                img[mi * 16:(mi + 1) * 16, mj * 16:(mj + 1) * 16] = (
+                    jpeg_color_fixture_rgb(d, mi, mj)
+                )
+        return _splice_com(jpeg_encode_color(img, split_dqt=d % 2 == 1), d)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                img = np.zeros((mcus * 16, mcus * 16, 3), np.uint8)
-                for mi in range(mcus):
-                    for mj in range(mcus):
-                        r, g, b = jpeg_color_fixture_rgb(d, mi, mj)
-                        img[mi * 16:(mi + 1) * 16,
-                            mj * 16:(mj + 1) * 16] = (r, g, b)
-                p = jpeg_encode_color(img, split_dqt=(d % 2 == 1))
-                if d % 3 == 0:
-                    com = b"fixture comment"
-                    seg = (
-                        b"\xff\xfe"
-                        + struct.pack(">H", len(com) + 2)
-                        + com
-                    )
-                    p = p[:2] + seg + p[2:]  # after SOI
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
 
 
 def jpeg_color_fixture_rgb(d: int, mi: int, mj: int):
@@ -2211,45 +2173,20 @@ JPEG_COLOR_REAL_SCHEMA = StructType(
 def decode_features_jpeg_color(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """REAL color JPEG decode in the mapInPandas slot: marker walk +
-    interleaved-MCU Huffman + dequant/IDCT + chroma upsample + integer
-    YCbCr->RGB, then per-channel position-weighted sums of per-MCU
-    means (weight mi*M+mj+1) — block-order, predictor-chain, or
-    channel-swap errors all change the numbers. MCU means of uint8 are
-    256ths (exact dyadic rationals), float64-exact, DuckDB-replayable."""
+    """REAL color JPEG decode in the mapInPandas slot, then per-channel
+    position-weighted sums of per-MCU means (_block_wsum over 16x16
+    MCUs) — block-order, predictor-chain, or channel-swap errors all
+    change the numbers. MCU means of uint8 are 256ths (exact dyadic
+    rationals), float64-exact, DuckDB-replayable."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [], "n_mcus": [],
-                "wsum_r": [], "wsum_g": [], "wsum_b": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                img, n_mcus = jpeg_decode_color(bytes(p))
-                h, w, _ = img.shape
-                mh, mw = h // 16, w // 16
-                acc = [0.0, 0.0, 0.0]
-                for mi in range(mh):
-                    for mj in range(mw):
-                        mcu = img[mi * 16:(mi + 1) * 16,
-                                  mj * 16:(mj + 1) * 16]
-                        wt = mi * mw + mj + 1
-                        for ci in range(3):
-                            acc[ci] += (
-                                int(mcu[:, :, ci].sum()) / 256.0
-                            ) * wt
-                out["doc_id"].append(int(d))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_mcus"].append(n_mcus)
-                out["wsum_r"].append(acc[0])
-                out["wsum_g"].append(acc[1])
-                out["wsum_b"].append(acc[2])
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        img, n_mcus = jpeg_decode_color(p)
+        h, w, _ = img.shape
+        return (w, h, n_mcus, *(
+            _block_wsum(img[:, :, ci], 16) for ci in range(3)
+        ))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, JPEG_COLOR_REAL_SCHEMA
-    )
+    return _features(df, id_col, payload_col, JPEG_COLOR_REAL_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -2265,10 +2202,11 @@ def decode_features_jpeg_color(
 # (T.81 G.1.2; the encode side mirrors libjpeg's encode_mcu_AC_refine
 # discipline: correction bits for already-significant coefficients are
 # buffered and flushed after the next EOBRUN/ZRL/newly-significant
-# emission). Decode accumulates the coefficient plane across scans and
-# runs dequant+IDCT once at EOI — so a decoder that drops ANY scan
-# (refinement included) reconstructs wrong pixels, which the
-# closed-form fixtures catch exactly.
+# emission). Decoding is _jpeg_decode's general case: every scan
+# accumulates into the coefficient plane and dequant+IDCT run once at
+# EOI — so a decoder that drops ANY scan (refinement included)
+# reconstructs wrong pixels, which the closed-form fixtures catch
+# exactly.
 # ---------------------------------------------------------------------------
 
 
@@ -2294,29 +2232,6 @@ _AC_PROG_VALS = (
 )
 _AC_PROG_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC_PROG_VALS), 0, 0, 0, 0, 0,
                  0, 0, 0]
-
-
-def _quant_blocks_gray(img, qscale: int = 1):
-    """Shared front half of both gray encoders: per-block zigzag
-    quantized coefficients + the quant table."""
-    import numpy as np
-
-    h, w = img.shape
-    if h % 8 or w % 8:
-        raise ValueError("jpeg encode requires 8-aligned dims")
-    q = np.array(_JPEG_QTAB, np.int64).reshape(8, 8) * int(qscale)
-    q = np.clip(q, 1, 255)
-    m = _dct_mats()
-    blocks = []
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            blk = img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8].astype(
-                np.float64
-            ) - 128.0
-            coef = m @ blk @ m.T
-            zq = np.floor(coef / q + 0.5).astype(np.int64)
-            blocks.append(zq.flatten()[_ZIGZAG].copy())
-    return blocks, q
 
 
 class _ProgACWriter:
@@ -2377,8 +2292,6 @@ def jpeg_encode_gray_progressive(
     resets and — the progressive-specific rule — the EOB run and its
     buffered correction bits are flushed first: EOB runs cannot cross a
     restart boundary (codec #9)."""
-    import struct
-
     blocks, q = _quant_blocks_gray(img, qscale)
     h, w = img.shape
     ri = int(restart_interval)
@@ -2502,258 +2415,31 @@ def jpeg_encode_gray_progressive(
         bw.flush()
         return bytes(bw.buf)
 
-    def seg(marker, payload):
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    def sos(ss, se, ah, al, data):
-        return (
-            seg(0xDA, b"\x01\x01\x00" + bytes([ss, se, (ah << 4) | al]))
-            + data
-        )
-
-    qz = bytes(int(q.flatten()[_ZIGZAG][i]) for i in range(64))
-    out = b"\xff\xd8"
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, b"\x00" + qz)
-    out += seg(0xC2, struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00")
-    out += seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += seg(
-        0xC4, b"\x10" + bytes(_AC_PROG_BITS) + bytes(_AC_PROG_VALS)
+    scans = [
+        ((0, 0, 0, 1), dc_first_scan(1)),
+        ((1, 5, 0, 1), ac_first_scan(1, 5, 1)),
+        ((6, 63, 0, 1), ac_first_scan(6, 63, 1)),
+        ((1, 5, 1, 0), ac_refine_scan(1, 5, 1, 0)),
+        ((6, 63, 1, 0), ac_refine_scan(6, 63, 1, 0)),
+        ((0, 0, 1, 0), dc_refine_scan(0)),
+    ]
+    return _jpeg_file(
+        0xC2, h, w, [(1, 0x11, 0, 0x00)], [(0, q)],
+        [(0x00, _DC_BITS, _DC_VALS), (0x10, _AC_PROG_BITS, _AC_PROG_VALS)],
+        ri, scans,
     )
-    if ri:
-        out += seg(0xDD, struct.pack(">H", ri))  # DRI
-    out += sos(0, 0, 0, 1, dc_first_scan(1))
-    out += sos(1, 5, 0, 1, ac_first_scan(1, 5, 1))
-    out += sos(6, 63, 0, 1, ac_first_scan(6, 63, 1))
-    out += sos(1, 5, 1, 0, ac_refine_scan(1, 5, 1, 0))
-    out += sos(6, 63, 1, 0, ac_refine_scan(6, 63, 1, 0))
-    out += sos(0, 0, 1, 0, dc_refine_scan(0))
-    out += b"\xff\xd9"
-    return out
 
 
 def jpeg_decode_gray_progressive(payload: bytes):
     """Decode a PROGRESSIVE single-component 8-bit JPEG (SOF2,
     optional restart intervals) produced by any conforming writer of
-    this subset to ((h, w) uint8, n_scans). Accumulates the
-    coefficient plane across every scan (DC/AC, first/refinement, EOB
-    runs); DRI/RSTm honored per scan (byte realign + DC predictor and
-    EOB-run reset + per-scan modulo-8 sequence check — codec #9);
-    then dequantizes + IDCTs once. ValueError on baseline (SOF0) or
-    anything outside the subset — the strict contract line."""
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (no SOI)")
-    pos = 2
-    qtab = None
-    h = w = None
-    huff = {}
-    coef = None  # list of per-block zigzag int64[64]
-    dc_pred = 0
-    n_scans = 0
-    ri = 0
-
-    def entropy_end(start):
-        # entropy data ends at the next marker that is not a stuffed
-        # 0x00 or an RSTm (restart markers are INSIDE the scan's data)
-        i = start
-        while i < len(payload) - 1:
-            if payload[i] == 0xFF and payload[i + 1] != 0x00 \
-                    and not (0xD0 <= payload[i + 1] <= 0xD7):
-                return i
-            i += 1
-        raise ValueError("unterminated entropy stream")
-
-    def sync(br, i):
-        """Consume the restart boundary before block i; verify the
-        per-scan cycling marker id."""
-        got = br.sync_restart()
-        want = (i // ri - 1) % 8
-        if got != want:
-            raise ValueError(
-                f"RST sequence broken: got {got}, want {want}"
-            )
-
-    def read_symbol(br, table):
-        ln, code = 0, 0
-        for _ in range(16):
-            code = (code << 1) | br.bit()
-            ln += 1
-            if (ln, code) in table:
-                return table[(ln, code)]
-        raise ValueError("invalid Huffman code")
-
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            break
-        ln = struct.unpack_from(">H", payload, pos + 2)[0]
-        body = payload[pos + 4:pos + 2 + ln]
-        if marker == 0xDB:
-            if body[0] & 0xF0:
-                raise ValueError("16-bit quant tables unsupported")
-            zq = np.zeros(64, np.int64)
-            zq[np.array(_ZIGZAG)] = np.frombuffer(
-                body[1:65], np.uint8
-            ).astype(np.int64)
-            qtab = zq.reshape(8, 8)
-        elif marker == 0xC2:
-            prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8 or ncomp != 1:
-                raise ValueError("only 8-bit single-component")
-            if body[7] != 0x11:
-                raise ValueError("subsampling unsupported")
-            if h % 8 or w % 8:
-                raise ValueError("non-8-aligned dims unsupported")
-            coef = [np.zeros(64, np.int64) for _ in range((h // 8) * (w // 8))]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7):
-            raise ValueError("non-progressive JPEG: use the baseline decoder")
-        elif marker == 0xDD:
-            ri = struct.unpack_from(">H", body, 0)[0]
-        elif marker == 0xC4:
-            off = 0
-            while off < len(body):
-                tc_th = body[off]
-                bits = list(body[off + 1:off + 17])
-                nv = sum(bits)
-                vals = list(body[off + 17:off + 17 + nv])
-                huff[tc_th] = {
-                    (lnn, c): sym
-                    for sym, (c, lnn) in _huff_codes(bits, vals).items()
-                }
-                off += 17 + nv
-        elif marker == 0xDA:
-            if coef is None:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            if ns != 1:
-                raise ValueError("multi-component scans unsupported")
-            td, ta = body[2] >> 4, body[2] & 0x0F
-            ss, se = body[3], body[4]
-            ah, al = body[5] >> 4, body[5] & 0x0F
-            data_start = pos + 2 + ln
-            data_end = entropy_end(data_start)
-            br = _BitReader(payload[data_start:data_end])
-            n_scans += 1
-            if ss == 0:
-                if se != 0:
-                    raise ValueError("DC scan must have Se=0")
-                if ah == 0:
-                    dc_pred = 0
-                    table = huff.get(td)
-                    if table is None:
-                        raise ValueError("missing DC table")
-                    for i, zz in enumerate(coef):
-                        if ri and i and i % ri == 0:
-                            sync(br, i)
-                            dc_pred = 0
-                        size = read_symbol(br, table)
-                        diff = _extend(br.bits(size), size) if size else 0
-                        dc_pred += diff
-                        zz[0] = dc_pred << al
-                else:
-                    p1 = 1 << al
-                    for i, zz in enumerate(coef):
-                        if ri and i and i % ri == 0:
-                            sync(br, i)
-                        if br.bit():
-                            zz[0] |= p1
-            else:
-                table = huff.get(0x10 | ta)
-                if table is None:
-                    raise ValueError("missing AC table")
-                eobrun = 0
-                if ah == 0:
-                    for i, zz in enumerate(coef):
-                        if ri and i and i % ri == 0:
-                            sync(br, i)
-                            eobrun = 0  # EOB runs never cross a restart
-                        if eobrun > 0:
-                            eobrun -= 1
-                            continue
-                        k = ss
-                        while k <= se:
-                            sym = read_symbol(br, table)
-                            r, s = sym >> 4, sym & 0x0F
-                            if s == 0:
-                                if r < 15:
-                                    eobrun = (1 << r) - 1
-                                    if r:
-                                        eobrun += br.bits(r)
-                                    break
-                                k += 16  # ZRL
-                                continue
-                            k += r
-                            if k > se:
-                                raise ValueError("AC run past band end")
-                            zz[k] = _extend(br.bits(s), s) << al
-                            k += 1
-                else:
-                    p1, m1 = 1 << al, -1 << al
-                    for i, zz in enumerate(coef):
-                        if ri and i and i % ri == 0:
-                            sync(br, i)
-                            eobrun = 0  # EOB runs never cross a restart
-                        k = ss
-                        if eobrun == 0:
-                            while k <= se:
-                                sym = read_symbol(br, table)
-                                r, s = sym >> 4, sym & 0x0F
-                                val = 0
-                                if s == 0:
-                                    if r < 15:
-                                        eobrun = 1 << r
-                                        if r:
-                                            eobrun += br.bits(r)
-                                        break
-                                    # r == 15: span 16 zero-history
-                                else:
-                                    if s != 1:
-                                        raise ValueError(
-                                            "refine size must be 1"
-                                        )
-                                    val = p1 if br.bit() else m1
-                                while k <= se:
-                                    if zz[k] != 0:
-                                        if br.bit() and not (zz[k] & p1):
-                                            zz[k] += p1 if zz[k] > 0 else m1
-                                    else:
-                                        if r == 0:
-                                            break
-                                        r -= 1
-                                    k += 1
-                                if val and k <= se:
-                                    zz[k] = val
-                                k += 1
-                        if eobrun > 0:
-                            while k <= se:
-                                if zz[k] != 0:
-                                    if br.bit() and not (zz[k] & p1):
-                                        zz[k] += p1 if zz[k] > 0 else m1
-                                k += 1
-                            eobrun -= 1
-            pos = data_end
-            continue
-        pos += 2 + ln
-    if qtab is None or coef is None:
-        raise ValueError("JPEG missing DQT/SOF2")
-    m = _dct_mats()
-    out = np.zeros((h, w), np.uint8)
-    nbx = w // 8
-    for idx, zz in enumerate(coef):
-        by, bx = divmod(idx, nbx)
-        c = np.zeros(64, np.int64)
-        c[np.array(_ZIGZAG)] = zz
-        blk = m.T @ (c.reshape(8, 8) * qtab).astype(np.float64) @ m
-        out[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = np.clip(
-            np.floor(blk + 128.0 + 0.5), 0, 255
-        ).astype(np.uint8)
-    return out, n_scans
+    this subset to ((h, w) uint8, n_scans) through _jpeg_decode: the
+    coefficient plane accumulates across every scan (DC/AC,
+    first/refinement, EOB runs; DRI/RSTm per scan — codec #9), then
+    dequant + IDCT run once. ValueError on baseline (SOF0) or anything
+    outside the subset — the strict contract line."""
+    (y,), n_scans = _jpeg_decode(payload, 0xC2, 1)
+    return y, n_scans
 
 
 def synth_jpeg_progressive_payload(
@@ -2766,40 +2452,12 @@ def synth_jpeg_progressive_payload(
     script (DC/AC first + refinements) makes a decoder that skips any
     scan — or mis-handles EOB runs / correction bits — decode wrong
     gray levels, not just fail."""
-    import struct
-
-    import numpy as np
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
+    return _synth(
+        df, id_col,
+        lambda d: _splice_com(
+            jpeg_encode_gray_progressive(_flat_gray(d, blocks)), d
+        ),
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                img = np.zeros((blocks * 8, blocks * 8), np.uint8)
-                for by in range(blocks):
-                    for bx in range(blocks):
-                        v = 2 * ((d * 7 + by * 3 + bx * 5) % 100) + 40
-                        img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
-                p = jpeg_encode_gray_progressive(img)
-                if d % 3 == 0:
-                    com = b"fixture comment"
-                    seg = (
-                        b"\xff\xfe"
-                        + struct.pack(">H", len(com) + 2)
-                        + com
-                    )
-                    p = p[:2] + seg + p[2:]
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(run, schema)
 
 
 JPEG_PROG_REAL_SCHEMA = StructType(
@@ -2820,33 +2478,12 @@ def decode_features_jpeg_progressive(
     position-weighted per-block-mean statistic as decode_features_jpeg,
     plus the scan count (fixtures always carry the six-scan script)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "n_scans": [], "wsum_gray": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                img, n_scans = jpeg_decode_gray_progressive(bytes(p))
-                h, w = img.shape
-                bh, bw_ = h // 8, w // 8
-                acc = 0.0
-                for by in range(bh):
-                    for bx in range(bw_):
-                        blk = img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-                        acc += (int(blk.sum()) / 64.0) * (
-                            by * bw_ + bx + 1
-                        )
-                out["doc_id"].append(int(d))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_scans"].append(n_scans)
-                out["wsum_gray"].append(acc)
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        img, n_scans = jpeg_decode_gray_progressive(p)
+        h, w = img.shape
+        return w, h, n_scans, _block_wsum(img, 8)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, JPEG_PROG_REAL_SCHEMA
-    )
+    return _features(df, id_col, payload_col, JPEG_PROG_REAL_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -2854,9 +2491,10 @@ def decode_features_jpeg_progressive(
 # The most common real-world JPEG feature the strict subset previously
 # rejected: cameras and libjpeg emit DRI for error resilience, so a
 # "decodes any conforming writer of the subset" contract without it is
-# hollow. The machinery lives in the encoders/decoders above
-# (jpeg_encode_gray/color/gray_progressive + their decoders); the
-# fixture below exercises BOTH the baseline path (even ids) and the
+# hollow. The writers emit markers in _baseline_scan (gray and color)
+# and the progressive scan writers; the one decoder, _jpeg_scan,
+# realigns, checks the sequence and resets its state at each marker.
+# The fixture below exercises BOTH the baseline path (even ids) and the
 # progressive path (odd ids, where the per-scan rules differ: the m
 # sequence restarts per scan and EOB runs may not cross the boundary).
 # ---------------------------------------------------------------------------
@@ -2877,45 +2515,16 @@ def synth_jpeg_restart_payload(
     a decoder that realigns but keeps the predictor corrupts every
     post-marker block's value (and the weighted sum); one that ignores
     the marker bytes dies on an invalid Huffman code."""
-    import struct
 
-    import numpy as np
+    def make(d: int) -> bytes:
+        img = _flat_gray(d, blocks)
+        if d % 2 == 0:
+            p = jpeg_encode_gray(img, restart_interval=ri_base)
+        else:
+            p = jpeg_encode_gray_progressive(img, restart_interval=ri_prog)
+        return _splice_com(p, d)
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                img = np.zeros((blocks * 8, blocks * 8), np.uint8)
-                for by in range(blocks):
-                    for bx in range(blocks):
-                        v = 2 * ((d * 7 + by * 3 + bx * 5) % 100) + 40
-                        img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = v
-                if d % 2 == 0:
-                    p = jpeg_encode_gray(img, restart_interval=ri_base)
-                else:
-                    p = jpeg_encode_gray_progressive(
-                        img, restart_interval=ri_prog
-                    )
-                if d % 3 == 0:
-                    com = b"fixture comment"
-                    seg = (
-                        b"\xff\xfe"
-                        + struct.pack(">H", len(com) + 2)
-                        + com
-                    )
-                    p = p[:2] + seg + p[2:]
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
 
 
 JPEG_RESTART_SCHEMA = StructType(
@@ -2939,43 +2548,17 @@ def decode_features_jpeg_restart(
     markers actually present in the payload. The count is computable
     from the raw bytes because entropy-coded FFs are always stuffed
     with 0x00 — a bare FF D0..D7 pair can only be a marker."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "n_restarts": [], "wsum_gray": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p)
-                # sniff the frame type from the marker walk
-                if b"\xff\xc2" in raw.split(b"\xff\xda", 1)[0]:
-                    img, _ = jpeg_decode_gray_progressive(raw)
-                else:
-                    img, _ = jpeg_decode_gray(raw)
-                n_rst = sum(
-                    raw.count(bytes([0xFF, 0xD0 + m])) for m in range(8)
-                )
-                h, w = img.shape
-                bh, bw_ = h // 8, w // 8
-                acc = 0.0
-                for by in range(bh):
-                    for bx in range(bw_):
-                        blk = img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-                        acc += (int(blk.sum()) / 64.0) * (
-                            by * bw_ + bx + 1
-                        )
-                out["doc_id"].append(int(d))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_restarts"].append(n_rst)
-                out["wsum_gray"].append(acc)
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        if b"\xff\xc2" in p.split(b"\xff\xda", 1)[0]:
+            img, _ = jpeg_decode_gray_progressive(p)
+        else:
+            img, _ = jpeg_decode_gray(p)
+        h, w = img.shape
+        n_rst = sum(p.count(bytes([0xFF, 0xD0 + m])) for m in range(8))
+        return w, h, n_rst, _block_wsum(img, 8)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, JPEG_RESTART_SCHEMA
-    )
+    return _features(df, id_col, payload_col, JPEG_RESTART_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -2987,57 +2570,14 @@ def decode_features_jpeg_restart(
 # exactly what sample_frames stubs, and here they are real). Encoder
 # writes a NETSCAPE2.0 application extension (loop count), then per
 # frame a Graphic Control Extension (delay in centiseconds) + image
-# descriptor + LZW data; decoder walks the block sequence
-# accumulating frames and delays, reusing the single-frame kernel's
-# LZW expansion. The single-frame gif_decode keeps its strict
-# one-image contract (it still rejects multi-image files); this pair
-# OWNS the animated subset — full-canvas frames, global palette, no
+# descriptor + LZW data; decoder reads the single-frame kernel's
+# container walk (_gif_walk) and collects frames, delays and the loop
+# count. The single-frame gif_decode keeps its strict one-image
+# contract (it still rejects multi-image files); this pair OWNS the
+# animated subset — full-canvas frames, global palette, no
 # interlace/local tables/transparency composition (rejected with
 # ValueError, the contract line).
 # ---------------------------------------------------------------------------
-
-
-def _gif_lzw_expand(data: bytes, min_code: int, n_pixels: int) -> bytes:
-    """The variable-width LZW expansion shared by both GIF decoders
-    (identical semantics to gif_decode's inline loop: clear resets,
-    KwKwK, width bumps at 2^n, 4096 cap)."""
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    width = min_code + 1
-    table = [bytes((i,)) for i in range(clear)] + [b"", b""]
-    next_code = end + 1
-    acc = n_bits = bytepos = 0
-    prev: int | None = None
-    pix = bytearray()
-    while True:
-        while n_bits < width:
-            acc |= data[bytepos] << n_bits
-            bytepos += 1
-            n_bits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        n_bits -= width
-        if code == clear:
-            table = table[: end + 1]
-            next_code, width, prev = end + 1, min_code + 1, None
-            continue
-        if code == end:
-            break
-        if prev is None or code < next_code:
-            entry = table[code]
-        elif code == next_code:
-            entry = table[prev] + table[prev][:1]
-        else:
-            raise ValueError("corrupt LZW stream")
-        if prev is not None and next_code < 4096:
-            table.append(table[prev] + entry[:1])
-            next_code += 1
-            if next_code == (1 << width) and width < 12:
-                width += 1
-        pix += entry
-        prev = code
-    if len(pix) != n_pixels:
-        raise ValueError(f"decoded {len(pix)} pixels, wanted {n_pixels}")
-    return bytes(pix)
 
 
 def gif_encode_animated(
@@ -3055,16 +2595,8 @@ def gif_encode_animated(
     import struct
 
     h, w = frames[0].shape
-    n = len(palette)
-    assert n >= 4 and n & (n - 1) == 0
     assert len(frames) == len(delays_cs) and len(frames) >= 1
-    min_code = max(2, n.bit_length() - 1)
-    out = bytearray(b"GIF89a")
-    out += struct.pack(
-        "<HHBBB", w, h, 0x80 | 0x70 | (n.bit_length() - 2), 0, 0
-    )
-    for r, g, b in palette:
-        out += bytes((int(r), int(g), int(b)))
+    out, min_code = _gif_head(b"89a", h, w, palette)
     # NETSCAPE2.0 application extension: loop count (0 = forever)
     out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01"
     out += struct.pack("<H", loop_count) + b"\x00"
@@ -3073,21 +2605,12 @@ def gif_encode_animated(
         # GCE: disposal=1 (leave), no transparency, delay in cs
         out += b"\x21\xf9\x04\x04" + struct.pack("<H", int(delay))
         out += b"\x00\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out += bytes((min_code,))
-        data = _gif_pack_codes(
-            _gif_lzw_codes(frame.reshape(-1), min_code), min_code
-        )
-        for i in range(0, len(data), max_sub_block):
-            blk = data[i:i + max_sub_block]
-            out += bytes((len(blk),)) + blk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
+        out += _gif_image(frame, min_code, max_sub_block)
+    return out + b"\x3b"
 
 
 def gif_decode_animated(payload: bytes):
-    """REAL animated-GIF decode: walks the full 89a block sequence —
+    """REAL animated-GIF decode over _gif_walk's block sequence —
     application/comment extensions, per-frame Graphic Control
     Extensions (delays), image descriptors, sub-block reassembly, LZW
     per frame. Returns (frames: list of rgb uint8 (h, w, 3), delays_cs:
@@ -3097,68 +2620,22 @@ def gif_decode_animated(payload: bytes):
     out of the subset; these frames are each complete."""
     import struct
 
-    import numpy as np
-
     if payload[:6] != b"GIF89a":
         raise ValueError("not an animated GIF (need 89a)")
-    sw, sh, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-    if not packed & 0x80:
-        raise ValueError("no global color table")
-    n_colors = 2 << (packed & 0x07)
-    pos = 13
-    palette = np.frombuffer(
-        payload[pos:pos + 3 * n_colors], np.uint8
-    ).reshape(n_colors, 3)
-    pos += 3 * n_colors
+    n_colors, blocks = _gif_walk(payload)
     frames, delays = [], []
-    loop_count = None
-    pending_delay = None
-    while True:
-        intro = payload[pos]
-        if intro == 0x3B:  # trailer
-            break
-        if intro == 0x21:
-            label = payload[pos + 1]
-            pos += 2
-            blocks = []
-            while payload[pos]:
-                ln = payload[pos]
-                blocks.append(payload[pos + 1:pos + 1 + ln])
-                pos += 1 + ln
-            pos += 1
-            if label == 0xF9:  # Graphic Control Extension
-                gce = blocks[0]
-                if gce[0] & 0x01:
-                    raise ValueError("transparency unsupported")
-                pending_delay = struct.unpack("<H", gce[1:3])[0]
-            elif label == 0xFF and blocks and blocks[0] == b"NETSCAPE2.0":
-                loop_count = struct.unpack("<H", blocks[1][1:3])[0]
-            continue
-        if intro != 0x2C:
-            raise ValueError(f"unexpected block 0x{intro:02x}")
-        left, top, w, h, ipacked = struct.unpack(
-            "<HHHHB", payload[pos + 1:pos + 10]
-        )
-        if ipacked & 0x80:
-            raise ValueError("local color table unsupported")
-        if ipacked & 0x40:
-            raise ValueError("interlaced GIF unsupported")
-        if (left, top, w, h) != (0, 0, sw, sh):
-            raise ValueError("partial-canvas frames unsupported")
-        pos += 10
-        min_code = payload[pos]
-        pos += 1
-        data = bytearray()
-        while payload[pos]:
-            ln = payload[pos]
-            data += payload[pos + 1:pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        pix = _gif_lzw_expand(bytes(data), min_code, w * h)
-        idx = np.frombuffer(pix, np.uint8).reshape(h, w)
-        frames.append(palette[idx])
-        delays.append(pending_delay if pending_delay is not None else 0)
-        pending_delay = None
+    loop_count = pending_delay = None
+    for label, body in blocks:
+        if label is None:
+            frames.append(body)
+            delays.append(pending_delay or 0)
+            pending_delay = None
+        elif label == 0xF9:  # Graphic Control Extension
+            pending_delay = struct.unpack_from("<H", body[0], 1)[0]
+        elif label == 0xFF and body and body[0] == b"NETSCAPE2.0":
+            if len(body) < 2 or len(body[1]) < 3:
+                raise ValueError("malformed NETSCAPE2.0 extension")
+            loop_count = struct.unpack_from("<H", body[1], 1)[0]
     if not frames:
         raise ValueError("no frames")
     return frames, delays, loop_count, n_colors
@@ -3176,48 +2653,26 @@ def synth_gif_animated_payload(
     just leading ones)."""
     import numpy as np
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    def make(d: int) -> bytes:
+        n_frames = 2 + d % 4
+        p = gif_encode_animated(
+            [
+                np.full((side, side), (d * 3 + 5 * f) % 8, np.uint8)
+                for f in range(n_frames)
+            ],
+            _gif_fixture_palette(d, 8),
+            [4 + (d + f) % 7 for f in range(n_frames)],
+            loop_count=d % 3,
+            max_sub_block=6 + (d % 5) * 2,
+        )
+        if d % 3 == 0:
+            # splice a Comment Extension between frame 0 and 1:
+            # right before the SECOND GCE (0x21 0xF9)
+            second = p.index(b"\x21\xf9", p.index(b"\x21\xf9") + 2)
+            p = p[:second] + b"\x21\xfe\x07fixture\x00" + p[second:]
+        return p
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf[id_col]:
-                d = int(d)
-                nc = 8
-                c = np.arange(nc, dtype=np.int64)
-                palette = np.stack(
-                    [
-                        (d * 7 + 11 * c) % 256,
-                        (d * 19 + 5 * c) % 251,
-                        (d * 23 + 13 * c) % 247,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                n_frames = 2 + d % 4
-                frames = [
-                    np.full((side, side), (d * 3 + 5 * f) % nc, np.uint8)
-                    for f in range(n_frames)
-                ]
-                delays = [4 + (d + f) % 7 for f in range(n_frames)]
-                p = gif_encode_animated(
-                    frames, palette, delays, loop_count=d % 3,
-                    max_sub_block=6 + (d % 5) * 2,
-                )
-                if d % 3 == 0:
-                    # splice a Comment Extension between frame 0 and 1:
-                    # right before the SECOND GCE (0x21 0xF9)
-                    second = p.index(b"\x21\xf9", p.index(b"\x21\xf9") + 2)
-                    com = b"\x21\xfe\x07fixture\x00"
-                    p = p[:second] + com + p[second:]
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synth(df, id_col, make)
 
 
 GIF_ANIM_SCHEMA = StructType(
@@ -3248,33 +2703,19 @@ def sample_frames_gif(
     fixture frames make every mean exact-integer."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "n_sampled": [],
-                "total_delay_cs": [], "loop_count": [],
-                "wsum_r": [], "wsum_g": [], "wsum_b": [],
-            }
-            for d, p in zip(pdf[id_col], pdf[payload_col]):
-                frames, delays, loops, _nc = gif_decode_animated(bytes(p))
-                sampled = frames[::stride]
-                acc = [0, 0, 0]
-                for si, fr in enumerate(sampled):
-                    npx = fr.shape[0] * fr.shape[1]
-                    for ci in range(3):
-                        s = int(fr[:, :, ci].astype(np.int64).sum())
-                        assert s % npx == 0, "fixture frames are solid"
-                        acc[ci] += (s // npx) * (si + 1)
-                out["doc_id"].append(int(d))
-                out["n_frames"].append(len(frames))
-                out["n_sampled"].append(len(sampled))
-                out["total_delay_cs"].append(int(sum(delays)))
-                out["loop_count"].append(
-                    -1 if loops is None else int(loops)
-                )
-                out["wsum_r"].append(acc[0])
-                out["wsum_g"].append(acc[1])
-                out["wsum_b"].append(acc[2])
-            yield pd.DataFrame(out)
+    def row(p: bytes):
+        frames, delays, loops, _nc = gif_decode_animated(p)
+        sampled = frames[::stride]
+        acc = [0, 0, 0]
+        for si, fr in enumerate(sampled):
+            npx = fr.shape[0] * fr.shape[1]
+            for ci in range(3):
+                s = int(fr[:, :, ci].astype(np.int64).sum())
+                assert s % npx == 0, "fixture frames are solid"
+                acc[ci] += (s // npx) * (si + 1)
+        return (
+            len(frames), len(sampled), int(sum(delays)),
+            -1 if loops is None else int(loops), *acc,
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(run, GIF_ANIM_SCHEMA)
+    return _features(df, id_col, payload_col, GIF_ANIM_SCHEMA, row)

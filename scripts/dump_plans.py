@@ -1,45 +1,73 @@
-"""Regenerate PLANS.md: the formatted physical plan of every bench
-headline query at the default sf_dir — committed evidence that the
-scale-critical plan shapes (pushdown, pruning, broadcast dims, partial
-aggs, no cartesians) are what SCALE.md claims.
+"""Dump the formatted physical plan of registry queries.
 
-Usage: python scripts/dump_plans.py [sf_dir]
+Without ``--out`` it regenerates PLANS.md: the plans of the bench
+headline set at the given sf_dir — committed evidence that the
+scale-critical plan shapes (pushdown, pruning, broadcast dims, partial
+aggs, no cartesians) are what SCALE.md claims. With ``--out DIR --tag
+TAG`` it writes one ``DIR/<query>_<TAG>.txt`` per query instead, the
+before/after record of a plan-shape change.
+
+Usage: python scripts/dump_plans.py [--sf-dir DIR] [--out DIR --tag TAG]
+       [query ...]
+Queries default to the bench HEADLINE set; --sf-dir defaults to
+io.DEFAULT_SF_DIR ($SPARK_GRAFT_SF_DIR, else the sf0.1 test data).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE  # noqa: E402
+from cassandra_sql_spark.io import DEFAULT_SF_DIR  # noqa: E402
 from cassandra_sql_spark.queries import REGISTRY  # noqa: E402
 from cassandra_sql_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", help="registry names")
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
+    ap.add_argument("--out", help="directory for per-query plan files")
+    ap.add_argument("--tag", help="file-name tag, required with --out")
+    args = ap.parse_args()
+    if args.out and not args.tag:
+        ap.error("--out needs --tag")
+    names = args.queries or list(HEADLINE)
     spark = get_spark("dump-plans")
+    plans = {}
+    for name in names:
+        df = REGISTRY[name].fn(spark, args.sf_dir)
+        plans[name] = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
+        for name, plan in plans.items():
+            path = os.path.join(args.out, f"{name}_{args.tag}.txt")
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"wrote {path}")
+        return
     out = [
         "# PLANS — formatted physical plans of the bench headline set",
         "",
-        f"Generated by `python scripts/dump_plans.py {sf_dir}` "
-        "(regenerate after plan-shape changes; tests/test_plans.py pins "
-        "the properties, this file shows the full shapes).",
+        "Generated by `python scripts/dump_plans.py --sf-dir "
+        f"{args.sf_dir}` (regenerate after plan-shape changes; "
+        "tests/test_plans.py pins the properties, this file shows the "
+        "full shapes).",
         "",
     ]
-    for name in HEADLINE:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+    for name, plan in plans.items():
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "PLANS.md")
+    path = os.path.join(ROOT, "PLANS.md")
     with open(path, "w") as f:
         f.write("\n".join(out))
-    print(f"wrote {path} ({len(HEADLINE)} plans)")
+    print(f"wrote {path} ({len(plans)} plans)")
 
 
 if __name__ == "__main__":

@@ -242,3 +242,34 @@ def test_create_table_runs_no_spark_job(eng, spark):
     eng.sql("VACUUM c")
     with pytest.raises(ValueError, match="does not exist"):
         eng.sql("SELECT * FROM c VERSION AS OF 1")
+
+
+def _jobs(spark, run):
+    """Spark jobs started while ``run()`` executes (a job group)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ctas_counts_rows_on_its_write(eng, spark):
+    """CTAS takes its status count from an Observation on the write
+    instead of re-reading v1: the count is right, an empty SELECT gives
+    0 and leaves the rowid sequence at 1, and the statement runs no more
+    than the write's own jobs (the re-read took 3 more)."""
+    eng.sql("CREATE TABLE src (id INT PRIMARY KEY, g INT)")
+    eng.sql("INSERT INTO src SELECT id, id % 7 FROM range(300)")
+    out, n_jobs = _jobs(spark, lambda: eng.sql(
+        "CREATE TABLE grp AS SELECT g, count(*) AS n FROM src GROUP BY g"
+    ))
+    assert rows(out) == [("create table grp as select", 7)]
+    assert n_jobs <= 3
+    assert rows(eng.sql("SELECT sum(n) FROM grp")) == [(300,)]
+    out = eng.sql("CREATE TABLE empty AS SELECT g FROM src WHERE g > 100")
+    assert rows(out) == [("create table empty as select", 0)]
+    assert eng.catalog.nextval("empty_rowid_seq") == 1
+    assert eng.catalog.nextval("grp_rowid_seq") == 8

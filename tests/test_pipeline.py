@@ -1329,7 +1329,7 @@ def test_gif_decode_walks_extensions_and_rejects_unsupported():
     with pytest.raises(ValueError):
         multimodal.gif_decode(p_i)
     # truncate the trailer
-    with pytest.raises((ValueError, IndexError)):
+    with pytest.raises(ValueError):
         multimodal.gif_decode(bytes(p[:-1]) + b"\x00")
 
 
@@ -1837,6 +1837,41 @@ def test_jpeg_restart_fixture_traps_are_armed(spark, sf_dir):
             for bx in range(3)
         )
         assert r.wsum_gray == float(want), d
+
+
+def test_codec_truncated_payloads_raise_value_error():
+    """Every proper prefix of a valid payload is a truncated file, and
+    every codec family rejects each one with ValueError — not
+    IndexError or struct.error from reading past the end, and not a
+    silent decode (a progressive prefix cut before its first SOS used
+    to return a flat image with 0 scans)."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    gray = rng.integers(0, 256, (16, 16), np.uint8)
+    pal = rng.integers(0, 256, (8, 3)).astype(np.uint8)
+    cases = [
+        (multimodal.jpeg_encode_gray(gray, restart_interval=2),
+         multimodal.jpeg_decode_gray),
+        (multimodal.jpeg_encode_color(
+            rng.integers(0, 256, (32, 32, 3), np.uint8)),
+         multimodal.jpeg_decode_color),
+        (multimodal.jpeg_encode_gray_progressive(gray),
+         multimodal.jpeg_decode_gray_progressive),
+        (multimodal.gif_encode(
+            rng.integers(0, 8, (8, 8)).astype(np.uint8), pal,
+            version=b"89a", comment=b"hi", max_sub_block=7),
+         multimodal.gif_decode),
+        (multimodal.gif_encode_animated(
+            [rng.integers(0, 8, (6, 6)).astype(np.uint8)] * 3, pal,
+            [1, 2, 3], max_sub_block=9),
+         multimodal.gif_decode_animated),
+    ]
+    for payload, decode in cases:
+        decode(payload)
+        for k in range(len(payload)):
+            with pytest.raises(ValueError):
+                decode(payload[:k])
 
 
 def test_sql_string_builders_match_column_forms(spark, sf_dir):
