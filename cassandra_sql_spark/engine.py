@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 
 from cassandra_sql_spark.catalog import Catalog, ColumnMeta, TableMeta, ViewMeta
 from cassandra_sql_spark.functions import register_pg_functions
+from cassandra_sql_spark.profile import node_metrics, plan_nodes
 from cassandra_sql_spark.sqlfront.preprocess import (
     _mask_literals,
     _unmask,
@@ -2672,31 +2673,12 @@ class Engine:
             f"Execution: {n_rows} rows, {elapsed_ms:.1f} ms",
             "",
         ]
-        self._walk_metrics(qe.executedPlan(), 0, lines)
+        for depth, node in plan_nodes(qe.executedPlan()):
+            parts = sorted(f"{k}={v}" for k, v in node_metrics(node).items())
+            lines.append(
+                "  " * depth + node.nodeName()
+                + (f" [{', '.join(parts)}]" if parts else "")
+            )
         return self.spark.createDataFrame(
             [(ln,) for ln in lines], "plan string"
         )
-
-    @classmethod
-    def _walk_metrics(cls, node, depth: int, out: list) -> None:
-        """Render a JVM SparkPlan subtree with its populated SQLMetric
-        values, descending through AQE wrappers to the final plan."""
-        name = node.nodeName()
-        mts = node.metrics().toList()
-        parts = []
-        for i in range(mts.size()):
-            kv = mts.apply(i)
-            parts.append(f"{kv._1()}={kv._2().value()}")
-        out.append(
-            "  " * depth + name
-            + (f" [{', '.join(sorted(parts))}]" if parts else "")
-        )
-        if "AdaptiveSparkPlan" in name:  # descend to the FINAL plan
-            cls._walk_metrics(node.executedPlan(), depth + 1, out)
-            return
-        if "QueryStage" in name:  # stage wrapper holds the real subtree
-            cls._walk_metrics(node.plan(), depth + 1, out)
-            return
-        ch = node.children()
-        for i in range(ch.size()):
-            cls._walk_metrics(ch.apply(i), depth + 1, out)

@@ -15,6 +15,17 @@ Five strategies, all pure DataFrame/Catalyst (no Python UDFs):
                 (pigeonhole: d <= 3 forces >= 1 equal chunk).
 - embedding-cosine: see cassandra_sql_spark.pipeline.similarity.
 
+Every primitive the strategies share exists once:
+
+- n-grams and shingles: ngrams_sql / shingles_sql / hashed_shingles_sql
+  build one SQL expression; word_ngrams / word_shingles /
+  hashed_shingles wrap it for a column name.
+- the minhash sketch: minhash_sketch (shingle table + signatures) under
+  the batch pair search, the on-disk index, its incremental probe and
+  the streaming ingest; _banded_keys derives the band keys of all four.
+- connected components: dup_clusters (large-star/small-star, run to its
+  fixed point) under every pairs -> clusters step.
+
 Scale notes: every strategy is shuffle-bounded by the exploded index
 (shingles or bands), not by pairs. Hot shingles in the inverted index are
 the skew risk at 100 TB — cap candidate fan-out by dropping ultra-frequent
@@ -61,17 +72,28 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
+def sql_ident(name: str) -> str:
+    """Column name -> backtick-quoted SQL reference for the F.expr
+    builders. Embedded backticks are escaped by doubling, so a hostile
+    or merely unlucky column name can't break out of the quoting."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def ngrams_sql(col_sql: str, k: int) -> str:
-    """SQL-string form of ``word_ngrams`` (round 12): one ``F.expr`` parse
+    """k-word grams of the SQL expression ``col_sql`` in document order
+    (with repeats), as ONE SQL expression string: one ``F.expr`` parse
     instead of ~50 py4j round trips per construction (the rebuild-path
-    bench queries construct inside the timed region; the Column-API
-    builders cost 0.05-0.35s of driver time each at 16-64 calls/expr).
+    bench queries construct inside the timed region).
+
     The token array is lambda-bound (evaluated once per row) and grams
-    are k O(1) ``element_at`` lookups — no shifted array copies. A doc
-    with fewer than k tokens has NO k-gram; the explicit size branch also
-    keeps ANSI mode from raising on out-of-bounds ``element_at``.
-    Output is exceptAll-identical to the Column form on the corpus and
-    the NULL/empty/short-doc edges (pinned in tests/test_pipeline.py)."""
+    are k O(1) ``element_at`` lookups — no shifted array copies. (The
+    naive transform(sequence, i -> concat_ws(slice(w, i, k))) form
+    re-slices the token array per element inside an interpreted
+    higher-order function: O(n*k) copies per row, measured ~10x slower
+    on the shingling paths.) A doc with fewer than k tokens has NO
+    k-gram — the ``range(1, len(w)-(k-2))`` convention every DuckDB
+    oracle uses; the explicit size branch also keeps ANSI mode from
+    raising on out-of-bounds ``element_at``. NULL text gives NULL."""
     gram = ", ".join(f"element_at(w, i + {j})" for j in range(k))
     body = (
         f"if(w IS NULL, CAST(NULL AS ARRAY<STRING>), "
@@ -86,67 +108,28 @@ def ngrams_sql(col_sql: str, k: int) -> str:
 
 
 def shingles_sql(col_sql: str, k: int) -> str:
-    """SQL-string form of ``word_shingles``."""
+    """Distinct k-word shingles of ``col_sql`` (see ngrams_sql)."""
     return f"array_distinct({ngrams_sql(col_sql, k)})"
 
 
 def hashed_shingles_sql(col_sql: str, k: int) -> str:
-    """SQL-string form of ``hashed_shingles``."""
+    """Distinct k-word shingles of ``col_sql`` hashed to int64."""
     return f"transform({shingles_sql(col_sql, k)}, g -> xxhash64(g))"
 
 
-def _col_sql(col: Column | str) -> str | None:
-    """Bare column name -> quoted SQL reference; Column -> None (no SQL).
-    Embedded backticks are escaped by doubling (r12 advice) so a hostile
-    or merely unlucky column name can't break out of the quoting when
-    interpolated into the F.expr builders."""
-    if not isinstance(col, str):
-        return None
-    return "`" + col.replace("`", "``") + "`"
+def word_ngrams(col: str, k: int) -> Column:
+    """k-word grams of column ``col`` in document order (ngrams_sql)."""
+    return F.expr(ngrams_sql(sql_ident(col), k))
 
 
-def word_ngrams(col: Column | str, k: int) -> Column:
-    """k-word grams in document order (with repeats), JVM-side.
-
-    A ``str`` argument (bare column name) takes the single-parse
-    ``ngrams_sql`` path — cheap construction, same values. Column inputs
-    keep the arrays_zip-of-shifted-views form: the per-element lambda
-    touches only its own struct — O(1) per gram. (The naive
-    transform(sequence, i -> concat_ws(slice(w, i, k))) form re-slices
-    the token array per element inside an interpreted higher-order
-    function: O(n*k) copies per row, measured ~10x slower on the
-    shingling paths; the SQL path's element_at lookups are O(1) with no
-    copies at all.)
-    """
-    sql = _col_sql(col)
-    if sql is not None:
-        return F.expr(ngrams_sql(sql, k))
-    w = tokens(col)
-    views = [w.alias("t0")] + [
-        F.slice(w, i + 1, F.size(w)).alias(f"t{i}") for i in range(1, k)
-    ]
-    zipped = F.arrays_zip(*views)
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[f"t{i}"] for i in range(k)])
-    )
-    # A doc with fewer than k tokens has NO k-gram (empty list) — matching
-    # the `range(1, len(w)-(k-2))` convention every DuckDB oracle uses. The
-    # old floor of 1 emitted a partial gram for short docs: invisible on
-    # the long-doc fixtures but a latent Spark-vs-oracle divergence (and a
-    # semantic lie — a 1-token doc can legitimately match nothing).
-    return F.slice(grams, 1, F.greatest(F.size(w) - (k - 1), F.lit(0)))
+def word_shingles(col: str, k: int = 3) -> Column:
+    """Distinct k-word shingles of column ``col``."""
+    return F.expr(shingles_sql(sql_ident(col), k))
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles, JVM-side."""
-    sql = _col_sql(col)
-    if sql is not None:
-        return F.expr(shingles_sql(sql, k))
-    return F.array_distinct(word_ngrams(col, k))
-
-
-def hashed_shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles hashed to int64 (xxhash64), JVM-side.
+def hashed_shingles(col: str, k: int = 3) -> Column:
+    """Distinct k-word shingles of column ``col`` hashed to int64
+    (xxhash64).
 
     Every shingle-join path uses these instead of the raw strings: the
     inverted-index shuffle moves fixed 8-byte keys instead of
@@ -155,10 +138,7 @@ def hashed_shingles(col: Column | str, k: int = 3) -> Column:
     (p ≈ m²/2⁶⁴ per doc for m grams — negligible; the DuckDB oracles on
     the string grams still hash-match).
     """
-    sql = _col_sql(col)
-    if sql is not None:
-        return F.expr(hashed_shingles_sql(sql, k))
-    return F.transform(word_shingles(col, k), lambda g: F.xxhash64(g))
+    return F.expr(hashed_shingles_sql(sql_ident(col), k))
 
 
 def normalize_text(col: Column) -> Column:
@@ -444,72 +424,6 @@ def ngram_containment_pairs(
     return pairs.filter(F.col("containment") >= threshold)
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    a_col: str = "da",
-    b_col: str = "db",
-    max_iters: int = 20,
-) -> DataFrame:
-    """Connected components over near-dup pairs -> (doc_id, cluster_id).
-
-    The step that turns pairwise dedup output into keep/drop decisions:
-    every document in a component gets the component's minimum id as its
-    cluster id (keep cluster_id == doc_id, drop the rest).
-
-    Min-label propagation: each round every node takes the min of its own
-    label and its neighbors' labels — converges in O(component diameter)
-    rounds, each round one join + one aggregate. Lineage is cut per round
-    with localCheckpoint (at 100 TB: checkpoint to object storage, or the
-    large-star/small-star variant, which squares path lengths and
-    converges in O(log n) rounds; near-dup components are tiny and
-    diameter-bounded in practice, so plain propagation is the right
-    default).
-    """
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    rev = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-    edges = fwd.union(rev).distinct().localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iters):
-        neigh = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("_nl"))
-        )
-        # The change flag rides the update join (round 12): the separate
-        # convergence check was a SECOND |nodes|-row join + count job per
-        # round over the two checkpointed label frames — folding
-        # new != old into the update pass makes the check a filter-count
-        # over already-materialized rows. Same labels, same change count.
-        new_labels = (
-            labels.join(neigh, labels["node"] == neigh["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("_nl", F.col("label"))
-                ).alias("label"),
-                (
-                    F.least(
-                        F.col("label"), F.coalesce("_nl", F.col("label"))
-                    )
-                    != F.col("label")
-                ).alias("_chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter("_chg").count()
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star round: every node's strictly-larger neighbors connect to
     the minimum of its closed neighborhood (Kiveris et al., 'Connected
@@ -547,57 +461,58 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def dup_clusters_bigstar(
-    pairs: DataFrame,
-    a_col: str = "da",
-    b_col: str = "db",
-    max_iters: int = 12,
+def dup_clusters(
+    pairs: DataFrame, a_col: str = "da", b_col: str = "db"
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star — the
-    100 TB upgrade over ``dup_clusters``'s min-label propagation.
+    """Connected components over near-dup pairs -> (doc_id, cluster_id).
 
-    Each round is two groupBy-min + join passes over the EDGE set (never
-    materializing neighborhoods), and path lengths square per round, so
-    convergence is O(log d) rounds vs O(d) for label propagation — on a
-    100 TB corpus where boilerplate chains stitch long components, that is
-    the difference between ~6 rounds and hundreds. Same output contract as
-    dup_clusters: (doc_id, cluster_id = component minimum).
+    The step that turns pairwise dedup output into keep/drop decisions:
+    every document in a component gets the component's minimum id as its
+    cluster id (keep cluster_id == doc_id, drop the rest). Documents in
+    no pair do not appear.
 
-    Convergence detection: (count, order-insensitive xxhash64 sum) of the
-    edge set — no full except/anti-join per round.
+    Alternating large-star/small-star rounds (Kiveris et al., SoCC'14):
+    each round is two groupBy-min + join passes over the EDGE set (never
+    materializing neighborhoods), and path lengths shrink geometrically,
+    so a component of diameter d settles in O(log d) rounds — min-label
+    propagation needs O(d), which boilerplate chains make long. Lineage
+    is cut per round with localCheckpoint (at 100 TB: checkpoint to
+    object storage).
+
+    There is no round cap: the loop runs until a round leaves the edge
+    set unchanged, the fixed point where every component is a star
+    around its minimum. Any cap returns wrong labels for the components
+    that have not settled when it cuts in (a 200k-node chain with
+    shuffled ids changes its edge set for 14 rounds), and the algorithm
+    always reaches the fixed point, so the loop needs none. A round's
+    edge set is identified by its (count, order-insensitive xxhash64
+    xor) signature: one aggregate per round, no except/anti-join.
     """
+    # pairs is read once: nodes and the first round both read this
+    # checkpoint, not the (often expensive) pair search behind it
+    raw = pairs.select(
+        F.col(a_col).alias("u"), F.col(b_col).alias("v")
+    ).localCheckpoint()
     nodes = (
-        pairs.select(F.col(a_col).cast("long").alias("node"))
-        .union(pairs.select(F.col(b_col).cast("long").alias("node")))
+        raw.select(F.col("u").alias("node"))
+        .union(raw.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    edges = (
-        pairs.select(
-            F.col(a_col).cast("long").alias("u"),
-            F.col(b_col).cast("long").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = raw.filter(F.col("u") != F.col("v")).distinct()
     prev_sig = None
-    for _ in range(max_iters):
+    while True:
         edges = _small_star(_large_star(edges)).localCheckpoint()
-        sig = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
+        sig = tuple(
+            edges.agg(
+                F.count(F.lit(1)), F.expr("bit_xor(xxhash64(u, v))")
+            ).first()
+        )
         if sig == prev_sig:
             break
         prev_sig = sig
-    # fixed point: every non-min node has exactly the edge (node -> min);
-    # min-agg is a no-op there and a safe lower bound if max_iters cut in
+    # fixed point: every non-min node has exactly the edge (node -> min)
     labels = nodes.join(
-        edges.groupBy(F.col("u").alias("node")).agg(
-            F.min("v").alias("_m")
-        ),
+        edges.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("_m")),
         "node",
         "left",
     )
@@ -630,7 +545,7 @@ def survivor_selection(
     rows; max_by keeps constant agg state per cluster). One shuffle on
     cluster_id over (id, score) pairs — never the documents.
     """
-    clusters = dup_clusters_bigstar(pairs, a_col, b_col)
+    clusters = dup_clusters(pairs, a_col, b_col)
     labeled = (
         docs.select(F.col(id_col), F.col(score_col))
         .join(clusters, id_col, "left")
@@ -754,14 +669,14 @@ def bloom_decontam(
             out.append((word, mask))
         return out
 
-    def grams_of(col: Column) -> Column:
+    def grams_of(col: str) -> Column:
         if hash_family == "md5":
             return word_shingles(col, k)
         return hashed_shingles(col, k)
 
     egrams = (
         eval_df.filter(F.size(w) >= k)
-        .select(F.explode(grams_of(F.col(text_col))).alias("_g"))
+        .select(F.explode(grams_of(text_col)).alias("_g"))
         .distinct()
     )
     set_bits = egrams.select(
@@ -787,7 +702,7 @@ def bloom_decontam(
             )
         return cond
 
-    grams = grams_of(F.col(text_col))
+    grams = grams_of(text_col)
     return spread(train).select(
         F.col(id_col),
         F.size(F.filter(grams, gram_hits)).cast("long").alias(
@@ -797,33 +712,6 @@ def bloom_decontam(
         F.col(id_col),
         "n_flagged_grams",
         (F.col("n_flagged_grams") > 0).alias("flagged"),
-    )
-
-
-def minhash_signature(col: Column, num_hashes: int = 64) -> Column:
-    """Array of num_hashes minhash values over the shingle array.
-
-    Hash family: xxhash64 salted by slot index — JVM built-in, no UDF.
-    Same single-``aggregate()`` fold as ``minhash_signatures`` (one
-    lambda, two nested loops in codegen — see that docstring for the
-    cold/warm A/B vs the unrolled form). The column form references
-    ``col`` once (the aggregate input), so an unmaterialized shingle
-    EXPRESSION is shingled once, not num_hashes times.
-
-    NOTE: seeds by ``xxhash64(element, slot_index)`` — a DIFFERENT hash
-    family than this function's pre-r7 ``xxhash64(concat(element,
-    '#i'))``; minhash estimates are equally valid under either, but
-    signatures from the two families are not comparable. The table form
-    ``minhash_signatures`` (every internal caller and the on-disk
-    index) has always used the (element, seed) family and is unchanged.
-    """
-    init = F.array_repeat(F.lit((1 << 63) - 1).cast("bigint"), num_hashes)
-    return F.aggregate(
-        col,
-        init,
-        lambda acc, g: F.transform(
-            acc, lambda a, i: F.least(a, F.xxhash64(g, i))
-        ),
     )
 
 
@@ -906,6 +794,26 @@ def _banded_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("_id", "_bk.band", "_bk.key")
 
 
+def minhash_sketch(
+    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int
+) -> tuple[DataFrame, DataFrame]:
+    """(sh, sig): the checkpointed (_id, _s) hashed-shingle table of
+    ``df`` and its (_id, _sig) minhash signatures — the one
+    shingle/signature derivation behind the batch pair search, the
+    on-disk index, its incremental probe and the streaming ingest, so
+    index, probe and batch always agree.
+
+    ``sh`` is materialized once because it feeds the signature AND the
+    exact-Jaccard verify (and the index's shingle file): unmaterialized,
+    Catalyst would re-run the scan + shingling — the dominant map cost —
+    once per consumer."""
+    sh = spread(df).select(
+        F.col(id_col).alias("_id"),
+        hashed_shingles(text_col, k).alias("_s"),
+    ).localCheckpoint(eager=True)
+    return sh, minhash_signatures(sh, "_id", "_s", num_hashes)
+
+
 def write_minhash_index(
     df: DataFrame,
     id_col: str,
@@ -924,11 +832,7 @@ def write_minhash_index(
     batch's text — never re-shingling the corpus. Rebuild = one map pass
     + one groupBy; append of an accepted batch = writing its bands and
     shingle rows into the same layout."""
-    sh = spread(df).select(
-        F.col(id_col).alias("_id"),
-        hashed_shingles(text_col, k).alias("_s"),
-    ).localCheckpoint(eager=True)
-    sig = minhash_signatures(sh, "_id", "_s", num_hashes)
+    sh, sig = minhash_sketch(df, id_col, text_col, k, num_hashes)
     _banded_keys(sig, num_hashes, bands).write.mode("overwrite").parquet(
         f"{path}/bands"
     )
@@ -956,15 +860,8 @@ def dedup_against_index(
     call on the batch alone. Same shingle/signature/band derivation as
     the batch path, so incremental results equal the cross-pairs of a
     full recompute (pinned in tests)."""
-    new_sh = spread(new_df).select(
-        F.col(id_col).alias("_id"),
-        hashed_shingles(text_col, k).alias("_s"),
-    ).localCheckpoint(eager=True)
-    new_bands = _banded_keys(
-        minhash_signatures(new_sh, "_id", "_s", num_hashes),
-        num_hashes,
-        bands,
-    )
+    new_sh, new_sig = minhash_sketch(new_df, id_col, text_col, k, num_hashes)
+    new_bands = _banded_keys(new_sig, num_hashes, bands)
     idx_bands = spark.read.parquet(f"{path}/bands")
     cand = (
         idx_bands.alias("c")
@@ -1016,24 +913,13 @@ def minhash_lsh_pairs(
     output equals the exact answer in practice (candidates are exactly
     verified — false positives never survive).
     """
-    # Hashed shingle sets: the signature explode and the Jaccard verify
-    # both run over int64 arrays (J over the hashed sets == J over the
-    # string sets modulo collisions).
-    #
-    # Materialize ONCE: sh feeds the signature path and BOTH sides of the
-    # verify join, and banded self-joins — unchekpointed, Catalyst plans
-    # four full scan+shingle passes over the corpus (shingling is the
-    # dominant map cost). sh's checkpoint is the int64 shingle index
-    # (corpus-sized, same class as the verify-join shuffle it feeds);
-    # sig's is tiny (n x num_hashes longs) and stops the banded self-join
-    # from running the explode+min-agg twice.
-    sh = spread(df).select(
-        F.col(id_col).alias("_id"),
-        hashed_shingles(text_col, k).alias("_s"),
-    ).localCheckpoint(eager=True)
-    sig = minhash_signatures(sh, "_id", "_s", num_hashes).localCheckpoint(
-        eager=True
-    )
+    # Hashed shingle sets: the signature and the Jaccard verify both run
+    # over int64 arrays (J over the hashed sets == J over the string sets
+    # modulo collisions). sh feeds the signature path and BOTH sides of
+    # the verify join; sig's checkpoint is tiny (n x num_hashes longs)
+    # and stops the banded self-join from folding the signatures twice.
+    sh, sig = minhash_sketch(df, id_col, text_col, k, num_hashes)
+    sig = sig.localCheckpoint(eager=True)
     banded = _banded_keys(sig, num_hashes, bands)
     cand = (
         banded.alias("a")

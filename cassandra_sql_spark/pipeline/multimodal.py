@@ -1313,18 +1313,21 @@ def _deq_idct(zz, q, m):
     return np.clip(np.floor(blk + 128.0 + 0.5), 0, 255).astype(np.uint8)
 
 
-def _jpeg_decode(payload: bytes, sof: int, ncomp: int):
-    """The one T.81 decoder behind jpeg_decode_gray, jpeg_decode_color
-    and jpeg_decode_gray_progressive. ``sof`` is the frame the caller
-    accepts (0xC0 baseline, 0xC2 progressive) and ``ncomp`` its
-    component count (1 gray, 3 for 4:2:0 color); any other frame raises
-    before a scan is read. One marker walk (multi-table DQT/DHT
-    segments, unknown segments skipped by length); each SOS runs
-    _jpeg_scan over single-component or interleaved MCUs, accumulating
-    the coefficient plane; dequant + IDCT run once at EOI. Returns
-    (per-component uint8 planes in frame order, n_scans). Truncation,
-    a missing EOI or scan, and anything outside the subset raise
-    ValueError — the strict contract line."""
+def _jpeg_decode(payload: bytes, sof: int | None, ncomp: int):
+    """The one T.81 decoder behind jpeg_decode_gray, jpeg_decode_color,
+    jpeg_decode_gray_progressive and decode_features_jpeg_restart.
+    ``sof`` is the frame the caller accepts (0xC0 baseline, 0xC2
+    progressive, None for whichever of the two the payload's SOF
+    segment declares) and ``ncomp`` its component count (1 gray, 3 for
+    4:2:0 color); any other frame raises before a scan is read. One
+    marker walk (multi-table DQT/DHT segments, unknown segments skipped
+    by length); each SOS runs _jpeg_scan over single-component or
+    interleaved MCUs, accumulating the coefficient plane; dequant +
+    IDCT run once at EOI. Returns (per-component uint8 planes in frame
+    order, n_scans, n_rst) — n_rst counts the RSTm markers inside the
+    entropy-coded data, so marker-like bytes in COM/APP bodies never
+    count. Truncation, a missing EOI or scan, and anything outside the
+    subset raise ValueError — the strict contract line."""
     import struct
 
     import numpy as np
@@ -1332,11 +1335,10 @@ def _jpeg_decode(payload: bytes, sof: int, ncomp: int):
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (no SOI)")
     n, pos = len(payload), 2
-    baseline = sof == 0xC0
     qtabs, huff, ri = {}, {}, 0
     comps = None  # [(id, quant id, block rows, block cols)], frame order
     mcus = coef = None
-    n_scans = 0
+    n_scans = n_rst = 0
     while True:
         if pos + 2 > n:
             raise ValueError("JPEG truncated before EOI")
@@ -1381,11 +1383,12 @@ def _jpeg_decode(payload: bytes, sof: int, ncomp: int):
                 raise ValueError("malformed DRI segment")
             ri = struct.unpack(">H", seg)[0]
         elif marker in _SOF_MARKERS:
-            if marker != sof:
+            if marker not in ((0xC0, 0xC2) if sof is None else (sof,)):
                 raise ValueError(
-                    "non-baseline JPEG unsupported" if baseline
-                    else "non-progressive JPEG: use the baseline decoder"
+                    "non-progressive JPEG: use the baseline decoder"
+                    if sof == 0xC2 else "non-baseline JPEG unsupported"
                 )
+            baseline = marker == 0xC0
             if comps is not None:
                 raise ValueError("second SOF segment")
             if len(seg) < 6 or len(seg) != 6 + 3 * seg[5]:
@@ -1460,6 +1463,7 @@ def _jpeg_decode(payload: bytes, sof: int, ncomp: int):
                     raise ValueError("JPEG entropy stream unterminated")
                 if payload[end + 1] and not 0xD0 <= payload[end + 1] <= 0xD7:
                     break
+                n_rst += payload[end + 1] != 0
                 end += 2
             _jpeg_scan(
                 _BitReader(payload[pos:end]), mcus, coef, tables,
@@ -1480,7 +1484,7 @@ def _jpeg_decode(payload: bytes, sof: int, ncomp: int):
             by, bx = divmod(i, nbx)
             plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = _deq_idct(zz, q, m)
         planes.append(plane)
-    return planes, n_scans
+    return planes, n_scans, n_rst
 
 
 def jpeg_decode_gray(payload: bytes):
@@ -1489,7 +1493,7 @@ def jpeg_decode_gray(payload: bytes):
     8-bit) to ((h, w) uint8 array, n_blocks) through _jpeg_decode;
     ValueError on anything outside the subset (progressive,
     multi-component, 12-bit) — the strict contract line."""
-    (y,), _ = _jpeg_decode(payload, 0xC0, 1)
+    (y,), _, _ = _jpeg_decode(payload, 0xC0, 1)
     return y, y.size // 64
 
 
@@ -1506,14 +1510,13 @@ def _flat_gray(d: int, blocks: int):
     return img
 
 
-def _splice_com(p: bytes, d: int) -> bytes:
-    """The JPEG fixtures' marker-walk trap: a COM segment right after
-    SOI on ids % 3 == 0."""
+def _splice_com(p: bytes, d: int, com: bytes = b"fixture comment") -> bytes:
+    """The JPEG fixtures' marker-walk trap: a COM segment holding ``com``
+    right after SOI on ids % 3 == 0."""
     import struct
 
     if d % 3:
         return p
-    com = b"fixture comment"
     return p[:2] + b"\xff\xfe" + struct.pack(">H", len(com) + 2) + com + p[2:]
 
 
@@ -2095,7 +2098,7 @@ def jpeg_decode_color(payload: bytes):
     contract line."""
     import numpy as np
 
-    (y, cb, cr), _ = _jpeg_decode(payload, 0xC0, 3)
+    (y, cb, cr), _, _ = _jpeg_decode(payload, 0xC0, 3)
     r, g, b = ycbcr_to_rgb_int(
         y,
         cb.repeat(2, axis=0).repeat(2, axis=1),
@@ -2438,7 +2441,7 @@ def jpeg_decode_gray_progressive(payload: bytes):
     first/refinement, EOB runs; DRI/RSTm per scan — codec #9), then
     dequant + IDCT run once. ValueError on baseline (SOF0) or anything
     outside the subset — the strict contract line."""
-    (y,), n_scans = _jpeg_decode(payload, 0xC2, 1)
+    (y,), n_scans, _ = _jpeg_decode(payload, 0xC2, 1)
     return y, n_scans
 
 
@@ -2541,21 +2544,16 @@ JPEG_RESTART_SCHEMA = StructType(
 def decode_features_jpeg_restart(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
-    """REAL restart-interval decode in the mapInPandas slot: sniffs
-    SOF0 vs SOF2 from the marker stream and dispatches to the baseline
-    or progressive decoder (both DRI-aware), emitting the same
-    position-weighted block-mean statistic plus the count of RSTm
-    markers actually present in the payload. The count is computable
-    from the raw bytes because entropy-coded FFs are always stuffed
-    with 0x00 — a bare FF D0..D7 pair can only be a marker."""
+    """REAL restart-interval decode in the mapInPandas slot: one
+    _jpeg_decode call takes the frame type (SOF0 baseline or SOF2
+    progressive, both DRI-aware) from its own marker walk, and emits the
+    same position-weighted block-mean statistic plus the count of RSTm
+    markers inside the entropy-coded data. Bytes that look like markers
+    in a COM or APP body neither pick the decoder nor count."""
 
     def row(p: bytes):
-        if b"\xff\xc2" in p.split(b"\xff\xda", 1)[0]:
-            img, _ = jpeg_decode_gray_progressive(p)
-        else:
-            img, _ = jpeg_decode_gray(p)
+        (img,), _, n_rst = _jpeg_decode(p, None, 1)
         h, w = img.shape
-        n_rst = sum(p.count(bytes([0xFF, 0xD0 + m])) for m in range(8))
         return w, h, n_rst, _block_wsum(img, 8)
 
     return _features(df, id_col, payload_col, JPEG_RESTART_SCHEMA, row)

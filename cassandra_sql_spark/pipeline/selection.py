@@ -114,9 +114,9 @@ def perplexity_buckets(
     + broadcast prefix offsets), and NTILE(3) collapses to its closed
     form over (rank, n): the first n%3 buckets take n div 3 + 1 rows,
     the rest n div 3 — integer-exact, so the assignment matches the
-    oracle's NTILE bit-for-bit. ``perplexity_buckets_approx`` remains
-    the sampling-based variant CCNet itself uses when approximate tier
-    boundaries are acceptable."""
+    oracle's NTILE bit-for-bit. This is the one tier assignment: the
+    sharded rank has no single-partition stage at any scale, so there
+    is no approximate (sampled-cutoff) variant beside it."""
     from cassandra_sql_spark.operators.global_order import sharded_rank
 
     d = sharded_rank(
@@ -141,38 +141,6 @@ def perplexity_buckets(
         .when(tier == 2, "middle")
         .otherwise("tail")
         .alias("bucket"),
-    )
-
-
-def perplexity_buckets_approx(
-    scored: DataFrame,
-    nll_col: str = "nll",
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """The at-scale tier assignment: tertile cutpoints from
-    approx_percentile (one aggregate pass, mergeable sketch state),
-    broadcast into a map-side CASE — no global sort, no single-partition
-    window, corpus touched exactly twice (sketch + label), both
-    shuffle-free beyond the sketch's constant-size partials. This is how
-    CCNet itself buckets (cutoffs from a sample); tier boundaries are
-    approximate within the sketch's rank error (1/accuracy), which only
-    ever reassigns docs within that band of the cutpoint. Tier-agreement
-    vs the exact NTILE form is pinned in tests."""
-    cuts = scored.agg(
-        F.percentile_approx(
-            nll_col, [1.0 / 3.0, 2.0 / 3.0], accuracy
-        ).alias("_cuts")
-    )
-    c = F.col("_cuts")
-    return (
-        scored.crossJoin(F.broadcast(cuts))
-        .select(
-            *scored.columns,
-            F.when(F.col(nll_col) <= c[0], "head")
-            .when(F.col(nll_col) <= c[1], "middle")
-            .otherwise("tail")
-            .alias("bucket"),
-        )
     )
 
 

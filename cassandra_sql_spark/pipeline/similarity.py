@@ -36,6 +36,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cassandra_sql_spark.pipeline.dedup import sql_ident
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product (deterministic summation order)."""
@@ -114,25 +116,46 @@ def threshold_pairs(
     return pairs.filter(F.col("score") >= threshold)
 
 
+def _flits_sql(w: list[float]) -> str:
+    """Comma-separated double literals for a driver-side constant
+    vector. The CAST-from-repr form constant-folds to the identical
+    double Literal (Python repr round-trips exactly; Java parses the same
+    nearest double), so a literal array costs one parse, not one py4j
+    round trip per element."""
+    return ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in w)
+
+
 def _dot_lit_sql(vec_sql: str, w: list[float]) -> str:
-    """SQL-string twin of _dot_lit (round 13): one parse instead of ~8
-    py4j round trips per model vector. Same fold, same CAST-from-repr
-    double literals — constant-folds to the identical plan."""
-    arr = ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in w)
+    """Dot product of the SQL array expression ``vec_sql`` against a
+    driver-side constant vector: inlined literal array + zip_with /
+    aggregate fold, left to right (the order every oracle replays).
+
+    The one constant-vector dot: LSH hyperplanes, JL projections and the
+    PCA power iteration all build on it. The fold runs as an interpreted
+    higher-order function, but REJECTED-faster-looking alternative: fully
+    unrolling to element_at(i)*w_i multiply-adds blows the codegen method
+    budget at 32 planes x 64 dims (2048-node tree) and measured 3.6x
+    SLOWER (19.2s vs 5.3s on the banded-LSH pair query at sf0.1) — the
+    literal-array fold is the right shape; keep the model constant small
+    and let the lambda interpreter stream it."""
     return (
-        f"aggregate(zip_with({vec_sql}, array({arr}), "
+        f"aggregate(zip_with({vec_sql}, array({_flits_sql(w)}), "
         f"(x, y) -> CAST(x AS DOUBLE) * y), CAST('0.0' AS DOUBLE), "
         f"(acc, x) -> acc + x)"
     )
 
 
 def band_buckets_sql(vec_sql: str, bands: int, rows: int) -> str:
-    """SQL-string twin of band_buckets (round 13, guide §1.2 per-task
-    work): the Column form issued ~2300 py4j round trips at the default
-    16 bands x 2 rows x 64-dim planes — ~2.3s of driver time per
-    construction, the dominant cost of the banded-LSH entries. ONE
-    F.expr parse; same CASE/sum/struct tree, values identical (pinned
-    by exceptAll in tests/test_similarity_multi.py)."""
+    """Array of (band, bucket) structs for banded sign-LSH, as ONE SQL
+    expression string (one parse: the Column-API builder issued ~2300
+    py4j round trips at 16 bands x 2 rows x 64-dim planes, ~2.3s of
+    driver time per construction).
+
+    Band b's bucket is the `rows`-bit signature from hyperplanes
+    [b*rows, (b+1)*rows) — deterministic md5-derived planes
+    (_plane_weights). Two vectors are candidates iff they share ANY
+    band's bucket (OR-of-ANDs amplification, the MinHash-LSH shape);
+    band 0 of a one-band call is ``lsh_bucket``."""
     parts = []
     for b in range(bands):
         bucket = "CAST(0 AS BIGINT)"
@@ -145,32 +168,9 @@ def band_buckets_sql(vec_sql: str, bands: int, rows: int) -> str:
     return f"array({', '.join(parts)})"
 
 
-def band_buckets(vec: Column | str, bands: int, rows: int) -> Column:
-    """Array of (band, bucket) structs for banded sign-LSH.
-
-    Band b's bucket is the `rows`-bit signature from hyperplanes
-    [b*rows, (b+1)*rows) — same deterministic md5-derived planes as
-    ``lsh_bucket``. Two vectors are candidates iff they share ANY band's
-    bucket (OR-of-ANDs amplification, the MinHash-LSH shape).
-
-    A ``str`` argument (bare column name) takes the single-parse
-    ``band_buckets_sql`` path — cheap construction, same values; Column
-    inputs keep the original form as the equivalence reference."""
-    if isinstance(vec, str):
-        return F.expr(
-            band_buckets_sql("`" + vec.replace("`", "``") + "`", bands, rows)
-        )
-    out = []
-    for b in range(bands):
-        bucket = F.lit(0).cast("long")
-        for r in range(rows):
-            bucket = bucket + F.when(
-                _projection(vec, b * rows + r) > 0, F.lit(2**r)
-            ).otherwise(F.lit(0))
-        out.append(
-            F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
-        )
-    return F.array(*out)
+def band_buckets(vec_col: str, bands: int, rows: int) -> Column:
+    """band_buckets_sql over column ``vec_col``."""
+    return F.expr(band_buckets_sql(sql_ident(vec_col), bands, rows))
 
 
 def threshold_pairs_lsh(
@@ -284,10 +284,12 @@ def random_projection(
     braces)."""
     R = projection_signs(in_dim, out_dim, seed)
     norm = out_dim ** 0.5
+    v = sql_ident(vec_col)
     return emb.select(
         F.col(id_col),
         *[
-            F.round(_dot_lit(F.col(vec_col), R[j]) / norm, 6).alias(f"p{j:02d}")
+            F.round(F.expr(_dot_lit_sql(v, R[j])) / norm, 6)
+            .alias(f"p{j:02d}")
             for j in range(out_dim)
         ],
     )
@@ -342,51 +344,19 @@ def _plane_weights(p: int, dim: int = DIM) -> list[float]:
     return out
 
 
-def _projection(vec: Column, p: int, dim: int = DIM) -> Column:
-    return _dot_lit(vec, _plane_weights(p, dim))
-
-
-def lsh_bucket(vec: Column, planes: int = 8) -> Column:
-    """Sign-bit bucket id from `planes` random hyperplanes (JVM lambdas)."""
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        bucket = bucket + F.when(
-            _projection(vec, p) > 0, F.lit(2**p)
-        ).otherwise(F.lit(0))
-    return bucket
+def lsh_bucket(vec_col: str, planes: int = 8) -> Column:
+    """Sign-bit bucket id of column ``vec_col`` from `planes` random
+    hyperplanes: band 0 of a one-band ``band_buckets_sql``."""
+    return F.expr(
+        f"{band_buckets_sql(sql_ident(vec_col), 1, planes)}[0].bucket"
+    )
 
 
 def _flit_array(w: list[float]) -> Column:
     """A constant double-array column built with ONE F.expr parse
-    (round 13, guide §1.2 per-task work): ``F.array(*[F.lit(x) ...])``
-    issues one py4j round trip per element — ~70 per 64-dim model
-    vector, the dominant CONSTRUCTION cost of every hyperplane/query
-    literal consumer (measured: band_buckets alone cost ~2.3s of driver
-    time per dedup_embedding_lsh construction). The CAST-from-repr form
-    constant-folds to the identical double Literal (Python repr
-    round-trips exactly; Java parses the same nearest double), so the
-    optimized plan is unchanged."""
-    return F.expr(
-        "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in w)
-        + ")"
-    )
-
-
-def _dot_lit(vec: Column, w: list[float]) -> Column:
-    """Dot product against a driver-side constant vector (inlined literal
-    array + zip_with/aggregate fold). The fold runs as an interpreted
-    higher-order function, but REJECTED-faster-looking alternative: fully
-    unrolling to element_at(i)*w_i multiply-adds blows the codegen method
-    budget at 32 planes x 64 dims (2048-node tree) and measured 3.6x
-    SLOWER (19.2s vs 5.3s on the banded-LSH pair query at sf0.1) — the
-    literal-array fold is the right shape; keep the model constant small
-    and let the lambda interpreter stream it."""
-    arr = _flit_array(w)
-    return F.aggregate(
-        F.zip_with(vec, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    (``F.array(*[F.lit(x) ...])`` issues one py4j round trip per
+    element — ~70 per 64-dim query vector); see _flits_sql."""
+    return F.expr(f"array({_flits_sql(w)})")
 
 
 def quantized_vectors(
@@ -1161,7 +1131,7 @@ def write_lsh_partitioned(
     the other partitions are never listed). Bucket assignment is the same
     deterministic hyperplane expression as lsh_bucket, so index and query
     always agree; rebuilding is a map-only full scan."""
-    emb.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes)).write.mode(
+    emb.withColumn("_bucket", lsh_bucket(vec_col, planes)).write.mode(
         "overwrite"
     ).partitionBy("_bucket").parquet(path)
 
@@ -1180,9 +1150,7 @@ def topk_lsh_pruned(
     partition column with a LITERAL so Catalyst prunes to one directory,
     then exact-score only that bucket."""
     qdf = spark.createDataFrame([(query_vec,)], f"{vec_col} array<double>")
-    qbucket = qdf.select(
-        lsh_bucket(F.col(vec_col), planes).alias("b")
-    ).collect()[0]["b"]
+    qbucket = qdf.select(lsh_bucket(vec_col, planes).alias("b")).first()["b"]
     bucketed = nonzero(
         spark.read.parquet(path).filter(F.col("_bucket") == qbucket),
         vec_col,
@@ -1209,7 +1177,7 @@ def _lsh_scored(
     probes broadcast-join against the bucketed corpus and the cosine
     takes the DECIMAL(18,6) hop. The candidate stage of topk_lsh and
     range_search_lsh."""
-    bucketed = emb.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes))
+    bucketed = emb.withColumn("_bucket", lsh_bucket(vec_col, planes))
     probes = F.array(
         F.col("_bucket"),
         *[
@@ -1296,7 +1264,7 @@ def pca_top_component(
 
     Per iteration, ONE corpus scan computes y = sum_i <x_i - mu, v>
     (x_i - mu): the projection w_i is a per-row literal-vector fold
-    (`_dot_lit` shape), and the per-dimension partial sums travel as
+    (`_dot_lit_sql`), and the per-dimension partial sums travel as
     exact scaled integers (FLOOR(t*1e6 + 0.5) per term), so the shuffle
     carries d rows per partition and the result is bit-identical under
     any partitioning. The d-vector y is collected (model-sized, like
@@ -1358,23 +1326,16 @@ def pca_top_component(
         return out
 
     v = _norm(v)
-    centered = F.zip_with(
-        F.col(vec_col),
-        F.array(*[F.lit(m) for m in mu]),
-        lambda x, m: x.cast("double") - m,
+    centered = (
+        f"zip_with({sql_ident(vec_col)}, array({_flits_sql(mu)}), "
+        f"(x, m) -> CAST(x AS DOUBLE) - m)"
     )
     for _ in range(iters):
-        w = F.aggregate(
-            F.zip_with(
-                centered,
-                F.array(*[F.lit(t) for t in v]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
         y_rows = (
-            emb.select(w.alias("_w"), centered.alias("_c"))
+            emb.select(
+                F.expr(_dot_lit_sql(centered, v)).alias("_w"),
+                F.expr(centered).alias("_c"),
+            )
             .select("_w", F.posexplode(F.col("_c")).alias("pos", "x"))
             .groupBy("pos")
             .agg(

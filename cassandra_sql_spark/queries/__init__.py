@@ -161,9 +161,9 @@ NEXT_WINDOW: tuple[str, ...] = (
     "dedup_embedding_lsh",   # band_buckets_sql single-parse twin
     "dedup_semantic",        # band_buckets_sql single-parse twin
     "sim_topk_bruteforce",   # _flit_array query literal
-    "sim_lsh_topk",          # lsh_bucket -> _dot_lit -> _flit_array
-    "sim_lsh_multiprobe",    # lsh_bucket -> _dot_lit -> _flit_array
-    "emb_random_projection",  # random_projection -> _flit_array
+    "sim_lsh_topk",          # lsh_bucket -> band_buckets_sql
+    "sim_lsh_multiprobe",    # lsh_bucket -> band_buckets_sql
+    "emb_random_projection",  # random_projection -> _dot_lit_sql
     "dedup_simhash",         # simhash_signature single-parse votes
 )
 

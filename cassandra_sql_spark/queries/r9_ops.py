@@ -943,7 +943,7 @@ def _lsh_recall_curve(spark, sf):
 
     emb = similarity.nonzero(load(spark, sf, "embeddings"))
     b = emb.withColumn(
-        "_bucket", similarity.lsh_bucket(F.col("embedding"), 4)
+        "_bucket", similarity.lsh_bucket("embedding", 4)
     )
     probes = b.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("probe_id"),

@@ -96,11 +96,9 @@ def ingest_stream_dedup(
         accepted.write.parquet(
             os.path.join(corpus_dir, f"batch={batch_id}")
         )
-        sh = dedup.spread(accepted).select(
-            F.col(id_col).alias("_id"),
-            dedup.hashed_shingles(text_col, k).alias("_s"),
-        ).localCheckpoint(eager=True)
-        sig = dedup.minhash_signatures(sh, "_id", "_s", num_hashes)
+        sh, sig = dedup.minhash_sketch(
+            accepted, id_col, text_col, k, num_hashes
+        )
         dedup._banded_keys(sig, num_hashes, bands).write.parquet(
             os.path.join(index_path, "bands", f"batch={batch_id}")
         )

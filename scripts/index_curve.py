@@ -38,6 +38,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from cassandra_sql_spark.io import load  # noqa: E402
 from cassandra_sql_spark.pipeline import dedup, similarity  # noqa: E402
+from cassandra_sql_spark.profile import node_metrics, plan_nodes  # noqa: E402
 from cassandra_sql_spark.session import get_spark  # noqa: E402
 
 SIZES = {
@@ -50,22 +51,12 @@ SIZES = {
 def _scan_num_files(df) -> int:
     """Sum the executed plan's file-scan numFiles metrics — the number
     of files the probe ACTUALLY opened, after partition pruning."""
-    def walk(node):
-        out = []
-        nm = node.getClass().getSimpleName()
-        if "FileSourceScan" in nm or "BatchScan" in nm:
-            out.append(node)
-        ch = node.children()
-        for i in range(ch.size()):
-            out.extend(walk(ch.apply(i)))
-        if nm == "AdaptiveSparkPlanExec":
-            out.extend(walk(node.executedPlan()))
-        return out
-
-    total = 0
-    for scan in walk(df._jdf.queryExecution().executedPlan()):
-        total += int(scan.metrics().apply("numFiles").value())
-    return total
+    scans = ("FileSourceScanExec", "BatchScanExec")
+    return sum(
+        int(node_metrics(node)["numFiles"])
+        for _, node in plan_nodes(df._jdf.queryExecution().executedPlan())
+        if node.getClass().getSimpleName() in scans
+    )
 
 
 def main() -> int:

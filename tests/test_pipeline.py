@@ -27,8 +27,6 @@ def truth_pairs(docs):
 
 
 def test_word_ngrams_order_repeats_and_short_docs(spark):
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame(
         [
             Row(doc_id=1, text="a b c d"),
@@ -40,7 +38,7 @@ def test_word_ngrams_order_repeats_and_short_docs(spark):
     out = {
         r.doc_id: r.g
         for r in df.select(
-            "doc_id", dedup.word_ngrams(F.col("text"), 3).alias("g")
+            "doc_id", dedup.word_ngrams("text", 3).alias("g")
         ).collect()
     }
     assert out[1] == ["a b c", "b c d"]
@@ -53,8 +51,6 @@ def test_word_ngrams_order_repeats_and_short_docs(spark):
 
 def test_ngram_jaccard_count_identity_matches_array_math(spark):
     """The count-based Jaccard must equal |A∩B| / |A∪B| on array sets."""
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame(
         [
             Row(doc_id=1, text="one two three four five six"),
@@ -69,7 +65,7 @@ def test_ngram_jaccard_count_identity_matches_array_math(spark):
         ).collect()
     }
     sh = df.select(
-        "doc_id", dedup.word_shingles(F.col("text"), 3).alias("s")
+        "doc_id", dedup.word_shingles("text", 3).alias("s")
     ).collect()
     arr = {r.doc_id: set(r.s) for r in sh}
     expected = {}
@@ -147,63 +143,84 @@ def test_survivor_selection_quality_policy(spark):
     assert out == {1: (2, 4), 9: (9, 1)}
 
 
-@pytest.mark.slow
-def test_bigstar_components_match_label_propagation(spark):
-    """Chain, star, island graphs: big-star components must equal
-    min-label propagation's (and the known ground truth)."""
-    pairs = spark.createDataFrame(
-        [
-            # chain 1-2-3-4-5 (diameter stresses the squaring)
-            Row(da=1, db=2), Row(da=2, db=3), Row(da=3, db=4),
-            Row(da=4, db=5),
-            # star centered high: 100-{7,8,9}
-            Row(da=100, db=7), Row(da=100, db=8), Row(da=9, db=100),
-            # island pair
-            Row(da=50, db=51),
-        ]
-    )
-    expect = {
-        1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-        7: 7, 8: 7, 9: 7, 100: 7,
-        50: 50, 51: 50,
-    }
-    big = {
-        r.doc_id: r.cluster_id
-        for r in dedup.dup_clusters_bigstar(pairs).collect()
-    }
-    lab = {
-        r.doc_id: r.cluster_id for r in dedup.dup_clusters(pairs).collect()
-    }
-    assert big == expect
-    assert lab == expect
+def _union_find_components(edges) -> dict:
+    """Reference connected components without Spark: node -> minimum id
+    of its component. Union by smaller root keeps every root the
+    minimum of its set."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
-@pytest.mark.slow
-def test_bigstar_random_graphs_match_label_propagation(spark):
-    """Pseudo-random edge sets (deterministic): both algorithms agree."""
+def _cc_graph(name: str) -> list:
+    """The CC test graphs as (da, db) edge lists."""
     import hashlib
+    import random
+
+    if name.startswith("chain"):
+        ids = list(range(30))
+        if name == "chain_shuffled":
+            random.Random(18).shuffle(ids)
+        return list(zip(ids, ids[1:]))
+    if name == "hand_built":
+        return [
+            # chain 1-2-3-4-5 (diameter stresses the squaring)
+            (1, 2), (2, 3), (3, 4), (4, 5),
+            # star centered high: 100-{7,8,9}
+            (100, 7), (100, 8), (9, 100),
+            # island pair
+            (50, 51),
+        ]
+    seed = int(name[-1])
 
     def h(i, j):
         return int.from_bytes(
             hashlib.md5(f"{i}:{j}".encode()).digest()[:4], "big"
         )
 
-    for seed in range(3):
-        edges = [
-            Row(da=h(seed, 2 * e) % 60, db=h(seed, 2 * e + 1) % 60)
-            for e in range(40)
-        ]
-        edges = [r for r in edges if r.da != r.db]
-        pairs = spark.createDataFrame(edges)
-        big = {
-            r.doc_id: r.cluster_id
-            for r in dedup.dup_clusters_bigstar(pairs).collect()
-        }
-        lab = {
-            r.doc_id: r.cluster_id
-            for r in dedup.dup_clusters(pairs).collect()
-        }
-        assert big == lab
+    edges = [
+        (h(seed, 2 * e) % 60, h(seed, 2 * e + 1) % 60) for e in range(40)
+    ]
+    return [(a, b) for a, b in edges if a != b]
+
+
+@pytest.mark.parametrize(
+    "graph",
+    ["chain_ascending", "chain_shuffled", "hand_built",
+     "random0", "random1", "random2"],
+)
+def test_dup_clusters_match_union_find(spark, graph):
+    """Connected components equal a pure-Python union-find on every
+    graph. The chains are the long-diameter case that a loop stopped
+    at a fixed round count labels wrong."""
+    edges = _cc_graph(graph)
+    pairs = spark.createDataFrame(edges, "da long, db long")
+    got = dedup.dup_clusters(pairs).collect()
+    assert dict(got) == _union_find_components(edges)
+
+
+@pytest.mark.slow
+def test_dup_clusters_long_shuffled_chain_matches_union_find(spark):
+    """A 200k-node chain with shuffled ids: 14 large-star/small-star
+    rounds change its edge set, more than a 12-round cap allows."""
+    import random
+
+    ids = list(range(200_000))
+    random.Random(7).shuffle(ids)
+    edges = list(zip(ids, ids[1:]))
+    pairs = spark.createDataFrame(edges, "da long, db long")
+    got = dedup.dup_clusters(pairs).collect()
+    assert dict(got) == _union_find_components(edges)
 
 
 def test_exact_dedup_collapses_duplicates(spark):
@@ -380,10 +397,10 @@ def test_ivf_assignment_covers_all_rows(spark, sf_dir):
 def test_lsh_bucket_deterministic(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     b1 = emb.select(
-        "vec_id", similarity.lsh_bucket(emb.embedding, 4).alias("b")
+        "vec_id", similarity.lsh_bucket("embedding", 4).alias("b")
     ).collect()
     b2 = emb.select(
-        "vec_id", similarity.lsh_bucket(emb.embedding, 4).alias("b")
+        "vec_id", similarity.lsh_bucket("embedding", 4).alias("b")
     ).collect()
     assert sorted(map(tuple, b1)) == sorted(map(tuple, b2))
     assert {r.b for r in b1} <= set(range(16))
@@ -1839,6 +1856,27 @@ def test_jpeg_restart_fixture_traps_are_armed(spark, sf_dir):
         assert r.wsum_gray == float(want), d
 
 
+def test_jpeg_restart_features_ignore_marker_bytes_in_com(spark):
+    """A COM body holding FF C2 FF D0 (the SOF2 and RST0 byte pairs)
+    spliced into a baseline gray payload with restart markers changes
+    nothing: the frame type comes from the SOF segment and only RSTm
+    markers inside the entropy-coded data count."""
+    base = multimodal.jpeg_encode_gray(
+        multimodal._flat_gray(0, 3), restart_interval=2
+    )
+    spliced = multimodal._splice_com(base, 0, b"\xff\xc2\xff\xd0")
+    assert spliced != base
+    df = spark.createDataFrame(
+        [(0, base), (1, spliced)], "doc_id long, payload binary"
+    )
+    rows = {
+        r.doc_id: tuple(r)[1:]
+        for r in multimodal.decode_features_jpeg_restart(df).collect()
+    }
+    assert rows[1] == rows[0]
+    assert rows[0][:3] == (24, 24, 4)
+
+
 def test_codec_truncated_payloads_raise_value_error():
     """Every proper prefix of a valid payload is a truncated file, and
     every codec family rejects each one with ValueError — not
@@ -1954,26 +1992,71 @@ def test_sql_string_builders_match_column_forms(spark, sf_dir):
 
 
 def test_r13_single_parse_twins_match_column_forms(spark, sf_dir):
-    """Round-13 construction-cost twins: band_buckets' SQL string form
+    """Round-13 construction-cost twins: the SQL-string LSH builders
+    (band_buckets, lsh_bucket, random_projection's constant-vector dot)
     and simhash_signature's single-parse votes/reassembly must be
     value-identical to the Column-API forms they replaced (the plan may
-    differ only in lambda-variable names / struct spelling)."""
+    differ only in lambda-variable names / struct spelling); those
+    Column forms live only here."""
     from pyspark.sql import functions as F
     from cassandra_sql_spark.pipeline import similarity
 
     emb = load(spark, sf_dir, "embeddings")
-    a = emb.select(
-        "vec_id",
-        F.explode(
-            similarity.band_buckets(F.col("embedding"), 16, 2)
-        ).alias("bb"),
+
+    def same(a, b):
+        assert a.exceptAll(b).count() == 0
+        assert b.exceptAll(a).count() == 0
+
+    # Column-API forms of the constant-vector dot and the sign bucket
+    def col_dot_lit(vec, w):
+        return F.aggregate(
+            F.zip_with(
+                vec, similarity._flit_array(w),
+                lambda x, y: x.cast("double") * y,
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    def col_bucket(vec, first_plane, rows):
+        bucket = F.lit(0).cast("long")
+        for r in range(rows):
+            w = similarity._plane_weights(first_plane + r)
+            bucket = bucket + F.when(
+                col_dot_lit(vec, w) > 0, F.lit(2**r)
+            ).otherwise(F.lit(0))
+        return bucket
+
+    vec = F.col("embedding")
+    same(
+        emb.select("vec_id", F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                col_bucket(vec, b * 2, 2).alias("bucket"),
+            ) for b in range(16)
+        ])).alias("bb")),
+        emb.select(
+            "vec_id",
+            F.explode(similarity.band_buckets("embedding", 16, 2)).alias("bb"),
+        ),
     )
-    b = emb.select(
-        "vec_id",
-        F.explode(similarity.band_buckets("embedding", 16, 2)).alias("bb"),
+    # lsh_bucket is band 0 of a one-band band_buckets_sql
+    for planes in (4, 8):
+        same(
+            emb.select("vec_id", col_bucket(vec, 0, planes).alias("b")),
+            emb.select(
+                "vec_id", similarity.lsh_bucket("embedding", planes).alias("b")
+            ),
+        )
+    # random_projection folds through _dot_lit_sql
+    signs = similarity.projection_signs(64, 16)
+    same(
+        emb.select("vec_id", *[
+            F.round(col_dot_lit(vec, signs[j]) / 4.0, 6).alias(f"p{j:02d}")
+            for j in range(16)
+        ]),
+        similarity.random_projection(emb),
     )
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
     # _flit_array constant-folds to the identical double literals
     w = [0.123, -1.0, 0.0, 1e-05, -0.999]

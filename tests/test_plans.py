@@ -17,6 +17,7 @@ import re
 
 import pytest
 
+from cassandra_sql_spark.profile import node_metrics, plan_nodes
 from cassandra_sql_spark.queries import REGISTRY
 
 
@@ -173,20 +174,13 @@ def test_ngram_jaccard_capped_scans_corpus_once(spark, sf_dir):
     qe = df._jdf.queryExecution()
     system = spark._jvm.java.lang.System
 
-    def scans(node):
-        """The InMemoryTableScanExec nodes of the physical plan, through
-        AQE's current plan. The query is not run: at this scale AQE would
-        drop the anti-join (its hot set is empty) and one consumer with
-        it."""
-        name = node.nodeName()
-        if name == "InMemoryTableScan":
-            return [node]
-        if "AdaptiveSparkPlan" in name:
-            return scans(node.executedPlan())
-        ch = node.children()
-        return [s for i in range(ch.size()) for s in scans(ch.apply(i))]
-
-    found = scans(qe.executedPlan())
+    # The InMemoryTableScanExec nodes of the physical plan, through
+    # AQE's current plan. The query is not run: at this scale AQE would
+    # drop the anti-join (its hot set is empty) and one consumer with it.
+    found = [
+        node for _, node in plan_nodes(qe.executedPlan())
+        if node.nodeName() == "InMemoryTableScan"
+    ]
     assert len(found) == 2, [s.toString() for s in found]
     # both consumers read one cached index: the same CachedRDDBuilder
     # object, not merely equal-looking subplans
@@ -263,26 +257,12 @@ def test_lsh_index_probe_partition_prunes(spark, sf_dir, tmp_path):
     qe = probe._jdf.queryExecution()
     qe.executedPlan().execute().count()
 
-    def scan_files_read(node):
-        if "Scan" in node.nodeName():
-            mts = node.metrics().toList()
-            for i in range(mts.size()):
-                kv = mts.apply(i)
-                if kv._1() == "numFiles":
-                    return int(kv._2().value())
-        for attr in ("executedPlan", "plan"):
-            if ("AdaptiveSparkPlan" in node.nodeName() and attr == "executedPlan") or (
-                "QueryStage" in node.nodeName() and attr == "plan"
-            ):
-                return scan_files_read(getattr(node, attr)())
-        ch = node.children()
-        for i in range(ch.size()):
-            got = scan_files_read(ch.apply(i))
-            if got is not None:
-                return got
-        return None
-
-    n_read = scan_files_read(qe.executedPlan())
+    scans = [
+        node_metrics(node)
+        for _, node in plan_nodes(qe.executedPlan())
+        if "Scan" in node.nodeName()
+    ]
+    n_read = next((int(m["numFiles"]) for m in scans if "numFiles" in m), None)
     assert n_read is not None and 0 < n_read < n_all
     # and the result equals the inline (unmaterialized) bucket probe,
     # minus the query row itself which topk_lsh excludes

@@ -211,32 +211,6 @@ def test_unimax_sql_equals_greedy_hypothesis(counts, budget_frac, max_epochs):
     )
 
 
-def test_perplexity_buckets_approx_agrees_with_exact(spark, docs):
-    """The at-scale broadcast-cutpoint bucketing must agree with the
-    exact NTILE form except within the sketch's rank-error band of the
-    two cutpoints, and must itself be shuffle-light (no global window)."""
-    lm = selection.unigram_lm_table(docs, "text")
-    scored = selection.unigram_nll(docs, "doc_id", "text", lm)
-    exact = {
-        r["doc_id"]: r["bucket"]
-        for r in selection.perplexity_buckets(scored, "doc_id").collect()
-    }
-    approx = {
-        r["doc_id"]: r["bucket"]
-        for r in selection.perplexity_buckets_approx(scored).collect()
-    }
-    assert set(exact) == set(approx)
-    n = len(exact)
-    disagree = sum(1 for k in exact if exact[k] != approx[k])
-    # rank error 1/accuracy=1e-4 -> only boundary ties can move; allow 2%
-    assert disagree <= max(2, 0.02 * n), disagree
-    plan = selection.perplexity_buckets_approx(scored)._sc._jvm \
-        .PythonSQLUtils.explainString(
-            selection.perplexity_buckets_approx(scored)
-            ._jdf.queryExecution(), "formatted")
-    assert "Window" not in plan, "approx path must not use a global window"
-
-
 def test_selection_ops_handle_degenerate_docs(spark):
     """Empty text, single tokens, and whitespace must not crash or emit
     NaN/None scores — the edges a real corpus always contains."""

@@ -174,7 +174,7 @@ def test_lsh_buckets_match_exact_rational_signs(spark, sf_dir):
     rows = emb.select(
         "vec_id",
         "embedding",
-        similarity.lsh_bucket(F.col("embedding"), planes).alias("_b"),
+        similarity.lsh_bucket("embedding", planes).alias("_b"),
     ).collect()
     weights = [
         [Fraction(round(w * 1000), 1000) for w in similarity._plane_weights(p)]

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from cassandra_sql_spark import sources
 from cassandra_sql_spark.io import load
+from cassandra_sql_spark.profile import node_metrics, plan_nodes
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])
@@ -123,25 +124,14 @@ def test_sorted_layout_skips_row_groups(spark, sf_dir, tmp_path):
     qe = probe._jdf.queryExecution()
     qe.executedPlan().execute().count()
 
-    def scan_rows(node):
-        if "Scan" in node.nodeName():
-            mts = node.metrics().toList()
-            for i in range(mts.size()):
-                kv = mts.apply(i)
-                if kv._1() == "numOutputRows":
-                    return int(kv._2().value())
-        if "AdaptiveSparkPlan" in node.nodeName():
-            return scan_rows(node.executedPlan())
-        if "QueryStage" in node.nodeName():
-            return scan_rows(node.plan())
-        ch = node.children()
-        for i in range(ch.size()):
-            got = scan_rows(ch.apply(i))
-            if got is not None:
-                return got
-        return None
-
-    n_scan = scan_rows(qe.executedPlan())
+    scans = [
+        node_metrics(node)
+        for _, node in plan_nodes(qe.executedPlan())
+        if "Scan" in node.nodeName()
+    ]
+    n_scan = next(
+        (int(m["numOutputRows"]) for m in scans if "numOutputRows" in m), None
+    )
     # pushdown + row-group stats: the scan surfaces far fewer rows than
     # the table holds (without skipping it would decode all of them; the
     # filter also row-level-prunes, so assert a strong reduction)
