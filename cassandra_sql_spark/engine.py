@@ -25,6 +25,13 @@ through ``_commit``: the batch is written once as the staged version
 ENUM and UNIQUE/PK violations, one anti-join per FK checks existence, and
 only then is the pointer flipped. Nothing is cached; a violation deletes
 the staged directory.
+
+Results the engine builds itself (the ``status, rows`` command tag, SHOW,
+EXPLAIN ANALYZE lines, VERIFY CONSTRAINTS, the pg_catalog views, empty
+tables) are VALUES relations (``literals.values_frame``): the JVM plans
+them as a LocalRelation, so collecting one runs no Spark job. DELETE,
+UPDATE and CTAS count their rows with an ``Observation`` on the write they
+run anyway.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ from pyspark.sql.window import Window
 
 from cassandra_sql_spark.catalog import Catalog, ColumnMeta, TableMeta, ViewMeta
 from cassandra_sql_spark.functions import register_pg_functions
+from cassandra_sql_spark.literals import sql_ident, sql_literal, values_frame
 from cassandra_sql_spark.profile import node_metrics, plan_nodes
 from cassandra_sql_spark.sqlfront.preprocess import (
     _mask_literals,
@@ -138,16 +146,19 @@ class Engine:
 
     # ------------------------------------------------------------------ util
 
+    def _rows(self, rows, ddl: str) -> DataFrame:
+        """Driver-held rows as a VALUES relation: collected without a
+        Spark job (see ``literals``)."""
+        return values_frame(self.spark, rows, ddl)
+
     def _status(self, msg: str, n: int = -1) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(msg, n)], "status string, rows bigint"
-        )
+        return self._rows([(msg, n)], "status string, rows bigint")
 
     def _register(self, meta: TableMeta) -> None:
         if os.path.exists(meta.path):
             df = self.spark.read.schema(meta.spark_ddl()).parquet(meta.path)
         else:
-            df = self.spark.createDataFrame([], meta.spark_ddl())
+            df = self._rows([], meta.spark_ddl())
         visible = [c.name for c in meta.columns if not c.hidden]
         if len(visible) != len(meta.columns):
             # hidden rowid (reference kv/SchemaManager.java:736): SELECT *
@@ -223,7 +234,6 @@ class Engine:
         registration order so `\\d`-style joins across
         pg_class/pg_attribute/pg_type/pg_index work.
         """
-        spark = self.spark
         self._pg_stale = False
         tables = sorted(self.catalog.tables.values(), key=lambda t: t.name)
         views = sorted(self.catalog.views.values(), key=lambda v: v.name)
@@ -268,12 +278,12 @@ class Engine:
                     isp, t.name, cols,
                 ))
                 oid += 1
-        spark.createDataFrame(
+        self._rows(
             rel,
             "oid bigint, relname string, relkind string, "
             "relnamespace bigint",
         ).createOrReplaceTempView("pg_class")
-        spark.createDataFrame(
+        self._rows(
             [("public", t.name) for t in tables],
             "schemaname string, tablename string",
         ).createOrReplaceTempView("pg_tables")
@@ -284,22 +294,22 @@ class Engine:
             for t in tables
             for i, c in enumerate(cc for cc in t.columns if not cc.hidden)
         ]
-        spark.createDataFrame(
+        self._rows(
             attrs,
             "attrelid bigint, relname string, attname string, "
             "atttype string, atttypid bigint, attnum int, "
             "attnotnull boolean",
         ).createOrReplaceTempView("pg_attribute")
-        spark.createDataFrame(
+        self._rows(
             [(2200, "public"), (11, "pg_catalog")],
             "oid bigint, nspname string",
         ).createOrReplaceTempView("pg_namespace")
-        spark.createDataFrame(
+        self._rows(
             [(o, n, 11, c, ln) for o, n, c, ln in self._PG_TYPES],
             "oid bigint, typname string, typnamespace bigint, "
             "typcategory string, typlen int",
         ).createOrReplaceTempView("pg_type")
-        spark.createDataFrame(
+        self._rows(
             [(i[0], i[1], len(i[3].split()), True, i[4], i[3])
              for i in idx],
             "indexrelid bigint, indrelid bigint, indnatts int, "
@@ -309,7 +319,7 @@ class Engine:
         # which creates the table and inserts nothing) but user
         # CREATE FUNCTION rows appear with their declared return type,
         # so psql's \df lists them.
-        spark.createDataFrame(
+        self._rows(
             [
                 (16384 + i, name, 2200,
                  self._type_oid(meta["returns_pg"]))
@@ -320,7 +330,7 @@ class Engine:
             "oid bigint, proname string, pronamespace bigint, "
             "prorettype bigint",
         ).createOrReplaceTempView("pg_proc")
-        spark.createDataFrame(
+        self._rows(
             [(5, "cassandra_sql", 10, 6)],
             "oid bigint, datname string, datdba bigint, encoding int",
         ).createOrReplaceTempView("pg_database")
@@ -388,7 +398,7 @@ class Engine:
                     _vec(fcols), _vec(refcols, ref_attnum), None,
                 ))
                 oid += 1
-        spark.createDataFrame(
+        self._rows(
             cons,
             "oid bigint, conname string, contype string, conrelid bigint, "
             "conindid bigint, confrelid bigint, conkey string, "
@@ -396,7 +406,7 @@ class Engine:
         ).createOrReplaceTempView("pg_constraint")
         # pg_indexes: the simplified psql-compat view
         # (kv/PgCatalogTable.java:341-356)
-        spark.createDataFrame(
+        self._rows(
             [("public", i[5], i[2],
               f"CREATE {'UNIQUE ' if i[4] else ''}INDEX {i[2]} "
               f"ON {i[5]} ({', '.join(i[6])})")
@@ -406,16 +416,16 @@ class Engine:
         ).createOrReplaceTempView("pg_indexes")
         # pg_am / pg_roles / pg_tablespace: the reference's seeded system
         # rows (kv/PgCatalogManager.java:335 addAccessMethod + class doc).
-        spark.createDataFrame(
+        self._rows(
             [(2, "heap", "t"), (403, "btree", "i")],
             "oid bigint, amname string, amtype string",
         ).createOrReplaceTempView("pg_am")
-        spark.createDataFrame(
+        self._rows(
             [(10, "postgres", True, True)],
             "oid bigint, rolname string, rolsuper boolean, "
             "rolcanlogin boolean",
         ).createOrReplaceTempView("pg_roles")
-        spark.createDataFrame(
+        self._rows(
             [(1663, "pg_default")], "oid bigint, spcname string",
         ).createOrReplaceTempView("pg_tablespace")
         # pg_attrdef: identity/SERIAL columns surface their implicit
@@ -432,11 +442,11 @@ class Engine:
                 if c.identity
             )
         ]
-        spark.createDataFrame(
+        self._rows(
             attrdef,
             "oid bigint, adrelid bigint, adnum int, adbin string",
         ).createOrReplaceTempView("pg_attrdef")
-        spark.createDataFrame(
+        self._rows(
             [], "objoid bigint, classoid bigint, objsubid int, "
                 "description string",
         ).createOrReplaceTempView("pg_description")
@@ -447,7 +457,7 @@ class Engine:
             if t.stats
             for col, cs in sorted(t.stats.get("columns", {}).items())
         ]
-        spark.createDataFrame(
+        self._rows(
             stat_rows,
             "tablename string, attname string, n_rows bigint, "
             "n_distinct bigint, null_frac double, min_value string, "
@@ -462,7 +472,7 @@ class Engine:
     def _read(self, meta: TableMeta) -> DataFrame:
         if os.path.exists(meta.path):
             return self.spark.read.schema(meta.spark_ddl()).parquet(meta.path)
-        return self.spark.createDataFrame([], meta.spark_ddl())
+        return self._rows([], meta.spark_ddl())
 
     @staticmethod
     def _next_version(meta: TableMeta) -> str:
@@ -499,8 +509,9 @@ class Engine:
 
     def _rewrite(self, meta: TableMeta, df: DataFrame) -> None:
         """Write a new table version and flip the pointer, unchecked: for
-        statements that cannot break a constraint (TRUNCATE, DELETE,
-        OPTIMIZE, ALTER). Validated writes go through ``_commit``."""
+        statements that cannot break a constraint (DELETE, OPTIMIZE,
+        ALTER; TRUNCATE publishes an empty directory). Validated writes
+        go through ``_commit``."""
         self._publish(meta, self._write_version(meta, df))
 
     def _commit(
@@ -576,8 +587,8 @@ class Engine:
 
         An exception keeps its type and message and gets a note naming
         the failing statement's 1-based position and its first 200
-        characters."""
-        result = self._status("ok", 0)
+        characters. A script with no statement answers ``("ok", 0)``."""
+        result = None
         for i, stmt in enumerate(split_statements(text), 1):
             if self._pg_stale and self._PG_RELATION.search(stmt):
                 self._register_pg_catalog()
@@ -588,7 +599,7 @@ class Engine:
             except Exception as e:
                 e.add_note(f"in statement {i}: {stmt.strip()[:200]}")
                 raise
-        return result
+        return self._status("ok", 0) if result is None else result
 
     def _one(self, stmt: str) -> DataFrame:
         s = stmt.strip()
@@ -714,7 +725,7 @@ class Engine:
         if val is None:
             raise EngineError(f"unrecognized configuration parameter: {name}")
         col = name if re.fullmatch(r"[a-z_][a-z0-9_]*", name) else "setting"
-        return self.spark.createDataFrame([(val,)], f"{col} string")
+        return self._rows([(val,)], f"{col} string")
 
     @staticmethod
     def _fold_guc(name: str) -> str:
@@ -1123,7 +1134,12 @@ class Engine:
             rf"TRUNCATE\s+(?:TABLE\s+)?({_IDENT})", s, re.IGNORECASE
         )
         meta = self._table(m.group(1).lower())
-        self._rewrite(meta, self.spark.createDataFrame([], meta.spark_ddl()))
+        # the next version is an empty directory, like CREATE TABLE's v1:
+        # no Spark job
+        path = self._next_version(meta)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        self._publish(meta, path)
         return self._status(f"truncate {meta.name}")
 
     def _alter_table(self, s: str) -> DataFrame:
@@ -1725,88 +1741,145 @@ class Engine:
         )
 
     @staticmethod
-    def _all_set(cols: list[str]) -> F.Column:
-        """True when every column is non-null: NULL keys are distinct
-        under UNIQUE and satisfy an FK (pg MATCH SIMPLE)."""
-        out = F.lit(True)
-        for c in cols:
-            out = out & F.col(c).isNotNull()
-        return out
+    def _all_set(cols: list[str]) -> str:
+        """SQL: true when every column is non-null. NULL keys are
+        distinct under UNIQUE and satisfy an FK (pg MATCH SIMPLE)."""
+        return " AND ".join(f"{sql_ident(c)} IS NOT NULL" for c in cols)
 
     def _row_checks(self, meta: TableMeta) -> list[tuple]:
-        """``(kind, label, error, bad-row predicate)`` for every CHECK,
-        then every NOT NULL and enum column in column order — the order
-        DML raises them in. Shared by the DML commit and VERIFY
+        """``(kind, label, error, bad-row SQL predicate)`` for every
+        CHECK, then every NOT NULL and enum column in column order — the
+        order DML raises them in. Shared by the DML commit and VERIFY
         CONSTRAINTS."""
         out = [
             # pg semantics: CHECK passes on TRUE or NULL, fails on FALSE
             ("check", e, f"CHECK violated: {meta.name}: {e}",
-             ~F.coalesce(F.expr(preprocess(e)), F.lit(True)))
+             f"NOT coalesce(({preprocess(e)}), TRUE)")
             for e in meta.checks
         ]
         for c in meta.columns:
-            col = F.col(c.name)
+            col = sql_ident(c.name)
             if not c.nullable or c.name in meta.primary_key:
                 out.append(("not_null", c.name,
                             f"NOT NULL violated: {meta.name}.{c.name}",
-                            col.isNull()))
+                            f"{col} IS NULL"))
             if c.enum_type:
-                domain = self.catalog.enums[c.enum_type]
+                domain = ", ".join(
+                    sql_literal(v) for v in self.catalog.enums[c.enum_type]
+                )
                 out.append(("enum", c.name,
                             f"invalid {c.enum_type} value for {c.name}",
-                            ~col.isin(*domain) & col.isNotNull()))
+                            f"{col} IS NOT NULL AND {col} NOT IN ({domain})"))
         return out
 
     def _violations(
         self, meta: TableMeta, rows: DataFrame, existing: DataFrame | None
     ) -> tuple[int, str | None]:
         """Row count of ``rows`` and its first violated constraint, from
-        one aggregate: a count per row check, and per UNIQUE set the
-        non-null key rows against the distinct keys (NULL keys are
-        distinct, as in pg). With ``existing``, its key columns join
-        ``rows`` in a union tagged ``__new``, and a UNIQUE set clashes
-        with the existing rows when the distinct keys of both sides
-        exceed the distinct keys of the union."""
+        one query built as SQL text (one parse, not a py4j call per
+        column expression). With ``existing``, its key columns join
+        ``rows`` in a union tagged ``__new``.
+
+        Without UNIQUE sets it is one aggregate: the rows and a count per
+        row check. Otherwise the first aggregate groups by GROUPING SETS:
+        the empty set gives those totals, and one set per distinct UNIQUE
+        column set counts each key's new and existing rows. A second
+        aggregate folds each set's keys that have no NULL column (NULL
+        keys are distinct, as in pg): a key with two new rows is a
+        duplicate within the batch, a key with new and existing rows a
+        clash. The sets expand in the order they are listed, so the
+        generated code is the same from statement to statement;
+        ``count_distinct`` aggregates would expand in an order taken from
+        expression-id hashes, and each statement compiled new classes."""
         checks = self._row_checks(meta)
-        new = F.col("__new")
-        src = rows.withColumn("__new", F.lit(True))
+        keys = {k.lower(): k for u in meta.unique for k in u}
+        cols = list(keys.values())
+        # both sides list the columns by name: a partitioned read puts its
+        # partition columns last
+        rows.createOrReplaceTempView("__commit_new")
+        names = ", ".join(sql_ident(c.name) for c in meta.columns)
+        src = f"SELECT {names}, TRUE AS __new FROM __commit_new"
         if existing is not None:
-            keys = {k.lower(): k for u in meta.unique for k in u}
-            src = src.unionByName(
-                existing.select(*keys.values(), F.lit(False).alias("__new")),
-                allowMissingColumns=True,
-            )
-        aggs = [F.count_if(new).alias("n")]
-        for i, (kind, label, _, bad) in enumerate(checks):
-            aggs.append(F.count_if(new & bad).alias(f"c{i}"))
-            if kind == "enum":  # the first bad value goes in the message
-                aggs.append(F.min(F.when(new & bad, F.col(label))).alias(f"v{i}"))
-        for i, ucols in enumerate(meta.unique):
-            head, tail = F.col(ucols[0]), ucols[1:]
-            aggs += [
-                F.count_if(new & self._all_set(ucols)).alias(f"u{i}"),
-                F.count_distinct(F.when(new, head), *tail).alias(f"d{i}"),
+            existing.createOrReplaceTempView("__commit_old")
+            kept = [
+                sql_ident(c.name) if c.name.lower() in keys
+                else f"CAST(NULL AS {c.spark_type}) AS {sql_ident(c.name)}"
+                for c in meta.columns
             ]
-            if existing is not None:
-                aggs += [
-                    F.count_distinct(F.when(~new, head), *tail).alias(f"o{i}"),
-                    F.count_distinct(head, *tail).alias(f"a{i}"),
-                ]
-        r = src.agg(*aggs).first()
-        for i, (kind, _, error, _) in enumerate(checks):
-            if r[f"c{i}"]:
-                return r["n"], (
-                    f"{error}: {r[f'v{i}']!r}" if kind == "enum" else error
+            src += (
+                f" UNION ALL SELECT {', '.join(kept)}, FALSE "
+                "FROM __commit_old"
+            )
+        # every check is evaluated once per row, before the expansion
+        flags = {}
+        for i, (kind, label, _, bad) in enumerate(checks):
+            flags[f"__c{i}"] = f"__new AND {bad}"
+            if kind == "enum":  # the first bad value goes in the message
+                flags[f"__v{i}"] = (
+                    f"CASE WHEN __new AND {bad} THEN {sql_ident(label)} END"
                 )
-        for i, ucols in enumerate(meta.unique):
+        flagged = ", ".join(["*"] + [f"{e} AS {n}" for n, e in flags.items()])
+        aggs = ["count_if(__new) AS __n", "count_if(NOT __new) AS __o"] + [
+            f"{'count_if' if n.startswith('__c') else 'min'}({n}) AS {n}"
+            for n in flags
+        ]
+        body = f"FROM (SELECT {flagged} FROM ({src}))"
+        # a set's grouping id has a bit set per key column it leaves out
+        gids = [
+            sum(
+                1 << (len(cols) - 1 - j)
+                for j, c in enumerate(cols)
+                if c.lower() not in {u.lower() for u in ucols}
+            )
+            for ucols in meta.unique
+        ]
+        sets: dict[int, list[str]] = {}
+        for gid, ucols in zip(gids, meta.unique):
+            sets.setdefault(gid, [keys[c.lower()] for c in ucols])
+        total = (1 << len(cols)) - 1
+        if not sets:
+            by_gid = {
+                total: self.spark.sql(f"SELECT {', '.join(aggs)} {body}")
+                .first()
+            }
+        else:
+            grouping = ", ".join(
+                "(" + ", ".join(sql_ident(c) for c in u) + ")"
+                for u in sets.values()
+            )
+            keyed = " AND ".join(
+                f"(__g != {gid} OR {self._all_set(u)})"
+                for gid, u in sets.items()
+            )
+            folded = ", ".join(f"max({n}) AS {n}" for n in ("__n", *flags))
+            key_list = ", ".join(map(sql_ident, cols))
+            by_gid = {
+                r["__g"]: r
+                for r in self.spark.sql(
+                    f"SELECT __g, {folded}, "
+                    "count_if(__n > 0 AND __o > 0) AS __clash "
+                    f"FROM (SELECT grouping_id() AS __g, {key_list}, "
+                    f"{', '.join(aggs)} {body} GROUP BY {key_list} "
+                    f"GROUPING SETS ((), {grouping})) "
+                    f"WHERE {keyed} GROUP BY __g"
+                ).collect()
+            }
+        r = by_gid.get(total)
+        if r is None:  # an empty batch has no grand-total group
+            return 0, None
+        for i, (kind, _, error, _) in enumerate(checks):
+            if r[f"__c{i}"]:
+                return r["__n"], (
+                    f"{error}: {r[f'__v{i}']!r}" if kind == "enum" else error
+                )
+        for gid, ucols in zip(gids, meta.unique):
+            key = by_gid.get(gid)
             target = f"{meta.name}({','.join(ucols)})"
-            if r[f"u{i}"] != r[f"d{i}"]:
-                return r["n"], f"UNIQUE violated within batch: {target}"
-            if existing is not None and (
-                r[f"d{i}"] + r[f"o{i}"] != r[f"a{i}"]
-            ):
-                return r["n"], f"UNIQUE violated: {target}"
-        return r["n"], None
+            if key is not None and key["__n"] > 1:
+                return r["__n"], f"UNIQUE violated within batch: {target}"
+            if key is not None and key["__clash"]:
+                return r["__n"], f"UNIQUE violated: {target}"
+        return r["__n"], None
 
     def _fk_violation(self, meta: TableMeta, rows: DataFrame) -> str | None:
         """The first FK of ``rows`` with an orphan, one anti-join each."""
@@ -1918,13 +1991,20 @@ class Engine:
         # the predicate (pg `WHERE EXISTS (SELECT 1 FROM o WHERE o.id =
         # t.id)`) resolve the outer reference
         df = self._read(meta).alias(meta.name)
-        out = df.withColumns(
-            {
-                c: F.when(cond, F.expr(e)).otherwise(F.col(c)).cast(
-                    meta.column(c).spark_type
-                )
-                for c, e in sets.items()
-            }
+        # the matched rows are counted on the write itself
+        hits = Observation()
+        out = (
+            df.withColumn("__hit", F.coalesce(cond, F.lit(False)))
+            .observe(hits, F.count_if("__hit").alias("n"))
+            .withColumns(
+                {
+                    c: F.when(F.col("__hit"), F.expr(e))
+                    .otherwise(F.col(c))
+                    .cast(meta.column(c).spark_type)
+                    for c, e in sets.items()
+                }
+            )
+            .drop("__hit")
         )
         gen = {
             c.name: F.expr(preprocess(c.generated)).cast(c.spark_type)
@@ -1947,8 +2027,7 @@ class Engine:
             if gen:
                 ret = ret.withColumns(gen)
             return self._returning(ret, meta, returning)
-        # the old version's files stay on disk: count its matched rows
-        return self._status(f"update {meta.name}", df.filter(cond).count())
+        return self._status(f"update {meta.name}", hits.get["n"])
 
     def _update_from(
         self,
@@ -2086,20 +2165,25 @@ class Engine:
         meta = self._table(m.group(1).lower())
         # aliased so correlated subqueries can reference the target table
         df = self._read(meta).alias(meta.name)
+        hit = F.lit(True)
         if m.group(2):
             cond = F.expr(preprocess(m.group(2).strip()))
-            n = df.filter(cond).count()
-            deleted = df.filter(F.coalesce(cond, F.lit(False)))
-            self._rewrite(meta, df.filter(~F.coalesce(cond, F.lit(False))))
-        else:
-            n = df.count()
-            deleted = df
-            self._rewrite(
-                meta, self.spark.createDataFrame([], meta.spark_ddl())
-            )
+            hit = F.coalesce(cond, F.lit(False))
+        # the deleted rows are counted on the write of the kept ones; the
+        # filter tests a column, so it stays above the observer even when
+        # the predicate folds to a constant (a constant FALSE filter
+        # would prune the observer and the count would never arrive)
+        hits = Observation()
+        kept = (
+            df.withColumn("__hit", hit)
+            .observe(hits, F.count_if("__hit").alias("n"))
+            .filter(~F.col("__hit"))
+            .drop("__hit")
+        )
+        self._rewrite(meta, kept)
         if returning is not None:
-            return self._returning(deleted, meta, returning)
-        return self._status(f"delete {meta.name}", n)
+            return self._returning(df.filter(hit), meta, returning)
+        return self._status(f"delete {meta.name}", hits.get["n"])
 
     def _delete_using(
         self,
@@ -2430,7 +2514,7 @@ class Engine:
             # NOT NULL, enum and CHECK counts: the DML row checks, one agg
             checks = self._row_checks(meta)
             counts = df.agg(
-                *[F.count_if(bad) for *_, bad in checks]
+                *[F.expr(f"count_if({bad})") for *_, bad in checks]
             ).first() if checks else []
             found = [
                 (name, kind, label, n)
@@ -2474,7 +2558,7 @@ class Engine:
                         )
                     )
             report += [r for r in found if r[1] == "check"]
-        return self.spark.createDataFrame(
+        return self._rows(
             report,
             "table_name string, constraint_type string, "
             "constraint string, n_violations long",
@@ -2566,7 +2650,11 @@ class Engine:
                 )
             alias = f"{name}__asof_v{ver}"
             reader = self.spark.read
-            if not os.listdir(vpath):  # v1 of a table created empty
+            if not any(  # v1 of a table created empty, a TRUNCATE, or a
+                f.endswith(".parquet")  # write that left no row
+                for _, _, files in os.walk(vpath)
+                for f in files
+            ):
                 reader = reader.schema(meta.spark_ddl())
             reader.parquet(vpath).createOrReplaceTempView(alias)
             return f"FROM {alias}"
@@ -2679,6 +2767,6 @@ class Engine:
                 "  " * depth + node.nodeName()
                 + (f" [{', '.join(parts)}]" if parts else "")
             )
-        return self.spark.createDataFrame(
+        return self._rows(
             [(ln,) for ln in lines], "plan string"
         )

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cassandra_sql_spark.literals import values_frame
+
 __all__ = ["sharded_rank", "sharded_cumsum", "sharded_multi"]
 
 _SHARD = "__go_shard"
@@ -104,7 +106,7 @@ def sharded_multi(
     off_schema = f"{_SHARD} int, " + ", ".join(
         f"__go_off{i} bigint" for i in range(len(specs))
     )
-    off_df = spark.createDataFrame(offsets, off_schema)
+    off_df = values_frame(spark, offsets, off_schema)
     out = local.join(F.broadcast(off_df), _SHARD)
     for i, (lc, (_, _, out_col)) in enumerate(zip(local_cols, specs)):
         out = out.withColumn(

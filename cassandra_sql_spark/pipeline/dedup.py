@@ -40,6 +40,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cassandra_sql_spark.literals import sql_ident
+
 MOD = 1_000_000_007
 
 # Per-invocation nonce for the cascade's persisted index (see
@@ -70,13 +72,6 @@ def spread(df: DataFrame) -> DataFrame:
 
 def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
-
-
-def sql_ident(name: str) -> str:
-    """Column name -> backtick-quoted SQL reference for the F.expr
-    builders. Embedded backticks are escaped by doubling, so a hostile
-    or merely unlucky column name can't break out of the quoting."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def ngrams_sql(col_sql: str, k: int) -> str:

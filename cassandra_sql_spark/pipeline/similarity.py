@@ -36,7 +36,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cassandra_sql_spark.pipeline.dedup import sql_ident
+from cassandra_sql_spark.literals import sql_ident, sql_literal, values_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -122,7 +122,7 @@ def _flits_sql(w: list[float]) -> str:
     double Literal (Python repr round-trips exactly; Java parses the same
     nearest double), so a literal array costs one parse, not one py4j
     round trip per element."""
-    return ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in w)
+    return ",".join(sql_literal(float(x)) for x in w)
 
 
 def _dot_lit_sql(vec_sql: str, w: list[float]) -> str:
@@ -816,8 +816,8 @@ def _probe_rerank(
     if qnorm == 0.0 or cents == [] or books == []:
         return empty
     if cents is not None or books is not None:
-        one = src.sparkSession.createDataFrame(
-            [(0, qv)], "_id bigint, _v array<double>"
+        one = values_frame(
+            src.sparkSession, [(0, qv)], "_id bigint, _v array<double>"
         )
         qq = quantized_vectors(one, "_id", "_v", unit=True).first()["_xq"]
     if cents is not None:
@@ -1149,7 +1149,10 @@ def topk_lsh_pruned(
     driver-side (constant fold of the same plane expression), filter the
     partition column with a LITERAL so Catalyst prunes to one directory,
     then exact-score only that bucket."""
-    qdf = spark.createDataFrame([(query_vec,)], f"{vec_col} array<double>")
+    qdf = values_frame(
+        spark, [([float(x) for x in query_vec],)],
+        f"{sql_ident(vec_col)} array<double>",
+    )
     qbucket = qdf.select(lsh_bucket(vec_col, planes).alias("b")).first()["b"]
     bucketed = nonzero(
         spark.read.parquet(path).filter(F.col("_bucket") == qbucket),
@@ -1352,6 +1355,6 @@ def pca_top_component(
         v = _norm(y)
 
     spark = emb.sparkSession
-    return spark.createDataFrame(
-        [(i, v[i]) for i in range(d)], "pos INT, component DOUBLE"
+    return values_frame(
+        spark, [(i, v[i]) for i in range(d)], "pos INT, component DOUBLE"
     )

@@ -21,6 +21,19 @@ Design notes (100 TB target, tested on local[N]):
   (measured: +5.5 MB for the registry's 119 entries above the default), so
   a full cache stays near 50 MB. The conf is static: it only takes effect
   in a session this factory starts (see ``tune``).
+- Status-store history capped at 100 executions, jobs and stages. Spark
+  keeps 1000 of each in its in-memory status store even with the UI off:
+  plan strings (``SQLExecutionUIData``), ``SQLPlanMetric``, ``StageData``,
+  ``TaskDataWrapper`` and RDD-operation graphs. A workload of many short
+  statements fills it: over 12 passes of the 15-statement engine script
+  (4 cores, sf0.001) the live heap after a full GC grew 1.4 MB per pass
+  from the fourth pass on and reached 98.8 MB; with the cap it grew
+  0.7 MB per pass and reached 88.8 MB (the remaining growth is not
+  attributed here). The working set the store must hold is one statement
+  or registry entry, read right after it ran (job-group counts, the
+  perfbench tracer): the largest measured take 17 jobs (the engine
+  script's upsert) and 24 stages (``dedup_ngram_jaccard`` at sf0.01).
+  These confs are static too.
 """
 
 from __future__ import annotations
@@ -28,6 +41,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# executions, jobs and stages the status store keeps (see the module notes)
+_RETAINED = 100
 
 
 def default_parallelism() -> int:
@@ -42,9 +59,12 @@ def tune(spark: SparkSession) -> SparkSession:
 
     Static settings cannot be changed on a running session, so an external
     session keeps its owner's values for the codegen cache size
-    (``spark.sql.codegen.cache.maxEntries``), driver memory and the UI. On
-    such a session each pass recompiles the generated classes that do not
-    fit Spark's default 100-entry cache, unless its owner sets the conf.
+    (``spark.sql.codegen.cache.maxEntries``), the status-store history
+    (``spark.sql.ui.retainedExecutions``, ``spark.ui.retainedJobs``,
+    ``spark.ui.retainedStages``), driver memory and the UI. On such a
+    session each pass recompiles the generated classes that do not fit
+    Spark's default 100-entry cache, and the status store holds up to
+    1000 executions, jobs and stages, unless its owner sets the confs.
     """
     conf = spark.conf
     conf.set("spark.sql.session.timeZone", "UTC")
@@ -85,6 +105,13 @@ def get_spark(
         # cycle of generated classes (registry 219, engine script 186), so
         # it hit nothing; 1000 entries at 30-50 KB stay near 50 MB of heap
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # static: the status store keeps 1000 executions, jobs and stages
+        # by default, UI or not, and the live heap grows with them; 100
+        # hold the largest statement's or registry entry's own (17 jobs,
+        # 24 stages)
+        .config("spark.sql.ui.retainedExecutions", str(_RETAINED))
+        .config("spark.ui.retainedJobs", str(_RETAINED))
+        .config("spark.ui.retainedStages", str(_RETAINED))
         .config("spark.sql.warehouse.dir", os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/root/repo/.warehouse"))
     )

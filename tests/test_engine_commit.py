@@ -273,3 +273,167 @@ def test_ctas_counts_rows_on_its_write(eng, spark):
     assert rows(out) == [("create table empty as select", 0)]
     assert eng.catalog.nextval("empty_rowid_seq") == 1
     assert eng.catalog.nextval("grp_rowid_seq") == 8
+
+
+# -- statement results: VALUES relations, no Spark job ---------------------
+
+RESULT_STATEMENTS = {
+    "create_table": "CREATE TABLE r2 (id INT PRIMARY KEY, v TEXT)",
+    "insert": "INSERT INTO r VALUES (3, 'c')",
+    "upsert": "INSERT INTO r VALUES (1, 'z') ON CONFLICT (id) DO UPDATE "
+              "SET v = excluded.v",
+    "delete": "DELETE FROM r WHERE id = 2",
+    "truncate": "TRUNCATE r",
+    "vacuum": "VACUUM r",
+    "set": "SET my.result.key = 'x'",
+    "show": "SHOW timezone",
+    "explain_analyze": "EXPLAIN ANALYZE SELECT v, count(*) FROM r GROUP BY v",
+}
+
+
+@pytest.mark.parametrize(
+    "stmt", list(RESULT_STATEMENTS.values()), ids=list(RESULT_STATEMENTS)
+)
+def test_statement_result_collects_without_a_job(eng, spark, stmt):
+    """A statement's answer is built on the driver: collecting it runs no
+    Spark job beyond the statement's own work (a Python-RDD frame ran one
+    job of 4 tasks per collect)."""
+    eng.sql("CREATE TABLE r (id INT PRIMARY KEY, v TEXT)")
+    eng.sql("INSERT INTO r VALUES (1, 'a'), (2, 'b')")
+    out = eng.sql(stmt)
+    got, n_jobs = _jobs(spark, out.collect)
+    assert got
+    assert n_jobs == 0
+
+
+_AWKWARD = "it's a \\ \"quoted\" ünïcödé ✓ 'x''"
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_result_text_round_trips(eng, spark, ansi):
+    """Status, SHOW and EXPLAIN text holding quotes, backslashes and
+    non-ASCII comes back exactly, with the types the results always had,
+    whatever the session's string-literal and ANSI settings."""
+    from cassandra_sql_spark.literals import values_frame
+
+    keys = ("spark.sql.ansi.enabled", "spark.sql.parser.escapedStringLiterals")
+    old = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], ansi)
+    spark.conf.set(keys[1], "true")
+    try:
+        status = eng._status(_AWKWARD, 7)
+        assert status.schema.simpleString() == (
+            "struct<status:string,rows:bigint>"
+        )
+        assert [tuple(r) for r in status.collect()] == [(_AWKWARD, 7)]
+        spark.conf.set("my.awkward", _AWKWARD)
+        shown = eng.sql("SHOW my.awkward")
+        assert shown.schema.simpleString() == "struct<setting:string>"
+        assert shown.collect()[0][0] == _AWKWARD
+        lines = [(_AWKWARD,), ("",), (None,)]
+        plan = values_frame(spark, lines, "plan string")
+        assert [tuple(r) for r in plan.collect()] == lines
+        for ddl, data in (
+            ("status string, rows bigint", [(_AWKWARD, 7), ("ok", -1)]),
+            ("oid bigint, relname string, attnum int, attnotnull boolean, "
+             "null_frac double", [(16384, "t", 1, True, 0.25)]),
+            ("table_name string, constraint_type string, constraint "
+             "string, n_violations long", []),
+            ("_id bigint, _v array<double>", [(0, [0.1, -0.0, 1e-300])]),
+        ):
+            built = values_frame(spark, data, ddl)
+            assert built.schema == spark.createDataFrame(data, ddl).schema
+            assert [tuple(r) for r in built.collect()] == data
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("stmt", ["TRUNCATE t", "DELETE FROM t"])
+def test_emptying_a_table_keeps_versions(eng, stmt):
+    """TRUNCATE and an unfiltered DELETE publish an empty version that
+    reads 0 rows; the versions before it stay readable."""
+    eng.sql("CREATE TABLE t (id INT PRIMARY KEY, g TEXT) "
+            "PARTITION BY LIST (g)")
+    eng.sql("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    out = eng.sql(stmt)
+    assert rows(out)[0][1] == (-1 if stmt.startswith("TRUNCATE") else 2)
+    assert eng.catalog.tables["t"].path.endswith("/v3")
+    assert rows(eng.sql("SELECT * FROM t")) == []
+    assert rows(eng.sql("SELECT * FROM t VERSION AS OF 3")) == []
+    assert rows(eng.sql("SELECT * FROM t VERSION AS OF 2")) == [
+        (1, "a"), (2, "b")
+    ]
+    eng.sql("INSERT INTO t VALUES (3, 'c')")
+    assert rows(eng.sql("SELECT * FROM t")) == [(3, "c")]
+
+
+@pytest.mark.parametrize(
+    "stmt,n",
+    [
+        ("DELETE FROM t WHERE v > 1", 2),
+        ("DELETE FROM t WHERE 1 = 1", 3),
+        ("DELETE FROM t WHERE NULL", 0),
+        ("UPDATE t SET v = v + 10 WHERE v > 1", 2),
+        ("UPDATE t SET v = 0 WHERE TRUE", 3),
+        ("UPDATE t SET v = 0 WHERE v IS NULL", 0),
+        ("UPDATE t SET v = 0", 3),
+    ],
+)
+def test_dml_counts_come_from_the_write(eng, spark, stmt, n):
+    """DELETE and UPDATE count their rows on the write they run, also
+    when the predicate folds to a constant, in fewer jobs than the
+    separate count took."""
+    eng.sql("CREATE TABLE t (id INT PRIMARY KEY, v INT)")
+    eng.sql("INSERT INTO t VALUES (1, 1), (2, 2), (3, 3)")
+    out, n_jobs = _jobs(spark, lambda: eng.sql(stmt).collect())
+    assert out[0][1] == n
+    assert n_jobs <= (1 if stmt.startswith("DELETE") else 4)
+
+
+def test_dml_counts_on_an_empty_table(eng):
+    eng.sql("CREATE TABLE e (id INT PRIMARY KEY, v INT)")
+    assert rows(eng.sql("DELETE FROM e WHERE v > 0")) == [("delete e", 0)]
+    assert rows(eng.sql("UPDATE e SET v = 1")) == [("update e", 0)]
+    assert rows(eng.sql("DELETE FROM e")) == [("delete e", 0)]
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_unique_check_compiles_once(eng, spark):
+    """Appends into a table with UNIQUE sets reuse the classes the
+    earlier appends compiled: the UNIQUE counts do not depend on
+    expression ids (count_distinct aggregates expanded in exprId-hash
+    order, so each append compiled new classes)."""
+    eng.sql(
+        "CREATE TABLE k (id INT PRIMARY KEY, email TEXT UNIQUE, "
+        "a INT, b INT, UNIQUE (a, b))"
+    )
+    for i in range(3):
+        before = _compiles(spark)
+        eng.sql(
+            f"INSERT INTO k VALUES ({2 * i}, 'e{2 * i}', {i}, 0), "
+            f"({2 * i + 1}, 'e{2 * i + 1}', {i}, 1)"
+        )
+    assert _compiles(spark) - before == 0
+    with pytest.raises(EngineError, match=r"UNIQUE violated: k\(email\)"):
+        eng.sql("INSERT INTO k VALUES (9, 'e1', 9, 9)")
+    with pytest.raises(EngineError, match=r"within batch: k\(a,b\)"):
+        eng.sql("INSERT INTO k VALUES (10, 'x', 7, 7), (11, 'y', 7, 7)")
+
+
+def test_status_store_history_is_capped(eng, spark):
+    """The session keeps at most ``spark.sql.ui.retainedExecutions`` SQL
+    executions in its status store, however many statements ran."""
+    cap = int(spark.conf.get("spark.sql.ui.retainedExecutions"))
+    assert cap <= 100
+    for _ in range(cap + 10):
+        eng.sql("SELECT 1").collect()
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(60_000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    assert store.executionsCount() <= cap
