@@ -138,14 +138,21 @@ class Catalog:
         }
         self.save()
 
-    def nextval(self, name: str, count: int = 1) -> int:
-        """Reserve ``count`` values with one save; returns the first."""
+    def nextval(self, name: str, count: int = 1, save: bool = True) -> int:
+        """Reserve ``count`` values; returns the first. With ``save=False``
+        the reservation is persisted by the caller's next ``save``."""
         with self._lock:
+            first = self.peek(name)
             seq = self.sequences[name]
-            first = seq["current"] + seq["increment"]
             seq["current"] += count * seq["increment"]
-        self.save()
+        if save:
+            self.save()
         return first
+
+    def peek(self, name: str) -> int:
+        """The value the next ``nextval`` returns, not reserved."""
+        seq = self.sequences[name]
+        return seq["current"] + seq["increment"]
 
     def currval(self, name: str) -> int:
         return self.sequences[name]["current"]

@@ -21,10 +21,16 @@ semantics are identical.
 Constraint enforcement (reference kv/KvQueryExecutor.java:4276-4472):
 every validated write (INSERT, upsert, UPDATE, MERGE, COPY FROM) goes
 through ``_commit``: the batch is written once as the staged version
-``v<k+1>``, one aggregate over the staged files counts CHECK, NOT NULL,
-ENUM and UNIQUE/PK violations, one anti-join per FK checks existence, and
-only then is the pointer flipped. Nothing is cached; a violation deletes
-the staged directory.
+``v<k+1>``, and only then is the pointer flipped. What one row shows is
+observed on that write (``Observation``s, no job of their own): the row
+count, the CHECK, NOT NULL and ENUM violations, MERGE's updated and
+inserted rows and its ambiguity counts, the rows that drew SERIAL values
+(reserved after the write, saved with the publish). What needs other rows
+is queried on the staged files, only where the statement can break it:
+one aggregate over the UNIQUE/PK sets for an append or a rewrite that
+adds rows or sets a key column, and one anti-join per FK whose columns
+can change. An UPDATE of other columns runs its write alone. Nothing is
+cached; a violation deletes the staged directory.
 
 Results the engine builds itself (the ``status, rows`` command tag, SHOW,
 EXPLAIN ANALYZE lines, VERIFY CONSTRAINTS, the pg_catalog views, empty
@@ -32,6 +38,14 @@ tables) are VALUES relations (``literals.values_frame``): the JVM plans
 them as a LocalRelation, so collecting one runs no Spark job. DELETE,
 UPDATE and CTAS count their rows with an ``Observation`` on the write they
 run anyway.
+
+Observers sit where the plan can neither drop nor repeat them: above a
+join, never in a join input that runs as a stage of its own. Adaptive
+execution replaces an empty stage, observer and all, and a FULL OUTER
+JOIN without an equi-key runs its streamed side twice. A count of rows
+below a join comes from above it (MERGE's target-side join rows), from a
+materialization (UPDATE ... FROM's checkpoint) or, for a stored version,
+from its parquet footers.
 """
 
 from __future__ import annotations
@@ -40,6 +54,8 @@ import os
 import re
 import shutil
 import time
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -515,41 +531,119 @@ class Engine:
         self._publish(meta, self._write_version(meta, df))
 
     def _commit(
-        self, meta: TableMeta, batch: DataFrame, append: bool
+        self,
+        meta: TableMeta,
+        batch: DataFrame,
+        append: bool,
+        changed: set[str] | None = None,
+        after: Callable[[int], str | None] | None = None,
     ) -> tuple[int, DataFrame]:
         """The validated write of every DML statement.
 
         ``batch`` is computed exactly once, by its write into the staged
         version ``v<k+1>`` — for an append the new rows only, otherwise
-        the whole new table. One aggregate over the staged files (for an
-        append, tagged-unioned with the current version's key columns)
-        then counts the rows and every violation, and one anti-join per
-        FK checks references. If all are clean, an append hard-links the
-        current version's files in (no data copy — the Delta-log analog
-        of 'new snapshot = old files + appended files') and the pointer
-        flips. On a violation or any exception the staged directory is
-        deleted, so table, catalog and disk are left as they were.
+        the whole new table. What the write sees is observed on it: the
+        row count and, per CHECK / NOT NULL / enum check, its bad rows
+        (the flags are projected as columns below the observer, so no
+        optimizer rule can drop it). What needs other rows is queried on
+        the staged files, and only where the statement can break it: the
+        UNIQUE sets (for an append, with the current version's keys; for
+        a rewrite, the sets that hold a column in ``changed``) and one
+        anti-join per FK with a column in ``changed``. ``changed=None``
+        means the rows are new or any column may change; a rewrite that
+        maps each old row to one new row passes the columns it sets, so
+        an UPDATE of other columns runs no query besides its write.
+
+        ``after(n)`` runs after the write with the observed row count: it
+        reserves the identity values the batch drew (saved with the
+        publish, or on failure, since drawn values stay consumed) and may
+        return the statement's own error. If all is clean, an append
+        hard-links the current version's files in (no data copy — the
+        Delta-log analog of 'new snapshot = old files + appended files')
+        and the pointer flips. On a violation or any exception the staged
+        directory is deleted, so table, catalog and disk are left as they
+        were.
 
         Returns the row count and the written rows: a read of the staged
         directory whose file listing is taken before the old files are
         linked in, so it holds exactly the published batch."""
+        def touched(cols: list[str]) -> bool:
+            return append or changed is None or bool(
+                changed & {c.lower() for c in cols}
+            )
+
+        unique = [u for u in meta.unique if touched(u)]
+        fks = [fk for fk in meta.foreign_keys if touched(fk[0])]
+        checks, flags, metrics = self._check_metrics(meta)
+        seen = Observation()
+        observed = batch.selectExpr(
+            "*", *[f"{e} AS {n}" for n, e in flags.items()]
+        ).observe(seen, *map(F.expr, metrics)).drop(*flags)
         # listed before the write: an unversioned path gets v1 inside it
-        existing = self._read(meta) if append and meta.unique else None
+        existing = self._read(meta) if append and unique else None
         staged = self._next_version(meta)
+        ran = False
         try:
-            self._write_version(meta, batch)
+            self._write_version(meta, observed)
+            counts = seen.get
+            ran = after is not None
+            error = after(counts["__n"]) if ran else None
             written = self.spark.read.schema(meta.spark_ddl()).parquet(staged)
-            n, error = self._violations(meta, written, existing)
-            error = error or self._fk_violation(meta, written)
+            error = (
+                error
+                or self._first_violation(checks, counts)
+                or self._violations(meta, written, existing, unique)
+                or self._fk_violation(meta, written, fks)
+            )
             if error:
                 raise EngineError(error)
             if append and os.path.isdir(meta.path):
                 self._link_files(meta.path, staged)
         except BaseException:
             shutil.rmtree(staged, ignore_errors=True)
+            if ran:
+                self.catalog.save()
             raise
         self._publish(meta, staged)
-        return n, written
+        return counts["__n"], written
+
+    def _reserve(self, sequences: list[str], n: int) -> None:
+        """Advance each identity sequence past the ``n`` values a batch
+        drew from it; saved by the commit (see ``_commit``)."""
+        for seq in sequences if n else ():
+            self.catalog.nextval(seq, n, save=False)
+
+    @staticmethod
+    def _serial_ids(base: int, partition: str = "") -> str:
+        """SQL for dense identity values ``base, base + 1, …`` in batch
+        order. ``base`` enters as a DECIMAL literal: generated code holds
+        such a literal by reference, where a BIGINT one is spelled into
+        the source, so every new base compiled new classes."""
+        over = f"PARTITION BY {partition} " if partition else ""
+        return (
+            f"row_number() OVER ({over}ORDER BY monotonically_increasing_id())"
+            f" + CAST({base - 1} AS DECIMAL(20, 0))"
+        )
+
+    @staticmethod
+    def _stored_rows(path: str) -> int:
+        """Rows in a table version, summed from its parquet footers: what
+        a read of the version returns, without a Spark job. The walk skips
+        the names Spark's file listing skips."""
+        import pyarrow.parquet as pq
+
+        n = 0
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [
+                d for d in dirs
+                if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+            ]
+            n += sum(
+                pq.read_metadata(os.path.join(root, f)).num_rows
+                for f in files
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+        return n
 
     @staticmethod
     def _link_files(src: str, dst: str) -> None:
@@ -1280,7 +1374,10 @@ class Engine:
             # pg validates existing rows when the constraint is added
             probe = TableMeta(name=meta.name, columns=meta.columns,
                               checks=[expr], path=meta.path)
-            _, error = self._violations(probe, self._read(meta), None)
+            checks, flags, metrics = self._check_metrics(probe)
+            error = self._first_violation(checks, self._read(meta).selectExpr(
+                "*", *[f"{e} AS {n}" for n, e in flags.items()]
+            ).selectExpr(*metrics).first())
             if error:
                 raise EngineError(error)
             meta.checks.append(expr)
@@ -1597,49 +1694,38 @@ class Engine:
             )
         src = src.toDF(*cols)
         # fill identity columns not provided (reference SERIAL semantics,
-        # kv/KvQueryExecutor.java:1563-1813 auto-increment): the batch's
-        # values are reserved with one sequence save
-        n_src = None
+        # kv/KvQueryExecutor.java:1563-1813 auto-increment): the batch
+        # numbers its rows from the sequence's next value, and the commit
+        # reserves as many values as the write counted rows
+        fills, serial = [sql_ident(c) for c in cols], []
         for c in meta.columns:
-            if c.name not in cols:
-                if c.identity:
-                    if n_src is None:
-                        n_src = src.count()
-                    base = self.catalog.nextval(
-                        f"{meta.name}_{c.name}_seq", n_src
-                    ) if n_src else 1
-                    w = F.row_number().over(
-                        Window.orderBy(F.monotonically_increasing_id())
-                    )
-                    src = src.withColumn(
-                        c.name, (w + base - 1).cast(c.spark_type)
-                    )
-                elif c.default is not None:
-                    # pg DEFAULT: the expression fills omitted columns
-                    src = src.withColumn(
-                        c.name,
-                        F.expr(preprocess(
-                            self._substitute_sequences(c.default)
-                        )).cast(c.spark_type),
-                    )
-                elif not c.generated:
-                    src = src.withColumn(
-                        c.name, F.lit(None).cast(c.spark_type)
-                    )
+            if c.name in cols or c.generated:
+                continue
+            if c.identity:
+                seq = f"{meta.name}_{c.name}_seq"
+                serial.append(seq)
+                e = self._serial_ids(self.catalog.peek(seq))
+            elif c.default is not None:
+                # pg DEFAULT: the expression fills omitted columns
+                e = preprocess(self._substitute_sequences(c.default))
+            else:
+                e = "NULL"
+            fills.append(f"CAST({e} AS {c.spark_type}) AS {sql_ident(c.name)}")
         # generated columns: computed from the row AFTER every provided/
         # defaulted column exists (pg GENERATED ALWAYS AS ... STORED)
-        for c in meta.columns:
-            if c.generated:
-                src = src.withColumn(
-                    c.name,
-                    F.expr(preprocess(c.generated)).cast(c.spark_type),
-                )
-        src = src.select(
-            *[F.col(c.name).cast(c.spark_type).alias(c.name) for c in meta.columns]
-        )
+        src = src.selectExpr(*fills).selectExpr(*[
+            f"CAST(({preprocess(c.generated) if c.generated else sql_ident(c.name)})"
+            f" AS {c.spark_type}) AS {sql_ident(c.name)}"
+            for c in meta.columns
+        ])
         if conflict is not None:
-            return self._insert_on_conflict(meta, src, conflict, returning)
-        n, written = self._commit(meta, src, append=True)
+            return self._insert_on_conflict(
+                meta, src, conflict, returning, serial
+            )
+        n, written = self._commit(
+            meta, src, append=True,
+            after=partial(self._reserve, serial) if serial else None,
+        )
         if returning is not None:
             return self._returning(written, meta, returning)
         return self._status(f"insert {meta.name}", n)
@@ -1659,6 +1745,7 @@ class Engine:
         src: DataFrame,
         conflict: tuple[str | None, str],
         returning: str | None,
+        serial: list[str],
     ) -> DataFrame:
         """pg `INSERT ... ON CONFLICT (key) DO NOTHING | DO UPDATE SET ...`.
 
@@ -1666,9 +1753,12 @@ class Engine:
         rows colliding with existing keys (one left-anti join), append the
         remainder. DO UPDATE: rewritten to the engine's MERGE (full-outer-
         join copy-on-write upsert) with the batch as `excluded`, matching
-        pg's EXCLUDED pseudo-relation. The conflict target defaults to the
-        table's PRIMARY KEY; sequence values consumed by conflicting rows
-        stay consumed, exactly pg's SERIAL behavior."""
+        pg's EXCLUDED pseudo-relation; as in pg, its conflict target must
+        be a UNIQUE set, so two batch rows with one key are a target row
+        matched twice (key in the table) or a UNIQUE violation of the new
+        table (key new), never a pre-check. The conflict target defaults
+        to the table's PRIMARY KEY; the ``serial`` sequence values drawn
+        by conflicting rows stay consumed, exactly pg's SERIAL behavior."""
         key = (
             [c.strip().lower() for c in conflict[0].split(",")]
             if conflict[0]
@@ -1690,13 +1780,20 @@ class Engine:
                     F.monotonically_increasing_id()
                 )
             )
+            # every batch row drew its identity values: counted after the
+            # window, which passes each row, and before any filter
+            drawn = Observation()
             fresh = (
                 src.withColumn("__rn", first)
+                .observe(drawn, F.count(F.lit(1)).alias("n"))
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
                 .join(existing.select(*key), key, "left_anti")
             )
-            n, written = self._commit(meta, fresh, append=True)
+            n, written = self._commit(
+                meta, fresh, append=True,
+                after=lambda n: self._reserve(serial, drawn.get["n"]),
+            )
             if returning is not None:
                 return self._returning(written, meta, returning)
             return self._status(f"insert {meta.name} (conflicts skipped)", n)
@@ -1710,21 +1807,15 @@ class Engine:
                 "is not supported (the MERGE rewrite cannot recompute them "
                 "unambiguously); use DO NOTHING + UPDATE"
             )
-        # pg: "ON CONFLICT DO UPDATE command cannot affect row a second
-        # time" — two batch rows sharing a conflict key would BOTH take
-        # MERGE's NOT MATCHED branch when the key is absent from the
-        # target, silently inserting duplicate PK rows. Raise, like pg.
-        dup = (
-            src.groupBy(*key)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
+        uset = next(
+            (u for u in meta.unique
+             if sorted(map(str.lower, u)) == sorted(map(str.lower, key))),
+            None,
         )
-        if dup:
+        if uset is None:
             raise EngineError(
-                "ON CONFLICT DO UPDATE cannot affect row a second time: "
-                f"duplicate conflict key within the insert batch on ({', '.join(key)})"
+                "there is no unique or exclusion constraint matching the "
+                "ON CONFLICT specification"
             )
         sets = re.match(r"UPDATE\s+SET\s+(.*)$", action, re.IGNORECASE | re.DOTALL)
         view = "__upsert_excluded"
@@ -1734,11 +1825,28 @@ class Engine:
         )
         cols = ", ".join(c.name for c in meta.columns)
         vals = ", ".join(f"excluded.{c.name}" for c in meta.columns)
-        return self._merge(
-            f"MERGE INTO {meta.name} USING {view} AS excluded ON {on} "
-            f"WHEN MATCHED THEN UPDATE SET {sets.group(1)} "
-            f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
+        # pg: "ON CONFLICT DO UPDATE command cannot affect row a second
+        # time" — two batch rows sharing a conflict key match one target
+        # row twice (key in the table), or both take MERGE's NOT MATCHED
+        # branch and leave a duplicate key in the merged table (key new)
+        dup = (
+            "ON CONFLICT DO UPDATE cannot affect row a second time: "
+            f"duplicate conflict key within the insert batch on ({', '.join(key)})"
         )
+        try:
+            return self._merge(
+                f"MERGE INTO {meta.name} USING {view} AS excluded ON {on} "
+                f"WHEN MATCHED THEN UPDATE SET {sets.group(1)} "
+                f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})",
+                source_serial=serial,
+                ambiguous=dup,
+            )
+        except EngineError as e:
+            if str(e) == (
+                f"UNIQUE violated within batch: {meta.name}({','.join(uset)})"
+            ):
+                raise EngineError(dup) from None
+            raise
 
     @staticmethod
     def _all_set(cols: list[str]) -> str:
@@ -1772,58 +1880,71 @@ class Engine:
                             f"{col} IS NOT NULL AND {col} NOT IN ({domain})"))
         return out
 
-    def _violations(
-        self, meta: TableMeta, rows: DataFrame, existing: DataFrame | None
-    ) -> tuple[int, str | None]:
-        """Row count of ``rows`` and its first violated constraint, from
-        one query built as SQL text (one parse, not a py4j call per
-        column expression). With ``existing``, its key columns join
-        ``rows`` in a union tagged ``__new``.
+    def _check_metrics(
+        self, meta: TableMeta
+    ) -> tuple[list[tuple], dict[str, str], list[str]]:
+        """The row checks, the flag columns that evaluate them once per
+        row (name -> SQL) and the aggregates over those flags: the row
+        count ``__n``, then per check its bad rows ``__c<i>`` and, for an
+        enum, the first bad value ``__v<i>``. The DML commit observes the
+        aggregates on its write; ALTER ADD CHECK runs them as a query."""
+        checks = self._row_checks(meta)
+        flags: dict[str, str] = {}
+        for i, (kind, label, _, bad) in enumerate(checks):
+            flags[f"__c{i}"] = bad
+            if kind == "enum":  # the first bad value goes in the message
+                flags[f"__v{i}"] = f"CASE WHEN {bad} THEN {sql_ident(label)} END"
+        metrics = ["count(1) AS __n"] + [
+            f"{'count_if' if n.startswith('__c') else 'min'}({n}) AS {n}"
+            for n in flags
+        ]
+        return checks, flags, metrics
 
-        Without UNIQUE sets it is one aggregate: the rows and a count per
-        row check. Otherwise the first aggregate groups by GROUPING SETS:
-        the empty set gives those totals, and one set per distinct UNIQUE
-        column set counts each key's new and existing rows. A second
-        aggregate folds each set's keys that have no NULL column (NULL
-        keys are distinct, as in pg): a key with two new rows is a
+    @staticmethod
+    def _first_violation(checks: list[tuple], counts) -> str | None:
+        """The error of the first row check with a bad row in ``counts``
+        (the aggregates of ``_check_metrics``)."""
+        for i, (kind, _, error, _) in enumerate(checks):
+            if counts[f"__c{i}"]:
+                return (
+                    f"{error}: {counts[f'__v{i}']!r}" if kind == "enum"
+                    else error
+                )
+        return None
+
+    def _violations(
+        self,
+        meta: TableMeta,
+        rows: DataFrame,
+        existing: DataFrame | None,
+        unique: list[list[str]],
+    ) -> str | None:
+        """The first of the ``unique`` sets that ``rows`` violate, from one
+        query built as SQL text (one parse, not a py4j call per column
+        expression). With ``existing``, its key columns join ``rows`` in
+        a union tagged ``__new``.
+
+        The first aggregate groups by GROUPING SETS, one set per distinct
+        UNIQUE column set, and counts each key's new and existing rows. A
+        second aggregate folds each set's keys that have no NULL column
+        (NULL keys are distinct, as in pg): a key with two new rows is a
         duplicate within the batch, a key with new and existing rows a
         clash. The sets expand in the order they are listed, so the
         generated code is the same from statement to statement;
         ``count_distinct`` aggregates would expand in an order taken from
         expression-id hashes, and each statement compiled new classes."""
-        checks = self._row_checks(meta)
-        keys = {k.lower(): k for u in meta.unique for k in u}
+        if not unique:
+            return None
+        keys = {k.lower(): k for u in unique for k in u}
         cols = list(keys.values())
+        key_list = ", ".join(map(sql_ident, cols))
         # both sides list the columns by name: a partitioned read puts its
         # partition columns last
         rows.createOrReplaceTempView("__commit_new")
-        names = ", ".join(sql_ident(c.name) for c in meta.columns)
-        src = f"SELECT {names}, TRUE AS __new FROM __commit_new"
+        src = f"SELECT {key_list}, TRUE AS __new FROM __commit_new"
         if existing is not None:
             existing.createOrReplaceTempView("__commit_old")
-            kept = [
-                sql_ident(c.name) if c.name.lower() in keys
-                else f"CAST(NULL AS {c.spark_type}) AS {sql_ident(c.name)}"
-                for c in meta.columns
-            ]
-            src += (
-                f" UNION ALL SELECT {', '.join(kept)}, FALSE "
-                "FROM __commit_old"
-            )
-        # every check is evaluated once per row, before the expansion
-        flags = {}
-        for i, (kind, label, _, bad) in enumerate(checks):
-            flags[f"__c{i}"] = f"__new AND {bad}"
-            if kind == "enum":  # the first bad value goes in the message
-                flags[f"__v{i}"] = (
-                    f"CASE WHEN __new AND {bad} THEN {sql_ident(label)} END"
-                )
-        flagged = ", ".join(["*"] + [f"{e} AS {n}" for n, e in flags.items()])
-        aggs = ["count_if(__new) AS __n", "count_if(NOT __new) AS __o"] + [
-            f"{'count_if' if n.startswith('__c') else 'min'}({n}) AS {n}"
-            for n in flags
-        ]
-        body = f"FROM (SELECT {flagged} FROM ({src}))"
+            src += f" UNION ALL SELECT {key_list}, FALSE FROM __commit_old"
         # a set's grouping id has a bit set per key column it leaves out
         gids = [
             sum(
@@ -1831,59 +1952,44 @@ class Engine:
                 for j, c in enumerate(cols)
                 if c.lower() not in {u.lower() for u in ucols}
             )
-            for ucols in meta.unique
+            for ucols in unique
         ]
         sets: dict[int, list[str]] = {}
-        for gid, ucols in zip(gids, meta.unique):
+        for gid, ucols in zip(gids, unique):
             sets.setdefault(gid, [keys[c.lower()] for c in ucols])
-        total = (1 << len(cols)) - 1
-        if not sets:
-            by_gid = {
-                total: self.spark.sql(f"SELECT {', '.join(aggs)} {body}")
-                .first()
-            }
-        else:
-            grouping = ", ".join(
-                "(" + ", ".join(sql_ident(c) for c in u) + ")"
-                for u in sets.values()
-            )
-            keyed = " AND ".join(
-                f"(__g != {gid} OR {self._all_set(u)})"
-                for gid, u in sets.items()
-            )
-            folded = ", ".join(f"max({n}) AS {n}" for n in ("__n", *flags))
-            key_list = ", ".join(map(sql_ident, cols))
-            by_gid = {
-                r["__g"]: r
-                for r in self.spark.sql(
-                    f"SELECT __g, {folded}, "
-                    "count_if(__n > 0 AND __o > 0) AS __clash "
-                    f"FROM (SELECT grouping_id() AS __g, {key_list}, "
-                    f"{', '.join(aggs)} {body} GROUP BY {key_list} "
-                    f"GROUPING SETS ((), {grouping})) "
-                    f"WHERE {keyed} GROUP BY __g"
-                ).collect()
-            }
-        r = by_gid.get(total)
-        if r is None:  # an empty batch has no grand-total group
-            return 0, None
-        for i, (kind, _, error, _) in enumerate(checks):
-            if r[f"__c{i}"]:
-                return r["__n"], (
-                    f"{error}: {r[f'__v{i}']!r}" if kind == "enum" else error
-                )
-        for gid, ucols in zip(gids, meta.unique):
+        grouping = ", ".join(
+            "(" + ", ".join(sql_ident(c) for c in u) + ")"
+            for u in sets.values()
+        )
+        keyed = " AND ".join(
+            f"(__g != {gid} OR {self._all_set(u)})" for gid, u in sets.items()
+        )
+        by_gid = {
+            r["__g"]: r
+            for r in self.spark.sql(
+                "SELECT __g, max(__n) AS __n, "
+                "count_if(__n > 0 AND __o > 0) AS __clash "
+                f"FROM (SELECT grouping_id() AS __g, {key_list}, "
+                "count_if(__new) AS __n, count_if(NOT __new) AS __o "
+                f"FROM ({src}) GROUP BY {key_list} GROUPING SETS ({grouping})) "
+                f"WHERE {keyed} GROUP BY __g"
+            ).collect()
+        }
+        for gid, ucols in zip(gids, unique):
             key = by_gid.get(gid)
             target = f"{meta.name}({','.join(ucols)})"
             if key is not None and key["__n"] > 1:
-                return r["__n"], f"UNIQUE violated within batch: {target}"
+                return f"UNIQUE violated within batch: {target}"
             if key is not None and key["__clash"]:
-                return r["__n"], f"UNIQUE violated: {target}"
-        return r["__n"], None
+                return f"UNIQUE violated: {target}"
+        return None
 
-    def _fk_violation(self, meta: TableMeta, rows: DataFrame) -> str | None:
-        """The first FK of ``rows`` with an orphan, one anti-join each."""
-        for fcols, ref, rcols in meta.foreign_keys:
+    def _fk_violation(
+        self, meta: TableMeta, rows: DataFrame, fks: list
+    ) -> str | None:
+        """The first of the ``fks`` with an orphan in ``rows``, one
+        anti-join each."""
+        for fcols, ref, rcols in fks:
             if ref not in self.catalog.tables:
                 continue
             if self._orphans(rows, fcols, ref, rcols).limit(1).count():
@@ -2013,7 +2119,11 @@ class Engine:
         }
         if gen:
             out = out.withColumns(gen)
-        self._commit(meta, out, append=False)
+        # each old row becomes one new row: only the SET columns and the
+        # generated ones, recomputed from them, can break a key or an FK
+        self._commit(
+            meta, out, append=False, changed={*map(str.lower, sets), *gen}
+        )
         if returning is not None:
             # the updated rows with their NEW values (pg RETURNING reads
             # the post-update tuple): apply the SETs unconditionally to
@@ -2060,10 +2170,13 @@ class Engine:
         # __tid must be STABLE across the two uses below —
         # monotonically_increasing_id is partition-dependent, so pin it
         # with a localCheckpoint (one materialization, same order as the
-        # copy-on-write rewrite this statement performs anyway)
+        # copy-on-write rewrite this statement performs anyway), which
+        # also counts the target rows
+        target = Observation()
         t = (
             self._read(meta)
             .withColumn("__tid", F.monotonically_increasing_id())
+            .observe(target, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
         t.createOrReplaceTempView("__upd_target")
@@ -2072,28 +2185,20 @@ class Engine:
         )
         cond = preprocess(cond_sql) if cond_sql else "TRUE"
         matched = self.spark.sql(
-            f"SELECT {tname}.__tid AS __tid, {new_cols} "
+            f"SELECT {tname}.__tid AS __tid, TRUE AS __hit, {new_cols} "
             f"FROM __upd_target AS {tname}, {preprocess(from_sql)} "
             f"WHERE {cond}"
         )
-        # one aggregate: the matches, and whether any target row has two
-        stats = matched.agg(
-            F.count(F.lit(1)).alias("n"), F.count_distinct("__tid").alias("t")
-        ).first()
-        if stats["n"] != stats["t"]:
-            raise EngineError(
-                "UPDATE ... FROM matches a target row more than once; "
-                "make the join condition unique (pg leaves this "
-                "unspecified — this engine refuses the nondeterminism)"
-            )
-        hit = matched.withColumn("__hit", F.lit(True))
-        joined = t.join(hit, "__tid", "left")
-        out = joined.withColumns(
+        joined = t.join(matched, "__tid", "left").withColumn(
+            "__hit", F.coalesce(F.col("__hit"), F.lit(False))
+        )
+        # the matches are counted on the write; a target row matched
+        # twice appears twice in the left join, so the new table then has
+        # more rows than the target
+        hits = Observation()
+        out = joined.observe(hits, F.count_if("__hit").alias("n")).withColumns(
             {
-                c: F.when(
-                    F.coalesce(F.col("__hit"), F.lit(False)),
-                    F.col(f"__new_{c}"),
-                )
+                c: F.when(F.col("__hit"), F.col(f"__new_{c}"))
                 .otherwise(F.col(c))
                 .cast(meta.column(c).spark_type)
                 for c in sets
@@ -2109,12 +2214,21 @@ class Engine:
         out = out.drop(
             "__tid", "__hit", *[f"__new_{c}" for c in sets]
         )
-        self._commit(meta, out, append=False)
-        if returning is not None:
-            updated = joined.filter(
-                F.coalesce(F.col("__hit"), F.lit(False))
+
+        def ambiguity(n: int) -> str | None:
+            if n == target.get["n"]:
+                return None
+            return (
+                "UPDATE ... FROM matches a target row more than once; "
+                "make the join condition unique (pg leaves this "
+                "unspecified — this engine refuses the nondeterminism)"
             )
-            updated = updated.withColumns(
+
+        self._commit(
+            meta, out, append=False, changed={*sets, *gen}, after=ambiguity
+        )
+        if returning is not None:
+            updated = joined.filter(F.col("__hit")).withColumns(
                 {
                     c: F.col(f"__new_{c}").cast(meta.column(c).spark_type)
                     for c in sets
@@ -2128,7 +2242,7 @@ class Engine:
                 meta,
                 returning,
             )
-        return self._status(f"update {meta.name}", stats["n"])
+        return self._status(f"update {meta.name}", hits.get["n"])
 
     def _delete(self, s: str) -> DataFrame:
         masked, lits = _mask_literals(s)
@@ -2209,15 +2323,24 @@ class Engine:
             f"FROM __del_target AS {tname}, {preprocess(from_sql)} "
             f"WHERE {cond}"
         )
-        n = matched.count()
-        self._rewrite(meta, t.join(matched, "__tid", "anti").drop("__tid"))
+        # the deleted rows are counted on the write of the kept ones, as
+        # in DELETE: the flag comes from the left join below the observer
+        hits = Observation()
+        kept = (
+            t.join(matched.withColumn("__hit", F.lit(True)), "__tid", "left")
+            .withColumn("__hit", F.coalesce(F.col("__hit"), F.lit(False)))
+            .observe(hits, F.count_if("__hit").alias("n"))
+            .filter(~F.col("__hit"))
+            .drop("__tid", "__hit")
+        )
+        self._rewrite(meta, kept)
         if returning is not None:
             return self._returning(
                 t.join(matched, "__tid", "semi").drop("__tid"),
                 meta,
                 returning,
             )
-        return self._status(f"delete {meta.name}", n)
+        return self._status(f"delete {meta.name}", hits.get["n"])
 
     _WHEN_RE = re.compile(
         r"WHEN\s+(MATCHED|NOT\s+MATCHED\s+BY\s+SOURCE|NOT\s+MATCHED"
@@ -2226,24 +2349,42 @@ class Engine:
         re.IGNORECASE | re.DOTALL,
     )
 
-    def _merge(self, s: str) -> DataFrame:
+    def _merge(
+        self,
+        s: str,
+        source_serial: list[str] = (),
+        ambiguous: str | None = None,
+    ) -> DataFrame:
         """MERGE INTO — ANSI/Delta-style upsert (absent in the reference;
         its closest analog is the INSERT + UPDATE pair,
         kv/KvQueryExecutor.java:1563,:1814).
 
-        Single full-outer-join rewrite: target FULL OUTER source ON cond,
-        then every WHEN clause becomes a guarded CASE over the joined row
-        (first applicable clause wins, per the standard). Supports
-        WHEN MATCHED [AND] THEN UPDATE SET .../DELETE, WHEN NOT MATCHED
-        [AND] THEN INSERT (...) VALUES (...) / INSERT *, UPDATE SET *,
-        and WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE. A source row
-        matching >1 target rows raises (Delta's ambiguity rule). One scan
+        One projection over target FULL OUTER source ON cond, built as one
+        SQL text: every column is one CASE WHEN with a branch per WHEN
+        clause in clause order (the first applicable clause wins, per the
+        standard), beside flags for the kept, updated and inserted rows.
+        Supports WHEN MATCHED [AND] THEN UPDATE SET .../DELETE, WHEN NOT
+        MATCHED [AND] THEN INSERT (...) VALUES (...) / INSERT *, UPDATE
+        SET *, and WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE. One scan
         of each side, one join shuffle — no per-row driver logic; at
         100 TB the join is the same shuffle any equi-join costs, and the
         rewrite materializes one new table version (lakehouse
         copy-on-write semantics), committed through ``_commit`` like an
-        UPDATE: every constraint, UNIQUE and FK included, is checked on
-        the merged table before the pointer flips.
+        UPDATE: the UNIQUE sets and FKs are queried on the merged table
+        when the MERGE can insert rows or sets one of their columns.
+
+        Observed on the projection, in the write's own job: the
+        target-side and source-side join rows, the updated rows and the
+        inserted ones (the affected-row count). A target row matched by k
+        source rows is k join rows, so Delta's ambiguity rule (a target
+        row matches at most one source row) holds exactly when the
+        target-side join rows equal the target rows, which are summed
+        from the version's parquet footers (not observed below the join:
+        see the module notes). The rule is checked after the write,
+        before the publish. ``source_serial`` names the sequences the
+        source rows drew identity values from (the upsert's batch),
+        reserved one per source row; ``ambiguous`` replaces the ambiguity
+        error.
         """
         # All clause splitting runs on a literal-MASKED copy: a string
         # literal containing '(' / ')' would corrupt the USING-subquery
@@ -2291,32 +2432,20 @@ class Engine:
             raise EngineError("MERGE without WHEN clauses")
 
         tcols = [c.name for c in meta.columns]
-        t = (
-            self._read(meta)
-            .withColumn("__tid", F.monotonically_increasing_id())
-            .alias(t_alias)
-        )
-        src = src_df.withColumn("__sid", F.lit(1)).alias(s_alias)
-        j = t.join(src, F.expr(on_cond), "full_outer")
-        tid = F.col(f"{t_alias}.__tid")
-        sid = F.col(f"{s_alias}.__sid")
-        matched = tid.isNotNull() & sid.isNotNull()
+        t_in = f"{t_alias}.__t IS NOT NULL"
+        s_in = f"{s_alias}.__s IS NOT NULL"
 
-        def _guard(cond_sql: str) -> F.Column:
-            # cond_sql arrives MASKED (from the WHEN split)
-            if not cond_sql or not cond_sql.strip():
-                return F.lit(True)
-            return F.coalesce(
-                F.expr(preprocess(_unmask(cond_sql, lits))), F.lit(False)
-            )
+        def _star() -> dict[str, str]:
+            return {
+                c: f"{s_alias}.{sql_ident(c)}"
+                for c in tcols if c in src_df.columns
+            }
 
         def _sets(body: str) -> dict[str, str]:
             # body arrives MASKED; split on the masked text (placeholders
             # carry no commas/quotes), unmask each piece
             if body.strip() == "*":
-                return {
-                    c: f"{s_alias}.{c}" for c in tcols if c in src_df.columns
-                }
+                return _star()
             out = {}
             for part in self._split_defs(body):
                 part = _unmask(part, lits)
@@ -2326,118 +2455,139 @@ class Engine:
                 out[sm.group(1).lower()] = preprocess(sm.group(2).strip())
             return out
 
-        # target-side rows: apply MATCHED / NOT MATCHED BY SOURCE clauses
-        keep = F.lit(True)
-        vals = {c: F.col(f"{t_alias}.{c}") for c in tcols}
-        applied = F.lit(False)
-        # source-side rows: NOT MATCHED [BY TARGET] -> INSERT
-        ins_vals = {
-            c: F.lit(None).cast(col.spark_type)
-            for c, col in zip(tcols, meta.columns)
-        }
-        ins_cols: set[str] = set()
-        ins_applied = F.lit(False)
-
+        # (condition, SETs) per target-side clause, None for DELETE, and
+        # (condition, values) per NOT MATCHED [BY TARGET] INSERT clause
+        upd: list[tuple[str, dict[str, str] | None]] = []
+        ins: list[tuple[str, dict[str, str]]] = []
         for kind_raw, cond_sql, action in clauses:
             kind = re.sub(r"\s+", " ", kind_raw.upper())
             act = action.strip().rstrip(";").strip()
-            if kind in ("MATCHED", "NOT MATCHED BY SOURCE"):
-                base = (
-                    matched
-                    if kind == "MATCHED"
-                    else tid.isNotNull() & sid.isNull()
-                )
-                cnd = base & ~applied & _guard(cond_sql)
-                if re.match(r"DELETE\s*$", act, re.IGNORECASE):
-                    keep = F.when(cnd, F.lit(False)).otherwise(keep)
-                else:
-                    um = re.match(
-                        r"UPDATE\s+SET\s+(.*)$", act, re.IGNORECASE | re.DOTALL
-                    )
-                    if not um:
-                        raise EngineError(f"bad MERGE action: {act[:60]}")
-                    for c, e in _sets(um.group(1)).items():
-                        if c not in vals:
-                            raise EngineError(f"unknown column in SET: {c}")
-                        vals[c] = F.when(cnd, F.expr(e)).otherwise(vals[c])
-                applied = applied | cnd
-            else:  # NOT MATCHED [BY TARGET] -> INSERT
-                cnd = tid.isNull() & sid.isNotNull() & ~ins_applied & _guard(
-                    cond_sql
-                )
-                im = re.match(
-                    r"INSERT\s*(?:\*|(?:\(([^)]*)\))?\s*VALUES\s*\((.*)\))\s*$",
-                    act,
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if not im:
-                    raise EngineError(f"bad MERGE INSERT: {act[:60]}")
-                if im.group(2) is None:  # INSERT *
-                    pairs = {
-                        c: f"{s_alias}.{c}"
-                        for c in tcols
-                        if c in src_df.columns
-                    }
-                else:
-                    names = (
-                        [c.strip().lower() for c in im.group(1).split(",")]
-                        if im.group(1)
-                        else [c.name for c in meta.columns if not c.hidden]
-                    )
-                    exprs = [
-                        preprocess(_unmask(e, lits))
-                        for e in self._split_defs(im.group(2))
-                    ]
-                    if len(names) != len(exprs):
-                        raise EngineError("MERGE INSERT arity mismatch")
-                    pairs = dict(zip(names, exprs))
-                for c, e in pairs.items():
-                    if c not in ins_vals:
-                        raise EngineError(f"unknown column in INSERT: {c}")
-                    ins_vals[c] = F.when(cnd, F.expr(e)).otherwise(ins_vals[c])
-                    ins_cols.add(c)
-                ins_applied = ins_applied | cnd
-
-        # one pass over the join: Delta's ambiguity rule (a target row
-        # matched twice) and both halves of the affected-row count
-        stats = j.agg(
-            F.count_if(matched).alias("pairs"),
-            F.count_distinct(F.when(matched, tid)).alias("targets"),
-            F.count_if(tid.isNotNull() & applied).alias("hit"),
-            F.count_if(tid.isNull() & ins_applied).alias("ins"),
-        ).first()
-        if stats["pairs"] != stats["targets"]:
-            raise EngineError(
-                "MERGE: a target row matches multiple source rows"
+            # cond_sql arrives MASKED (from the WHEN split)
+            guard = (
+                f" AND coalesce(({preprocess(_unmask(cond_sql, lits))}), FALSE)"
+                if cond_sql and cond_sql.strip() else ""
             )
-        target_rows = (
-            j.filter(tid.isNotNull() & keep)
-            .select(*[
-                vals[c].cast(meta.column(c).spark_type).alias(c)
-                for c in tcols
-            ])
-        )
-        inserts = j.filter(tid.isNull() & ins_applied).select(*[
-            ins_vals[c].cast(meta.column(c).spark_type).alias(c)
-            for c in tcols
-        ])
+            if kind in ("MATCHED", "NOT MATCHED BY SOURCE"):
+                side = s_in if kind == "MATCHED" else f"{s_alias}.__s IS NULL"
+                cond = f"{t_in} AND {side}{guard}"
+                if re.match(r"DELETE\s*$", act, re.IGNORECASE):
+                    upd.append((cond, None))
+                    continue
+                um = re.match(
+                    r"UPDATE\s+SET\s+(.*)$", act, re.IGNORECASE | re.DOTALL
+                )
+                if not um:
+                    raise EngineError(f"bad MERGE action: {act[:60]}")
+                pairs = _sets(um.group(1))
+                for c in pairs:
+                    if c not in tcols:
+                        raise EngineError(f"unknown column in SET: {c}")
+                upd.append((cond, pairs))
+                continue
+            cond = f"{t_alias}.__t IS NULL AND {s_in}{guard}"
+            im = re.match(
+                r"INSERT\s*(?:\*|(?:\(([^)]*)\))?\s*VALUES\s*\((.*)\))\s*$",
+                act,
+                re.IGNORECASE | re.DOTALL,
+            )
+            if not im:
+                raise EngineError(f"bad MERGE INSERT: {act[:60]}")
+            if im.group(2) is None:  # INSERT *
+                pairs = _star()
+            else:
+                names = (
+                    [c.strip().lower() for c in im.group(1).split(",")]
+                    if im.group(1)
+                    else [c.name for c in meta.columns if not c.hidden]
+                )
+                exprs = [
+                    preprocess(_unmask(e, lits))
+                    for e in self._split_defs(im.group(2))
+                ]
+                if len(names) != len(exprs):
+                    raise EngineError("MERGE INSERT arity mismatch")
+                pairs = dict(zip(names, exprs))
+            for c in pairs:
+                if c not in tcols:
+                    raise EngineError(f"unknown column in INSERT: {c}")
+            ins.append((cond, pairs))
+
+        inserted = " OR ".join(f"({c})" for c, _ in ins) or "FALSE"
         # identity columns omitted from every INSERT list draw from their
-        # sequence (same SERIAL semantics as _insert, one save)
-        for c in meta.columns:
-            if c.identity and c.name not in ins_cols and stats["ins"]:
-                base_v = self.catalog.nextval(
-                    f"{meta.name}_{c.name}_seq", stats["ins"]
-                )
-                w = F.row_number().over(
-                    Window.orderBy(F.monotonically_increasing_id())
-                )
-                inserts = inserts.withColumn(
-                    c.name, (w + base_v - 1).cast(c.spark_type)
-                )
-        # the merged result is the new table: every constraint is checked
-        # on it, UNIQUE within the table, as for UPDATE
-        self._commit(meta, target_rows.unionByName(inserts), append=False)
-        return self._status(f"merge {meta.name}", stats["hit"] + stats["ins"])
+        # sequence (same SERIAL semantics as _insert), numbered over the
+        # inserted rows only: the target rows are spread by their key
+        fill = {
+            c.name: f"{meta.name}_{c.name}_seq"
+            for c in meta.columns
+            if c.identity and ins and not any(c.name in p for _, p in ins)
+        }
+        spread = ", ".join(
+            [inserted] + [f"{t_alias}.{sql_ident(k)}" for k in meta.primary_key]
+        )
+
+        def _pick(col: ColumnMeta) -> str:
+            old = f"{t_alias}.{sql_ident(col.name)}"
+
+            def typed(e: str) -> str:
+                return f"CAST(({e}) AS {col.spark_type})"
+
+            kept = [
+                (cnd, typed(p[col.name]) if p and col.name in p else old)
+                for cnd, p in upd
+            ]
+            while kept and kept[-1][1] == old:
+                kept.pop()
+            if col.name in fill:
+                base = self.catalog.peek(fill[col.name])
+                new = [(inserted, typed(self._serial_ids(base, spread)))]
+            else:
+                new = [
+                    (cnd, typed(p[col.name]) if col.name in p else "NULL")
+                    for cnd, p in ins
+                ]
+                while new and new[-1][1] == "NULL":
+                    new.pop()
+            return "CASE " + " ".join(
+                f"WHEN {w} THEN {v}" for w, v in kept + [(t_in, old)] + new
+            ) + f" END AS {sql_ident(col.name)}"
+
+        keep = "CASE " + "".join(
+            f"WHEN {cnd} THEN {'FALSE' if p is None else 'TRUE'} "
+            for cnd, p in upd
+        ) + f"WHEN {t_in} THEN TRUE ELSE {inserted} END"
+        self._read(meta).createOrReplaceTempView("__merge_target")
+        src_df.createOrReplaceTempView("__merge_source")
+        seen = Observation()
+        merged = self.spark.sql(
+            f"SELECT {', '.join(map(_pick, meta.columns))}, "
+            f"{t_in} AS __t, {s_in} AS __s, "
+            f"{' OR '.join(f'({c})' for c, _ in upd) or 'FALSE'} AS __hit, "
+            f"{inserted} AS __ins, {keep} AS __keep "
+            f"FROM (SELECT *, TRUE AS __t FROM __merge_target) AS {t_alias} "
+            "FULL OUTER JOIN "
+            f"(SELECT *, TRUE AS __s FROM __merge_source) AS {s_alias} "
+            f"ON {on_cond}"
+        ).observe(seen, *map(F.expr, (
+            "count_if(__t) AS t", "count_if(__s) AS s",
+            "count_if(__hit) AS hit", "count_if(__ins) AS ins",
+        ))).filter("__keep").select(*tcols)
+        # listed before the write: an unversioned path gets v1 inside it
+        target_rows = self._stored_rows(meta.path)
+
+        def after(n: int) -> str | None:
+            got = seen.get
+            self._reserve(list(fill.values()), got["ins"])
+            self._reserve(list(source_serial), got["s"])
+            if got["t"] == target_rows:
+                return None
+            return ambiguous or "MERGE: a target row matches multiple source rows"
+
+        # a MERGE that inserts nothing maps each target row to at most one
+        # row: only its SET columns can break a key or an FK
+        changed = None if ins else {c for _, p in upd if p for c in p}
+        self._commit(meta, merged, append=False, changed=changed, after=after)
+        got = seen.get
+        return self._status(f"merge {meta.name}", got["hit"] + got["ins"])
 
     def _optimize(self, s: str) -> DataFrame:
         """``OPTIMIZE <table> [ZORDER BY (c1, c2, ...)]`` — lakehouse

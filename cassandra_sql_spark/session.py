@@ -31,9 +31,10 @@ Design notes (100 TB target, tested on local[N]):
   0.7 MB per pass and reached 88.8 MB (the remaining growth is not
   attributed here). The working set the store must hold is one statement
   or registry entry, read right after it ran (job-group counts, the
-  perfbench tracer): the largest measured take 17 jobs (the engine
-  script's upsert) and 24 stages (``dedup_ngram_jaccard`` at sf0.01).
-  These confs are static too.
+  perfbench tracer): the largest measured take 10 jobs
+  (``q5_local_supplier_volume`` at sf0.01; the engine script's largest
+  statement, the upsert, takes 7) and 24 stages (``dedup_ngram_jaccard``
+  at sf0.01). These confs are static too.
 """
 
 from __future__ import annotations
@@ -107,7 +108,7 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # static: the status store keeps 1000 executions, jobs and stages
         # by default, UI or not, and the live heap grows with them; 100
-        # hold the largest statement's or registry entry's own (17 jobs,
+        # hold the largest statement's or registry entry's own (10 jobs,
         # 24 stages)
         .config("spark.sql.ui.retainedExecutions", str(_RETAINED))
         .config("spark.ui.retainedJobs", str(_RETAINED))

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 import duckdb
@@ -198,8 +199,9 @@ def test_serial_reserves_one_save_per_statement(eng):
         eng.sql("INSERT INTO s (v) SELECT id FROM range(50)")
     finally:
         del eng.catalog.save
-    # one sequence reservation + one version publish
-    assert len(saves) == 2
+    # the sequence is advanced by the written row count in the publish's
+    # save
+    assert len(saves) == 1
     assert rows(eng.sql("SELECT min(id), max(id), count(DISTINCT id) FROM s")) \
         == [(1, 50, 50)]
     assert eng.catalog.nextval("s_id_seq", 3) == 51
@@ -437,3 +439,204 @@ def test_status_store_history_is_capped(eng, spark):
     sc.listenerBus().waitUntilEmpty(60_000)
     store = spark._jsparkSession.sharedState().statusStore()
     assert store.executionsCount() <= cap
+
+
+# -- DML writes without side jobs ------------------------------------------
+
+
+def _job_split(eng, spark, run) -> dict[str, int]:
+    """Jobs started while ``run()`` executes, by where they started: the
+    staged write, the UNIQUE query, or anywhere else."""
+    sc = spark.sparkContext
+    groups = {k: f"{k}-{uuid.uuid4().hex}" for k in ("write", "unique", "other")}
+
+    def in_group(name, fn):
+        def wrapped(*args, **kwargs):
+            sc.setJobGroup(groups[name], name)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setJobGroup(groups["other"], "other")
+        return wrapped
+
+    eng._write_version = in_group("write", eng._write_version)
+    eng._violations = in_group("unique", eng._violations)
+    sc.setJobGroup(groups["other"], "other")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        del eng._write_version, eng._violations
+    tracker = sc.statusTracker()
+    return {k: len(tracker.getJobIdsForGroup(g)) for k, g in groups.items()}
+
+
+def _custs(eng):
+    eng.sql(
+        "CREATE TABLE custs (id SERIAL PRIMARY KEY, key INT NOT NULL UNIQUE, "
+        "bal INT CHECK (bal >= 0), seg TEXT NOT NULL)"
+    )
+    eng.sql("INSERT INTO custs (key, bal, seg) SELECT id, 1, 'a' FROM range(20)")
+    eng.sql("CREATE TABLE delta (key INT, bal INT)")
+    eng.sql("INSERT INTO delta VALUES (1, 5), (2, 6), (30, 7)")
+
+
+# statement -> whether it needs the UNIQUE query
+ONE_WRITE = {
+    "upsert": ("INSERT INTO custs (key, bal, seg) VALUES (1, 9, 'b'), "
+               "(40, 9, 'b') ON CONFLICT (key) DO UPDATE SET bal = "
+               "excluded.bal", True),
+    "serial_insert": ("INSERT INTO custs (key, bal, seg) SELECT id + 100, 2, "
+                      "'c' FROM range(5)", True),
+    "update_non_key": ("UPDATE custs SET bal = bal + 1 WHERE key < 5", False),
+    "merge": ("MERGE INTO custs USING delta ON custs.key = delta.key "
+              "WHEN MATCHED THEN UPDATE SET bal = delta.bal "
+              "WHEN NOT MATCHED THEN INSERT (id, key, bal, seg) "
+              "VALUES (delta.key + 1000, delta.key, delta.bal, 'd')", True),
+    "merge_update_only": ("MERGE INTO custs USING delta ON custs.key = "
+                          "delta.key WHEN MATCHED THEN UPDATE SET bal = "
+                          "delta.bal", False),
+}
+
+
+@pytest.mark.parametrize(
+    "stmt,unique", list(ONE_WRITE.values()), ids=list(ONE_WRITE)
+)
+def test_dml_runs_no_job_besides_its_write(eng, spark, stmt, unique):
+    """Counts, row checks, MERGE statistics and SERIAL reservations come
+    from the write itself; the UNIQUE query runs only for a statement that
+    can add a key, and nothing else runs a job."""
+    _custs(eng)
+    jobs = _job_split(eng, spark, lambda: eng.sql(stmt).collect())
+    assert jobs["write"] >= 1
+    assert jobs["other"] == 0
+    assert (jobs["unique"] > 0) == unique
+
+
+def _within(seconds, fn):
+    """``fn()``'s result, or a failure if it has not returned in time
+    (an observer the plan lost would leave ``Observation.get`` waiting)."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # re-raised in the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"no result after {seconds}s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+EMPTY = {
+    "insert_where_false": "INSERT INTO custs (key, bal, seg) SELECT id, 1, "
+                          "'e' FROM range(3) WHERE false",
+    "on_conflict_nothing_empty": "INSERT INTO custs (key, bal, seg) SELECT "
+                                 "id, 1, 'e' FROM range(3) WHERE false ON "
+                                 "CONFLICT (key) DO NOTHING",
+    "upsert_empty": "INSERT INTO custs (key, bal, seg) SELECT id, 1, 'e' "
+                    "FROM range(3) WHERE false ON CONFLICT (key) DO UPDATE "
+                    "SET bal = excluded.bal",
+    "merge_on_false": "MERGE INTO custs USING delta ON FALSE WHEN MATCHED "
+                      "THEN UPDATE SET bal = delta.bal",
+    "merge_matched_and_false": "MERGE INTO custs USING delta ON custs.key = "
+                               "delta.key WHEN MATCHED AND FALSE THEN "
+                               "UPDATE SET bal = delta.bal",
+    "merge_empty_target": "MERGE INTO blank USING delta ON blank.key = "
+                          "delta.key WHEN MATCHED THEN UPDATE SET bal = "
+                          "delta.bal",
+    "merge_empty_source": "MERGE INTO custs USING blank ON custs.key = "
+                          "blank.key WHEN MATCHED THEN UPDATE SET bal = "
+                          "blank.bal WHEN NOT MATCHED THEN INSERT (id, key, "
+                          "bal, seg) VALUES (blank.key, blank.key, blank.bal, "
+                          "'n')",
+    "update_from_empty": "UPDATE custs SET bal = blank.bal FROM blank WHERE "
+                         "custs.key = blank.key",
+    "delete_using_empty": "DELETE FROM custs USING blank WHERE custs.key = "
+                          "blank.key",
+}
+
+
+@pytest.mark.parametrize("stmt", list(EMPTY.values()), ids=list(EMPTY))
+def test_observers_report_zero_rows(eng, stmt):
+    """Every observer of a write that touches no row still reports, and
+    reports 0: none is lost with an empty input or a constant-false
+    condition. The tables and the SERIAL sequence are left as they were."""
+    _custs(eng)
+    eng.sql("CREATE TABLE blank (id INT PRIMARY KEY, key INT, bal INT, "
+            "seg TEXT)")
+    before = rows(eng.sql("SELECT * FROM custs"))
+    seq = eng.catalog.currval("custs_id_seq")
+    out = _within(120, lambda: rows(eng.sql(stmt)))
+    assert [r[1] for r in out] == [0]
+    assert rows(eng.sql("SELECT * FROM custs")) == before
+    assert rows(eng.sql("SELECT * FROM blank")) == []
+    assert eng.catalog.currval("custs_id_seq") == seq
+
+
+@pytest.mark.parametrize("key", [1, 77], ids=["key_in_table", "key_new"])
+def test_upsert_duplicate_key_leaves_table(eng, key):
+    """Two batch rows with one conflict key raise pg's message whether the
+    key is in the table (one target row matched twice, seen on the write)
+    or new (a duplicate in the merged table, seen by the UNIQUE query);
+    the table and its versions are left as they were."""
+    eng.sql("CREATE TABLE u (id INT PRIMARY KEY, v TEXT, g TEXT) "
+            "PARTITION BY LIST (g)")
+    eng.sql("INSERT INTO u VALUES (1, 'a', 'x'), (2, 'b', 'y')")
+    meta = eng.catalog.tables["u"]
+    path, before = meta.path, rows(eng.sql("SELECT * FROM u"))
+    with pytest.raises(EngineError, match="cannot affect row a second time"):
+        eng.sql(
+            f"INSERT INTO u VALUES ({key}, 'p', 'x'), ({key}, 'q', 'y') "
+            "ON CONFLICT (id) DO UPDATE SET v = excluded.v"
+        )
+    assert meta.path == path
+    assert not os.path.exists(eng._next_version(meta))
+    assert rows(eng.sql("SELECT * FROM u")) == before
+
+
+def test_upsert_needs_a_unique_conflict_target(eng):
+    eng.sql("CREATE TABLE u (id INT PRIMARY KEY, a INT, b INT, UNIQUE (a, b))")
+    eng.sql("INSERT INTO u VALUES (1, 1, 1)")
+    with pytest.raises(EngineError, match="no unique or exclusion constraint"):
+        eng.sql("INSERT INTO u VALUES (2, 1, 2) ON CONFLICT (a) DO UPDATE "
+                "SET b = excluded.b")
+    # a UNIQUE set in any column order is a valid target
+    eng.sql("INSERT INTO u VALUES (3, 1, 1) ON CONFLICT (b, a) DO UPDATE "
+            "SET id = excluded.id")
+    assert rows(eng.sql("SELECT * FROM u")) == [(3, 1, 1)]
+
+
+def test_failed_serial_insert_consumes_its_values(eng, tmp_path):
+    """As in pg, values drawn by a statement that fails after its write
+    stay consumed: the next insert numbers on from them."""
+    _setup(eng, tmp_path)
+    assert eng.catalog.currval("acct_id_seq") == 2
+    with pytest.raises(EngineError, match="CHECK violated"):
+        eng.sql("INSERT INTO acct (email, name, bal) SELECT email, name, "
+                "-bal FROM src")
+    assert eng.catalog.currval("acct_id_seq") == 4
+    eng.sql("INSERT INTO acct (email, name, bal) VALUES ('q@x', 'q', 0)")
+    assert rows(eng.sql("SELECT id FROM acct WHERE email = 'q@x'")) == [(5,)]
+
+
+def test_repeated_serial_insert_and_upsert_compile_nothing(eng, spark):
+    """A SERIAL insert's offset and an upsert's batch do not enter the
+    generated code: once a table holds rows, repeating either statement
+    with new values compiles no class."""
+    eng.sql("CREATE TABLE s (id SERIAL PRIMARY KEY, k INT, v INT)")
+    eng.sql("CREATE TABLE u (id SERIAL PRIMARY KEY, k INT UNIQUE, v INT)")
+    for stmt in (
+        "INSERT INTO s (k, v) SELECT id, id FROM range(20)",
+        "INSERT INTO u (k, v) VALUES (0, {i}), ({i} + 1000, 2) ON CONFLICT "
+        "(k) DO UPDATE SET v = excluded.v",
+    ):
+        for i in range(3):
+            before = _compiles(spark)
+            eng.sql(stmt.format(i=i))
+        assert _compiles(spark) - before == 0, stmt
