@@ -43,9 +43,8 @@ Observers sit where the plan can neither drop nor repeat them: above a
 join, never in a join input that runs as a stage of its own. Adaptive
 execution replaces an empty stage, observer and all, and a FULL OUTER
 JOIN without an equi-key runs its streamed side twice. A count of rows
-below a join comes from above it (MERGE's target-side join rows), from a
-materialization (UPDATE ... FROM's checkpoint) or, for a stored version,
-from its parquet footers.
+below a join comes from above it (MERGE's target-side join rows) or, for
+a stored version, from its parquet footers.
 """
 
 from __future__ import annotations
@@ -592,7 +591,9 @@ class Engine:
             error = (
                 error
                 or self._first_violation(checks, counts)
-                or self._violations(meta, written, existing, unique)
+                or self._first_duplicate(
+                    meta, unique, self._violations(written, existing, unique)
+                )
                 or self._fk_violation(meta, written, fks)
             )
             if error:
@@ -1341,10 +1342,9 @@ class Engine:
             meta.columns.append(
                 ColumnMeta(cname, ctype.upper(), spark_type, True, False, None)
             )
-            df = self._read_old_schema(meta, drop=None)
-            self._rewrite(
-                meta, df.withColumn(cname, F.lit(None).cast(spark_type))
-            )
+            self._rewrite(meta, self._read(meta).withColumn(
+                cname, F.lit(None).cast(spark_type)
+            ))
             return self._status(f"alter add {cname}")
         if au.startswith("DROP COLUMN"):
             cname = re.match(
@@ -1356,15 +1356,30 @@ class Engine:
                 raise EngineError(
                     f"cannot drop partition column: {cname}"
                 )
-            df = self._read_old_schema(meta, drop=cname)
+            df = self._read(meta).drop(cname)
             meta.columns = [c for c in meta.columns if c.name != cname]
             self._rewrite(meta, df)
             return self._status(f"alter drop {cname}")
         if au.startswith("ADD PRIMARY KEY") or (
             au.startswith("ADD CONSTRAINT") and "PRIMARY KEY" in au
         ):
-            meta.primary_key = re.findall(_IDENT, action[action.index("("):])
-            meta.unique.append(list(meta.primary_key))
+            keys = re.findall(_IDENT, action[action.index("("):])
+            # pg validates the rows already there: NOT NULL key columns and
+            # no duplicate key; nothing is saved on a violation
+            folded = {k.lower() for k in keys}
+            cols = [c for c in meta.columns if c.name.lower() in folded]
+            probe = TableMeta(name=meta.name, columns=cols,
+                              primary_key=[c.name for c in cols])
+            df = self._read(meta)
+            error = self._first_violation(
+                *self._check_counts(probe, df)
+            ) or self._first_duplicate(
+                meta, [keys], self._violations(df, None, [keys])
+            )
+            if error:
+                raise EngineError(error)
+            meta.primary_key = keys
+            meta.unique.append(list(keys))
             self.catalog.save()
             return self._status("alter add pk")
         if "CHECK" in au and au.startswith(("ADD CONSTRAINT", "ADD CHECK", "ADD ")):
@@ -1373,11 +1388,10 @@ class Engine:
                 raise EngineError(f"bad ADD CHECK: {action[:60]}")
             # pg validates existing rows when the constraint is added
             probe = TableMeta(name=meta.name, columns=meta.columns,
-                              checks=[expr], path=meta.path)
-            checks, flags, metrics = self._check_metrics(probe)
-            error = self._first_violation(checks, self._read(meta).selectExpr(
-                "*", *[f"{e} AS {n}" for n, e in flags.items()]
-            ).selectExpr(*metrics).first())
+                              checks=[expr])
+            error = self._first_violation(
+                *self._check_counts(probe, self._read(meta))
+            )
             if error:
                 raise EngineError(error)
             meta.checks.append(expr)
@@ -1389,22 +1403,18 @@ class Engine:
                 action,
                 re.IGNORECASE,
             )
-            meta.foreign_keys.append(
-                [
-                    re.findall(_IDENT, fk.group(1)),
-                    fk.group(2).lower(),
-                    re.findall(_IDENT, fk.group(3)),
-                ]
-            )
+            new_fk = [
+                re.findall(_IDENT, fk.group(1)),
+                fk.group(2).lower(),
+                re.findall(_IDENT, fk.group(3)),
+            ]
+            error = self._fk_violation(meta, self._read(meta), [new_fk])
+            if error:
+                raise EngineError(error)
+            meta.foreign_keys.append(new_fk)
             self.catalog.save()
             return self._status("alter add fk")
         raise EngineError(f"unsupported ALTER: {action[:60]}")
-
-    def _read_old_schema(self, meta: TableMeta, drop: str | None) -> DataFrame:
-        df = self._read(meta)
-        if drop:
-            df = df.drop(drop)
-        return df
 
     # ---------------------------------------------------------------- views
 
@@ -1613,17 +1623,7 @@ class Engine:
         # delegates to the MERGE rewrite with the batch registered as a
         # temp view aliased `excluded`, so pg's EXCLUDED.col references
         # work verbatim inside the SET expressions.
-        # suffix clauses are located on a literal-MASKED copy — a VALUES
-        # string like 'items returning soon' or 'on conflict policy' must
-        # not truncate the statement at that point
-        masked, lits = _mask_literals(s)
-        returning = None
-        rm = re.search(
-            r"\s+RETURNING\s+(.*)$", masked, re.IGNORECASE | re.DOTALL
-        )
-        if rm:
-            returning = _unmask(rm.group(1).strip(), lits)
-            masked = masked[: rm.start()]
+        masked, lits, returning = self._split_returning(s)
         conflict = None
         cm = re.search(
             rf"\s+ON\s+CONFLICT\s*(?:\(([^)]*)\))?\s*DO\s+"
@@ -1671,53 +1671,25 @@ class Engine:
                     f"cannot insert into generated column: {sorted(bad)[0]}"
                 )
         else:
-            cols = [
-                c.name for c in meta.columns
-                if not c.hidden and not c.generated
-            ]
-            if len(src.columns) == len(
-                [
-                    c for c in meta.columns
-                    if not c.identity and not c.hidden and not c.generated
-                ]
-            ):
+            given = [c for c in meta.columns if not c.hidden and not c.generated]
+            cols = [c.name for c in given]
+            if len(src.columns) == sum(not c.identity for c in given):
                 # bare INSERT omitting identity columns (SERIAL usage)
-                cols = [
-                    c.name
-                    for c in meta.columns
-                    if not c.identity and not c.hidden and not c.generated
-                ]
+                cols = [c.name for c in given if not c.identity]
         if len(src.columns) != len(cols):
             raise EngineError(
                 f"INSERT column count mismatch: {len(src.columns)} values "
                 f"for {len(cols)} columns"
             )
         src = src.toDF(*cols)
-        # fill identity columns not provided (reference SERIAL semantics,
-        # kv/KvQueryExecutor.java:1563-1813 auto-increment): the batch
-        # numbers its rows from the sequence's next value, and the commit
-        # reserves as many values as the write counted rows
-        fills, serial = [sql_ident(c) for c in cols], []
-        for c in meta.columns:
-            if c.name in cols or c.generated:
-                continue
-            if c.identity:
-                seq = f"{meta.name}_{c.name}_seq"
-                serial.append(seq)
-                e = self._serial_ids(self.catalog.peek(seq))
-            elif c.default is not None:
-                # pg DEFAULT: the expression fills omitted columns
-                e = preprocess(self._substitute_sequences(c.default))
-            else:
-                e = "NULL"
-            fills.append(f"CAST({e} AS {c.spark_type}) AS {sql_ident(c.name)}")
-        # generated columns: computed from the row AFTER every provided/
-        # defaulted column exists (pg GENERATED ALWAYS AS ... STORED)
-        src = src.selectExpr(*fills).selectExpr(*[
-            f"CAST(({preprocess(c.generated) if c.generated else sql_ident(c.name)})"
-            f" AS {c.spark_type}) AS {sql_ident(c.name)}"
-            for c in meta.columns
-        ])
+        fill, serial = self._fill(
+            meta, [c for c in meta.columns if c.name not in cols]
+        )
+        src = self._stored(meta, src.selectExpr(
+            *map(sql_ident, cols),
+            *[f"CAST({e} AS {meta.column(c).spark_type}) AS {sql_ident(c)}"
+              for c, e in fill.items()],
+        ))
         if conflict is not None:
             return self._insert_on_conflict(
                 meta, src, conflict, returning, serial
@@ -1729,6 +1701,63 @@ class Engine:
         if returning is not None:
             return self._returning(written, meta, returning)
         return self._status(f"insert {meta.name}", n)
+
+    @staticmethod
+    def _split_returning(s: str) -> tuple[str, list, str | None]:
+        """A DML statement as (literal-masked text without its RETURNING
+        suffix, the masked literals, the RETURNING list or None). The
+        suffix is found on the masked text: a string like 'items
+        returning soon' must not truncate the statement."""
+        masked, lits = _mask_literals(s)
+        rm = re.search(r"\s+RETURNING\s+(.*)$", masked, re.IGNORECASE | re.DOTALL)
+        if not rm:
+            return masked, lits, None
+        return masked[: rm.start()], lits, _unmask(rm.group(1).strip(), lits)
+
+    def _fill(
+        self, meta: TableMeta, omitted: list[ColumnMeta], partition: str = ""
+    ) -> tuple[dict[str, str], list[str]]:
+        """SQL for the ``omitted`` columns of inserted rows, and the
+        sequences each row draws a value from. An identity column, or a
+        DEFAULT calling ``nextval('s')``, numbers the rows from the
+        sequence's next value (reference SERIAL semantics,
+        kv/KvQueryExecutor.java:1563-1813), within ``partition`` (see
+        ``_serial_ids``); the commit reserves as many values as it wrote
+        rows. Any other DEFAULT is its expression, the rest NULL.
+        Generated columns are left to ``_stored``."""
+        fill: dict[str, str] = {}
+        serial: list[str] = []
+
+        def draw(seq: str) -> str:
+            serial.append(seq)
+            return f"({self._serial_ids(self.catalog.peek(seq), partition)})"
+
+        for c in omitted:
+            if c.generated:
+                continue
+            if c.identity:
+                fill[c.name] = draw(f"{meta.name}_{c.name}_seq")
+            elif c.default is not None:
+                fill[c.name] = preprocess(self._substitute_sequences(re.sub(
+                    rf"\bnextval\s*\(\s*'({_IDENT})'\s*\)",
+                    lambda m: draw(m.group(1).lower()),
+                    c.default,
+                    flags=re.IGNORECASE,
+                )))
+            else:
+                fill[c.name] = "NULL"
+        return fill, serial
+
+    @staticmethod
+    def _stored(meta: TableMeta, df: DataFrame) -> DataFrame:
+        """``df`` as the table's stored columns, in table order and cast
+        to their types; a generated column is computed from the row
+        (pg GENERATED ALWAYS AS ... STORED)."""
+        return df.selectExpr(*[
+            f"CAST(({preprocess(c.generated) if c.generated else sql_ident(c.name)})"
+            f" AS {c.spark_type}) AS {sql_ident(c.name)}"
+            for c in meta.columns
+        ])
 
     def _returning(self, df, meta: TableMeta, returning: str):
         """Project a DML RETURNING clause; bare * excludes the hidden
@@ -1912,29 +1941,37 @@ class Engine:
                 )
         return None
 
+    def _check_counts(self, meta: TableMeta, df: DataFrame) -> tuple:
+        """The row checks of ``meta`` and their aggregates over ``df``, run
+        as a query: for ALTER ADD CHECK / PRIMARY KEY and VERIFY
+        CONSTRAINTS (the DML commit observes them on its write)."""
+        checks, flags, metrics = self._check_metrics(meta)
+        return checks, df.selectExpr(
+            "*", *[f"{e} AS {n}" for n, e in flags.items()]
+        ).selectExpr(*metrics).first()
+
     def _violations(
         self,
-        meta: TableMeta,
         rows: DataFrame,
         existing: DataFrame | None,
         unique: list[list[str]],
-    ) -> str | None:
-        """The first of the ``unique`` sets that ``rows`` violate, from one
+    ) -> list[tuple[int, int]]:
+        """Per set of ``unique``: the rows of ``rows`` whose key another
+        of them shares, and the keys ``rows`` and ``existing`` share. One
         query built as SQL text (one parse, not a py4j call per column
-        expression). With ``existing``, its key columns join ``rows`` in
+        expression); with ``existing``, its key columns join ``rows`` in
         a union tagged ``__new``.
 
         The first aggregate groups by GROUPING SETS, one set per distinct
         UNIQUE column set, and counts each key's new and existing rows. A
         second aggregate folds each set's keys that have no NULL column
-        (NULL keys are distinct, as in pg): a key with two new rows is a
-        duplicate within the batch, a key with new and existing rows a
-        clash. The sets expand in the order they are listed, so the
-        generated code is the same from statement to statement;
-        ``count_distinct`` aggregates would expand in an order taken from
-        expression-id hashes, and each statement compiled new classes."""
+        (NULL keys are distinct, as in pg). The sets expand in the order
+        they are listed, so the generated code is the same from statement
+        to statement; ``count_distinct`` aggregates would expand in an
+        order taken from expression-id hashes, and each statement
+        compiled new classes."""
         if not unique:
-            return None
+            return []
         keys = {k.lower(): k for u in unique for k in u}
         cols = list(keys.values())
         key_list = ", ".join(map(sql_ident, cols))
@@ -1965,9 +2002,9 @@ class Engine:
             f"(__g != {gid} OR {self._all_set(u)})" for gid, u in sets.items()
         )
         by_gid = {
-            r["__g"]: r
+            r["__g"]: (r["__dup"], r["__clash"])
             for r in self.spark.sql(
-                "SELECT __g, max(__n) AS __n, "
+                "SELECT __g, sum(if(__n > 1, __n, 0)) AS __dup, "
                 "count_if(__n > 0 AND __o > 0) AS __clash "
                 f"FROM (SELECT grouping_id() AS __g, {key_list}, "
                 "count_if(__new) AS __n, count_if(NOT __new) AS __o "
@@ -1975,12 +2012,20 @@ class Engine:
                 f"WHERE {keyed} GROUP BY __g"
             ).collect()
         }
-        for gid, ucols in zip(gids, unique):
-            key = by_gid.get(gid)
+        return [by_gid.get(gid, (0, 0)) for gid in gids]
+
+    @staticmethod
+    def _first_duplicate(
+        meta: TableMeta, unique: list[list[str]], counts: list[tuple[int, int]]
+    ) -> str | None:
+        """The error of the first UNIQUE set with a duplicate key in
+        ``counts`` (from ``_violations``): within the rows, or between
+        them and the existing ones."""
+        for ucols, (dup, clash) in zip(unique, counts):
             target = f"{meta.name}({','.join(ucols)})"
-            if key is not None and key["__n"] > 1:
+            if dup:
                 return f"UNIQUE violated within batch: {target}"
-            if key is not None and key["__clash"]:
+            if clash:
                 return f"UNIQUE violated: {target}"
         return None
 
@@ -2037,309 +2082,184 @@ class Engine:
                 return i
         return -1
 
-    def _update(self, s: str) -> DataFrame:
-        # suffix/clause split on a literal-MASKED copy (same hazard as
-        # _insert: a SET string containing ' returning ' or ' from '
-        # must not truncate the statement); FROM/WHERE located at paren
-        # depth 0 so `substring(x from 2)` can't fake an UPDATE FROM
-        masked, lits = _mask_literals(s)
-        returning = None
-        rm = re.search(
-            r"\s+RETURNING\s+(.*)$", masked, re.IGNORECASE | re.DOTALL
-        )
-        if rm:
-            returning = _unmask(rm.group(1).strip(), lits)
-            masked = masked[: rm.start()]
-        hm = re.match(
-            rf"UPDATE\s+({_IDENT})\s+SET\s+", masked, re.IGNORECASE
-        )
-        if not hm:
-            raise EngineError(f"bad UPDATE: {s[:80]}")
-        tname, body = hm.group(1).lower(), masked[hm.end():]
-        cond_sql = None
-        wi = self._toplevel_keyword(body, "WHERE")
-        if wi >= 0:
-            cond_sql = _unmask(body[wi + len("WHERE"):].strip(), lits)
-            body = body[:wi]
-        fi = self._toplevel_keyword(body, "FROM")
-        if fi >= 0:
-            # pg `UPDATE t SET ... FROM other WHERE join_cond`
-            return self._update_from(
-                tname,
-                _unmask(body[:fi].strip(), lits),
-                _unmask(body[fi + len("FROM"):].strip(), lits),
-                cond_sql,
-                returning,
-            )
-        # plain single-table path: parse from the MASKED split above —
-        # `body` is the SET list (WHERE/FROM already peeled off at
-        # paren depth 0), so a SET literal containing ' where ' cannot
-        # corrupt the predicate
-        sets_sql = _unmask(body.strip(), lits)
-        if not sets_sql:
-            raise EngineError(f"bad UPDATE: {s[:80]}")
-        meta = self._table(tname)
-        sets = {}
-        for part in self._split_defs(sets_sql):
+    def _set_list(
+        self, meta: TableMeta, body: str, lits: list, bad: str
+    ) -> dict[str, str]:
+        """A literal-masked ``col = expr, ...`` list as column name -> SQL,
+        split on the masked text and unmasked piece by piece (``bad``
+        prefixes the error for a piece that is no assignment). Names fold
+        to the table's columns, as pg folds unquoted identifiers; an
+        unknown or a generated column is refused."""
+        names = {c.name.lower(): c for c in meta.columns}
+        out: dict[str, str] = {}
+        for part in self._split_defs(body):
+            part = _unmask(part, lits)
             sm = re.match(rf"({_IDENT})\s*=\s*(.*)$", part, re.DOTALL)
             if not sm:
-                raise EngineError(f"bad SET clause: {part[:60]}")
-            sets[sm.group(1)] = preprocess(
+                raise EngineError(f"{bad}: {part[:60]}")
+            col = names.get(sm.group(1).lower())
+            if col is None:
+                raise EngineError(
+                    f"unknown column in SET: {sm.group(1).lower()}"
+                )
+            if col.generated:
+                raise EngineError(f"cannot update generated column: {col.name}")
+            out[col.name] = preprocess(
                 self._substitute_sequences(sm.group(2).strip())
             )
-        cond = (
-            F.expr(preprocess(cond_sql)) if cond_sql else F.lit(True)
-        )
-        for c in sets:
-            if meta.column(c).generated:
-                raise EngineError(f"cannot update generated column: {c}")
-        # alias the target to its table name so correlated subqueries in
-        # the predicate (pg `WHERE EXISTS (SELECT 1 FROM o WHERE o.id =
-        # t.id)`) resolve the outer reference
-        df = self._read(meta).alias(meta.name)
-        # the matched rows are counted on the write itself
-        hits = Observation()
-        out = (
-            df.withColumn("__hit", F.coalesce(cond, F.lit(False)))
-            .observe(hits, F.count_if("__hit").alias("n"))
-            .withColumns(
-                {
-                    c: F.when(F.col("__hit"), F.expr(e))
-                    .otherwise(F.col(c))
-                    .cast(meta.column(c).spark_type)
-                    for c, e in sets.items()
-                }
+        return out
+
+    def _update(self, s: str) -> DataFrame:
+        """``UPDATE t SET ... [FROM from_list] [WHERE cond]``. Both forms
+        give each target row a flag ``__hit`` and each SET column a new
+        value; one body then writes ``CASE WHEN __hit`` of each SET column
+        and the generated columns, counts the hits above any join, commits
+        and answers RETURNING with the new rows.
+
+        The plain form computes flag and values on the row itself. pg's
+        FROM form (⬆ — the reference's UPDATE is single-table,
+        kv/KvQueryExecutor.java:1814) takes them from the target's matches
+        in the from-list, left-joined back to the target on the parquet
+        row id ``(_metadata.file_path, _metadata.row_index)``: stable
+        across two scans of an immutable version directory, so nothing is
+        materialized. A target row matched twice becomes two rows. pg
+        leaves which match wins unspecified; this engine refuses the
+        statement (Delta MERGE's ambiguity rule) when the written rows
+        outnumber the target's, summed from its parquet footers."""
+        masked, lits, returning = self._split_returning(s)
+        hm = re.match(rf"UPDATE\s+({_IDENT})\s+SET\s+", masked, re.IGNORECASE)
+        if not hm:
+            raise EngineError(f"bad UPDATE: {s[:80]}")
+        # FROM and WHERE are found at paren depth 0 of the masked text, so
+        # `substring(x from 2)` or a ' where ' literal can't split it
+        body, cond, from_sql = masked[hm.end():], "TRUE", None
+        wi = self._toplevel_keyword(body, "WHERE")
+        if wi >= 0:
+            body, cond = body[:wi], body[wi + len("WHERE"):].strip()
+        fi = self._toplevel_keyword(body, "FROM")
+        if fi >= 0:
+            from_sql = preprocess(_unmask(body[fi + len("FROM"):].strip(), lits))
+            body = body[:fi]
+        if not body.strip() or not cond:
+            raise EngineError(f"bad UPDATE: {s[:80]}")
+        cond = preprocess(_unmask(cond, lits))
+        meta = self._table(hm.group(1).lower())
+        sets = self._set_list(meta, body, lits, "bad SET clause")
+        after: Callable[[int], str | None] | None = None
+        if from_sql is None:
+            # aliased to the table name so the predicate and the SETs
+            # resolve `t.col` and correlated subqueries (pg `WHERE EXISTS
+            # (SELECT 1 FROM o WHERE o.id = t.id)`)
+            base = self._read(meta).alias(meta.name).selectExpr(
+                "*", f"coalesce(({cond}), FALSE) AS __hit"
             )
-            .drop("__hit")
-        )
-        gen = {
-            c.name: F.expr(preprocess(c.generated)).cast(c.spark_type)
-            for c in meta.columns
-            if c.generated
-        }
-        if gen:
-            out = out.withColumns(gen)
+            new = sets
+        else:
+            target = self._read(meta).selectExpr(
+                "*", "_metadata.file_path AS __file",
+                "_metadata.row_index AS __row",
+            )
+            target.createOrReplaceTempView("__dml_target")
+            new = {c: f"__new{i}" for i, c in enumerate(sets)}
+            matched = self.spark.sql(
+                f"SELECT {meta.name}.__file, {meta.name}.__row, TRUE AS "
+                "__match, " + ", ".join(f"({sets[c]}) AS {v}" for c, v in new.items())
+                + f" FROM __dml_target AS {meta.name}, {from_sql} WHERE {cond}"
+            )
+            base = target.join(matched, ["__file", "__row"], "left").selectExpr(
+                "*", "__match IS NOT NULL AS __hit"
+            )
+            # listed before the write: an unversioned path gets v1 inside it
+            target_rows = self._stored_rows(meta.path)
+
+            def after(n: int) -> str | None:
+                if n == target_rows:
+                    return None
+                return (
+                    "UPDATE ... FROM matches a target row more than once; "
+                    "make the join condition unique (pg leaves this "
+                    "unspecified — this engine refuses the nondeterminism)"
+                )
+
+        def updated(rows: DataFrame) -> DataFrame:
+            return self._stored(meta, rows.selectExpr(*[
+                f"CAST(CASE WHEN __hit THEN {new[c.name]} ELSE "
+                f"{sql_ident(c.name)} END AS {c.spark_type}) AS {sql_ident(c.name)}"
+                if c.name in new else sql_ident(c.name)
+                for c in meta.columns
+            ]))
+
+        hits = Observation()
         # each old row becomes one new row: only the SET columns and the
         # generated ones, recomputed from them, can break a key or an FK
         self._commit(
-            meta, out, append=False, changed={*map(str.lower, sets), *gen}
+            meta,
+            updated(base.observe(hits, F.expr("count_if(__hit) AS n"))),
+            append=False,
+            changed={
+                c.name.lower() for c in meta.columns
+                if c.name in sets or c.generated
+            },
+            after=after,
         )
         if returning is not None:
-            # the updated rows with their NEW values (pg RETURNING reads
-            # the post-update tuple): apply the SETs unconditionally to
-            # the old rows that satisfied the predicate
-            ret = df.filter(cond).withColumns(
-                {
-                    c: F.expr(e).cast(meta.column(c).spark_type)
-                    for c, e in sets.items()
-                }
-            )
-            if gen:
-                ret = ret.withColumns(gen)
-            return self._returning(ret, meta, returning)
-        return self._status(f"update {meta.name}", hits.get["n"])
-
-    def _update_from(
-        self,
-        tname: str,
-        sets_sql: str,
-        from_sql: str,
-        cond_sql: str | None,
-        returning: str | None,
-    ) -> DataFrame:
-        """pg ``UPDATE t SET ... FROM from_list WHERE cond`` (⬆ — the
-        reference's UPDATE is single-table, kv/KvQueryExecutor.java:1814).
-
-        One join pipeline: target (tagged with a materialized row id) x
-        from_list under cond computes the new values; a left join back
-        applies them. pg leaves multi-match behavior unspecified — we
-        raise instead (Delta MERGE's ambiguity rule): silent arbitrary
-        row picks are exactly the nondeterminism this engine bans."""
-        meta = self._table(tname)
-        sets: dict[str, str] = {}
-        for part in self._split_defs(sets_sql):
-            sm = re.match(rf"({_IDENT})\s*=\s*(.*)$", part, re.DOTALL)
-            if not sm:
-                raise EngineError(f"bad SET clause: {part[:60]}")
-            sets[sm.group(1).lower()] = preprocess(
-                self._substitute_sequences(sm.group(2).strip())
-            )
-        for c in sets:
-            if meta.column(c).generated:
-                raise EngineError(f"cannot update generated column: {c}")
-        # __tid must be STABLE across the two uses below —
-        # monotonically_increasing_id is partition-dependent, so pin it
-        # with a localCheckpoint (one materialization, same order as the
-        # copy-on-write rewrite this statement performs anyway), which
-        # also counts the target rows
-        target = Observation()
-        t = (
-            self._read(meta)
-            .withColumn("__tid", F.monotonically_increasing_id())
-            .observe(target, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        t.createOrReplaceTempView("__upd_target")
-        new_cols = ", ".join(
-            f"({e}) AS __new_{c}" for c, e in sets.items()
-        )
-        cond = preprocess(cond_sql) if cond_sql else "TRUE"
-        matched = self.spark.sql(
-            f"SELECT {tname}.__tid AS __tid, TRUE AS __hit, {new_cols} "
-            f"FROM __upd_target AS {tname}, {preprocess(from_sql)} "
-            f"WHERE {cond}"
-        )
-        joined = t.join(matched, "__tid", "left").withColumn(
-            "__hit", F.coalesce(F.col("__hit"), F.lit(False))
-        )
-        # the matches are counted on the write; a target row matched
-        # twice appears twice in the left join, so the new table then has
-        # more rows than the target
-        hits = Observation()
-        out = joined.observe(hits, F.count_if("__hit").alias("n")).withColumns(
-            {
-                c: F.when(F.col("__hit"), F.col(f"__new_{c}"))
-                .otherwise(F.col(c))
-                .cast(meta.column(c).spark_type)
-                for c in sets
-            }
-        )
-        gen = {
-            c.name: F.expr(preprocess(c.generated)).cast(c.spark_type)
-            for c in meta.columns
-            if c.generated
-        }
-        if gen:
-            out = out.withColumns(gen)
-        out = out.drop(
-            "__tid", "__hit", *[f"__new_{c}" for c in sets]
-        )
-
-        def ambiguity(n: int) -> str | None:
-            if n == target.get["n"]:
-                return None
-            return (
-                "UPDATE ... FROM matches a target row more than once; "
-                "make the join condition unique (pg leaves this "
-                "unspecified — this engine refuses the nondeterminism)"
-            )
-
-        self._commit(
-            meta, out, append=False, changed={*sets, *gen}, after=ambiguity
-        )
-        if returning is not None:
-            updated = joined.filter(F.col("__hit")).withColumns(
-                {
-                    c: F.col(f"__new_{c}").cast(meta.column(c).spark_type)
-                    for c in sets
-                }
-            )
-            if gen:
-                updated = updated.withColumns(gen)
-            # lazy over the pinned target and the old version's files
+            # pg RETURNING reads the post-update rows; lazy over the old
+            # version's files, which stay until VACUUM
             return self._returning(
-                updated.drop("__tid", "__hit", *[f"__new_{c}" for c in sets]),
-                meta,
-                returning,
+                updated(base.filter("__hit")), meta, returning
             )
         return self._status(f"update {meta.name}", hits.get["n"])
 
     def _delete(self, s: str) -> DataFrame:
-        masked, lits = _mask_literals(s)
-        returning = None
-        rm = re.search(
-            r"\s+RETURNING\s+(.*)$", masked, re.IGNORECASE | re.DOTALL
-        )
-        if rm:
-            returning = _unmask(rm.group(1).strip(), lits)
-            masked = masked[: rm.start()]
-        hm = re.match(
-            rf"DELETE\s+FROM\s+({_IDENT})\s+USING\s+", masked, re.IGNORECASE
-        )
-        if hm:
-            body = masked[hm.end():]
-            wi = self._toplevel_keyword(body, "WHERE")
-            cond_sql = (
-                _unmask(body[wi + len("WHERE"):].strip(), lits)
-                if wi >= 0
-                else None
-            )
-            from_sql = _unmask(
-                (body[:wi] if wi >= 0 else body).strip(), lits
-            )
-            return self._delete_using(
-                hm.group(1).lower(), from_sql, cond_sql, returning
-            )
-        s = _unmask(masked, lits)
+        """``DELETE FROM t [USING from_list] [WHERE cond]``. pg's USING
+        form (⬆ — the reference deletes row by row,
+        kv/KvQueryExecutor.java:2013) is the plain one with the predicate
+        ``EXISTS (SELECT 1 FROM from_list WHERE cond)``: a row goes when
+        any from-list row matches it, pg's rule exactly."""
+        masked, lits, returning = self._split_returning(s)
         m = re.match(
-            rf"DELETE\s+FROM\s+({_IDENT})(?:\s+WHERE\s+(.*))?$",
-            s,
+            rf"DELETE\s+FROM\s+({_IDENT})\b(.*)$", masked,
             re.IGNORECASE | re.DOTALL,
         )
+        if not m:
+            raise EngineError(f"bad DELETE: {s[:80]}")
         meta = self._table(m.group(1).lower())
+        head, cond = m.group(2), "TRUE"
+        wi = self._toplevel_keyword(head, "WHERE")
+        if wi >= 0:
+            head, cond = head[:wi], head[wi + len("WHERE"):].strip()
+        um = re.match(r"\s*USING\s+(.*)$", head, re.IGNORECASE | re.DOTALL)
+        if not cond or (um is None and head.strip()):
+            raise EngineError(f"bad DELETE: {s[:80]}")
+        cond = preprocess(_unmask(cond, lits))
         # aliased so correlated subqueries can reference the target table
         df = self._read(meta).alias(meta.name)
-        hit = F.lit(True)
-        if m.group(2):
-            cond = F.expr(preprocess(m.group(2).strip()))
-            hit = F.coalesce(cond, F.lit(False))
+        if um:
+            using = preprocess(_unmask(um.group(1).strip(), lits))
+            # analysed, never run: a column name that the target and the
+            # from-list share is ambiguous, as in pg (inside EXISTS it
+            # would bind to the from-list)
+            df.createOrReplaceTempView("__dml_target")
+            self.spark.sql(
+                f"SELECT 1 FROM __dml_target AS {meta.name}, {using} "
+                f"WHERE {cond}"
+            )
+            cond = f"EXISTS (SELECT 1 FROM {using} WHERE {cond})"
+        hit = f"coalesce(({cond}), FALSE)"
         # the deleted rows are counted on the write of the kept ones; the
         # filter tests a column, so it stays above the observer even when
         # the predicate folds to a constant (a constant FALSE filter
         # would prune the observer and the count would never arrive)
         hits = Observation()
         kept = (
-            df.withColumn("__hit", hit)
-            .observe(hits, F.count_if("__hit").alias("n"))
-            .filter(~F.col("__hit"))
+            df.selectExpr("*", f"{hit} AS __hit")
+            .observe(hits, F.expr("count_if(__hit) AS n"))
+            .filter("NOT __hit")
             .drop("__hit")
         )
         self._rewrite(meta, kept)
         if returning is not None:
             return self._returning(df.filter(hit), meta, returning)
-        return self._status(f"delete {meta.name}", hits.get["n"])
-
-    def _delete_using(
-        self,
-        tname: str,
-        from_sql: str,
-        cond_sql: str | None,
-        returning: str | None,
-    ) -> DataFrame:
-        """pg ``DELETE FROM t USING from_list WHERE cond`` (⬆): one
-        semi/anti join pair against the joined match set — the set-based
-        form of the reference's row-at-a-time tombstone loop
-        (kv/KvQueryExecutor.java:2013)."""
-        meta = self._table(tname)
-        t = (
-            self._read(meta)
-            .withColumn("__tid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=True)
-        )
-        t.createOrReplaceTempView("__del_target")
-        cond = preprocess(cond_sql) if cond_sql else "TRUE"
-        matched = self.spark.sql(
-            f"SELECT DISTINCT {tname}.__tid AS __tid "
-            f"FROM __del_target AS {tname}, {preprocess(from_sql)} "
-            f"WHERE {cond}"
-        )
-        # the deleted rows are counted on the write of the kept ones, as
-        # in DELETE: the flag comes from the left join below the observer
-        hits = Observation()
-        kept = (
-            t.join(matched.withColumn("__hit", F.lit(True)), "__tid", "left")
-            .withColumn("__hit", F.coalesce(F.col("__hit"), F.lit(False)))
-            .observe(hits, F.count_if("__hit").alias("n"))
-            .filter(~F.col("__hit"))
-            .drop("__tid", "__hit")
-        )
-        self._rewrite(meta, kept)
-        if returning is not None:
-            return self._returning(
-                t.join(matched, "__tid", "semi").drop("__tid"),
-                meta,
-                returning,
-            )
         return self._status(f"delete {meta.name}", hits.get["n"])
 
     _WHEN_RE = re.compile(
@@ -2441,20 +2361,6 @@ class Engine:
                 for c in tcols if c in src_df.columns
             }
 
-        def _sets(body: str) -> dict[str, str]:
-            # body arrives MASKED; split on the masked text (placeholders
-            # carry no commas/quotes), unmask each piece
-            if body.strip() == "*":
-                return _star()
-            out = {}
-            for part in self._split_defs(body):
-                part = _unmask(part, lits)
-                sm = re.match(rf"({_IDENT})\s*=\s*(.*)$", part, re.DOTALL)
-                if not sm:
-                    raise EngineError(f"bad MERGE SET: {part[:60]}")
-                out[sm.group(1).lower()] = preprocess(sm.group(2).strip())
-            return out
-
         # (condition, SETs) per target-side clause, None for DELETE, and
         # (condition, values) per NOT MATCHED [BY TARGET] INSERT clause
         upd: list[tuple[str, dict[str, str] | None]] = []
@@ -2478,10 +2384,9 @@ class Engine:
                 )
                 if not um:
                     raise EngineError(f"bad MERGE action: {act[:60]}")
-                pairs = _sets(um.group(1))
-                for c in pairs:
-                    if c not in tcols:
-                        raise EngineError(f"unknown column in SET: {c}")
+                pairs = _star() if um.group(1).strip() == "*" else (
+                    self._set_list(meta, um.group(1), lits, "bad MERGE SET")
+                )
                 upd.append((cond, pairs))
                 continue
             cond = f"{t_alias}.__t IS NULL AND {s_in}{guard}"
@@ -2513,23 +2418,21 @@ class Engine:
             ins.append((cond, pairs))
 
         inserted = " OR ".join(f"({c})" for c, _ in ins) or "FALSE"
-        # identity columns omitted from every INSERT list draw from their
-        # sequence (same SERIAL semantics as _insert), numbered over the
-        # inserted rows only: the target rows are spread by their key
-        fill = {
-            c.name: f"{meta.name}_{c.name}_seq"
-            for c in meta.columns
-            if c.identity and ins and not any(c.name in p for _, p in ins)
-        }
+        # a column an INSERT list omits gets its fill (identity, DEFAULT,
+        # NULL: same rules as _insert), numbered over the inserted rows
+        # only: the target rows are spread by their key
         spread = ", ".join(
             [inserted] + [f"{t_alias}.{sql_ident(k)}" for k in meta.primary_key]
         )
+        fill, serial = self._fill(meta, [
+            c for c in meta.columns if any(c.name not in p for _, p in ins)
+        ], spread)
 
         def _pick(col: ColumnMeta) -> str:
             old = f"{t_alias}.{sql_ident(col.name)}"
 
             def typed(e: str) -> str:
-                return f"CAST(({e}) AS {col.spark_type})"
+                return "NULL" if e == "NULL" else f"CAST(({e}) AS {col.spark_type})"
 
             kept = [
                 (cnd, typed(p[col.name]) if p and col.name in p else old)
@@ -2537,16 +2440,12 @@ class Engine:
             ]
             while kept and kept[-1][1] == old:
                 kept.pop()
-            if col.name in fill:
-                base = self.catalog.peek(fill[col.name])
-                new = [(inserted, typed(self._serial_ids(base, spread)))]
-            else:
-                new = [
-                    (cnd, typed(p[col.name]) if col.name in p else "NULL")
-                    for cnd, p in ins
-                ]
-                while new and new[-1][1] == "NULL":
-                    new.pop()
+            new = [
+                (cnd, typed(p.get(col.name, fill.get(col.name, "NULL"))))
+                for cnd, p in ins
+            ]
+            while new and new[-1][1] == "NULL":
+                new.pop()
             return "CASE " + " ".join(
                 f"WHEN {w} THEN {v}" for w, v in kept + [(t_in, old)] + new
             ) + f" END AS {sql_ident(col.name)}"
@@ -2576,7 +2475,7 @@ class Engine:
 
         def after(n: int) -> str | None:
             got = seen.get
-            self._reserve(list(fill.values()), got["ins"])
+            self._reserve(serial, got["ins"])
             self._reserve(list(source_serial), got["s"])
             if got["t"] == target_rows:
                 return None
@@ -2639,16 +2538,16 @@ class Engine:
         raised): one row per constraint with its violation count. The
         reference runs this asynchronously
         (kv/jobs/ConstraintViolationCheckerJob.java, 431 LoC of
-        row-at-a-time probing); here the NOT NULL, enum and CHECK counts
-        share one aggregate (the DML commit's row checks) and each key
-        set and FK is one aggregate or anti-join over the table — at
-        100 TB, a handful of scans with partial aggregation, no per-row
-        driver logic.
+        row-at-a-time probing); here the DML commit's own queries run over
+        the table: one aggregate for the NOT NULL, enum and CHECK counts,
+        one for all PRIMARY KEY / UNIQUE sets and one anti-join per FK —
+        at 100 TB, a handful of scans with partial aggregation, no
+        per-row driver logic.
 
-        Violations can exist despite write-time validation after e.g. an
-        ALTER ADD FK on legacy data, a COPY FROM of unvalidated files, or
-        a parent-side DELETE (FKs are checked on child writes only) —
-        exactly the drift the reference's job exists to catch."""
+        Violations can exist despite write-time validation after e.g. a
+        parent-side DELETE (FKs are checked on child writes only) or
+        files written into a version directory behind the engine's back
+        — exactly the drift the reference's job exists to catch."""
         m = re.match(
             rf"VERIFY\s+CONSTRAINTS(?:\s+({_IDENT}))?\s*$", s, re.IGNORECASE
         )
@@ -2661,29 +2560,19 @@ class Engine:
         for name in names:
             meta = self._table(name)
             df = self._read(meta)
-            # NOT NULL, enum and CHECK counts: the DML row checks, one agg
-            checks = self._row_checks(meta)
-            counts = df.agg(
-                *[F.expr(f"count_if({bad})") for *_, bad in checks]
-            ).first() if checks else []
+            # NOT NULL, enum and CHECK counts: the DML row checks, one query
+            checks, counts = self._check_counts(meta, df)
             found = [
-                (name, kind, label, n)
-                for (kind, label, _, _), n in zip(checks, counts)
-                if n
+                (name, kind, label, counts[f"__c{i}"])
+                for i, (kind, label, _, _) in enumerate(checks)
+                if counts[f"__c{i}"]
             ]
             report += [r for r in found if r[1] != "check"]
+            # rows in duplicate keys (NULL keys are distinct): the UNIQUE
+            # query of the DML commit, one for all key sets
             keysets = [list(meta.primary_key)] if meta.primary_key else []
             keysets += [u for u in meta.unique if u != list(meta.primary_key)]
-            for keys in keysets:
-                # rows in duplicate groups; NULL keys are distinct
-                dup = (
-                    df.filter(self._all_set(keys))
-                    .groupBy(*keys)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .agg(F.coalesce(F.sum("count"), F.lit(0)))
-                    .collect()[0][0]
-                )
+            for keys, (dup, _) in zip(keysets, self._violations(df, None, keysets)):
                 if dup:
                     kind = (
                         "primary_key"

@@ -394,11 +394,14 @@ def test_verify_constraints_finds_fk_drift_after_parent_delete(eng):
 
 
 def test_verify_constraints_finds_pk_drift_after_alter_add_pk(eng):
-    # ALTER ADD PRIMARY KEY doesn't validate existing rows (pg would);
-    # VERIFY CONSTRAINTS is the audit that surfaces the drift
+    # ALTER ADD PRIMARY KEY validates the rows there, as pg does; a file
+    # written into the version directory behind the engine's back later
+    # is the drift VERIFY CONSTRAINTS surfaces
     eng.sql("CREATE TABLE t (id INT, v INT)")
-    eng.sql("INSERT INTO t VALUES (1, 10), (1, 11), (2, 20)")
+    eng.sql("INSERT INTO t VALUES (1, 10), (2, 20)")
     eng.sql("ALTER TABLE t ADD PRIMARY KEY (id)")
+    eng.spark.createDataFrame([(1, 11, 3)], "id int, v int, rowid bigint") \
+        .write.mode("append").parquet(eng.catalog.tables["t"].path)
     got = rows(eng.sql("VERIFY CONSTRAINTS t"))
     assert ("t", "primary_key", "id", 2) in got
 
