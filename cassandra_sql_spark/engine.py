@@ -776,12 +776,15 @@ class Engine:
         # sequence functions in scalar selects
         if re.search(r"\b(nextval|currval)\s*\(", s, re.IGNORECASE):
             s = self._substitute_sequences(s)
-        if re.search(r"\browid\b", s, re.IGNORECASE):
+        masked, lits = _mask_literals(s)
+        if re.search(r"\browid\b", masked, re.IGNORECASE):
             # explicit rowid reference -> route rowid-bearing tables to
-            # their raw (hidden-column-included) views
+            # their raw (hidden-column-included) views; string literals
+            # are masked, so a 't' stays a 't'
             for name, meta in self.catalog.tables.items():
                 if any(c.hidden for c in meta.columns):
-                    s = re.sub(rf"\b{name}\b", f"__raw_{name}", s)
+                    masked = re.sub(rf"\b{name}\b", f"__raw_{name}", masked)
+            s = _unmask(masked, lits)
         return self.spark.sql(preprocess(s))
 
     # ----------------------------------------------------------------- DDL
@@ -1660,16 +1663,10 @@ class Engine:
         else:
             src = self.spark.sql(preprocess(self._substitute_sequences(tail)))
             default_values = False
-        gen_cols = {c.name for c in meta.columns if c.generated}
         if default_values:
             cols = []
         elif m.group(3):
-            cols = [c.strip() for c in m.group(3).split(",")]
-            bad = gen_cols & {c.lower() for c in cols}
-            if bad:
-                raise EngineError(
-                    f"cannot insert into generated column: {sorted(bad)[0]}"
-                )
+            cols = self._columns(meta, m.group(3).split(","), "INSERT")
         else:
             given = [c for c in meta.columns if not c.hidden and not c.generated]
             cols = [c.name for c in given]
@@ -1830,12 +1827,6 @@ class Engine:
             raise EngineError(
                 "RETURNING with ON CONFLICT DO UPDATE is not supported"
             )
-        if any(c.generated for c in meta.columns):
-            raise EngineError(
-                "ON CONFLICT DO UPDATE on a table with generated columns "
-                "is not supported (the MERGE rewrite cannot recompute them "
-                "unambiguously); use DO NOTHING + UPDATE"
-            )
         uset = next(
             (u for u in meta.unique
              if sorted(map(str.lower, u)) == sorted(map(str.lower, key))),
@@ -1852,8 +1843,9 @@ class Engine:
         on = " AND ".join(
             f"{meta.name}.{k} = excluded.{k}" for k in key
         )
-        cols = ", ".join(c.name for c in meta.columns)
-        vals = ", ".join(f"excluded.{c.name}" for c in meta.columns)
+        given = [c.name for c in meta.columns if not c.generated]
+        cols = ", ".join(given)
+        vals = ", ".join(f"excluded.{c}" for c in given)
         # pg: "ON CONFLICT DO UPDATE command cannot affect row a second
         # time" — two batch rows sharing a conflict key match one target
         # row twice (key in the table), or both take MERGE's NOT MATCHED
@@ -2082,29 +2074,40 @@ class Engine:
                 return i
         return -1
 
+    @staticmethod
+    def _columns(meta: TableMeta, names: list[str], clause: str) -> list[str]:
+        """The table's column names for the ``names`` of an INSERT column
+        list or a SET list (``clause``), folded as pg folds unquoted
+        identifiers; an unknown or a generated column is refused."""
+        cols = {c.name.lower(): c for c in meta.columns}
+        out = []
+        for n in names:
+            col = cols.get(n.strip().lower())
+            if col is None:
+                raise EngineError(
+                    f"unknown column in {clause}: {n.strip().lower()}"
+                )
+            if col.generated:
+                verb = "insert into" if clause == "INSERT" else "update"
+                raise EngineError(f"cannot {verb} generated column: {col.name}")
+            out.append(col.name)
+        return out
+
     def _set_list(
         self, meta: TableMeta, body: str, lits: list, bad: str
     ) -> dict[str, str]:
         """A literal-masked ``col = expr, ...`` list as column name -> SQL,
         split on the masked text and unmasked piece by piece (``bad``
         prefixes the error for a piece that is no assignment). Names fold
-        to the table's columns, as pg folds unquoted identifiers; an
-        unknown or a generated column is refused."""
-        names = {c.name.lower(): c for c in meta.columns}
+        to the table's columns (``_columns``)."""
         out: dict[str, str] = {}
         for part in self._split_defs(body):
             part = _unmask(part, lits)
             sm = re.match(rf"({_IDENT})\s*=\s*(.*)$", part, re.DOTALL)
             if not sm:
                 raise EngineError(f"{bad}: {part[:60]}")
-            col = names.get(sm.group(1).lower())
-            if col is None:
-                raise EngineError(
-                    f"unknown column in SET: {sm.group(1).lower()}"
-                )
-            if col.generated:
-                raise EngineError(f"cannot update generated column: {col.name}")
-            out[col.name] = preprocess(
+            [col] = self._columns(meta, [sm.group(1)], "SET")
+            out[col] = preprocess(
                 self._substitute_sequences(sm.group(2).strip())
             )
         return out
@@ -2292,6 +2295,7 @@ class Engine:
         copy-on-write semantics), committed through ``_commit`` like an
         UPDATE: the UNIQUE sets and FKs are queried on the merged table
         when the MERGE can insert rows or sets one of their columns.
+        Generated columns are computed from the merged row (``_stored``).
 
         Observed on the projection, in the write's own job: the
         target-side and source-side join rows, the updated rows and the
@@ -2401,9 +2405,12 @@ class Engine:
                 pairs = _star()
             else:
                 names = (
-                    [c.strip().lower() for c in im.group(1).split(",")]
+                    self._columns(meta, im.group(1).split(","), "INSERT")
                     if im.group(1)
-                    else [c.name for c in meta.columns if not c.hidden]
+                    else [
+                        c.name for c in meta.columns
+                        if not c.hidden and not c.generated
+                    ]
                 )
                 exprs = [
                     preprocess(_unmask(e, lits))
@@ -2412,9 +2419,6 @@ class Engine:
                 if len(names) != len(exprs):
                     raise EngineError("MERGE INSERT arity mismatch")
                 pairs = dict(zip(names, exprs))
-            for c in pairs:
-                if c not in tcols:
-                    raise EngineError(f"unknown column in INSERT: {c}")
             ins.append((cond, pairs))
 
         inserted = " OR ".join(f"({c})" for c, _ in ins) or "FALSE"
@@ -2469,7 +2473,8 @@ class Engine:
         ).observe(seen, *map(F.expr, (
             "count_if(__t) AS t", "count_if(__s) AS s",
             "count_if(__hit) AS hit", "count_if(__ins) AS ins",
-        ))).filter("__keep").select(*tcols)
+        ))).filter("__keep")
+        merged = self._stored(meta, merged)
         # listed before the write: an unversioned path gets v1 inside it
         target_rows = self._stored_rows(meta.path)
 

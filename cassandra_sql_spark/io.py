@@ -127,7 +127,3 @@ def register(spark: SparkSession, sf_dir: str, *tables: str) -> None:
     # footer-read/plan-build cost is cached via load()
     for t in tables:
         load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    register(spark, sf_dir, *TABLES)

@@ -21,8 +21,8 @@ Every primitive the strategies share exists once:
   build one SQL expression; word_ngrams / word_shingles /
   hashed_shingles wrap it for a column name.
 - the minhash sketch: minhash_sketch (shingle table + signatures) under
-  the batch pair search, the on-disk index, its incremental probe and
-  the streaming ingest; _banded_keys derives the band keys of all four.
+  the batch pair search, the on-disk index and its incremental probe;
+  _banded_keys derives the band keys of all three.
 - connected components: dup_clusters (large-star/small-star, run to its
   fixed point) under every pairs -> clusters step.
 
@@ -795,8 +795,8 @@ def minhash_sketch(
     """(sh, sig): the checkpointed (_id, _s) hashed-shingle table of
     ``df`` and its (_id, _sig) minhash signatures — the one
     shingle/signature derivation behind the batch pair search, the
-    on-disk index, its incremental probe and the streaming ingest, so
-    index, probe and batch always agree.
+    on-disk index and its incremental probe, so index, probe and batch
+    always agree.
 
     ``sh`` is materialized once because it feeds the signature AND the
     exact-Jaccard verify (and the index's shingle file): unmaterialized,

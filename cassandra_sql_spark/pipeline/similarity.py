@@ -658,7 +658,7 @@ def kmeans_exact(
     Distributed cost per iteration: one map-only assignment scan plus a
     (k x dim)-row exact integer shuffle; driver state is k*dim ints.
     A DuckDB oracle replays the whole loop bit-for-bit (the unrolled
-    CTE chain in queries/pipeline_r6._KMEANS_ORACLE).
+    CTE chain in queries/embeddings._KMEANS_ORACLE).
     """
     # One quantization pass materialized once (round 12): the previous
     # form built the quantized frame TWICE (assignment + training) and
@@ -1115,57 +1115,6 @@ def topk_ivfpq_pruned(
     )
 
 
-def write_lsh_partitioned(
-    emb: DataFrame,
-    path: str,
-    planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the embedding corpus hive-partitioned by LSH bucket —
-    the ANN index build step for the 100 TB layout.
-
-    Each of the 2^planes buckets becomes a partition directory; a probe
-    then reads ONLY the query's bucket via partition pruning (asserted in
-    tests/test_plans.py: the scan's partition filters carry _bucket and
-    the other partitions are never listed). Bucket assignment is the same
-    deterministic hyperplane expression as lsh_bucket, so index and query
-    always agree; rebuilding is a map-only full scan."""
-    emb.withColumn("_bucket", lsh_bucket(vec_col, planes)).write.mode(
-        "overwrite"
-    ).partitionBy("_bucket").parquet(path)
-
-
-def topk_lsh_pruned(
-    spark,
-    path: str,
-    query_vec: list,
-    k: int = 10,
-    planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a write_lsh_partitioned index: compute the query's bucket
-    driver-side (constant fold of the same plane expression), filter the
-    partition column with a LITERAL so Catalyst prunes to one directory,
-    then exact-score only that bucket."""
-    qdf = values_frame(
-        spark, [([float(x) for x in query_vec],)],
-        f"{sql_ident(vec_col)} array<double>",
-    )
-    qbucket = qdf.select(lsh_bucket(vec_col, planes).alias("b")).first()["b"]
-    bucketed = nonzero(
-        spark.read.parquet(path).filter(F.col("_bucket") == qbucket),
-        vec_col,
-    )
-    qarr = _flit_array(query_vec)
-    scored = bucketed.select(
-        id_col,
-        cosine(F.col(vec_col), qarr).cast("decimal(18,6)").cast("double").alias("score"),
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
-
-
 def _lsh_scored(
     emb: DataFrame,
     query_id: int,
@@ -1220,9 +1169,9 @@ def topk_lsh(
     just across one hyperplane is recovered for (multiprobe+1)/2^planes
     of the data scanned instead of a full pass.
 
-    At 100 TB the bucketed table is written partitioned by bucket
-    (write_lsh_partitioned) so each probed bucket is a pruned
-    single-partition scan — multiprobe turns into an IN-list partition
+    At 100 TB the bucketed table is written partitioned by bucket, so
+    each probed bucket is a pruned single-partition scan (pinned in
+    tests/test_plans.py) — multiprobe turns into an IN-list partition
     filter, still never a full pass.
     """
     return (
@@ -1246,8 +1195,8 @@ def range_search_lsh(
     plus `multiprobe` Hamming-1 neighbors — the radius-query complement
     of topk_lsh (same bucketing, same pruning, no k cut). The filter
     applies to the DECIMAL(18,6)-hopped score so the >= boundary is
-    engine-exact. At rest the probe is a pruned partition IN-list
-    (write_lsh_partitioned), identical to the top-k path."""
+    engine-exact. At rest the probe is a pruned partition IN-list,
+    identical to the top-k path."""
     return (
         _lsh_scored(emb, query_id, planes, multiprobe, id_col, vec_col)
         .filter(F.col("score") >= threshold)

@@ -1,5 +1,6 @@
 """Joins — all five reference types plus semi/anti and multi-way
-(SURVEY §2.3; reference kv/KvJoinExecutor.java:113-316).
+(SURVEY §2.3; reference kv/KvJoinExecutor.java:113-316): ``join_*`` and
+``lateral_*``.
 
 The reference builds an in-heap hash table on the left and probes with the
 right, single-key equi-joins only. Here the join is declared and Catalyst
@@ -153,5 +154,22 @@ QUERIES: dict[str, Q] = {
         LIMIT 15
         """,
         ("orders", "customer"),
+    ),
+    # pg LATERAL join (⬆): top-2 orders per customer via a correlated
+    # LATERAL subquery with LIMIT — Catalyst decorrelates it into a
+    # ranked window join, not a per-row nested loop; both engines parse
+    # the comma-LATERAL spelling verbatim.
+    "lateral_topn_per_key": sql_q(
+        """
+        SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
+        FROM customer c, LATERAL (
+          SELECT o_orderkey, o_totalprice FROM orders o
+          WHERE o.o_custkey = c.c_custkey
+          ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
+        ) t
+        WHERE c.c_custkey <= 50
+        ORDER BY c.c_custkey, t.o_orderkey
+        """,
+        ("customer", "orders"),
     ),
 }

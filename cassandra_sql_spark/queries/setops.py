@@ -1,4 +1,4 @@
-"""Set operations (SURVEY §2.6; reference kv/UnionExecutor.java).
+"""Set operations (SURVEY §2.6; reference kv/UnionExecutor.java): ``setop_*``.
 
 The reference concatenates per-SELECT results and dedups UNION through an
 in-heap LinkedHashSet of canonical row strings (UnionExecutor.java:130-135,
@@ -10,6 +10,7 @@ lacks (SURVEY §2.6).
 from __future__ import annotations
 
 from cassandra_sql_spark.queries.base import Q, sql_q
+
 
 QUERIES: dict[str, Q] = {
     "setop_union_all": sql_q(
@@ -61,5 +62,23 @@ QUERIES: dict[str, Q] = {
         SELECT c_nationkey AS nk FROM customer WHERE c_acctbal < -900
         """,
         ("nation", "customer"),
+    ),
+    # INTERSECT ALL / EXCEPT ALL (bag semantics — upgrade over reference).
+    "setop_intersect_all": sql_q(
+        """
+        SELECT l_suppkey AS k FROM lineitem WHERE l_returnflag = 'R'
+        INTERSECT ALL
+        SELECT l_suppkey AS k FROM lineitem WHERE l_linestatus = 'O'
+        """,
+        ("lineitem",),
+    ),
+    "setop_except_all": sql_q(
+        """
+        SELECT l_linenumber AS k FROM lineitem WHERE l_orderkey < 500
+        EXCEPT ALL
+        SELECT l_linenumber AS k FROM lineitem
+        WHERE l_orderkey < 500 AND l_returnflag = 'R'
+        """,
+        ("lineitem",),
     ),
 }

@@ -1,18 +1,28 @@
-"""Registry entries for Structured Streaming operators.
+"""Structured Streaming operators (``stream_*``).
 
 The windowed aggregation drains the file stream with Trigger.AvailableNow
 and returns the sink contents — which must equal the batch GROUP BY
 date_trunc('hour') the DuckDB oracle runs. Sessionization (stateful,
-applyInPandasWithState) is oracle-checked since round 8: the drain's
-emission set is deterministic (see the entry's comment).
+applyInPandasWithState) is oracle-checked: the drain's emission set
+is deterministic (see the entry's comment).
 """
 
 from __future__ import annotations
 
 import tempfile
 
-from cassandra_sql_spark.queries.base import Q
+from cassandra_sql_spark.queries.base import CUSUM_CHANGEPOINT, CUSUM_TAIL, Q
 from cassandra_sql_spark.streaming import events as ev
+
+
+def _drain(spark, sf_dir, table, build, mode="append"):
+    """Drain ``build`` over the event-log file stream into the memory
+    table ``table`` (Trigger.AvailableNow, a fresh checkpoint) and
+    return that table."""
+    ckpt = tempfile.mkdtemp(prefix=f"spark-graft-{table}-")
+    stream = ev.read_events_stream(spark, sf_dir)
+    ev.run_available_now(build(stream), table, ckpt, mode=mode)
+    return spark.table(table)
 
 
 def _windowed(spark, sf_dir):
@@ -21,27 +31,21 @@ def _windowed(spark, sf_dir):
 
 
 def _sessions(spark, sf_dir):
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-sess-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    sess = ev.sessionize(stream, gap_minutes=30, watermark="1 minute")
-    ev.run_available_now(sess, "sessions_q", ckpt, mode="append")
-    return spark.table("sessions_q")
+    return _drain(
+        spark, sf_dir, "sessions_q",
+        lambda s: ev.sessionize(s, gap_minutes=30, watermark="1 minute"),
+    )
 
 
 def _attribution(spark, sf_dir):
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-attr-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    joined = ev.attribution_join(stream, window_minutes=30)
-    ev.run_available_now(joined, "attribution_q", ckpt, mode="append")
-    return spark.table("attribution_q")
+    return _drain(
+        spark, sf_dir, "attribution_q",
+        lambda s: ev.attribution_join(s, window_minutes=30),
+    )
 
 
 def _dedup_stream(spark, sf_dir):
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-sdedup-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    deduped = ev.dedup_within_watermark(stream)
-    ev.run_available_now(deduped, "stream_dedup_q", ckpt, mode="append")
-    return spark.table("stream_dedup_q")
+    return _drain(spark, sf_dir, "stream_dedup_q", ev.dedup_within_watermark)
 
 
 def _attribution_left(spark, sf_dir):
@@ -55,10 +59,7 @@ def _attribution_left(spark, sf_dir):
 
     from cassandra_sql_spark.io import load
 
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-attrleft-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    joined = ev.attribution_join_left(stream)
-    ev.run_available_now(joined, "attr_left_q", ckpt, mode="append")
+    joined = _drain(spark, sf_dir, "attr_left_q", ev.attribution_join_left)
     batch = load(spark, sf_dir, "events")
     cutoff = (
         batch.groupBy()
@@ -71,29 +72,24 @@ def _attribution_left(spark, sf_dir):
         .select(F.col("m") - F.expr("INTERVAL 151 MINUTES"))
         .collect()[0][0]
     )
-    return spark.table("attr_left_q").filter(F.col("click_ts") < F.lit(cutoff))
+    return joined.filter(F.col("click_ts") < F.lit(cutoff))
 
 
 def _ohlc(spark, sf_dir):
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-ohlc-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    bars = ev.ohlc_stream(stream)
     # complete mode: every bar is emitted at drain end (append would
     # hold back days younger than the final watermark)
-    ev.run_available_now(bars, "ohlc_q", ckpt, mode="complete")
-    return spark.table("ohlc_q")
+    return _drain(spark, sf_dir, "ohlc_q", ev.ohlc_stream, "complete")
 
 
 def _session_window(spark, sf_dir):
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-sesswin-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    agg = ev.session_window_agg(stream, gap="30 minutes")
     # complete mode: every session is emitted at drain end regardless of
     # the final watermark (append would hold back sessions younger than
     # watermark+gap — the same closed-region subtlety _attribution_left
     # handles; complete sidesteps it and matches the batch oracle exactly)
-    ev.run_available_now(agg, "session_window_q", ckpt, mode="complete")
-    return spark.table("session_window_q")
+    return _drain(
+        spark, sf_dir, "session_window_q",
+        lambda s: ev.session_window_agg(s, gap="30 minutes"), "complete",
+    )
 
 
 def _static_enrich(spark, sf_dir):
@@ -109,20 +105,20 @@ def _benford_stream(spark, sf_dir):
     complete-mode state, AvailableNow drain."""
     import pyspark.sql.functions as F
 
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-benford-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    d1 = stream.filter(F.col("value") > 0).select(
-        F.substring(
-            F.floor(F.col("value") * 100 + 0.5).cast("long").cast("string"),
-            1,
-            1,
+
+    def digits(stream):
+        d1 = stream.filter(F.col("value") > 0).select(
+            F.substring(
+                F.floor(F.col("value") * 100 + 0.5).cast("long").cast("string"),
+                1,
+                1,
+            )
+            .cast("long")
+            .alias("d1")
         )
-        .cast("long")
-        .alias("d1")
-    )
-    agg = d1.groupBy("d1").agg(F.count(F.lit(1)).alias("n"))
-    ev.run_available_now(agg, "benford_stream_q", ckpt, mode="complete")
-    return spark.table("benford_stream_q").select(
+        return d1.groupBy("d1").agg(F.count(F.lit(1)).alias("n"))
+
+    return _drain(spark, sf_dir, "benford_stream_q", digits, "complete").select(
         "d1", F.col("n").cast("long").alias("n")
     )
 
@@ -136,10 +132,10 @@ def _countmin_stream(spark, sf_dir):
     from cassandra_sql_spark.io import load
     from cassandra_sql_spark.pipeline import sketches
 
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-cm-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    grid = ev.countmin_stream(stream, "user_id")
-    ev.run_available_now(grid, "cm_grid_q", ckpt, mode="complete")
+    grid = _drain(
+        spark, sf_dir, "cm_grid_q",
+        lambda s: ev.countmin_stream(s, "user_id"), "complete",
+    )
     batch = load(spark, sf_dir, "events")
     exact = (
         batch.groupBy("user_id").count()
@@ -150,7 +146,7 @@ def _countmin_stream(spark, sf_dir):
         .alias("_slack")
     )
     return (
-        sketches.countmin_estimate(spark.table("cm_grid_q"), exact, "user_id")
+        sketches.countmin_estimate(grid, exact, "user_id")
         .crossJoin(slack)
         .select(
             "user_id",
@@ -173,71 +169,17 @@ def _cusum_stream(spark, sf_dir):
     series_cusum_changepoint SQL verbatim."""
     import pyspark.sql.functions as F
 
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-cusum-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    daily = (
-        stream.filter(F.col("ts").isNotNull())
+    _drain(
+        spark, sf_dir, "cusum_days_q",
+        lambda s: s.filter(F.col("ts").isNotNull())
         .groupBy(F.col("event_type"), F.to_date("ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    ev.run_available_now(daily, "cusum_days_q", ckpt, mode="complete")
-    spark.table("cusum_days_q").createOrReplaceTempView("cusum_days_v")
+        .agg(F.count(F.lit(1)).alias("x")),
+        "complete",
+    ).createOrReplaceTempView("cusum_days_v")
     return spark.sql(
-        """
-        WITH daily AS (
-          SELECT event_type, d, CAST(x AS BIGINT) AS x FROM cusum_days_v
-        ), tot AS (
-          SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx
-          FROM daily GROUP BY event_type
-        ), cus AS (
-          SELECT daily.event_type, d,
-                 SUM(tot.n * x - tot.sx) OVER (
-                     PARTITION BY daily.event_type ORDER BY d
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS c_scaled,
-                 tot.n AS n
-          FROM daily JOIN tot ON daily.event_type = tot.event_type
-        ), ranked AS (
-          SELECT event_type, d, c_scaled, n,
-                 ROW_NUMBER() OVER (PARTITION BY event_type
-                                    ORDER BY ABS(c_scaled) DESC, d) AS rk
-          FROM cus
-        )
-        SELECT event_type, d AS changepoint_day,
-               CAST(ABS(c_scaled) AS DOUBLE) / CAST(n AS DOUBLE)
-                 AS max_cusum
-        FROM ranked WHERE rk = 1 ORDER BY event_type
-        """
+        "WITH daily AS (SELECT event_type, d, CAST(x AS BIGINT) AS x"
+        " FROM cusum_days_v), " + CUSUM_TAIL
     )
-
-
-_CUSUM_BATCH_ORACLE = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(COUNT(*) AS BIGINT) AS x
-  FROM events WHERE ts IS NOT NULL
-  GROUP BY event_type, CAST(ts AS DATE)
-), tot AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, SUM(x) AS sx
-  FROM daily GROUP BY event_type
-), cus AS (
-  SELECT daily.event_type, d,
-         SUM(tot.n * x - tot.sx) OVER (
-             PARTITION BY daily.event_type ORDER BY d
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS c_scaled,
-         tot.n AS n
-  FROM daily JOIN tot ON daily.event_type = tot.event_type
-), ranked AS (
-  SELECT event_type, d, c_scaled, n,
-         ROW_NUMBER() OVER (PARTITION BY event_type
-                            ORDER BY ABS(c_scaled) DESC, d) AS rk
-  FROM cus
-)
-SELECT event_type, d AS changepoint_day,
-       CAST(ABS(c_scaled) AS DOUBLE) / CAST(n AS DOUBLE) AS max_cusum
-FROM ranked WHERE rk = 1 ORDER BY event_type
-"""
 
 
 def _distinct_stream(spark, sf_dir):
@@ -253,18 +195,17 @@ def _distinct_stream(spark, sf_dir):
 
     from cassandra_sql_spark.io import load
 
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-sdistinct-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    agg = stream.groupBy().agg(
-        F.approx_count_distinct("user_id", 0.02).alias("apx")
+    apx = _drain(
+        spark, sf_dir, "distinct_stream_q",
+        lambda s: s.groupBy().agg(
+            F.approx_count_distinct("user_id", 0.02).alias("apx")
+        ),
+        "complete",
     )
-    ev.run_available_now(agg, "distinct_stream_q", ckpt, mode="complete")
     exact = load(spark, sf_dir, "events").agg(
         F.countDistinct("user_id").cast("long").alias("exact_users")
     )
-    return exact.crossJoin(
-        F.broadcast(spark.table("distinct_stream_q"))
-    ).select(
+    return exact.crossJoin(F.broadcast(apx)).select(
         "exact_users",
         F.when(
             F.abs(F.col("apx") - F.col("exact_users"))
@@ -276,10 +217,89 @@ def _distinct_stream(spark, sf_dir):
     )
 
 
+def _debounce_counts(spark, sf_dir):
+    import pyspark.sql.functions as F
+
+    return (
+        _drain(
+            spark, sf_dir, "debounce_q",
+            lambda s: ev.debounce(s, gap_minutes=5),
+        )
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
+        .orderBy("event_type")
+    )
+
+
+# Streaming telemetry debounce (stateful twin of event_debounce_audit):
+# keep an event iff the previous RAW (user, type) event is > 5 min
+# older. The kernel decides each event IMMEDIATELY (no window-closure
+# caveat, unlike sessionize), so the AvailableNow drain's kept-counts
+# equal the batch LAG rule exactly; state is one int64 per (user,
+# type), bounded by the key domain at any event volume. NULL ts/key
+# rows identify no stream and are excluded on both sides.
+def _markov_counts(spark, sf_dir):
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("src")
+    return (
+        _drain(spark, sf_dir, "markov_q", ev.markov_transitions)
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .withColumn(
+            "p",
+            (
+                F.floor(
+                    F.col("n").cast("double")
+                    / F.sum("n").over(w)
+                    * 1000000
+                    + 0.5
+                ).cast("bigint")
+            ).cast("double")
+            / 1000000,
+        )
+        .orderBy("src", "dst")
+    )
+
+
+# Streaming new-vs-returning daily counts (stateful twin of the batch
+# event_new_vs_returning first-seen window): state per user is two
+# int32 days (first seen + emission high-water mark), each active
+# user-day emits exactly once with is_new = (day == first seen), so
+# the AvailableNow drain's daily rollup equals the batch MIN(day)
+# OVER (PARTITION BY user) rule exactly. Same 30-day cut and share
+# arithmetic as the batch entry.
+def _new_returning_counts(spark, sf_dir):
+    import pyspark.sql.functions as F
+
+    return (
+        _drain(spark, sf_dir, "firstseen_q", ev.first_seen_days)
+        .groupBy("day")
+        .agg(
+            F.sum(F.col("is_new")).cast("long").alias("new_users"),
+            F.sum(1 - F.col("is_new")).cast("long").alias(
+                "returning_users"
+            ),
+            (
+                F.floor(
+                    F.sum(1 - F.col("is_new")).cast("double")
+                    / F.count(F.lit(1))
+                    * 1000000
+                    + 0.5
+                ).cast("bigint")
+                / 1000000
+            ).cast("double").alias("returning_share"),
+        )
+        .orderBy(F.col("day").desc())
+        .limit(30)
+    )
+
+
 QUERIES: dict[str, Q] = {
     # Streaming CUSUM changepoint (drift monitor ON the stream):
     # day-count state bounded by types x calendar, drain == batch CUSUM.
-    "stream_cusum_changepoint": Q(_cusum_stream, _CUSUM_BATCH_ORACLE),
+    "stream_cusum_changepoint": Q(_cusum_stream, CUSUM_CHANGEPOINT),
     # Streaming distinct-cardinality bound (one HLL sketch of state).
     "stream_distinct_users_bound": Q(
         _distinct_stream,
@@ -523,70 +543,16 @@ QUERIES: dict[str, Q] = {
         ) u ON e.user_id = u.user_id
         """,
     ),
-}
-
-
-def _debounce_counts(spark, sf_dir):
-    import pyspark.sql.functions as F
-
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-deb-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    kept = ev.debounce(stream, gap_minutes=5)
-    ev.run_available_now(kept, "debounce_q", ckpt, mode="append")
-    return (
-        spark.table("debounce_q")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_kept"))
-        .orderBy("event_type")
-    )
-
-
-# Streaming telemetry debounce (stateful twin of event_debounce_audit):
-# keep an event iff the previous RAW (user, type) event is > 5 min
-# older. The kernel decides each event IMMEDIATELY (no window-closure
-# caveat, unlike sessionize), so the AvailableNow drain's kept-counts
-# equal the batch LAG rule exactly; state is one int64 per (user,
-# type), bounded by the key domain at any event volume. NULL ts/key
-# rows identify no stream and are excluded on both sides.
-def _markov_counts(spark, sf_dir):
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-mkv-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    hops = ev.markov_transitions(stream)
-    ev.run_available_now(hops, "markov_q", ckpt, mode="append")
-    w = Window.partitionBy("src")
-    return (
-        spark.table("markov_q")
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .withColumn(
-            "p",
-            (
-                F.floor(
-                    F.col("n").cast("double")
-                    / F.sum("n").over(w)
-                    * 1000000
-                    + 0.5
-                ).cast("bigint")
-            ).cast("double")
-            / 1000000,
-        )
-        .orderBy("src", "dst")
-    )
-
-
-# Streaming Markov transition counts (stateful twin of
-# event_markov_transitions, minus that entry's NULL-user tolerance —
-# stream state needs a real key): state per user is the last (ts,
-# event_id, type) triple, transitions emit immediately (no
-# window-closure caveat), so the AvailableNow drain equals the batch
-# LEAD pairs exactly; the (src, dst) rollup and the 1e-6-grid row
-# probability are the same arithmetic as the batch entry.
-QUERIES["stream_markov_transitions"] = Q(
-    _markov_counts,
-    """
+    # Streaming Markov transition counts (stateful twin of
+    # event_markov_transitions, minus that entry's NULL-user tolerance —
+    # stream state needs a real key): state per user is the last (ts,
+    # event_id, type) triple, transitions emit immediately (no
+    # window-closure caveat), so the AvailableNow drain equals the batch
+    # LEAD pairs exactly; the (src, dst) rollup and the 1e-6-grid row
+    # probability are the same arithmetic as the batch entry.
+    "stream_markov_transitions": Q(
+        _markov_counts,
+        """
     WITH seq AS (
       SELECT event_type AS src,
              LEAD(event_type) OVER (
@@ -605,11 +571,10 @@ QUERIES["stream_markov_transitions"] = Q(
     GROUP BY src, dst
     ORDER BY src, dst
     """,
-)
-
-QUERIES["stream_debounce_counts"] = Q(
-    _debounce_counts,
-    """
+    ),
+    "stream_debounce_counts": Q(
+        _debounce_counts,
+        """
     WITH lagged AS (
       SELECT event_type, ts,
              LAG(ts) OVER (PARTITION BY user_id, event_type
@@ -624,49 +589,10 @@ QUERIES["stream_debounce_counts"] = Q(
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
     FROM lagged GROUP BY event_type ORDER BY event_type
     """,
-)
-
-
-# Streaming new-vs-returning daily counts (stateful twin of the batch
-# event_new_vs_returning first-seen window): state per user is two
-# int32 days (first seen + emission high-water mark), each active
-# user-day emits exactly once with is_new = (day == first seen), so
-# the AvailableNow drain's daily rollup equals the batch MIN(day)
-# OVER (PARTITION BY user) rule exactly. Same 30-day cut and share
-# arithmetic as the batch entry.
-def _new_returning_counts(spark, sf_dir):
-    import pyspark.sql.functions as F
-
-    ckpt = tempfile.mkdtemp(prefix="spark-graft-nvr-")
-    stream = ev.read_events_stream(spark, sf_dir)
-    tagged = ev.first_seen_days(stream)
-    ev.run_available_now(tagged, "firstseen_q", ckpt, mode="append")
-    return (
-        spark.table("firstseen_q")
-        .groupBy("day")
-        .agg(
-            F.sum(F.col("is_new")).cast("long").alias("new_users"),
-            F.sum(1 - F.col("is_new")).cast("long").alias(
-                "returning_users"
-            ),
-            (
-                F.floor(
-                    F.sum(1 - F.col("is_new")).cast("double")
-                    / F.count(F.lit(1))
-                    * 1000000
-                    + 0.5
-                ).cast("bigint")
-                / 1000000
-            ).cast("double").alias("returning_share"),
-        )
-        .orderBy(F.col("day").desc())
-        .limit(30)
-    )
-
-
-QUERIES["stream_new_users_daily"] = Q(
-    _new_returning_counts,
-    """
+    ),
+    "stream_new_users_daily": Q(
+        _new_returning_counts,
+        """
     WITH act AS (
       SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
       FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
@@ -687,4 +613,5 @@ QUERIES["stream_new_users_daily"] = Q(
     FROM tagged GROUP BY day
     ORDER BY day DESC LIMIT 30
     """,
-)
+    ),
+}

@@ -1,5 +1,5 @@
 """Subqueries (SURVEY §2.7; reference SubqueryExecutor.java,
-CorrelatedSubqueryExecutor.java, SelectListSubqueryExecutor.java).
+CorrelatedSubqueryExecutor.java, SelectListSubqueryExecutor.java): ``subq_*`` and ``recursive_cte``.
 
 The reference executes subqueries eagerly and splices literal results back
 into the outer SQL string (IN-lists, TRUE/FALSE for EXISTS, per-outer-row
@@ -12,7 +12,8 @@ left join. CTEs are included although the reference lacks them
 
 from __future__ import annotations
 
-from cassandra_sql_spark.queries.base import Q, davg, dsum, sql_q
+from cassandra_sql_spark.queries.base import Q, davg, dsum, pg_q, sql_q
+
 
 QUERIES: dict[str, Q] = {
     "subq_in": sql_q(
@@ -119,5 +120,46 @@ QUERIES: dict[str, Q] = {
         )
         """,
         ("customer", "orders"),
+    ),
+    # Quantified comparison subqueries: Spark side runs THROUGH the
+    # preprocessor (`> ALL` -> scalar MAX subquery, `< ANY` -> scalar
+    # MAX subquery, `= ANY` -> IN); DuckDB executes the native
+    # quantified spelling. Fixture subqueries are non-empty and
+    # NULL-free, where the rewrite is exact (divergence on empty/NULL
+    # sets documented at `_rewrite_quantified`).
+    "subq_quantified": pg_q(
+        """
+        SELECT c_custkey, c_acctbal
+        FROM customer
+        WHERE c_acctbal > ALL (
+                SELECT s_acctbal FROM supplier WHERE s_nationkey = 3
+              )
+          AND c_nationkey = ANY (
+                SELECT n_nationkey FROM nation WHERE n_regionkey <= 2
+              )
+        """,
+        ("customer", "supplier", "nation"),
+        oracle="""
+        SELECT c_custkey, c_acctbal
+        FROM customer
+        WHERE c_acctbal > ALL (
+                SELECT s_acctbal FROM supplier WHERE s_nationkey = 3
+              )
+          AND c_nationkey = ANY (
+                SELECT n_nationkey FROM nation WHERE n_regionkey <= 2
+              )
+        """,
+    ),
+    # Recursive CTE (absent in the reference; Spark 4 + DuckDB both run it).
+    "recursive_cte": sql_q(
+        """
+        WITH RECURSIVE seq(n) AS (
+          SELECT 1
+          UNION ALL
+          SELECT n + 1 FROM seq WHERE n < 10
+        )
+        SELECT n, n * n AS sq FROM seq
+        """,
+        (),
     ),
 }

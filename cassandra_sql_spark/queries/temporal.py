@@ -1,7 +1,9 @@
-"""Registry entries for the temporal operators (as-of join, range join).
+"""Temporal joins and intervals: as-of joins (``asof_*``), the range
+join (``range_join_events``), slowly-changing-dimension intervals
+(``scd2_*``) and hypertable rollups (``hypertable_*``).
 
-DuckDB has both as native joins (ASOF JOIN, inequality join) — ideal
-oracles for our composition-based Spark implementations.
+DuckDB has as-of and inequality joins natively, the oracles for our
+composition-based Spark implementations.
 """
 
 from __future__ import annotations
@@ -10,7 +12,7 @@ from pyspark.sql import functions as F
 
 from cassandra_sql_spark.io import load
 from cassandra_sql_spark.operators.temporal import asof_join, range_join_within
-from cassandra_sql_spark.queries.base import Q, df_q
+from cassandra_sql_spark.queries.base import Q, df_q, sql_q
 
 
 def _asof(spark, sf):
@@ -51,6 +53,49 @@ def _range(spark, sf):
 
 
 QUERIES: dict[str, Q] = {
+    # Hypertable-style multi-granularity time rollup: one pass produces
+    # day, month, and grand-total aggregates via GROUPING SETS over time
+    # buckets (the continuous-aggregate shape; at scale a single expand +
+    # one shuffle instead of three scans).
+    "hypertable_rollup": sql_q(
+        """
+        SELECT DATE_TRUNC('month', o_orderdate) AS month,
+               DATE_TRUNC('day', o_orderdate) AS day,
+               GROUPING(DATE_TRUNC('day', o_orderdate)) AS g_day,
+               COUNT(*) AS n,
+               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+                 / 100 AS revenue
+        FROM orders
+        WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+          AND o_orderdate < TIMESTAMP '1997-04-01 00:00:00'
+        GROUP BY GROUPING SETS (
+          (DATE_TRUNC('month', o_orderdate), DATE_TRUNC('day', o_orderdate)),
+          (DATE_TRUNC('month', o_orderdate)),
+          ()
+        )
+        """,
+        ("orders",),
+        oracle="""
+        SELECT CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS month,
+               CAST(DATE_TRUNC('day', o_orderdate) AS TIMESTAMP) AS day,
+               GROUPING(DATE_TRUNC('day', o_orderdate)) AS g_day,
+               COUNT(*) AS n,
+               CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+                 / 100 AS revenue
+        FROM orders
+        WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+          AND o_orderdate < TIMESTAMP '1997-04-01 00:00:00'
+        GROUP BY GROUPING SETS (
+          (DATE_TRUNC('month', o_orderdate), DATE_TRUNC('day', o_orderdate)),
+          (DATE_TRUNC('month', o_orderdate)),
+          ()
+        )
+        -- Spark emits NO rows for grouping sets over empty input where
+        -- pg/DuckDB emit a zero grand-total () row; the engine contract
+        -- is Spark's behavior, so the oracle drops that row
+        HAVING COUNT(*) > 0
+        """,
+    ),
     # Backward as-of join: most recent purchase at or before each click.
     "asof_join_purchases": df_q(
         _asof,
@@ -66,113 +111,6 @@ QUERIES: dict[str, Q] = {
                p.pts AS purchase_ts, p.value AS purchase_value
         FROM c ASOF LEFT JOIN p
           ON c.user_id = p.user_id AND p.pts <= c.ts
-        """,
-    ),
-    # Batch gap-based sessionization (30-min inactivity gap): lag ->
-    # new-session flag -> running sum -> per-session rollup. The exact
-    # batch complement of the rows-only streaming applyInPandasWithState
-    # sessionizer; one shuffle on user_id, window + agg share it.
-    # Batch complement of streaming/events.anomalies (same prior-window
-    # z-score semantics, expressed as running window aggregates — the
-    # cross-engine-checkable form of the stateful operator; the Welford
-    # fold in the streaming path computes the identical prior-statistics
-    # sequence). The z-score lands as DECIMAL(18,4) so the comparison is
-    # immune to var_samp's last-ulp differences between engines; the
-    # >3 cut runs on the raw value in both.
-    "event_anomaly_batch": df_q(
-        lambda spark, sf: (
-            lambda _: spark.sql(
-                """
-                WITH stats AS (
-                  SELECT user_id, ts, event_id, value,
-                         COUNT(value) OVER wprev AS n_prev,
-                         AVG(value) OVER wprev AS mean_prev,
-                         VAR_SAMP(value) OVER wprev AS var_prev
-                  FROM events_anom
-                  WHERE value IS NOT NULL
-                  WINDOW wprev AS (PARTITION BY user_id
-                    ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                )
-                SELECT user_id, ts, value,
-                       CAST(CAST((value - mean_prev) / SQRT(var_prev)
-                            AS DECIMAL(18,4)) AS DOUBLE) AS zscore
-                FROM stats
-                WHERE n_prev >= 10 AND var_prev > 0
-                  AND ABS((value - mean_prev) / SQRT(var_prev)) > 3.0
-                """
-            )
-        )(
-            load(spark, sf, "events").createOrReplaceTempView("events_anom")
-        ),
-        ("events",),
-        oracle="""
-                WITH stats AS (
-                  SELECT user_id, ts, event_id, value,
-                         COUNT(value) OVER wprev AS n_prev,
-                         AVG(value) OVER wprev AS mean_prev,
-                         VAR_SAMP(value) OVER wprev AS var_prev
-                  FROM events
-                  WHERE value IS NOT NULL
-                  WINDOW wprev AS (PARTITION BY user_id
-                    ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                )
-                SELECT user_id, ts, value,
-                       CAST(CAST((value - mean_prev) / SQRT(var_prev)
-                            AS DECIMAL(18,4)) AS DOUBLE) AS zscore
-                FROM stats
-                WHERE n_prev >= 10 AND var_prev > 0
-                  AND ABS((value - mean_prev) / SQRT(var_prev)) > 3.0
-        """,
-    ),
-    "event_sessionize_batch": df_q(
-        lambda spark, sf: (
-            lambda ev: spark.sql(
-                """
-                WITH flagged AS (
-                  SELECT user_id, ts, event_id,
-                         CASE WHEN LAG(ts) OVER w IS NULL
-                                OR ts - LAG(ts) OVER w > INTERVAL '30' MINUTE
-                              THEN 1 ELSE 0 END AS new_sess
-                  FROM events_sess
-                  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-                ), assigned AS (
-                  SELECT user_id, ts,
-                         SUM(new_sess) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_no
-                  FROM flagged
-                )
-                SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-                       CAST(COUNT(*) AS BIGINT) AS n_events,
-                       MIN(ts) AS session_start, MAX(ts) AS session_end
-                FROM assigned
-                GROUP BY user_id, session_no
-                """
-            )
-        )(
-            load(spark, sf, "events").createOrReplaceTempView("events_sess")
-        ),
-        ("events",),
-        oracle="""
-        WITH flagged AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN LAG(ts) OVER w IS NULL
-                        OR ts - LAG(ts) OVER w > INTERVAL '30' MINUTE
-                      THEN 1 ELSE 0 END AS new_sess
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), assigned AS (
-          SELECT user_id, ts,
-                 SUM(new_sess) OVER (PARTITION BY user_id
-                   ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_no
-          FROM flagged
-        )
-        SELECT user_id, CAST(session_no AS BIGINT) AS session_no,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               MIN(ts) AS session_start, MAX(ts) AS session_end
-        FROM assigned
-        GROUP BY user_id, session_no
         """,
     ),
     # Banded range join: error events within 10 minutes of a click by the
@@ -278,5 +216,22 @@ QUERIES: dict[str, Q] = {
         ASOF LEFT JOIN p b ON c.user_id = b.user_id AND b.pts <= c.ts
         ASOF LEFT JOIN p f ON c.user_id = f.user_id AND f.pts >= c.ts
         """,
+    ),
+    # SCD2 validity intervals from a change log: per-entity versions
+    # with valid_from / valid_to / is_current / version — the warehouse
+    # "slowly changing dimension" reconstruction. One LEAD pass per
+    # entity; at 100 TB one shuffle on the entity key.
+    "scd2_intervals": sql_q(
+        """
+        SELECT user_id, ts AS valid_from,
+               LEAD(ts) OVER w AS valid_to,
+               LEAD(ts) OVER w IS NULL AS is_current,
+               CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
+               value AS attr
+        FROM events WHERE event_type = 'signup'
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ORDER BY user_id, version
+        """,
+        ("events",),
     ),
 }

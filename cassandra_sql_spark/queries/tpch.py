@@ -1,4 +1,4 @@
-"""Headline analytical queries (TPC-H-shaped) — the engine's spine.
+"""TPC-H-shaped queries q1..q22 (``q*``) — the engine's spine.
 
 These exercise scan -> filter -> join -> agg -> having -> sort -> limit,
 the same shape as the reference's demo workload (reference
@@ -18,11 +18,37 @@ probe side and only (filtered) dims are broadcast-built — measured 2x faster
 than dim-first at sf0.1, and exactly the shape that survives 100 TB (a
 too-big right side demotes to shuffle join automatically; the fact table is
 never the build side). Pinned by tests/test_plans.py.
+
+The test data's tables are a reduced TPC-H: there is no partsupp table and
+lineitem lacks commitdate/receiptdate/shipmode, so q2/q4/q9/q11/q12/q16/
+q20/q21/q22 are adapted (noted per query — partsupp is derived from
+lineitem as the observed part<->supplier relation; ship-delay bands stand
+in for shipmode; "shipped >60 days after order" stands in for
+receipt-after-commit lateness). Everything else follows the official
+query shapes, so all 22 query spines are covered. Reference parity: these exercise the
+same operator spine as the reference's executors (scan+filter
+kv/KvQueryExecutor.java:1004-1136, hash joins kv/KvJoinExecutor.java:113-316,
+hash aggregation kv/KvQueryExecutor.java:3269-3627, subquery rewrites
+SubqueryExecutor.java:35-263) but as single declarative Catalyst plans.
+
+Determinism conventions per queries/base.py: scaled-integer double sums
+(dsum/davg), BIGINT casts on counts, total-order ORDER BY before LIMIT.
+l_quantity is integral (1..50) so plain AVG(l_quantity) is exact and safe
+in correlated thresholds (q17).
+
+Scale notes (100 TB): every join below is either fact-to-broadcastable-dim
+(part/supplier/customer/nation/region) or a self-aggregation of lineitem
+re-joined on its own key (q15/q17/q18/q20) — the latter shuffle on
+l_partkey/l_orderkey/l_suppkey, which Spark plans as partial+final hash
+aggregates before the shuffle, so the shuffled volume is the distinct-key
+set, not the fact table. No plan here carries a cartesian or a
+driver-side collect.
 """
 
 from __future__ import annotations
 
 from cassandra_sql_spark.queries.base import Q, davg, dsum, sql_q
+
 
 Q1_PRICING_SUMMARY = f"""
 SELECT
@@ -104,6 +130,373 @@ ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """
 
+
+# Scaled-integer sum fragment for use inside CASE arms (see base.dsum).
+def _ssum(expr: str, s: int = 1000000) -> str:
+    return f"CAST(FLOOR(({expr}) * {s} + 0.5) AS BIGINT)"
+
+
+# q2 adapted: partsupp derived from lineitem (observed part<->supplier
+# pairs); ps_supplycost = best observed unit price (MIN of a per-row
+# double expression — order-independent, engine-independent). Preserves
+# q2's distinctive shape: multi-dim join + correlated scalar MIN subquery
+# re-traversing the same join. At scale the correlated MIN decorrelates
+# into an aggregate + self-join on ps_partkey (Catalyst
+# RewriteCorrelatedScalarSubquery), shuffling only the distinct-key set.
+Q2_MIN_COST_SUPPLIER = """
+WITH partsupp AS (
+  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+         CAST(MIN(CAST(FLOOR(l_extendedprice * 100 / l_quantity + 0.5)
+                       AS BIGINT)) AS DOUBLE) / 100 AS ps_supplycost
+  FROM lineitem
+  GROUP BY l_partkey, l_suppkey
+)
+SELECT s_acctbal, s_name, n_name, p_partkey, p_name, ps_supplycost
+FROM part
+JOIN partsupp ON p_partkey = ps_partkey
+JOIN supplier ON s_suppkey = ps_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+WHERE p_size = 15 AND p_type = 'PROMO' AND r_name = 'ASIA'
+  AND ps_supplycost = (
+    SELECT MIN(ps2.ps_supplycost)
+    FROM partsupp ps2
+    JOIN supplier s2 ON s2.s_suppkey = ps2.ps_suppkey
+    JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
+    JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
+    WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'ASIA'
+  )
+ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+LIMIT 100
+"""
+
+# q4 adapted: no commitdate/receiptdate -> "late shipment" EXISTS predicate
+# (any line shipped >60 days after the order date). Same semi-join shape.
+Q4_ORDER_PRIORITY = """
+SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
+FROM orders
+WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
+  AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
+  AND EXISTS (
+    SELECT 1 FROM lineitem
+    WHERE l_orderkey = o_orderkey
+      AND l_shipdate > o_orderdate + INTERVAL '60' DAY
+  )
+GROUP BY o_orderpriority
+ORDER BY o_orderpriority
+"""
+
+Q7_VOLUME_SHIPPING = f"""
+SELECT supp_nation, cust_nation, l_year,
+  {dsum('volume', 'revenue', 6)}
+FROM (
+  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+         CAST(EXTRACT(YEAR FROM l_shipdate) AS BIGINT) AS l_year,
+         l_extendedprice * (1 - l_discount) AS volume
+  FROM lineitem
+  JOIN supplier ON l_suppkey = s_suppkey
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation n1 ON s_nationkey = n1.n_nationkey
+  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+  WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+      OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+    AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+    AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+) shipping
+GROUP BY supp_nation, cust_nation, l_year
+ORDER BY supp_nation, cust_nation, l_year
+"""
+
+# Ratio of two scaled-integer sums: exact, order-independent on both engines.
+Q8_MARKET_SHARE = f"""
+SELECT o_year,
+  CAST(SUM(CASE WHEN nation = 'NATION_3' THEN {_ssum('volume')} ELSE 0 END) AS DOUBLE)
+    / CAST(SUM({_ssum('volume')}) AS DOUBLE) AS mkt_share
+FROM (
+  SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
+         l_extendedprice * (1 - l_discount) AS volume,
+         n2.n_name AS nation
+  FROM lineitem
+  JOIN part ON l_partkey = p_partkey
+  JOIN supplier ON s_suppkey = l_suppkey
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  JOIN nation n1 ON c_nationkey = n1.n_nationkey
+  JOIN region ON n1.n_regionkey = r_regionkey
+  JOIN nation n2 ON s_nationkey = n2.n_nationkey
+  WHERE r_name = 'ASIA'
+    AND p_type = 'PROMO'
+    AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+) all_nations
+GROUP BY o_year
+ORDER BY o_year
+"""
+
+# q9 adapted: no partsupp.ps_supplycost -> cost modeled as
+# 0.5 * p_retailprice * l_quantity; same join/agg shape (5-way + 2-key group).
+Q9_PRODUCT_PROFIT = f"""
+SELECT nation, o_year, {dsum('amount', 'sum_profit', 6)}
+FROM (
+  SELECT n_name AS nation,
+         CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
+         l_extendedprice * (1 - l_discount)
+           - 0.5 * p_retailprice * l_quantity AS amount
+  FROM lineitem
+  JOIN part ON p_partkey = l_partkey
+  JOIN supplier ON s_suppkey = l_suppkey
+  JOIN orders ON o_orderkey = l_orderkey
+  JOIN nation ON s_nationkey = n_nationkey
+  WHERE p_name LIKE '%red%'
+) profit
+GROUP BY nation, o_year
+ORDER BY nation, o_year DESC
+"""
+
+# q11 adapted: partsupp value = shipped revenue per (part, supplier);
+# same group-by + HAVING-vs-global-scalar-subquery shape. Integer cents
+# keep both the per-part sums and the global threshold exact.
+Q11_IMPORTANT_PARTS = """
+WITH partsupp AS (
+  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+         SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100 + 0.5)
+                  AS BIGINT)) AS value_cents
+  FROM lineitem
+  GROUP BY l_partkey, l_suppkey
+)
+SELECT ps_partkey, CAST(SUM(value_cents) AS DOUBLE) / 100 AS part_value
+FROM partsupp
+JOIN supplier ON ps_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+WHERE n_name = 'NATION_1'
+GROUP BY ps_partkey
+HAVING SUM(value_cents) > (
+  SELECT SUM(value_cents) * 0.001
+  FROM partsupp
+  JOIN supplier ON ps_suppkey = s_suppkey
+  JOIN nation ON s_nationkey = n_nationkey
+  WHERE n_name = 'NATION_1'
+)
+ORDER BY part_value DESC, ps_partkey
+"""
+
+# q12 adapted: no l_shipmode -> ship-delay bands (FAST <=30d, NORMAL,
+# SLOW >60d after order date); same join + CASE-count-by-priority shape.
+Q12_SHIP_PRIORITY = """
+SELECT shipband,
+  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+FROM (
+  SELECT o_orderpriority,
+         CASE WHEN l_shipdate <= o_orderdate + INTERVAL '30' DAY THEN 'FAST'
+              WHEN l_shipdate > o_orderdate + INTERVAL '60' DAY THEN 'SLOW'
+              ELSE 'NORMAL' END AS shipband
+  FROM lineitem
+  JOIN orders ON l_orderkey = o_orderkey
+  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+) shipping
+GROUP BY shipband
+ORDER BY shipband
+"""
+
+Q13_CUSTOMER_DISTRIBUTION = """
+SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
+FROM (
+  SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
+  FROM customer
+  LEFT JOIN orders
+    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+  GROUP BY c_custkey
+) c_orders
+GROUP BY c_count
+ORDER BY custdist DESC, c_count DESC
+"""
+
+Q14_PROMO_EFFECT = f"""
+SELECT
+  100.00 * CAST(SUM(CASE WHEN p_type = 'PROMO'
+                  THEN {_ssum('l_extendedprice * (1 - l_discount)')}
+                  ELSE 0 END) AS DOUBLE)
+    / CAST(SUM({_ssum('l_extendedprice * (1 - l_discount)')}) AS DOUBLE)
+    AS promo_revenue
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
+  AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'
+"""
+
+# CTE + scalar-subquery MAX; total_revenue equality is safe because both
+# sides compute the identical scaled-integer expression.
+Q15_TOP_SUPPLIER = """
+WITH revenue AS (
+  SELECT l_suppkey AS supplier_no,
+         CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 1000000 + 0.5)
+                       AS BIGINT)) AS DOUBLE) / 1000000 AS total_revenue
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
+  GROUP BY l_suppkey
+)
+SELECT s_suppkey, s_name, total_revenue
+FROM supplier
+JOIN revenue ON s_suppkey = supplier_no
+WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
+ORDER BY s_suppkey
+"""
+
+# q16 adapted: lineitem stands in for partsupp as the part<->supplier relation.
+Q16_SUPPLIER_CNT = """
+SELECT p_brand, p_type, p_size,
+  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+FROM lineitem
+JOIN part ON p_partkey = l_partkey
+WHERE p_brand <> 'Brand#1'
+  AND p_type <> 'ECONOMY'
+  AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
+GROUP BY p_brand, p_type, p_size
+ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+LIMIT 50
+"""
+
+# AVG(l_quantity) is exact (integral values, exact double sum) so the
+# correlated threshold is engine-independent.
+Q17_SMALL_QTY_REVENUE = """
+SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+         / 100 / 7.0 AS avg_yearly
+FROM lineitem
+JOIN part ON p_partkey = l_partkey
+WHERE p_brand = 'Brand#3'
+  AND l_quantity < (
+    SELECT 0.2 * AVG(l_quantity)
+    FROM lineitem l2
+    WHERE l2.l_partkey = part.p_partkey
+  )
+"""
+
+# Round 12 (guide §1.2 "remove unnecessary passes"): the classic Q18 form
+# scanned lineitem TWICE (outer join input + IN subquery) and re-aggregated
+# 600k joined rows by five wide keys — but the outer group (c_name,
+# c_custkey, o_orderkey, o_orderdate, o_totalprice) is 1:1 with orders, so
+# sum_qty IS the per-order quantity sum the subquery already computes.
+# Collapsing onto one per-order aggregate + joins halves the lineitem
+# scans and removes the wide post-join aggregation: 0.68s -> 0.41s median
+# at sf0.1 (interleaved A/B, ordered rows identical; the HAVING keeps the
+# same plain-double SUM the old subquery used, so group membership at the
+# 300 boundary is bit-identical).
+Q18_LARGE_VOLUME_CUSTOMER = f"""
+SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
+FROM (
+  SELECT l_orderkey, {dsum('l_quantity', 'sum_qty')}
+  FROM lineitem
+  GROUP BY l_orderkey
+  HAVING SUM(l_quantity) > 300
+) t
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 100
+"""
+
+# q19 adapted: no shipmode/container -> brand x size x quantity OR-bands.
+# The OR of ANDed per-band predicates exercises the reference's __OR__
+# pseudo-predicate path (kv/KvQueryExecutor.java:3217-3258) declaratively.
+Q19_DISCOUNTED_REVENUE = f"""
+SELECT {dsum('l_extendedprice * (1 - l_discount)', 'revenue', 6)}
+FROM lineitem
+JOIN part ON p_partkey = l_partkey
+WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+       AND l_quantity BETWEEN 1 AND 11)
+   OR (p_brand = 'Brand#23' AND p_size BETWEEN 10 AND 30
+       AND l_quantity BETWEEN 10 AND 20)
+   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
+       AND l_quantity BETWEEN 20 AND 30)
+"""
+
+# q20 adapted: no partsupp availqty -> suppliers whose 1996 shipped quantity
+# of PROMO parts exceeds a volume threshold (same semi-join-on-agg shape).
+Q20_VOLUME_SUPPLIERS = """
+SELECT s_suppkey, s_name
+FROM supplier
+WHERE s_suppkey IN (
+  SELECT l_suppkey
+  FROM lineitem
+  JOIN part ON p_partkey = l_partkey
+  WHERE p_type = 'PROMO'
+    AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+  GROUP BY l_suppkey
+  HAVING SUM(l_quantity) > 400
+)
+ORDER BY s_suppkey
+"""
+
+# q21 adapted: "kept orders waiting" = this supplier's line shipped >60
+# days after the order date on a finished multi-supplier order where no
+# OTHER supplier's line was late. Preserves q21's distinctive double
+# correlated EXISTS / NOT EXISTS self-join on lineitem. Both subqueries
+# decorrelate to semi/anti hash joins on l_orderkey (no nested loops).
+Q21_WAITING_SUPPLIER = """
+WITH flagged AS (
+  SELECT l_orderkey, l_suppkey,
+         CASE WHEN l_shipdate > o_orderdate + INTERVAL '60' DAY
+              THEN 1 ELSE 0 END AS is_late
+  FROM lineitem
+  JOIN orders ON o_orderkey = l_orderkey
+  WHERE o_orderstatus = 'F'
+)
+SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+FROM flagged l1
+JOIN supplier ON s_suppkey = l1.l_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+WHERE l1.is_late = 1
+  AND n_name = 'NATION_1'
+  AND EXISTS (
+    SELECT 1 FROM flagged l2
+    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
+  )
+  AND NOT EXISTS (
+    SELECT 1 FROM flagged l3
+    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
+      AND l3.is_late = 1
+  )
+GROUP BY s_name
+ORDER BY numwait DESC, s_name
+LIMIT 100
+"""
+
+# q22 adapted: no c_phone -> country code is c_nationkey % 10; every
+# customer has orders in this dataset, so "no orders at all" is replaced by
+# "no orders since 1999" (same anti-join shape). Deterministic average via
+# scaled-integer sum.
+Q22_GLOBAL_SALES = f"""
+SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
+  {dsum('c_acctbal', 'totacctbal')}
+FROM (
+  SELECT CAST(c_nationkey % 10 AS BIGINT) AS cntrycode, c_acctbal, c_custkey
+  FROM customer
+  WHERE c_nationkey % 10 IN (1, 2, 3, 4, 5)
+    AND c_acctbal > (
+      SELECT CAST(SUM(CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+               / 100 / COUNT(*)
+      FROM customer
+      WHERE c_acctbal > 0.00 AND c_nationkey % 10 IN (1, 2, 3, 4, 5)
+    )
+    AND NOT EXISTS (
+      SELECT 1 FROM orders
+      WHERE o_custkey = c_custkey
+        AND o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
+    )
+) custsale
+GROUP BY cntrycode
+ORDER BY cntrycode
+"""
+
+_ALL = ("customer", "orders", "lineitem", "supplier", "part", "nation", "region")
+
 QUERIES: dict[str, Q] = {
     "q1_pricing_summary": sql_q(Q1_PRICING_SUMMARY, ("lineitem",)),
     "q3_shipping_priority": sql_q(
@@ -117,4 +510,38 @@ QUERIES: dict[str, Q] = {
     "q10_returned_items": sql_q(
         Q10_RETURNED_ITEMS, ("customer", "orders", "lineitem", "nation")
     ),
+    "q2_min_cost_supplier": sql_q(
+        Q2_MIN_COST_SUPPLIER,
+        ("part", "lineitem", "supplier", "nation", "region"),
+    ),
+    "q4_order_priority": sql_q(Q4_ORDER_PRIORITY, ("orders", "lineitem")),
+    "q11_important_parts": sql_q(
+        Q11_IMPORTANT_PARTS, ("lineitem", "supplier", "nation")
+    ),
+    "q12_ship_priority": sql_q(Q12_SHIP_PRIORITY, ("lineitem", "orders")),
+    "q21_waiting_supplier": sql_q(
+        Q21_WAITING_SUPPLIER, ("lineitem", "orders", "supplier", "nation")
+    ),
+    "q7_volume_shipping": sql_q(
+        Q7_VOLUME_SHIPPING, ("supplier", "lineitem", "orders", "customer", "nation")
+    ),
+    "q8_market_share": sql_q(Q8_MARKET_SHARE, _ALL),
+    "q9_product_profit": sql_q(
+        Q9_PRODUCT_PROFIT, ("lineitem", "part", "supplier", "orders", "nation")
+    ),
+    "q13_customer_distribution": sql_q(
+        Q13_CUSTOMER_DISTRIBUTION, ("customer", "orders")
+    ),
+    "q14_promo_effect": sql_q(Q14_PROMO_EFFECT, ("lineitem", "part")),
+    "q15_top_supplier": sql_q(Q15_TOP_SUPPLIER, ("supplier", "lineitem")),
+    "q16_supplier_cnt": sql_q(Q16_SUPPLIER_CNT, ("lineitem", "part")),
+    "q17_small_qty_revenue": sql_q(Q17_SMALL_QTY_REVENUE, ("lineitem", "part")),
+    "q18_large_volume_customer": sql_q(
+        Q18_LARGE_VOLUME_CUSTOMER, ("customer", "orders", "lineitem")
+    ),
+    "q19_discounted_revenue": sql_q(Q19_DISCOUNTED_REVENUE, ("lineitem", "part")),
+    "q20_volume_suppliers": sql_q(
+        Q20_VOLUME_SUPPLIERS, ("supplier", "lineitem", "part")
+    ),
+    "q22_global_sales": sql_q(Q22_GLOBAL_SALES, ("customer", "orders")),
 }

@@ -1,12 +1,11 @@
-"""Source/sink layer: multi-format IO and physical-layout helpers.
+"""Physical-layout helpers for parquet sources.
 
 The reference's only bulk IO is COPY over the wire protocol
 (postgres/PostgresConnectionHandler.java:1292-1360). Here the engine-level
-COPY (engine.py) handles CSV; this module is the general surface: CSV /
-JSON lines / Parquet / ORC readers+writers, partitioned writes (partition
-pruning at scan time), and bucketed tables (co-located joins with NO
-shuffle — the 100 TB answer to the reference's always-rebuild hash join,
-kv/KvJoinExecutor.java:321-340).
+COPY (engine.py) handles CSV and Spark's own readers and writers cover the
+formats; this module shapes the files so scans skip data: the row-group
+re-encoding of the test data, sorted layouts and Z-ordered layouts (min/max
+statistics that prune row groups at scan time).
 """
 
 from __future__ import annotations
@@ -14,9 +13,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
-FORMATS = ("parquet", "csv", "json", "orc")
+from pyspark.sql import DataFrame
 
 
 def optimize_layout(
@@ -88,49 +85,6 @@ def optimize_layout(
         return cache_dir
     except OSError:
         return sf_dir
-
-
-def read_any(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema: str | None = None,
-    **options,
-) -> DataFrame:
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format: {fmt}")
-    reader = spark.read.format(fmt)
-    if schema:
-        reader = reader.schema(schema)
-    elif fmt in ("csv", "json"):
-        reader = reader.option("inferSchema", "true")
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)
-
-
-def write_any(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    **options,
-) -> None:
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format: {fmt}")
-    writer = df.write.format(fmt).mode(mode)
-    if fmt == "csv":
-        writer = writer.option("header", "true")
-    if partition_by:
-        # hive-style dirs -> partition pruning: a filter on the partition
-        # column never touches non-matching files
-        writer = writer.partitionBy(*partition_by)
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    writer.save(path)
 
 
 def write_sorted_table(
@@ -237,22 +191,3 @@ def write_zordered_table(
         .option("parquet.block.size", 128 * 1024)
         .parquet(path)
     )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist as a bucketed (+optionally sorted) managed table.
-
-    Two tables bucketed the same way join WITHOUT any Exchange: at 100 TB
-    that turns the nightly fact-fact join from the dominant shuffle into a
-    local zip per bucket (asserted in tests/test_sources.py).
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)

@@ -237,37 +237,6 @@ def countmin_stream(
     return ex.groupBy("_row", "_col").agg(F.count(F.lit(1)).alias("_cnt"))
 
 
-def run_foreach_batch_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Exactly-once parquet sink via foreachBatch: each micro-batch is
-    written to ``out_dir/batch=<id>`` and the write is made idempotent by
-    deleting any partial ``batch=<id>`` directory first (the replay case:
-    a batch re-delivered after a crash between sink-write and offset
-    commit). Combined with the checkpointed offsets this is the standard
-    recipe for exactly-once file output from a non-transactional sink —
-    batchId is the dedup key, the overwrite is the idempotence.
-
-    At scale the per-batch overwrite touches ONLY that batch's directory
-    (dynamic partition of one value), never the table, so replays cost one
-    batch of IO regardless of table size."""
-    import shutil
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        path = os.path.join(out_dir, f"batch={batch_id}")
-        shutil.rmtree(path, ignore_errors=True)  # idempotent replay
-        df.write.mode("overwrite").parquet(path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    ).start()
-    q.awaitTermination()
-
-
 def streaming_event_window_counts(
     spark: SparkSession, sf_dir: str, checkpoint_dir: str
 ) -> DataFrame:

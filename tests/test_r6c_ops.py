@@ -1,5 +1,6 @@
-"""Independent semantic pins for the round-6 closing batch
-(queries/analytics_r6c.py) beyond the registry-wide DuckDB equivalence:
+"""Independent semantic pins for the round-6 closing batch (entries in
+queries/series.py, windows.py, events.py and text.py) beyond the
+registry-wide DuckDB equivalence:
 
 - EWMA equals a sequential numpy replica of the truncated
   adjust=True recurrence (weights 0.8^k over the last min(n,20) days);

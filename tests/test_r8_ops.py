@@ -253,7 +253,7 @@ def test_graph_degree_cap_is_hub_removal(spark, sf_dir):
     the uncapped edge list. The registry entries run uncapped because
     the page graph is domain-bounded (|pages|=100); the cap is the
     power-law-graph knob (SCALE.md)."""
-    from cassandra_sql_spark.queries.r8_ops import (
+    from cassandra_sql_spark.queries.graph import (
         _clustering_df,
         _jaccard_neighbors_df,
     )

@@ -20,12 +20,20 @@ pin the rotation's invariants:
 
 from __future__ import annotations
 
+import importlib
 import json
+import re
 from pathlib import Path
 
 import pytest
 
-from cassandra_sql_spark.queries import NEXT_WINDOW, PRIORITY, REGISTRY
+from cassandra_sql_spark.queries import (
+    FAMILIES,
+    FAMILY,
+    NEXT_WINDOW,
+    PRIORITY,
+    REGISTRY,
+)
 
 _REPO = Path(__file__).resolve().parent.parent
 
@@ -329,3 +337,24 @@ def test_coverage_doc_totals_match_registry():
         f"COVERAGE.md says {m.group(2)} oracle-checked; live count is "
         f"{n_oracle}"
     )
+
+
+def test_modules_are_operator_families():
+    """Each module under queries/ holds one operator family and is named
+    by it: no module is named by the round that added it, every entry's
+    recorded family is the module that defines it, and no entry-name
+    prefix spans two families."""
+    pkg = _REPO / "cassandra_sql_spark" / "queries"
+    modules = {p.stem for p in pkg.glob("*.py")} - {"__init__", "base"}
+    assert not [m for m in modules if re.search(r"(^|_)r\d", m)]
+    assert modules == set(FAMILIES)
+    assert set(FAMILY) == set(REGISTRY)
+    for family in FAMILIES:
+        mod = importlib.import_module(f"cassandra_sql_spark.queries.{family}")
+        assert {n for n, f in FAMILY.items() if f == family} == set(mod.QUERIES)
+        for name, q in mod.QUERIES.items():
+            assert REGISTRY[name] is q
+    prefix_families: dict[str, set[str]] = {}
+    for name, family in FAMILY.items():
+        prefix_families.setdefault(name.split("_")[0], set()).add(family)
+    assert {p: f for p, f in prefix_families.items() if len(f) > 1} == {}

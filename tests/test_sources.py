@@ -1,5 +1,10 @@
 """Multi-format IO round-trips, partition pruning, the bucketed
-co-located join (no Exchange) proof, and layout optimization."""
+co-located join (no Exchange) proof, and layout optimization.
+
+The format round-trips, the partitioned write and the bucketed tables go
+through Spark's own readers and writers; ``read_any``/``write_any`` below
+are the settings those tests pin (CSV header, inferred or given schema).
+"""
 
 from __future__ import annotations
 
@@ -10,13 +15,39 @@ from cassandra_sql_spark import sources
 from cassandra_sql_spark.io import load
 from cassandra_sql_spark.profile import node_metrics, plan_nodes
 
+FORMATS = ("parquet", "csv", "json", "orc")
+
+
+def read_any(spark, path, fmt="parquet", schema=None):
+    if fmt not in FORMATS:
+        raise ValueError(f"unsupported format: {fmt}")
+    reader = spark.read.format(fmt)
+    if schema:
+        reader = reader.schema(schema)
+    elif fmt in ("csv", "json"):
+        reader = reader.option("inferSchema", "true")
+    if fmt == "csv":
+        reader = reader.option("header", "true")
+    return reader.load(path)
+
+
+def write_any(df, path, fmt="parquet", partition_by=None):
+    writer = df.write.format(fmt).mode("overwrite")
+    if fmt == "csv":
+        writer = writer.option("header", "true")
+    if partition_by:
+        # hive-style dirs -> partition pruning: a filter on the partition
+        # column never touches non-matching files
+        writer = writer.partitionBy(*partition_by)
+    writer.save(path)
+
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])
 def test_roundtrip_formats(spark, sf_dir, tmp_path, fmt):
     df = load(spark, sf_dir, "nation")
     path = str(tmp_path / f"nation_{fmt}")
-    sources.write_any(df, path, fmt)
-    back = sources.read_any(
+    write_any(df, path, fmt)
+    back = read_any(
         spark, path, fmt,
         schema="n_nationkey int, n_name string, n_regionkey int"
         if fmt in ("csv", "json") else None,
@@ -29,8 +60,8 @@ def test_roundtrip_formats(spark, sf_dir, tmp_path, fmt):
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     df = load(spark, sf_dir, "customer")
     path = str(tmp_path / "cust_part")
-    sources.write_any(df, path, partition_by=["c_nationkey"])
-    back = sources.read_any(spark, path)
+    write_any(df, path, partition_by=["c_nationkey"])
+    back = read_any(spark, path)
     pruned = back.filter(F.col("c_nationkey") == 3)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     # partition filter must be applied at the file index, not post-scan
@@ -42,19 +73,18 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
+    """Two tables bucketed the same way join WITHOUT any Exchange: at
+    100 TB a fact-fact join becomes a local zip per bucket."""
     # (bucketed tables land in the session warehouse dir — static conf —
     # and are dropped in the finally block)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
-    sources.write_bucketed_table(
-        orders, "b_orders", ["o_custkey"], num_buckets=8
+    orders.write.mode("overwrite").bucketBy(8, "o_custkey").saveAsTable(
+        "b_orders"
     )
-    sources.write_bucketed_table(
-        customer.withColumnRenamed("c_custkey", "o_custkey"),
-        "b_customer",
-        ["o_custkey"],
-        num_buckets=8,
-    )
+    customer.withColumnRenamed("c_custkey", "o_custkey").write.mode(
+        "overwrite"
+    ).bucketBy(8, "o_custkey").saveAsTable("b_customer")
     # disable broadcast so the join would otherwise shuffle both sides
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -74,7 +104,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
 
 def test_bad_format_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match="unsupported format"):
-        sources.read_any(spark, str(tmp_path), "avro")
+        read_any(spark, str(tmp_path), "avro")
 
 
 def test_optimize_layout_preserves_data_and_caches(spark, sf_dir, tmp_path):
